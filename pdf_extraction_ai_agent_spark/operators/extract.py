@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from .. import spec
+from .classify import LOBS_TYPE, score_lobs
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -59,10 +60,16 @@ EXTRACT_RESULT_TYPE = StructType(
     ]
 )
 
-# with_spans=False kernel output (manual pruning through the UDF boundary)
-EXTRACT_RESULT_TYPE_NOSPANS = StructType(
-    [f for f in EXTRACT_RESULT_TYPE.fields if f.name != "spans"]
-)
+
+def extract_result_type(with_spans: bool = True, with_lob: bool = False) -> StructType:
+    """The kernel's return struct: EXTRACT_RESULT_TYPE, minus ``spans``
+    when pruned (manual pruning through the UDF boundary), plus the
+    ``lob``/``lobs`` classification when requested."""
+    fields = [f for f in EXTRACT_RESULT_TYPE.fields if with_spans or f.name != "spans"]
+    if with_lob:
+        fields += [StructField("lob", StringType()), StructField("lobs", LOBS_TYPE)]
+    return StructType(fields)
+
 
 # ---------------------------------------------------------------------------
 # HTML branch (fully vectorized)
@@ -519,7 +526,7 @@ def _spans_batch(texts: pd.Series) -> pd.Series:
 
 
 def extract_turn_batch(
-    text: pd.Series, tool: pd.Series, with_spans: bool = True
+    text: pd.Series, tool: pd.Series, with_spans: bool = True, with_lob: bool = True
 ) -> pd.DataFrame:
     """Pure-pandas batch kernel (also unit-testable off-Spark).
 
@@ -536,6 +543,10 @@ def extract_turn_batch(
     no spans (Catalyst cannot prune INSIDE a pandas UDF). The flagship
     pipeline and the resumable job keep the default: spans are part of
     the north-rule output contract.
+
+    ``with_lob`` appends the C1/C2 LOB classification of the extracted
+    text (``lob``, ``lobs`` — operators.classify.score_lobs) so the
+    pipeline's classification rides this kernel's Arrow round trip.
     """
     text = text.fillna("")
     is_pdf = text.str.startswith(spec.PDF_HEADER)
@@ -622,11 +633,14 @@ def extract_turn_batch(
     cols.update(
         {"needs_ocr": needs_ocr, "payload_kind": kind, "error": error}
     )
+    if with_lob:
+        cols["lob"], cols["lobs"] = score_lobs(extracted)
     return pd.DataFrame(cols)
 
 
 def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
-                    kdf_seed: dict | None = None, with_spans: bool = True):
+                    kdf_seed: dict | None = None, with_spans: bool = True,
+                    with_lob: bool = False):
     """Append extraction columns to a transcripts DataFrame.
 
     Declarative so Catalyst keeps column pruning/pushdown around the UDF;
@@ -642,8 +656,12 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
     kernel skips ~half its work and the output carries no spans column.
     For consumers whose contract omits spans; the flagship pipeline and
     the resumable job keep the default.
+
+    ``with_lob=True`` has the kernel classify its own extracted text and
+    appends ``lob``/``lobs`` after ``error`` (extract_pipeline moves them
+    to the end of its output).
     """
-    rtype = EXTRACT_RESULT_TYPE if with_spans else EXTRACT_RESULT_TYPE_NOSPANS
+    rtype = extract_result_type(with_spans, with_lob)
     if kdf_seed:
         seed = dict(kdf_seed)
 
@@ -651,14 +669,14 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
             from .pdftext import seed_kdf
 
             seed_kdf(seed)
-            return extract_turn_batch(text, tool, with_spans=with_spans)
+            return extract_turn_batch(text, tool, with_spans=with_spans, with_lob=with_lob)
 
         udf = F.pandas_udf(_seeded_batch, rtype)
     else:
         # pandas_udf infers the eval type from the signature — the bare
-        # kernel's with_spans kwarg confuses it, so both paths wrap
+        # kernel's keyword flags confuse it, so both paths wrap
         def _plain_batch(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
-            return extract_turn_batch(text, tool, with_spans=with_spans)
+            return extract_turn_batch(text, tool, with_spans=with_spans, with_lob=with_lob)
 
         udf = F.pandas_udf(_plain_batch, rtype)
     res = udf(F.col(text_col), F.col(tool_col))
@@ -667,9 +685,11 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
     )
     if with_spans:
         out = out.withColumn("spans", F.col("_ex.spans"))
-    return (
+    out = (
         out.withColumn("needs_ocr", F.col("_ex.needs_ocr"))
         .withColumn("payload_kind", F.col("_ex.payload_kind"))
         .withColumn("error", F.col("_ex.error"))
-        .drop("_ex")
     )
+    if with_lob:
+        out = out.withColumn("lob", F.col("_ex.lob")).withColumn("lobs", F.col("_ex.lobs"))
+    return out.drop("_ex")

@@ -1,4 +1,6 @@
 from .reference_extractor import (
+    classify_lob_oracle,
+    classify_lobs_oracle,
     extract_turn,
     extract_turn_frame,
     extract_html_main_content,
@@ -10,6 +12,8 @@ from .reference_extractor import (
 )
 
 __all__ = [
+    "classify_lob_oracle",
+    "classify_lobs_oracle",
     "extract_turn",
     "extract_turn_frame",
     "extract_html_main_content",

@@ -389,6 +389,46 @@ def parse_fields_oracle(text: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
+# LOB classification (C1 single-label, C2 multi-label)
+# ---------------------------------------------------------------------------
+
+
+def classify_lob_oracle(text: str | None) -> str:
+    """claude_pdf_extractor.py:92-132: per LOB, the summed occurrence
+    counts of its keywords in the uppercased text (re.findall —
+    non-overlapping, each keyword counted on its own even when nested in
+    a longer one); the highest score wins, first LOB in dict order on a
+    tie; 'UNKNOWN' when every score is zero."""
+    text_upper = (text or "").upper()
+    scores = {}
+    for lob in spec.LOB_C1_ORDER:
+        score = 0
+        for keyword in spec.LOB_PATTERNS_C1[lob]:
+            score += len(re.findall(re.escape(keyword), text_upper))
+        scores[lob] = score
+    if max(scores.values()) == 0:
+        return "UNKNOWN"
+    return max(scores, key=scores.get)  # max() keeps the first maximum
+
+
+def classify_lobs_oracle(text: str | None) -> list[str]:
+    """text_lob_llm_extractor.py:231-244 heuristic branch (use_llm=False):
+    a LOB is present when any of its padded tokens occurs in the
+    uppercased text; labels in the table's order; ['AUTO'] when nothing
+    matches."""
+    text_upper = (text or "").upper()
+    found = []
+    for lob, tokens in spec.LOB_HITS_C2.items():
+        for token in tokens:
+            if text_upper.find(token) != -1:
+                found.append(lob)
+                break
+    if not found:
+        found = ["AUTO"]
+    return found
+
+
+# ---------------------------------------------------------------------------
 # Per-turn dispatch (payload sniff → extract)
 # ---------------------------------------------------------------------------
 

@@ -11,14 +11,15 @@ Shape:
                              independent, SURVEY §7 risk 5)
       → extract_turn_batch  (Arrow pandas UDF: payload sniff, HTML
                              boilerplate strip, pseudo-PDF layout parse,
-                             span extraction)
+                             span extraction, LOB keyword scoring)
       → stable ordering     (row_number over conv_id ordered by turn_idx,ts)
       → field projections   (native regexp_extract ladders)
-      → classification      (native keyword scoring)
 
 The two shuffles are exactly the ones the north rule prescribes: the
-explicit pre-UDF repartition and the ordering window. Everything else is
-narrow and stays in whole-stage codegen.
+explicit pre-UDF repartition and the ordering window. The one Arrow
+kernel carries every per-turn Python step (LOB classification included:
+keyword counting is C-speed ``str.count`` there, a byte loop in Catalyst);
+everything after it is narrow and stays in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -26,8 +27,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..operators.classify import classify_lob_c1, classify_lobs_c2
 from ..operators.extract import with_extraction
 from ..operators.ordering import with_turn_pos
 from ..functions.fields import with_parsed_fields
@@ -193,13 +194,17 @@ def extract_pipeline(
     ``ocr`` (None | 'auto' | 'fixture' | 'real' | 'stub') executes the OCR
     fallback on ``needs_ocr`` rows inside the pipeline (map-only,
     flag-guarded, per-row error channel) and re-scans those rows' spans
-    from the final text. None (default) keeps the flag-only contract —
-    downstream systems run their own OCR pass.
+    and lob/lobs from the final text. None (default) keeps the flag-only
+    contract — downstream systems run their own OCR pass.
 
     ``with_spans=False`` prunes the span scan inside the extract UDF
     (~half the kernel) and omits the spans column — for consumers whose
     output contract carries no spans. The default keeps the full
     north-rule contract (the resumable job and the flagship always do).
+
+    ``with_lob`` (default) has the extract kernel classify each turn's
+    extracted text (C1 ``lob``, C2 ``lobs`` — operators.classify);
+    ``with_lob=False`` drops both from the kernel's return type.
 
     Output: (conv_id, turn_idx, ts, turn_pos, extracted_text, spans,
     needs_ocr, payload_kind [, claim_number, name, date, confidence]
@@ -217,7 +222,9 @@ def extract_pipeline(
         kdf_seed = precompute_kdf_seed(transcripts)
     df = transcripts.select("conv_id", "turn_idx", "ts", "text", "tool")
     df = salted_repartition(df, num_partitions, salt_buckets)
-    df = with_extraction(df, kdf_seed=kdf_seed or None, with_spans=with_spans)
+    df = with_extraction(
+        df, kdf_seed=kdf_seed or None, with_spans=with_spans, with_lob=with_lob
+    )
     if ocr:
         # OCR fallback INSIDE the pipeline (reference extract_text.py:18-24
         # always falls back; here opt-in via jobs --ocr): map-only,
@@ -225,28 +232,8 @@ def extract_pipeline(
         from ..operators.ocr import with_ocr_fallback
 
         df = with_ocr_fallback(df, impl=ocr)
-        if with_spans:
-            # spans must describe the FINAL text (the reference derives
-            # fields from whichever text won): re-scan flagged rows from
-            # the current extracted_text — idempotent when OCR failed or
-            # left the text unchanged, untouched rows keep their spans
-            from ..operators.extract import SPAN_TYPE, _spans_chunked
-
-            @F.pandas_udf(SPAN_TYPE)
-            def _respan(text: pd.Series, flag: pd.Series) -> pd.Series:
-                return pd.Series(
-                    [_spans_chunked(str(t)) if f and t else []
-                     for t, f in zip(text.fillna(""), flag.fillna(False))],
-                    index=text.index, dtype=object,
-                )
-
-            df = df.withColumn(
-                "spans",
-                F.when(
-                    F.col("needs_ocr"),
-                    _respan("extracted_text", "needs_ocr"),
-                ).otherwise(F.col("spans")),
-            )
+        if with_spans or with_lob:
+            df = _rescan_ocr_rows(df, with_spans, with_lob)
     df = df.drop("text", "tool")
     df = with_turn_pos(df, bucket_width=ordering_bucket_width)
     # zero-cost pipeline metrics (the A9 'knowledge base' as observe();
@@ -269,6 +256,39 @@ def extract_pipeline(
     if with_fields:
         df = with_parsed_fields(df, "extracted_text")
     if with_lob:
-        df = df.withColumn("lob", classify_lob_c1(F.col("extracted_text")))
-        df = df.withColumn("lobs", classify_lobs_c2(F.col("extracted_text")))
+        # the kernel emitted lob/lobs; the output contract keeps them last
+        df = df.select(*[c for c in df.columns if c not in ("lob", "lobs")], "lob", "lobs")
     return df
+
+
+def _rescan_ocr_rows(df: DataFrame, with_spans: bool, with_lob: bool) -> DataFrame:
+    """spans and lob/lobs must describe the FINAL text (the reference
+    derives fields from whichever text won): one pandas UDF re-scans the
+    ``needs_ocr`` rows from the current extracted_text with the kernel's
+    own span scan and LOB scorer. Idempotent when OCR failed or left the
+    text unchanged; untouched rows keep the kernel's values."""
+    from ..operators.classify import score_lobs
+    from ..operators.extract import _spans_chunked, extract_result_type
+
+    fields = [
+        f for f in extract_result_type(with_spans, with_lob).fields
+        if f.name in ("spans", "lob", "lobs")
+    ]
+
+    def _rescan(text, flag):  # unannotated: struct-returning pandas UDF
+        final = [t if f else "" for t, f in zip(text.fillna(""), flag.fillna(False))]
+        cols = {}
+        if with_spans:
+            cols["spans"] = [_spans_chunked(t) if t else [] for t in final]
+        if with_lob:
+            cols["lob"], cols["lobs"] = score_lobs(final)
+        return pd.DataFrame(cols, index=text.index)
+
+    res = F.pandas_udf(_rescan, StructType(fields))("extracted_text", "needs_ocr")
+    df = df.withColumn("_rescan", res)
+    for f in fields:
+        df = df.withColumn(
+            f.name,
+            F.when(F.col("needs_ocr"), F.col("_rescan." + f.name)).otherwise(F.col(f.name)),
+        )
+    return df.drop("_rescan")

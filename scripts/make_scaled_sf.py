@@ -43,11 +43,25 @@ def main() -> None:
     k_copies = int(k_str)
     os.makedirs(dst, exist_ok=True)
 
-    spans: dict[str, int] = {}
+    max_key: dict[str, int] = {}
     for name, keys in FACT_KEYS.items():
         t = pq.read_table(f"{src}/{name}.parquet", columns=[keys[0]])
-        spans[name] = int(pc.max(t[keys[0]]).as_py()) + 1
+        mx = pc.max(t[keys[0]]).as_py()
+        if mx is None:
+            raise ValueError(
+                f"{src}/{name}.parquet: fact table {name!r} has no {keys[0]} "
+                "values; a span cannot be derived from an empty table"
+            )
+        max_key[name] = int(mx)
+    spans = {name: mx + 1 for name, mx in max_key.items()}
     for name, parent in SPAN_FROM.items():
+        # copy k of a child key must stay inside copy k of the parent's key
+        # space, else it collides with copy k+1's parent keys
+        if max_key[name] >= spans[parent]:
+            raise ValueError(
+                f"{name}: max {FACT_KEYS[name][0]} {max_key[name]} is outside "
+                f"{parent}'s key span {spans[parent]}; shifted copies would collide"
+            )
         spans[name] = spans[parent]
 
     for fname in sorted(os.listdir(src)):
@@ -65,8 +79,9 @@ def main() -> None:
             c = t
             for key in FACT_KEYS[name]:
                 field_t = c.schema.field(key).type
+                # add_checked: an overflowing shift raises instead of wrapping
                 shifted = pc.cast(
-                    pc.add(c[key], pa.scalar(k * span, type=field_t)), field_t
+                    pc.add_checked(c[key], pa.scalar(k * span, type=field_t)), field_t
                 )
                 c = c.set_column(c.schema.get_field_index(key), key, shifted)
             copies.append(c)

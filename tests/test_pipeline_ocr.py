@@ -63,3 +63,45 @@ def test_pipeline_ocr_default_keeps_flag_only_contract(spark):
     }
     assert out[1]["needs_ocr"] is True
     assert out[1]["extracted_text"] == "--- PAGE 1 ---"  # no OCR executed
+
+
+def test_pipeline_ocr_reclassifies_lob_from_final_text(spark):
+    """lob/lobs describe the FINAL text: the marker-only pre-OCR text
+    classifies UNKNOWN/['AUTO'], the OCR'd text WC/['WC']; the clean row
+    keeps the kernel's classification."""
+    from pdf_extraction_ai_agent_spark.oracle import (
+        classify_lob_oracle,
+        classify_lobs_oracle,
+    )
+    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+
+    scan = write_scanned_pdf(
+        [["CLAIM NO: AB-12345", "WORKERS COMPENSATION - LOST TIME"]]
+    ).decode("latin-1")
+    df = spark.createDataFrame(
+        [("c1", 1, "u", scan, "pdf_upload"),
+         ("c1", 2, "u", "Vehicle collision, claim CD-77777", "t")],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.to_timestamp(F.lit("2026-01-01")))
+
+    for with_spans in (True, False):
+        out = {
+            r["turn_idx"]: r
+            for r in extract_pipeline(
+                df, with_lob=True, with_spans=with_spans, ocr="fixture"
+            ).collect()
+        }
+        flag_only = {
+            r["turn_idx"]: r
+            for r in extract_pipeline(df, with_lob=True, with_spans=with_spans).collect()
+        }
+        assert flag_only[1]["lob"] == "UNKNOWN" and flag_only[1]["lobs"] == ["AUTO"]
+        scanned = out[1]
+        assert scanned["extracted_text"] == (
+            "CLAIM NO: AB-12345\nWORKERS COMPENSATION - LOST TIME"
+        )
+        assert scanned["lob"] == "WC" and scanned["lobs"] == ["WC"]
+        assert scanned["lob"] == classify_lob_oracle(scanned["extracted_text"])
+        assert scanned["lobs"] == classify_lobs_oracle(scanned["extracted_text"])
+        assert out[2]["lob"] == "AUTO" and out[2]["lobs"] == ["AUTO"]
+        assert out[2] == flag_only[2]

@@ -32,7 +32,10 @@ def test_pipeline_plan_shape(spark, transcripts_df, tmp_path_factory):
     assert plan.count("BroadcastExchange") == 1
     assert len(schemas) == 2 and any("text" not in s for s in schemas)
     # the Arrow extraction stage runs ONCE (the counts branch prunes it out)
+    # and carries the LOB classification too: no second Python node, and no
+    # interpreted higher-order function (array_compact's lambda) left
     assert plan.count("ArrowEvalPython") == 1
+    assert "lambdafunction" not in plan
     # two windows: bucketed row_number + the tiny cumulative-offsets window
     assert plan.count("Window") == 2
 

@@ -9,6 +9,7 @@ from pdf_extraction_ai_agent_spark.fixtures.transcripts import (
     generate_transcripts,
 )
 from pdf_extraction_ai_agent_spark.operators.extract import (
+    extract_result_type,
     extract_turn_batch,
 )
 
@@ -39,3 +40,43 @@ def test_pipeline_with_spans_false_prunes_column_and_udf_work(spark):
     # the default contract is unchanged
     full = extract_pipeline(df, with_fields=False, with_lob=False)
     assert "spans" in full.columns
+
+
+def test_kernel_with_lob_false_prunes_classification():
+    pdf = generate_transcripts(n_convs=40, seed=11)
+    full = extract_turn_batch(pdf["text"], pdf["tool"])
+    pruned = extract_turn_batch(pdf["text"], pdf["tool"], with_lob=False)
+    assert list(full.columns[-2:]) == ["lob", "lobs"]
+    assert "lob" not in pruned.columns and "lobs" not in pruned.columns
+    for col in pruned.columns:
+        pd.testing.assert_series_equal(full[col], pruned[col])
+    assert [f.name for f in extract_result_type(True, True).fields][-2:] == ["lob", "lobs"]
+    assert not {"lob", "lobs"} & set(extract_result_type(True, False).names)
+
+
+def test_pipeline_with_lob_false_prunes_kernel_output(spark):
+    """with_lob=False drops lob/lobs from the kernel's return type (no
+    field of the Python node is named lob) and from the output."""
+    import re
+
+    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+
+    df = spark.createDataFrame(
+        [("c", i, "u", f"Claim C{i}\nauto collision $12.50", "t", None)
+         for i in range(30)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+
+    def plan(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    out = extract_pipeline(df, with_lob=False)
+    assert "lob" not in out.columns and "lobs" not in out.columns
+    assert not re.search(r"\blobs?\b", plan(out))
+    assert len(out.collect()) == 30
+    full = extract_pipeline(df)
+    assert full.columns[-2:] == ["lob", "lobs"]
+    # the kernel's struct carries them: its fields are read off the UDF
+    assert re.search(r"\.lob AS lob#", plan(full))
+    assert {r["lob"] for r in full.collect()} == {"AUTO"}
