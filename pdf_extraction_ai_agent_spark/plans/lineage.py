@@ -45,6 +45,25 @@ def with_part_id(df: DataFrame, n_buckets: int = 64,
     )
 
 
+def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Rows built in this process as a DataFrame, shipped to the JVM as an
+    Arrow table (a ``LocalTableScan``). ``createDataFrame`` on a Python
+    list is a PythonRDD: every action over it runs Python worker tasks that
+    import nothing of this package, so they pay the full per-task zip
+    re-read (zipguard.py) — 8 of the 14 Python tasks of a warm 4-bucket,
+    2-group job at local[2]. An empty pandas frame falls back to that list
+    path; an empty Arrow table does not."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
+
+
 class LineageStore:
     """Tiny lineage/metrics table on parquet (sandbox) or Iceberg (cluster)."""
 
@@ -57,11 +76,12 @@ class LineageStore:
         try:
             df = self.spark.read.format(self.fmt).load(self.path)
         except Exception:
-            return self.spark.createDataFrame([], "part_id int")
+            return _local_frame(self.spark, [], "part_id int")
         return df.filter(F.col("run_group") == run_group).select("part_id").distinct()
 
     def append(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
+        df = _local_frame(
+            self.spark,
             [
                 (
                     r["run_group"],
@@ -104,7 +124,8 @@ class LineageStore:
 
     def put_stat(self, run_group: str, stat: str, value: float) -> None:
         (
-            self.spark.createDataFrame(
+            _local_frame(
+                self.spark,
                 [(run_group, stat, float(value))],
                 "run_group string, stat string, value double",
             )

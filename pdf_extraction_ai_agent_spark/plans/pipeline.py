@@ -9,7 +9,7 @@ Shape:
                              spread across S tasks for the map-only UDF
                              stage; safe because extraction is per-turn
                              independent, SURVEY §7 risk 5)
-      → extract_turn_batch  (Arrow pandas UDF: payload sniff, HTML
+      → extract_turn_batch  (Arrow UDF (pandas body): payload sniff, HTML
                              boilerplate strip, pseudo-PDF layout parse,
                              span extraction, LOB keyword scoring)
       → stable ordering     (row_number over conv_id ordered by turn_idx,ts)
@@ -263,30 +263,31 @@ def extract_pipeline(
 
 def _rescan_ocr_rows(df: DataFrame, with_spans: bool, with_lob: bool) -> DataFrame:
     """spans and lob/lobs must describe the FINAL text (the reference
-    derives fields from whichever text won): one pandas UDF re-scans the
+    derives fields from whichever text won): one Arrow UDF re-scans the
     ``needs_ocr`` rows from the current extracted_text with the kernel's
-    own span scan and LOB scorer. Idempotent when OCR failed or left the
-    text unchanged; untouched rows keep the kernel's values."""
+    own span scan and LOB scorer, returned through the kernel's
+    to_arrow_struct. Idempotent when OCR failed or left the text
+    unchanged; untouched rows keep the kernel's values."""
     from ..operators.classify import score_lobs
-    from ..operators.extract import _spans_chunked, extract_result_type
+    from ..operators.extract import _spans_chunked, extract_result_type, to_arrow_struct
 
-    fields = [
+    rtype = StructType([
         f for f in extract_result_type(with_spans, with_lob).fields
         if f.name in ("spans", "lob", "lobs")
-    ]
+    ])
 
-    def _rescan(text, flag):  # unannotated: struct-returning pandas UDF
-        final = [t if f else "" for t, f in zip(text.fillna(""), flag.fillna(False))]
+    def _rescan(text, flag):  # unannotated: arrow_udf's default is scalar
+        final = [(t or "") if f else "" for t, f in zip(text.to_pylist(), flag.to_pylist())]
         cols = {}
         if with_spans:
             cols["spans"] = [_spans_chunked(t) if t else [] for t in final]
         if with_lob:
             cols["lob"], cols["lobs"] = score_lobs(final)
-        return pd.DataFrame(cols, index=text.index)
+        return to_arrow_struct(pd.DataFrame(cols), rtype)
 
-    res = F.pandas_udf(_rescan, StructType(fields))("extracted_text", "needs_ocr")
+    res = F.arrow_udf(_rescan, rtype)("extracted_text", "needs_ocr")
     df = df.withColumn("_rescan", res)
-    for f in fields:
+    for f in rtype.fields:
         df = df.withColumn(
             f.name,
             F.when(F.col("needs_ocr"), F.col("_rescan." + f.name)).otherwise(F.col(f.name)),

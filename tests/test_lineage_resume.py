@@ -127,3 +127,33 @@ def test_job_over_mixed_real_pdf_corpus(spark, tmp_path_factory):
         out, lin, run_group="mix", n_buckets=4, bucket_group_size=2,
     )
     assert m2["skipped_buckets"] == 4 and not m2["groups"]
+
+
+def test_bookkeeping_frames_run_no_python_tasks(spark, tmp_path_factory):
+    """LineageStore's locally built rows reach the JVM as a local relation.
+    createDataFrame over a Python list is a PythonRDD: every action on it
+    runs Python worker tasks, which pay a worker's per-task fixed cost."""
+    from pdf_extraction_ai_agent_spark.plans.lineage import _local_frame
+
+    lin = os.path.join(str(tmp_path_factory.mktemp("lineage")), "lineage")
+    store = LineageStore(spark, lin)
+    frames = [
+        store.completed_part_ids("g"),  # no table yet: an empty frame
+        _local_frame(spark, [("g", 3, 7, 0, 12, 1.5)],
+                     "run_group string, part_id int, n_rows long, n_errors long, "
+                     "wall_ms long, turns_per_sec double"),
+    ]
+    for df in frames:
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert frames[0].collect() == []
+    assert frames[1].schema.simpleString() == (
+        "struct<run_group:string,part_id:int,n_rows:bigint,n_errors:bigint,"
+        "wall_ms:bigint,turns_per_sec:double>"
+    )
+    assert [tuple(r) for r in frames[1].collect()] == [("g", 3, 7, 0, 12, 1.5)]
+
+    store.append([{"run_group": "g", "part_id": 3, "n_rows": 7, "wall_ms": 12,
+                   "turns_per_sec": 1.5}])
+    store.put_stat("g", "max_conv_rows", 42.0)
+    assert [r.part_id for r in store.completed_part_ids("g").collect()] == [3]
+    assert store.get_stat("g", "max_conv_rows") == 42.0
