@@ -290,7 +290,16 @@ WITH doc AS (
   )
   GROUP BY l_orderkey
 ),
-rawlines AS (
+""" + layout_tables_sql()
+
+
+def layout_tables_sql() -> str:
+    """The q44 oracle's detection chain over a relation ``doc(doc_id,
+    text)`` of pseudo-PDF docs: CTEs from ``rawlines`` to the final
+    SELECT, the DuckDB twin of ``detect_layout_tables(pdf_runs(doc))``.
+    Prefix it with ``WITH doc AS (…),`` or with ``WITH`` over a
+    registered ``doc`` relation."""
+    return r"""rawlines AS (
   SELECT doc_id, u.i AS line_no, ls[CAST(u.i AS INTEGER)] AS line
   FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM doc) t,
        LATERAL (SELECT unnest(range(1, len(ls) + 1)) AS i) u
@@ -305,10 +314,11 @@ parsed AS (
 ),
 runs AS (
   SELECT doc_id, line_no,
-         CAST(MAX(CAST(page_marker AS INTEGER)) OVER
+         CAST(LAST_VALUE(CAST(page_marker AS INTEGER) IGNORE NULLS) OVER
               (PARTITION BY doc_id ORDER BY line_no
                ROWS UNBOUNDED PRECEDING) AS INTEGER) AS page,
-         CAST(xs AS DOUBLE) AS x, CAST(ys AS DOUBLE) AS y, txt
+         TRY_CAST(NULLIF(xs, '') AS DOUBLE) AS x,
+         TRY_CAST(NULLIF(ys, '') AS DOUBLE) AS y, txt
   FROM parsed
   QUALIFY xs <> '' AND page IS NOT NULL
 ),
@@ -377,7 +387,7 @@ EXT6_QUERIES["q44_layout_tables"] = q44_layout_tables
 # pseudo-PDF docs whose table text is deliberately NOT x-aligned (per-row
 # jitter), so q44's alignment criterion cannot find the grid — but the
 # drawn h/v ruling segments define it exactly
-# (texttables.detect_lattice_tables over pdf_runs + pdf_rulings).
+# (texttables.lattice_cells_from_docs; DuckDB twin lattice_cells_sql).
 # ---------------------------------------------------------------------------
 
 # fixed grid geometry: 5 h-rules (4 row bands), 4 v-rules (3 col bands)
@@ -434,8 +444,8 @@ def q45_lattice_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     # beyond the doc groupBy). The round-start plan re-ran the doc-build +
     # posexplode + regexes FIVE times (10 source scans) and cascaded 4
     # sort-merge joins + 2 windows — see plans/r08/q45_* before/after;
-    # parse parity with pdf_runs/pdf_rulings is pinned by
-    # tests/test_lattice_kernel_equivalence.py.
+    # parity with the DuckDB twin (lattice_cells_sql) over edge-case docs
+    # is pinned by tests/test_lattice_kernel_equivalence.py.
     return lattice_cells_from_docs(doc)
 
 
@@ -466,14 +476,23 @@ WITH doc AS (
   )
   GROUP BY l_orderkey
 ),
-rawlines AS (
+""" + lattice_cells_sql()
+
+
+def lattice_cells_sql() -> str:
+    """The q45 oracle's lattice chain over a relation ``doc(doc_id, text)``
+    of pseudo-PDF docs: CTEs from ``rawlines`` to the final SELECT, the
+    DuckDB twin of ``texttables.lattice_cells_from_docs``. Prefix it with
+    ``WITH doc AS (…),`` or with ``WITH`` over a registered ``doc``
+    relation."""
+    return r"""rawlines AS (
   SELECT doc_id, u.i AS line_no, ls[CAST(u.i AS INTEGER)] AS line
   FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM doc) t,
        LATERAL (SELECT unnest(range(1, len(ls) + 1)) AS i) u
 ),
 paged AS (
   SELECT doc_id, line_no, line,
-         CAST(MAX(CAST(NULLIF(regexp_extract(line, '^%%PAGE (\d+)$', 1), '') AS INTEGER)) OVER
+         CAST(LAST_VALUE(CAST(NULLIF(regexp_extract(line, '^%%PAGE (\d+)$', 1), '') AS INTEGER) IGNORE NULLS) OVER
               (PARTITION BY doc_id ORDER BY line_no ROWS UNBOUNDED PRECEDING) AS INTEGER) AS page
   FROM rawlines
 ),

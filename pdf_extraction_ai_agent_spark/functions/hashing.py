@@ -44,12 +44,6 @@ def md5_long_sql(expr: str) -> str:
     return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def minhash_col(hash_col: Column, i: int) -> Column:
-    """perm_i over a 60-bit hash column (Spark)."""
-    a, b = MINHASH_AB[i]
-    return (F.lit(a) * (hash_col % MERSENNE_P) + F.lit(b)) % MERSENNE_P
-
-
 def minhash_sql(hash_expr: str, i: int) -> str:
     a, b = MINHASH_AB[i]
     return f"(({a} * (({hash_expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"

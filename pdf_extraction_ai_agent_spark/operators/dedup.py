@@ -29,7 +29,6 @@ from ..functions.hashing import (
     LSH_BAND_SIZE,
     NUM_PERMS,
     md5_long_col,
-    minhash_col,
 )
 
 # ---------------------------------------------------------------------------
@@ -82,23 +81,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-def minhash_signatures_declarative(df: DataFrame, id_col: str = "doc_id",
-                                   text_col: str = "text", k: int = 3) -> DataFrame:
-    """Pure-DataFrame variant: explode shingles → 16 partial-min aggregates
-    in one groupBy. Kept for plan-shape reference and as a correctness
-    cross-check; the production path is ``minhash_signatures`` below —
-    measured ~20× faster because Spark evaluates higher-order array
-    functions (transform/aggregate) INTERPRETED, outside whole-stage
-    codegen, so the declarative shingle construction dominates runtime."""
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(F.col(text_col), k)).alias("shingle"),
-    )
-    hashed = sh.select("doc_id", md5_long_col(F.col("shingle")).alias("h"))
-    aggs = [F.min(minhash_col(F.col("h"), i)).alias(f"mh_{i}") for i in range(NUM_PERMS)]
-    return hashed.groupBy("doc_id").agg(*aggs)
 
 
 def _hash_tokens_fast(tokens: list) -> "np.ndarray":  # noqa: F821

@@ -445,15 +445,16 @@ def _spans_chunked(t: str) -> list[dict]:
     spans, so a later field whose first occurrence overlaps an earlier
     field's match would resolve differently than independent searches.
 
-    Round-6 negative result (scripts/exp_arrow_spans.py, VERDICT r5 item
-    4): hoisting lower() + the literal prefilters onto pyarrow.compute
-    (utf8_lower + match_substring masks over all chunks of a batch, numpy
-    masks feeding this residual loop) measured 0.917× — SLOWER. The date
-    ladder must still visit every chunk (validation + span positions are
-    inherently per-match Python), so the per-chunk loop survives and the
-    Arrow pass only replaces ~6 C-level `in` calls with mask indexing
-    plus three materialized arrays. Bit-exact, kept as the experiment
-    script; do not re-try without restructuring date handling first.
+    Round-6 negative result (VERDICT r5 item 4; the experiment script,
+    since deleted, is ``git show 4f9cbd9:scripts/exp_arrow_spans.py``):
+    hoisting lower() + the literal prefilters onto pyarrow.compute
+    (utf8_lower + match_substring masks over all chunks of a batch,
+    numpy masks feeding this residual loop) measured 0.917× — SLOWER.
+    The date ladder must still visit every chunk (validation + span
+    positions are inherently per-match Python), so the per-chunk loop
+    survives and the Arrow pass only replaces ~6 C-level `in` calls with
+    mask indexing plus three materialized arrays. Bit-exact; do not
+    re-try without restructuring date handling first.
 
     Round-7 results: (d) UNROLLING the field/date loops into straight-line
     code (no per-field tuple unpacking, no inner for/else frames) measured

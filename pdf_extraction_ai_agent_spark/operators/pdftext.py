@@ -617,10 +617,11 @@ def _object_aes_key(base_key: bytes, num: int, gen: int = 0) -> bytes:
     return h.digest()[: min(len(base_key) + 5, 16)]
 
 
-# --- pure-Python AES-128 (inverse cipher only — stream decryption) --------
-# Table-based implementation; the oracle char-scanner carries its own
-# spec-style (on-the-fly GF multiply) copy, and the fixture writer carries
-# the FORWARD cipher — three independent codebases per the twin invariant.
+# --- pure-Python AES-128/256: S-boxes, key schedule, GF(2^8) tables -------
+# The tables the T-table cipher below is built from; the oracle char-scanner
+# carries its own spec-style (on-the-fly GF multiply) copy, and the fixture
+# writer its own forward cipher — three independent codebases per the twin
+# invariant.
 
 _AES_SBOX = bytes.fromhex(
     "637c777bf26b6fc53001672bfed7ab76ca82c97dfa5947f0add4a2af9ca472c0"
@@ -632,7 +633,6 @@ _AES_SBOX = bytes.fromhex(
     "ba78252e1ca6b4c6e8dd741f4bbd8b8a703eb5664803f60e613557b986c11d9e"
     "e1f8981169d98e949b1e87e9ce5528df8ca1890dbfe6426841992d0fb054bb16"
 )
-_AES_INV_SBOX = bytes(256)
 _AES_INV_SBOX = bytearray(256)
 for _i, _v in enumerate(_AES_SBOX):
     _AES_INV_SBOX[_v] = _i
@@ -678,60 +678,18 @@ def _gmul_tab(c: int) -> bytes:
 
 
 _M9, _M11, _M13, _M14 = _gmul_tab(9), _gmul_tab(11), _gmul_tab(13), _gmul_tab(14)
-_INV_SHIFT = [(r + 4 * ((c - r) % 4)) for c in range(4) for r in range(4)]
-
-
-def _aes_decrypt_block(w: list[bytes], block: bytes) -> bytes:
-    nr = len(w) - 1
-    s = [b ^ k for b, k in zip(block, w[nr])]
-    for rnd in range(nr - 1, 0, -1):
-        s = [_AES_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16)]
-        s = [b ^ k for b, k in zip(s, w[rnd])]
-        t = [0] * 16
-        for c in range(4):
-            a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-            t[4 * c + 0] = _M14[a0] ^ _M11[a1] ^ _M13[a2] ^ _M9[a3]
-            t[4 * c + 1] = _M9[a0] ^ _M14[a1] ^ _M11[a2] ^ _M13[a3]
-            t[4 * c + 2] = _M13[a0] ^ _M9[a1] ^ _M14[a2] ^ _M11[a3]
-            t[4 * c + 3] = _M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3]
-        s = t
-    s = [_AES_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16)]
-    return bytes(b ^ k for b, k in zip(s, w[0]))
-
-
-_AES_SHIFT = [(r + 4 * ((c + r) % 4)) for c in range(4) for r in range(4)]
 _M2, _M3 = _gmul_tab(2), _gmul_tab(3)
-
-
-def _aes_encrypt_block(w: list[bytes], block: bytes) -> bytes:
-    """Forward cipher — needed by the R6 Algorithm 2.B password hash
-    (which AES-ENCRYPTS its rolling state), not for writing files."""
-    nr = len(w) - 1
-    s = [b ^ k for b, k in zip(block, w[0])]
-    for rnd in range(1, nr + 1):
-        s = [_AES_SBOX[b] for b in s]
-        s = [s[_AES_SHIFT[i]] for i in range(16)]
-        if rnd < nr:
-            t = [0] * 16
-            for c in range(4):
-                a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-                t[4 * c + 0] = _M2[a0] ^ _M3[a1] ^ a2 ^ a3
-                t[4 * c + 1] = a0 ^ _M2[a1] ^ _M3[a2] ^ a3
-                t[4 * c + 2] = a0 ^ a1 ^ _M2[a2] ^ _M3[a3]
-                t[4 * c + 3] = _M3[a0] ^ a1 ^ a2 ^ _M2[a3]
-            s = t
-        s = [b ^ k for b, k in zip(s, w[rnd])]
-    return bytes(s)
 
 
 # --- 32-bit T-table AES (r8 fast path) --------------------------------------
 # FIPS-197 expressed as the classic four-table formulation: per round each
 # state COLUMN is one big-endian u32 and SubBytes+ShiftRows+MixColumns
-# collapse into 4 table lookups + 4 xors per column.  Profiled ~8-10x the
-# per-byte table walk above on Algorithm 2.B (64+ rounds x ~128 CBC blocks
-# per KDF call) and on the AESV2/AESV3 stream paths.  The byte-state
-# functions above stay as the readable reference; equality between the two
-# is pinned by tests/test_aes_ttable.py.
+# collapse into 4 table lookups + 4 xors per column.  Profiled ~8-10x a
+# per-byte table walk on Algorithm 2.B (64+ rounds x ~128 CBC blocks per
+# KDF call) and on the AESV2/AESV3 stream paths.  This is the engine's
+# pure-Python fallback when OpenSSL is absent (``_openssl``); the FIPS-197
+# vectors and the writer's per-byte cipher pin it in
+# tests/test_aes_ttable.py, which runs with OpenSSL disabled.
 
 _TE0 = tuple(
     (_M2[s] << 24) | (s << 16) | (s << 8) | _M3[s] for s in _AES_SBOX
@@ -2296,7 +2254,7 @@ def tokenize_pdf_runs(
     sheared/singular/operand-less cm, unbalanced Q, sheared/singular Tm —
     and as a safety net, any page whose content shows text (Tj/TJ
     present) that the walk failed to capture. Feeds both reading-order
-    assembly (assemble_reading_order) and detect_lattice_tables' cell
+    assembly (assemble_reading_order) and lattice_cells_from_docs' cell
     placement on REAL PDF bytes."""
     if not data.startswith(b"%PDF-"):
         return None

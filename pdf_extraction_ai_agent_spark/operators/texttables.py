@@ -70,11 +70,15 @@ def detect_text_tables(
 
 
 # ---------------------------------------------------------------------------
-# Layout-space (lattice-style) table detection over pseudo-PDF runs —
-# Camelot's lattice flavor keys on drawn grid geometry; without line art,
-# the alignment-equivalent is COLUMN X-ALIGNMENT: consecutive text lines
-# whose runs start at ≥ min_shared identical x positions form a table.
-# Fully declarative (two windows + one equi-join on (doc, page, x)).
+# PDF layout-space table detection, two criteria over the spec pseudo-PDF
+# grammar:
+# - column x-alignment (q44, no line art): consecutive text lines whose
+#   runs start at ≥ min_shared identical x positions form a table —
+#   pdf_runs + detect_layout_tables, fully declarative (windows + one
+#   equi-join on (doc, page, x));
+# - drawn ruling lines (q45, Camelot's lattice flavor): h/v segment
+#   intersections define the grid — lattice_cells_from_docs, one fused
+#   per-doc python kernel that also reads real PDF bytes.
 # ---------------------------------------------------------------------------
 
 
@@ -111,153 +115,16 @@ def pdf_runs(df: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -> 
     )
 
 
-def pdf_rulings(df: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -> DataFrame:
-    """Parse vector ruling segments (spec.PDF_RULE_RE — `x1 y1 m x2 y2 l S`,
-    the moveto/lineto/stroke path ops Camelot's lattice flavor keys on) into
-    (doc_id, page, x1, y1, x2, y2). Same declarative shape as pdf_runs:
-    posexplode lines, regexp projections, page carried by a running last().
-    """
-    lines = df.select(
-        F.col(doc_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
-    )
-    page_m = F.regexp_extract("line", spec.PDF_PAGE_RE, 1)
-    parsed = lines.select(
-        "doc_id", "line_no",
-        F.when(page_m != "", page_m.cast("int")).alias("page_marker"),
-        *[
-            F.regexp_extract("line", spec.PDF_RULE_RE, i + 1).alias(c)
-            for i, c in enumerate(["x1s", "y1s", "x2s", "y2s"])
-        ],
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("line_no")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        parsed.withColumn("page", F.last("page_marker", ignorenulls=True).over(w))
-        .filter((F.col("x1s") != "") & F.col("page").isNotNull())
-        .select(
-            "doc_id", "page",
-            F.col("x1s").cast("double").alias("x1"),
-            F.col("y1s").cast("double").alias("y1"),
-            F.col("x2s").cast("double").alias("x2"),
-            F.col("y2s").cast("double").alias("y2"),
-        )
-    )
-
-
-def real_pdf_runs(df: DataFrame, payload_col: str = "text", doc_col: str = "doc_id") -> DataFrame:
-    """(doc_id, page, line_no, x, y, txt) positioned text runs parsed from
-    REAL PDF bytes (latin-1 string payloads) by the dependency-free
-    tokenizer (operators/pdftext.py::tokenize_pdf_runs). Map-only Arrow
-    kernel; rows the tokenizer cannot parse produce no runs (the extract
-    error channel is where parse failures surface). Same output shape as
-    ``pdf_runs`` so detect_lattice_tables/detect_layout_tables work on
-    genuine PDF bytes without pdfplumber."""
-    import pandas as pd
-
-    from .pdftext import tokenize_pdf_runs
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[doc_col], pdf[payload_col]):
-                pages = tokenize_pdf_runs(str(payload).encode("latin-1", errors="ignore"))
-                if not pages:
-                    continue
-                for pno, runs in enumerate(pages, start=1):
-                    for ln, (x, y, txt) in enumerate(runs):
-                        rows.append((int(doc_id), pno, ln, x, y, txt))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "line_no", "x", "y", "txt"]
-            )
-
-    return df.select(F.col(doc_col), F.col(payload_col)).mapInPandas(
-        kernel, schema="doc_id long, page int, line_no int, x double, y double, txt string"
-    )
-
-
-def real_pdf_rulings(df: DataFrame, payload_col: str = "text", doc_col: str = "doc_id") -> DataFrame:
-    """(doc_id, page, x1, y1, x2, y2) stroked ruling segments from REAL PDF
-    bytes (pdftext.tokenize_pdf_rulings). Map-only Arrow kernel; with
-    ``real_pdf_runs`` this runs detect_lattice_tables on genuine scanned-
-    form PDFs with zero optional libraries."""
-    import pandas as pd
-
-    from .pdftext import tokenize_pdf_rulings
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[doc_col], pdf[payload_col]):
-                pages = tokenize_pdf_rulings(str(payload).encode("latin-1", errors="ignore"))
-                if not pages:
-                    continue
-                for pno, segs in enumerate(pages, start=1):
-                    for x1, y1, x2, y2 in segs:
-                        rows.append((int(doc_id), pno, x1, y1, x2, y2))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "x1", "y1", "x2", "y2"]
-            )
-
-    return df.select(F.col(doc_col), F.col(payload_col)).mapInPandas(
-        kernel, schema="doc_id long, page int, x1 double, y1 double, x2 double, y2 double"
-    )
-
-
-def detect_lattice_tables(
-    runs: DataFrame,
-    rulings: DataFrame,
-    min_cross: int = 2,
-) -> DataFrame:
-    """Lattice-table extraction from drawn ruling lines — per-page Arrow
-    kernel (r8 fast path; ``detect_lattice_tables_joins`` below is the
-    declarative reference, equality pinned by
-    tests/test_lattice_kernel_equivalence.py and the q45/q46 oracles).
-
-    The grid decision is page-local: mutual-intersection rule validation,
-    band construction and run placement all touch one page's ~tens of
-    elements.  The join form expressed that locality as 4 sort-merge
-    joins + 2 aggregations + 2 windows (6 shuffles of corpus-sized
-    frames, ~3.2 s at sf0.1 from a cached parse); here runs and rulings
-    are union-tagged, shuffled ONCE on (doc_id, page), and each python
-    task assembles its pages' grids in numpy (same O(rules² + runs·bands)
-    per page — a pathological mega-page is quadratic in either shape).
-    Semantics are byte-identical: same validation counts, strict band
-    containment, and cell text ordered by (x, txt-bytes) — the
-    array_sort-struct / DuckDB ``ORDER BY x, txt`` collation."""
-    tagged = runs.select(
-        "doc_id", F.col("page").cast("int").alias("page"),
-        "x", "y", "txt",
-        F.lit(None).cast("double").alias("x1"),
-        F.lit(None).cast("double").alias("y1"),
-        F.lit(None).cast("double").alias("x2"),
-        F.lit(None).cast("double").alias("y2"),
-    ).unionByName(
-        rulings.select(
-            "doc_id", F.col("page").cast("int").alias("page"),
-            F.lit(None).cast("double").alias("x"),
-            F.lit(None).cast("double").alias("y"),
-            F.lit(None).cast("string").alias("txt"),
-            "x1", "y1", "x2", "y2",
-        )
-    )
-    return lattice_cells_from_elements(tagged, min_cross)
-
-
 def _page_grid(rules, runs, min_cross):
-    """One page's grid assembly — the shared core of both lattice kernels
-    (tagged-frame and fused-doc), pure python over per-page lists.
+    """One page's grid assembly, pure python over per-page lists.
 
-    ``rules``: [(x1, y1, x2, y2)], ``runs``: [(x, y, txt)].  Exactly the
-    join-form semantics: h/v classification, mutual-intersection counts
-    POOLED per coordinate value (duplicate-y rules add up, as the
-    (doc, page, hy) groupBy did), bands between adjacent surviving
+    ``rules``: [(x1, y1, x2, y2)], ``runs``: [(x, y, txt)].  The q45
+    DuckDB twin's semantics: h/v classification, mutual-intersection
+    counts POOLED per coordinate value (duplicate-y rules add up, as its
+    (doc, page, hy) GROUP BY does), bands between adjacent surviving
     coordinates, STRICT open-interval run containment, and cell text
-    ordered by (x, utf-8 bytes of txt) — the array_sort-struct / DuckDB
-    ``ORDER BY x, txt`` collation.  Returns [(row_idx, col_idx, text)]."""
+    ordered by (x, utf-8 bytes of txt) — DuckDB's ``ORDER BY x, txt``
+    collation.  Returns [(row_idx, col_idx, text)]."""
     h = [(y1, x1 if x1 < x2 else x2, x2 if x1 < x2 else x1)
          for x1, y1, x2, y2 in rules if y1 == y2 and x1 != x2]
     v = [(x1, y1 if y1 < y2 else y2, y2 if y1 < y2 else y1)
@@ -300,132 +167,42 @@ def _page_grid(rules, runs, min_cross):
     return out
 
 
-def lattice_cells_from_elements(
-    elements: DataFrame, min_cross: int = 2
-) -> DataFrame:
-    """detect_lattice_tables over an already kind-tagged elements frame
-    (pdf_runs-shape run columns + pdf_rulings-shape segment columns,
-    null-tagged) — one (doc_id, page) shuffle + within-partition sort,
-    then the per-page kernel.  The kernel STREAMS arrow batches with a
-    carry-over of the trailing (doc_id, page) group instead of
-    concatenating the whole partition, so task memory is bounded by the
-    batch size plus one page's elements (only a single pathological
-    mega-page can grow the carry — the same page that is quadratic in
-    every formulation of the grid)."""
-    import numpy as np
-    import pandas as pd
-
-    def _emit(pdf):
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        pg = pdf["page"].to_numpy(dtype=np.int64)
-        x = pdf["x"].to_numpy(dtype=np.float64)
-        y = pdf["y"].to_numpy(dtype=np.float64)
-        txt = pdf["txt"].to_numpy(dtype=object)
-        x1 = pdf["x1"].to_numpy(dtype=np.float64)
-        y1 = pdf["y1"].to_numpy(dtype=np.float64)
-        x2 = pdf["x2"].to_numpy(dtype=np.float64)
-        y2 = pdf["y2"].to_numpy(dtype=np.float64)
-        order = np.lexsort((pg, doc))
-        doc, pg = doc[order], pg[order]
-        x, y, txt = x[order], y[order], txt[order]
-        x1, y1, x2, y2 = x1[order], y1[order], x2[order], y2[order]
-        brk = np.flatnonzero((np.diff(doc) != 0) | (np.diff(pg) != 0)) + 1
-        starts = np.concatenate(([0], brk))
-        ends = np.concatenate((brk, [len(doc)]))
-        o_doc: list[int] = []
-        o_page: list[int] = []
-        o_row: list[int] = []
-        o_col: list[int] = []
-        o_text: list[str] = []
-        for st, en in zip(starts, ends):
-            rm = ~np.isnan(x1[st:en])
-            rules = list(zip(x1[st:en][rm], y1[st:en][rm],
-                             x2[st:en][rm], y2[st:en][rm]))
-            gm = ~np.isnan(x[st:en])
-            runs = list(zip(x[st:en][gm], y[st:en][gm], txt[st:en][gm]))
-            grid = _page_grid(rules, runs, min_cross)
-            if not grid:
-                continue
-            d, p = int(doc[st]), int(pg[st])
-            for ri, ci, text in grid:
-                o_doc.append(d)
-                o_page.append(p)
-                o_row.append(ri)
-                o_col.append(ci)
-                o_text.append(text)
-        return pd.DataFrame(
-            {
-                "doc_id": pd.Series(o_doc, dtype="int64"),
-                "page": pd.Series(o_page, dtype="int32"),
-                "row_idx": pd.Series(o_row, dtype="int32"),
-                "col_idx": pd.Series(o_col, dtype="int32"),
-                "cell_text": pd.Series(o_text, dtype=object),
-            }
-        )
-
-    def kernel(batches):
-        carry = None
-        for b in batches:
-            if not len(b):
-                continue
-            pdf = (
-                pd.concat([carry, b], ignore_index=True)
-                if carry is not None and len(carry)
-                else b
-            )
-            doc = pdf["doc_id"].to_numpy()
-            pg = pdf["page"].to_numpy()
-            # input is sorted within the partition, so the trailing
-            # (doc, page) group — possibly continuing in the next batch —
-            # is a suffix: hold it back
-            changes = (doc != doc[-1]) | (pg != pg[-1])
-            if changes.any():
-                cut = int(np.flatnonzero(changes)[-1]) + 1
-                yield _emit(pdf.iloc[:cut])
-                carry = pdf.iloc[cut:].reset_index(drop=True)
-            else:
-                carry = pdf
-        if carry is not None and len(carry):
-            yield _emit(carry)
-
-    n = elements.sparkSession.sparkContext.defaultParallelism
-    return (
-        elements.select(
-            "doc_id", F.col("page").cast("int").alias("page"),
-            "x", "y", "txt", "x1", "y1", "x2", "y2",
-        )
-        .repartition(n, F.col("doc_id"), F.col("page"))
-        .sortWithinPartitions("doc_id", "page")
-        .mapInPandas(
-            kernel,
-            schema="doc_id long, page int, row_idx int, col_idx int, cell_text string",
-        )
-    )
-
-
 def lattice_cells_from_docs(
     df: DataFrame,
     text_col: str = "text",
     doc_col: str = "doc_id",
     min_cross: int = 2,
 ) -> DataFrame:
-    """The fully-fused q45 path: pseudo-PDF docs → lattice cells in ONE
-    python pass, no shuffle beyond whatever produced the doc frame (a doc
-    carries all of its pages, so per-page grouping happens inside the
-    kernel).  Replaces: posexplode + 8 regexp_extracts/line + the page
-    forward-fill window + the (doc_id, page) repartition (~1.7 s of the
-    warm q45 at sf0.1).
+    """Lattice-table extraction from drawn ruling lines (reference
+    camelot_extractor.py:11-14, flavor="lattice"): docs → (doc_id, page,
+    row_idx, col_idx, cell_text) per NON-EMPTY cell, in ONE python pass
+    with no shuffle beyond whatever produced the doc frame (a doc carries
+    all of its pages, so per-page grouping happens inside the kernel).
+    The grid comes from h/v segment INTERSECTIONS, so text needs no column
+    x-alignment — the case detect_layout_tables (q44) cannot handle.
 
-    Line semantics replicate pdf_runs/pdf_rulings exactly (pinned by
-    tests/test_lattice_kernel_equivalence.py::test_fused_doc_kernel_
-    matches_spark_parse): split on \n; the ^-anchored PDF_PAGE_RE /
-    PDF_RUN_RE / PDF_RULE_RE match identically under java.util.regex and
-    python re for \n-free lines; runs/rules before the first %%PAGE
-    marker are dropped (the forward-fill null page); numeric strings that
-    [0-9.]+ admits but a double cannot parse ("1..2") are skipped — the
-    declarative form THROWS there under ANSI casts, so the fused kernel
-    is defined on strictly more inputs and equal wherever both run.
-    startswith prefilters are sound because every pattern is ^-anchored."""
+    Model (one grid per page): h-lines (y1==y2) and v-lines (x1==x2)
+    survive only if they cross ≥ min_cross perpendicular rules; row bands
+    lie between adjacent surviving ys (descending), col bands between
+    adjacent xs (ascending); a run lands in the cell whose open interval
+    contains its (x, y); cell text = runs ordered by (x, txt) joined with
+    ' ' (``_page_grid``).
+
+    Each doc's pages come from one of two parses, chosen by its text with
+    extract.py's dispatch rule:
+    - REAL PDF bytes (``%PDF-`` but not spec.PDF_HEADER, latin-1 string
+      payloads): pdftext.tokenize_pdf_runs / tokenize_pdf_rulings, pages
+      numbered from 1. A doc either tokenizer cannot parse yields no cells
+      (the extract error channel is where parse failures surface).
+    - everything else, as pseudo-PDF lines: split on \n; the ^-anchored
+      PDF_PAGE_RE / PDF_RUN_RE / PDF_RULE_RE; runs/rules before the first
+      %%PAGE marker are dropped; the page is the LAST marker seen, so a
+      repeated marker pools its elements into one page grid. Numeric
+      strings that [0-9.]+ admits but a double cannot parse ("1..2") are
+      skipped, as the DuckDB twin's TRY_CAST skips them. startswith
+      prefilters are sound because every pattern is ^-anchored.
+    Equality with the q45 DuckDB twin (entry_queries_ext6.lattice_cells_sql)
+    is pinned by tests/test_lattice_kernel_equivalence.py."""
     import re
 
     import pandas as pd
@@ -434,6 +211,50 @@ def lattice_cells_from_docs(
     pat_run = re.compile(spec.PDF_RUN_RE)
     pat_rule = re.compile(spec.PDF_RULE_RE)
     rule_heads = set("0123456789.")
+
+    def pseudo_pages(text: str) -> dict:
+        page = None
+        pages: dict = {}
+        for line in text.split("\n"):
+            if not line:
+                continue
+            c0 = line[0]
+            if c0 == "%":
+                m = pat_page.match(line)
+                if m:
+                    page = int(m.group(1))
+                    if page not in pages:
+                        pages[page] = ([], [])
+                continue
+            if page is None:
+                continue
+            if c0 == "B":
+                m = pat_run.match(line)
+                if m:
+                    try:
+                        xv, yv = float(m.group(1)), float(m.group(2))
+                    except ValueError:
+                        continue
+                    pages[page][1].append((xv, yv, m.group(3)))
+            elif c0 in rule_heads:
+                m = pat_rule.match(line)
+                if m:
+                    try:
+                        seg = tuple(float(m.group(g)) for g in range(1, 5))
+                    except ValueError:
+                        continue
+                    pages[page][0].append(seg)
+        return pages
+
+    def real_pages(text: str) -> dict:
+        from .pdftext import tokenize_pdf_rulings, tokenize_pdf_runs
+
+        data = text.encode("latin-1", errors="ignore")
+        runs = tokenize_pdf_runs(data)
+        rules = tokenize_pdf_rulings(data)
+        if runs is None or rules is None:
+            return {}
+        return dict(enumerate(zip(rules, runs), start=1))
 
     def kernel(batches):
         for pdf in batches:
@@ -444,37 +265,11 @@ def lattice_cells_from_docs(
             o_text: list[str] = []
             for doc_id, text in zip(pdf["doc_id"], pdf["_text"]):
                 doc_id = int(doc_id)
-                page = None
-                pages: dict = {}
-                for line in str(text).split("\n"):
-                    if not line:
-                        continue
-                    c0 = line[0]
-                    if c0 == "%":
-                        m = pat_page.match(line)
-                        if m:
-                            page = int(m.group(1))
-                            if page not in pages:
-                                pages[page] = ([], [])
-                        continue
-                    if page is None:
-                        continue
-                    if c0 == "B":
-                        m = pat_run.match(line)
-                        if m:
-                            try:
-                                xv, yv = float(m.group(1)), float(m.group(2))
-                            except ValueError:
-                                continue
-                            pages[page][1].append((xv, yv, m.group(3)))
-                    elif c0 in rule_heads:
-                        m = pat_rule.match(line)
-                        if m:
-                            try:
-                                seg = tuple(float(m.group(g)) for g in range(1, 5))
-                            except ValueError:
-                                continue
-                            pages[page][0].append(seg)
+                text = str(text)
+                if text.startswith("%PDF-") and not text.startswith(spec.PDF_HEADER):
+                    pages = real_pages(text)
+                else:
+                    pages = pseudo_pages(text)
                 for p, (rules, runs) in pages.items():
                     for ri, ci, cell in _page_grid(rules, runs, min_cross):
                         o_doc.append(doc_id)
@@ -497,117 +292,6 @@ def lattice_cells_from_docs(
     ).mapInPandas(
         kernel,
         schema="doc_id long, page int, row_idx int, col_idx int, cell_text string",
-    )
-
-
-def detect_lattice_tables_joins(
-    runs: DataFrame,
-    rulings: DataFrame,
-    min_cross: int = 2,
-) -> DataFrame:
-    """Declarative (join-form) twin of ``detect_lattice_tables`` — kept as
-    the readable reference implementation; equality with the kernel is
-    pinned by tests/test_lattice_kernel_equivalence.py.
-
-    True lattice-table extraction from drawn ruling lines (completes S11;
-    reference camelot_extractor.py:11-14, flavor="lattice"): the grid comes
-    from horizontal/vertical segment INTERSECTIONS, so text needs no column
-    x-alignment at all — the case detect_layout_tables (q44) cannot handle.
-
-    Model (one grid per page — the reference's per-page lattice pass):
-    - h-lines (y1==y2) and v-lines (x1==x2) are kept only if they cross
-      ≥ min_cross perpendicular rules (mutual-intersection validation, as
-      Camelot does on its line mask);
-    - row bands = gaps between adjacent surviving h-line ys (descending),
-      col bands = gaps between adjacent v-line xs (ascending);
-    - a text run lands in the cell whose open interval contains its (x, y);
-      cell text = runs ordered by (x, txt) joined with ' '.
-
-    Output: (doc_id, page, row_idx, col_idx, cell_text) per NON-EMPTY cell.
-
-    Plan: the intersection checks and band assignment are equi-joins on
-    (doc_id, page) with range predicates — per-page work is
-    O(rules² + runs·bands) with per-page rule counts that are small
-    constants in practice; every shuffle keys on (doc_id, page) only.
-    """
-    h = (
-        rulings.filter((F.col("y1") == F.col("y2")) & (F.col("x1") != F.col("x2")))
-        .select(
-            "doc_id", "page", F.col("y1").alias("hy"),
-            F.least("x1", "x2").alias("hx_lo"), F.greatest("x1", "x2").alias("hx_hi"),
-        )
-    )
-    v = (
-        rulings.filter((F.col("x1") == F.col("x2")) & (F.col("y1") != F.col("y2")))
-        .select(
-            "doc_id", "page", F.col("x1").alias("vx"),
-            F.least("y1", "y2").alias("vy_lo"), F.greatest("y1", "y2").alias("vy_hi"),
-        )
-    )
-    # merge hint: h and v are both corpus-sized (see the placed joins
-    # below) — broadcast only looks right under small local cache stats
-    cross = h.join(v.hint("merge"), ["doc_id", "page"]).filter(
-        (F.col("hy") >= F.col("vy_lo")) & (F.col("hy") <= F.col("vy_hi"))
-        & (F.col("vx") >= F.col("hx_lo")) & (F.col("vx") <= F.col("hx_hi"))
-    )
-    good_h = (
-        cross.groupBy("doc_id", "page", "hy")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_cross)
-        .select("doc_id", "page", "hy")
-        .distinct()
-    )
-    good_v = (
-        cross.groupBy("doc_id", "page", "vx")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_cross)
-        .select("doc_id", "page", "vx")
-        .distinct()
-    )
-    w_h = Window.partitionBy("doc_id", "page").orderBy(F.col("hy").desc())
-    row_bands = (
-        good_h.withColumn("y_lo", F.lead("hy").over(w_h))
-        .filter(F.col("y_lo").isNotNull())
-        .select(
-            "doc_id", "page",
-            (F.row_number().over(w_h) - 1).alias("row_idx"),
-            F.col("hy").alias("y_hi"), "y_lo",
-        )
-    )
-    w_v = Window.partitionBy("doc_id", "page").orderBy(F.col("vx").asc())
-    col_bands = (
-        good_v.withColumn("x_hi", F.lead("vx").over(w_v))
-        .filter(F.col("x_hi").isNotNull())
-        .select(
-            "doc_id", "page",
-            (F.row_number().over(w_v) - 1).alias("col_idx"),
-            F.col("vx").alias("x_lo"), "x_hi",
-        )
-    )
-    # merge hints (r8): every side of the band-placement joins is
-    # corpus-sized (runs and bands both grow with the corpus), so
-    # sort-merge is the only strategy that survives 100 TB — and when runs
-    # and bands come from one persisted elements frame they are already
-    # co-partitioned on doc_id, so the SMJ plans with NO exchange at all.
-    # Without the hint, the cached frame's small local statistics made the
-    # planner BROADCAST the 1.8M-row runs side (~hundreds of MB built
-    # single-threaded, lingering until GC — measured inflating every
-    # query that ran after the lattice pair in the bench session).
-    placed = (
-        runs.join(row_bands.hint("merge"), ["doc_id", "page"])
-        .filter((F.col("y") > F.col("y_lo")) & (F.col("y") < F.col("y_hi")))
-        .join(col_bands.hint("merge"), ["doc_id", "page"])
-        .filter((F.col("x") > F.col("x_lo")) & (F.col("x") < F.col("x_hi")))
-    )
-    return placed.groupBy("doc_id", F.col("page").cast("int").alias("page"),
-                          "row_idx", "col_idx").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("x", F.col("txt").alias("t")))),
-                lambda s: s["t"],
-            ),
-            " ",
-        ).alias("cell_text")
     )
 
 

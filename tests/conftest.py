@@ -39,3 +39,13 @@ def golden_pdf(transcripts_pdf):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def no_openssl(monkeypatch):
+    """Force the engine and the writer onto their pure-Python ciphers."""
+    from pdf_extraction_ai_agent_spark.fixtures import minipdf
+    from pdf_extraction_ai_agent_spark.operators import pdftext
+
+    monkeypatch.setattr(pdftext, "_OPENSSL", False)
+    monkeypatch.setattr(minipdf, "_W_OPENSSL", False)

@@ -108,51 +108,55 @@ def test_layout_table_detection_semantics(spark):
     }
 
 
+# pseudo-PDF whose drawn rulings define a 3x2 grid around unaligned text
+_JITTERED_GRID_DOC = "\n".join([
+    "%PDF-SIM 1.0",
+    "%%PAGE 1",
+    "BT 30 400 Td (Prose above the grid) Tj ET",
+    # rulings: 4 h-lines (3 row bands) x 3 v-lines (2 col bands)
+    "40 310 m 400 310 l S",
+    "40 290 m 400 290 l S",
+    "40 270 m 400 270 l S",
+    "40 250 m 400 250 l S",
+    "40 250 m 40 310 l S",
+    "220 250 m 220 310 l S",
+    "400 250 m 400 310 l S",
+    # a diagonal stroke — must be ignored
+    "10 10 m 500 500 l S",
+    # text: per-row jitter, zero shared x between any two lines
+    "BT 50 300 Td (Claim) Tj ET", "BT 230 300 Td (Paid) Tj ET",
+    "BT 61 280 Td (W-1) Tj ET", "BT 247 280 Td (100.00) Tj ET",
+    "BT 83 260 Td (W-2) Tj ET",
+    "BT 305 260 Td (ex) Tj ET", "BT 255 260 Td (200.00) Tj ET",
+    "BT 90 120 Td (Prose below) Tj ET",
+])
+_JITTERED_GRID_CELLS = {
+    (0, 0): "Claim", (0, 1): "Paid",
+    (1, 0): "W-1", (1, 1): "100.00",
+    (2, 0): "W-2", (2, 1): "200.00 ex",  # two runs, x-ordered
+}
+
+
 def test_lattice_rulings_beat_alignment(spark):
     """The S11-completing case (round-2 verdict item 4): every row's text
     starts at DIFFERENT x positions, so x-alignment (q44's
     detect_layout_tables) finds no table at all — but the drawn h/v ruling
-    segments define the 3×2 grid exactly, and detect_lattice_tables
+    segments define the 3×2 grid exactly, and lattice_cells_from_docs
     recovers every cell, including a two-run cell joined in x order."""
     from pdf_extraction_ai_agent_spark.operators.texttables import (
-        detect_lattice_tables, detect_layout_tables, pdf_rulings, pdf_runs,
+        detect_layout_tables, lattice_cells_from_docs, pdf_runs,
     )
 
-    text = "\n".join([
-        "%PDF-SIM 1.0",
-        "%%PAGE 1",
-        "BT 30 400 Td (Prose above the grid) Tj ET",
-        # rulings: 4 h-lines (3 row bands) x 3 v-lines (2 col bands)
-        "40 310 m 400 310 l S",
-        "40 290 m 400 290 l S",
-        "40 270 m 400 270 l S",
-        "40 250 m 400 250 l S",
-        "40 250 m 40 310 l S",
-        "220 250 m 220 310 l S",
-        "400 250 m 400 310 l S",
-        # a diagonal stroke — must be ignored
-        "10 10 m 500 500 l S",
-        # text: per-row jitter, zero shared x between any two lines
-        "BT 50 300 Td (Claim) Tj ET", "BT 230 300 Td (Paid) Tj ET",
-        "BT 61 280 Td (W-1) Tj ET", "BT 247 280 Td (100.00) Tj ET",
-        "BT 83 260 Td (W-2) Tj ET",
-        "BT 305 260 Td (ex) Tj ET", "BT 255 260 Td (200.00) Tj ET",
-        "BT 90 120 Td (Prose below) Tj ET",
-    ])
-    df = spark.createDataFrame([(7, text)], "doc_id long, text string")
+    df = spark.createDataFrame([(7, _JITTERED_GRID_DOC)], "doc_id long, text string")
 
     # alignment-based detection: nothing (no two adjacent lines share 2 xs)
     assert detect_layout_tables(pdf_runs(df)).count() == 0
 
     got = {
         (r.row_idx, r.col_idx): r.cell_text
-        for r in detect_lattice_tables(pdf_runs(df), pdf_rulings(df)).collect()
+        for r in lattice_cells_from_docs(df).collect()
     }
-    assert got == {
-        (0, 0): "Claim", (0, 1): "Paid",
-        (1, 0): "W-1", (1, 1): "100.00",
-        (2, 0): "W-2", (2, 1): "200.00 ex",  # two runs, x-ordered
-    }
+    assert got == _JITTERED_GRID_CELLS
 
 
 def test_lattice_on_real_pdf_bytes(spark):
@@ -160,10 +164,13 @@ def test_lattice_on_real_pdf_bytes(spark):
     a vendored real PDF (objects, page tree, xref; FlateDecode) carrying
     stroked ruling segments and per-row-jittered cell text; the
     dependency-free tokenizers recover positioned runs + rulings, and
-    detect_lattice_tables extracts the 3×2 grid that x-alignment cannot."""
+    lattice_cells_from_docs extracts the 3×2 grid that x-alignment cannot.
+    One call over a frame that mixes the real PDF with a pseudo-PDF doc
+    and an unparseable %PDF- doc: each doc yields exactly its own cells,
+    and the bad doc yields none rather than an error."""
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
     from pdf_extraction_ai_agent_spark.operators.texttables import (
-        detect_lattice_tables, real_pdf_rulings, real_pdf_runs,
+        lattice_cells_from_docs,
     )
 
     page = [
@@ -179,16 +186,55 @@ def test_lattice_on_real_pdf_bytes(spark):
     ]
     data = write_minimal_pdf([page, "second page, just prose"], compress=True)
     df = spark.createDataFrame(
-        [(9, data.decode("latin-1"))], "doc_id long, text string"
+        [
+            (9, data.decode("latin-1")),
+            (7, _JITTERED_GRID_DOC),
+            (5, "%PDF-1.4\nnot a pdf at all"),
+        ],
+        "doc_id long, text string",
     )
-    got = {
-        (r.page, r.row_idx, r.col_idx): r.cell_text
-        for r in detect_lattice_tables(
-            real_pdf_runs(df), real_pdf_rulings(df)
-        ).collect()
-    }
-    assert got == {
+    got: dict = {}
+    for r in lattice_cells_from_docs(df).collect():
+        got.setdefault(r.doc_id, {})[(r.page, r.row_idx, r.col_idx)] = r.cell_text
+    assert got[9] == {
         (1, 0, 0): "Claim", (1, 0, 1): "Paid",
         (1, 1, 0): "W-1", (1, 1, 1): "100.00",
         (1, 2, 0): "W-2", (1, 2, 1): "200.00",
     }
+    assert got[7] == {(1, ri, ci): t for (ri, ci), t in _JITTERED_GRID_CELLS.items()}
+    assert set(got) == {7, 9}
+
+
+def test_layout_tables_match_oracle_twin(spark):
+    """detect_layout_tables(pdf_runs(...)) equals q44's DuckDB twin
+    (entry_queries_ext6.layout_tables_sql) over the same docs, including
+    a %%PAGE marker that goes BACK to an earlier page: the rows after it
+    belong to page 1 (the last marker seen), not page 2."""
+    import duckdb
+    import pandas as pd
+
+    from pdf_extraction_ai_agent_spark.entry_queries_ext6 import layout_tables_sql
+    from pdf_extraction_ai_agent_spark.operators.texttables import (
+        detect_layout_tables, pdf_runs,
+    )
+
+    table = [
+        "BT 50 300 Td (H1) Tj ET", "BT 200 300 Td (H2) Tj ET",
+        "BT 50 284 Td (a1) Tj ET", "BT 200 284 Td (a2) Tj ET",
+        "BT 50 268 Td (b1) Tj ET", "BT 200 268 Td (b2) Tj ET",
+    ]
+    docs = [
+        (1, "\n".join(["%PDF-SIM 1.0", "%%PAGE 1", "BT 30 400 Td (title) Tj ET"]
+                      + table)),
+        (2, "\n".join(["%PDF-SIM 1.0", "%%PAGE 1", "BT 30 400 Td (intro) Tj ET",
+                       "%%PAGE 2", "BT 30 400 Td (p2) Tj ET", "%%PAGE 1"]
+                      + table)),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    engine = {tuple(r) for r in detect_layout_tables(pdf_runs(df)).collect()}
+    con = duckdb.connect()
+    con.register("doc", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    oracle = {tuple(r) for r in con.execute("WITH " + layout_tables_sql()).fetchall()}
+    assert engine == oracle
+    assert (2, 1, 0, 0, 2, "H1|H2") in oracle
+    assert len(engine) == 6

@@ -1,27 +1,35 @@
-"""r8 optimization pin: the per-page lattice kernel
-(texttables.detect_lattice_tables) is row-identical to the declarative
-join form it replaced (detect_lattice_tables_joins) — including the
-duplicate-coordinate pooling of the mutual-intersection counts, strict
-band containment, and the (x, txt) cell-text collation."""
+"""The lattice operator (texttables.lattice_cells_from_docs) is
+row-identical to q45's DuckDB twin (entry_queries_ext6.lattice_cells_sql)
+run over the same docs — including the duplicate-coordinate pooling of
+the mutual-intersection counts, strict band containment, the (x, txt)
+cell-text collation, and the page forward-fill (the page is the LAST
+%%PAGE marker seen, also when markers go backwards)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import duckdb
+import pandas as pd
 
-from pdf_extraction_ai_agent_spark.operators.texttables import (
-    detect_lattice_tables,
-    detect_lattice_tables_joins,
-    lattice_cells_from_docs,
-    pdf_rulings,
-    pdf_runs,
-)
+from pdf_extraction_ai_agent_spark.entry_queries_ext6 import lattice_cells_sql
+from pdf_extraction_ai_agent_spark.operators.texttables import lattice_cells_from_docs
 
 
 def _doc(doc_id: int, body: str):
     return (doc_id, "%PDF-SIM 1.0\n%%PAGE 1\n" + body)
 
 
-def test_lattice_kernel_matches_join_form(spark):
+def _engine(spark, docs) -> set:
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    return {tuple(r) for r in lattice_cells_from_docs(df).collect()}
+
+
+def _oracle(docs) -> set:
+    con = duckdb.connect()
+    con.register("doc", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    return {tuple(r) for r in con.execute("WITH " + lattice_cells_sql()).fetchall()}
+
+
+def test_lattice_kernel_matches_oracle_twin(spark):
     docs = [
         # regular 2x2 grid with jittered text
         _doc(1, "\n".join(
@@ -48,22 +56,18 @@ def test_lattice_kernel_matches_join_form(spark):
                 + [f"{x} 194 m {x} 258 l S" for x in (45, 495)]
                 + ["BT 50 240 Td (only) Tj ET", "BT 51 240 Td (cell) Tj ET"])),
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    runs, rulings = pdf_runs(df), pdf_rulings(df)
-    kernel = {tuple(r) for r in detect_lattice_tables(runs, rulings).collect()}
-    joins = {tuple(r) for r in detect_lattice_tables_joins(runs, rulings).collect()}
-    assert kernel == joins
-    assert kernel, "fixture produced no cells — test would be vacuous"
+    engine = _engine(spark, docs)
+    assert engine == _oracle(docs)
+    assert engine, "fixture produced no cells — test would be vacuous"
     # the duplicate-y pooling case must actually produce doc 2's band
-    assert any(r[0] == 2 for r in kernel)
+    assert any(r[0] == 2 for r in engine)
 
 
-def test_fused_doc_kernel_matches_spark_parse(spark):
-    """lattice_cells_from_docs (python line parse + grid in one pass) must
-    equal detect_lattice_tables over the Spark-regex pdf_runs/pdf_rulings
-    parse — including page forward-fill (elements before the first %%PAGE
-    dropped, repeated markers pooled), anchored-pattern rejection of
-    near-miss lines, and number-format edges the regex admits."""
+def test_lattice_parse_edges_match_oracle_twin(spark):
+    """Line-parse edges: page forward-fill (elements before the first
+    %%PAGE dropped, repeated markers pooled, a marker that goes BACK to an
+    earlier page), anchored-pattern rejection of near-miss lines, and
+    number-format edges the regex admits."""
     grid_body = "\n".join(
         [f"45 {y} m 495 {y} l S" for y in (258, 226, 194)]
         + [f"{x} 194 m {x} 258 l S" for x in (45, 270, 495)]
@@ -75,30 +79,31 @@ def test_fused_doc_kernel_matches_spark_parse(spark):
             "%%PAGE 1 extra\n%%PAGE 1\n" + grid_body
             + "\nBT 50 240 Td (kept) Tj ET \nBT 50 240 Td (kept) Tj ET"
             + "\nBT 60 200 Td (b) Tj\nBT 300. 240.5 Td (dot) Tj ET"),
-        # repeated %%PAGE markers pool elements into one page grid
+        # repeated %%PAGE markers pool elements into one page grid; the
+        # last marker goes backwards (2 → 1), so 'late' lands on page 1
         (2, "%%PAGE 1\n" + grid_body + "\n%%PAGE 2\nBT 1 1 Td (p2) Tj ET\n"
             "%%PAGE 1\nBT 60 200 Td (late) Tj ET"),
         # parens content with regex-special chars; empty text run
         (3, "%%PAGE 1\n" + grid_body
             + "\nBT 60 240 Td (a(b)c$^.*) Tj ET\nBT 70 240 Td () Tj ET"),
+        # a number the regex admits but a double cannot parse: skipped
+        (5, "%%PAGE 1\n" + grid_body
+            + "\nBT 1..2 240 Td (bad) Tj ET\nBT 60 240 Td (good) Tj ET"),
         (4, ""),  # empty doc
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    fused = {tuple(r) for r in lattice_cells_from_docs(df).collect()}
-    declarative = {
-        tuple(r)
-        for r in detect_lattice_tables(pdf_runs(df), pdf_rulings(df)).collect()
-    }
-    assert fused == declarative
-    assert fused, "fixture produced no cells — test would be vacuous"
+    engine = _engine(spark, docs)
+    oracle = _oracle(docs)
+    assert engine == oracle
+    assert engine, "fixture produced no cells — test would be vacuous"
+    assert (2, 1, 1, 0, "late") in oracle
+    assert (5, 1, 0, 0, "good") in engine
+    assert not any(r[4] == "bad" for r in engine)
 
 
-def test_streaming_kernel_carry_over_across_arrow_batches(spark):
-    """The tagged-frame kernel streams arrow batches with a carry-over of
-    the trailing (doc_id, page) group; with thousands of pages hashed into
-    each partition the per-partition row count exceeds the arrow batch
-    size (2048), so groups straddle batch boundaries — output must still
-    equal the join form row-for-row."""
+def test_lattice_kernel_matches_oracle_across_arrow_batches(spark):
+    """4,000 docs with the Arrow batch far below the per-partition row
+    count, so each python task sees many batches: output must still equal
+    the DuckDB twin row-for-row."""
     body = (
         "\n".join(
             [f"45 {y} m 495 {y} l S" for y in (258, 226, 194)]
@@ -111,9 +116,12 @@ def test_streaming_kernel_carry_over_across_arrow_batches(spark):
         (i, "%PDF-SIM 1.0\n%%PAGE 1\n" + body.replace("{i}", str(i)))
         for i in range(4000)
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    runs, rulings = pdf_runs(df), pdf_rulings(df)
-    kernel = {tuple(r) for r in detect_lattice_tables(runs, rulings).collect()}
-    joins = {tuple(r) for r in detect_lattice_tables_joins(runs, rulings).collect()}
-    assert kernel == joins
-    assert len(kernel) == 4000 * 3  # 2x2 grid, three occupied cells per doc
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "500")
+    try:
+        engine = _engine(spark, docs)
+    finally:
+        spark.conf.set(key, prev)
+    assert engine == _oracle(docs)
+    assert len(engine) == 4000 * 3  # 2x2 grid, three occupied cells per doc

@@ -10,21 +10,12 @@ from __future__ import annotations
 
 import random
 
-import pytest
-
 from pdf_extraction_ai_agent_spark.fixtures import minipdf
 from pdf_extraction_ai_agent_spark.operators import pdftext
 
 
 def _rand(rng: random.Random, n: int) -> bytes:
     return bytes(rng.getrandbits(8) for _ in range(n))
-
-
-@pytest.fixture()
-def no_openssl(monkeypatch):
-    """Force both modules onto their pure-Python fallback."""
-    monkeypatch.setattr(pdftext, "_OPENSSL", False)
-    monkeypatch.setattr(minipdf, "_W_OPENSSL", False)
 
 
 def test_wheel_present_and_probed():
