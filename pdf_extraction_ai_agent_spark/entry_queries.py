@@ -54,21 +54,25 @@ _LOB_SENT_BY_PRIORITY = {
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One driver table, as scanned (every query pack reads through this)."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-spread a narrow scan across all cores before heavy per-row
-    work. The driver tables ship as ONE parquet row group, so Spark plans
-    ONE input split and every expression pipeline above the scan runs on a
-    single core (the CLAUDE.md small-parquet gotcha; ``_docs`` applies the
-    same fix to the documents table). Keyed repartition avoids the local
-    sort a round-robin ``repartition(n)`` pays (SPARK-23207), and keying on
-    the downstream groupBy/window key means the exchange REPLACES the one
-    the aggregation would plan — no extra shuffle, the heavy projection
-    just moves above it onto all cores. Scale-adaptive: a scan that
-    already has >= defaultParallelism splits (the real-cluster case) is
-    returned untouched."""
+    """Hash-spread a narrow scan across all cores. The driver tables ship
+    as ONE parquet row group, so Spark plans ONE input split and every
+    operator above the scan runs on a single core until the first exchange.
+
+    The query packs spread a scan before heavy per-row work: a Python
+    kernel (Arrow UDF, ``mapInPandas``) or regex / higher-order-function
+    work over a text column. A scan whose consumer only hashes ids, takes
+    lengths, or does q16's small-vector top-k reads unspread: there the
+    extra exchange costs more than the parallelism returns. Keyed
+    repartition avoids the local sort a round-robin ``repartition(n)``
+    pays (SPARK-23207), and keying on the downstream groupBy/window key
+    means the exchange REPLACES the one the aggregation would plan.
+    Scale-adaptive: a scan that already has >= defaultParallelism splits
+    (the real-cluster case) is returned untouched."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
@@ -469,15 +473,11 @@ LIMIT 10
 def q08_claim_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — duplicate claim numbers across documents: claims keyed by
     (custkey-derived base) so real duplicates exist."""
+    from .operators.aggregate import claim_frequency
+
     o = _t(spark, sf_dir, "orders")
     claim = F.concat(F.lit("NW-"), (F.col("o_custkey") % 500).cast("string"))
-    return (
-        o.select(claim.alias("claim_number"))
-        .groupBy("claim_number")
-        .agg(F.count(F.lit(1)).alias("n_records"))
-        .orderBy(F.col("n_records").desc(), F.col("claim_number").asc())
-        .limit(20)
-    )
+    return claim_frequency(o.select(claim.alias("claim_number")), n=20)
 
 
 _Q08_SQL = """

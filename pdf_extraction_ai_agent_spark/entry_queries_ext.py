@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _spread, _t
 from .functions.hashing import (
     MERSENNE_P,
     MINHASH_AB,
@@ -47,27 +48,11 @@ _SHINGLES_SQL = (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _emb_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings, spread to all cores (one row group = one input split;
-    same fix as _docs below — the quantize/signature kernels otherwise run
-    in a single task)."""
-    from .entry_queries import _spread
-
-    return _spread(_t(spark, sf_dir, "embeddings"), "vec_id")
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, spread to all cores: the table ships as one small parquet
-    file (one input split), which would serialize every per-doc kernel —
-    the explicit pre-compute repartition is the same pattern the north rule
-    mandates before the extraction UDF."""
-    return _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    """documents, spread for heavy per-doc work (see entry_queries._spread);
+    queries that only hash ids or take lengths read
+    ``_t(spark, sf_dir, "documents")``."""
+    return _spread(_t(spark, sf_dir, "documents"), "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +236,7 @@ _ANN_QUERY_IDS = [0, 1, 2, 3, 4]
 
 def q16_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk_bruteforce(
-        _emb_spread(spark, sf_dir), query_ids=_ANN_QUERY_IDS, k=10
+        _t(spark, sf_dir, "embeddings"), query_ids=_ANN_QUERY_IDS, k=10
     )
 
 
@@ -327,7 +312,8 @@ def q17_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully deterministic (md5-derived planes, integer arithmetic), so the
     DuckDB oracle replays the identical candidate set and ranking."""
     return similarity.cosine_topk_lsh(
-        _emb_spread(spark, sf_dir), query_ids=_ANN_QUERY_IDS, k=10
+        _spread(_t(spark, sf_dir, "embeddings"), "vec_id"),
+        query_ids=_ANN_QUERY_IDS, k=10,
     )
 
 

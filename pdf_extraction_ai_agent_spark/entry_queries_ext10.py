@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
 from .entry_queries_ext import _COS_SQL, _NORM_SQL, _WORDS_SQL, _docs, _md5l
-from .entry_queries_ext4 import _t, ivf_fit_ctes
+from .entry_queries_ext4 import ivf_fit_ctes
 from .operators import curation, dedup, similarity, textstats, weburls
 
 EXT10_QUERIES: dict = {}
@@ -177,7 +178,8 @@ _EXT10_ORACLES["q86_url_canonicalize"] = _q86_sql()
 
 def q87_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = curation.temperature_sample(
-        _docs(spark, sf_dir).select("doc_id", "lang"), strata_col="lang"
+        _t(spark, sf_dir, "documents").select("doc_id", "lang"),
+        strata_col="lang",
     )
     return out.select(
         "doc_id", "lang",

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
 from .entry_queries_ext import _docs
 from .operators import weburls
 
@@ -307,7 +308,7 @@ _EXT11_ORACLES["q94_host_budget"] = _q94_sql()
 def q95_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import corpus_shuffle
 
-    return corpus_shuffle(_docs(spark, sf_dir).select("doc_id"))
+    return corpus_shuffle(_t(spark, sf_dir, "documents").select("doc_id"))
 
 
 def _q95_sql() -> str:
@@ -343,7 +344,6 @@ _EXT11_ORACLES["q95_corpus_shuffle"] = _q95_sql()
 def q96_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from .entry_queries_ext4 import _t
     from .operators import dedup
 
     full = _t(spark, sf_dir, "documents")
@@ -608,7 +608,6 @@ _EXT11_ORACLES["q99_bpe_fertility"] = _q99_sql()
 
 
 def q100_fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext4 import _t
     from .operators import curation, dedup
 
     full = _t(spark, sf_dir, "documents")
@@ -836,7 +835,9 @@ _EXT11_ORACLES["q102_langid_confusion"] = _q102_sql()
 
 
 def q103_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(F.length("text").cast("long").alias("n"))
+    d = _t(spark, sf_dir, "documents").select(
+        F.length("text").cast("long").alias("n")
+    )
     # floor(log2(n)) == len(bin(n)) - 1: Spark bin() renders the binary
     # string; exact for any BIGINT, no floating point anywhere
     bucket = (F.length(F.bin(F.col("n"))) - 1).cast("int")

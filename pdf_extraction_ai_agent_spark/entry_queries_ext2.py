@@ -8,13 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _t
 from .operators import carrier, chunkmerge, normalize, pages, registry, wc_tabular
 from .operators.aggregate import field_accuracy
 from .operators.ordering import positional_pairing
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -6,21 +6,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _spread, _t
 from .entry_queries_ext import _COS_SQL, _md5l, lsh_sig_ctes
 from .operators import sessions, similarity
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings, spread to all cores (one row group = one input split —
-    the per-batch signature/quantize kernels otherwise serialize onto a
-    single core; same fix as entry_queries._spread / _docs)."""
-    from .entry_queries import _spread
-
-    return _spread(_t(spark, sf_dir, "embeddings"), "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -38,7 +26,8 @@ def q36_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # demo geometry pinned: the DuckDB twin replays 16 planes × 2-bit
     # bands, and the low demo threshold needs the wide-recall buckets
     return similarity.embedding_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=_NEARDUP_T,
+        _spread(_t(spark, sf_dir, "embeddings"), "vec_id"),
+        threshold=_NEARDUP_T,
         n_planes=similarity.N_PLANES, band_bits=similarity.BAND_BITS,
     )
 
@@ -67,7 +56,9 @@ def q37_ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded integer k-means centroids (similarity._ivf_fit_centroids) +
     max-cosine assignment; the DuckDB oracle unrolls the same Lloyd
     iterations in exact arithmetic."""
-    return similarity.ivf_assignments(_emb(spark, sf_dir), n_centroids=16)
+    return similarity.ivf_assignments(
+        _spread(_t(spark, sf_dir, "embeddings"), "vec_id"), n_centroids=16
+    )
 
 
 def ivf_fit_ctes(n_centroids: int = 16) -> tuple[str, str, str]:
@@ -150,7 +141,8 @@ def q84_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — so the PRUNING itself is oracle-checked, not just the
     final neighbor set."""
     return similarity.cosine_topk_ivf(
-        _emb(spark, sf_dir), query_ids=_IVF_QUERY_IDS, k=10,
+        _spread(_t(spark, sf_dir, "embeddings"), "vec_id"),
+        query_ids=_IVF_QUERY_IDS, k=10,
         n_centroids=16, nprobe=_IVF_NPROBE,
     )
 

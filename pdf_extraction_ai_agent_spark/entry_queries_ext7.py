@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .entry_queries import _spread, _t
 from .entry_queries_ext import _SHINGLES_SQL, _WORDS_SQL, _docs, _md5l
 from .operators import curation
 
@@ -19,7 +20,7 @@ from .operators import curation
 def q47_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc split labels + the rollup that audits the realized ratios
     (bucket assignment is the operator; the count is the evidence)."""
-    out = curation.deterministic_split(_docs(spark, sf_dir))
+    out = curation.deterministic_split(_t(spark, sf_dir, "documents"))
     return out.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.min("doc_id").alias("min_doc_id"),
@@ -187,21 +188,14 @@ _Q50_RATES = {"en": 0.25, "de": 0.8, "fr": 1.0}
 
 def q50_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled = curation.deterministic_sample(
-        _docs_full(spark, sf_dir), rates=_Q50_RATES, strata_col="lang", default_rate=0.5
+        _t(spark, sf_dir, "documents"),
+        rates=_Q50_RATES, strata_col="lang", default_rate=0.5,
     )
     return sampled.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.min("doc_id").alias("min_doc_id"),
         F.sum(F.col("n_chars")).alias("total_chars"),
     )
-
-
-def _docs_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-split discipline (r7 verdict nit): mirror _docs' spread so
-    # per-row work above this reader never serializes onto one core
-    from .entry_queries import _spread
-
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
 
 
 def _q50_sql() -> str:
@@ -722,14 +716,10 @@ def pinned_queries() -> dict:
     def make(name):
         def run(spark: SparkSession, path: str) -> DataFrame:
             # the materialized corpus is one small parquet file = ONE input
-            # split; without the explicit spread every per-doc AES/parse
-            # kernel serializes onto a single core (measured: q58 pinned ran
-            # 5000 docs in 1 task, ~8s where ~1s is the 8-core number)
-            df = (
-                spark.read.parquet(path)
-                .select("doc_id", "pdf")
-                .repartition(spark.sparkContext.defaultParallelism)
-            )
+            # split; without the spread every per-doc AES/parse kernel
+            # serializes onto a single core (measured: q58 pinned ran 5000
+            # docs in 1 task, ~8s where ~1s is the 8-core number)
+            df = _spread(spark.read.parquet(path).select("doc_id", "pdf"), "doc_id")
             base = _pinned_extract_kernel(
                 tagged=(name == "q66_tagged_pdf_roundtrip")
             )

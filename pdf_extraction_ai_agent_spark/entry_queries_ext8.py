@@ -221,8 +221,8 @@ PINNED_PAYLOAD_BUILDERS["q61_filtered_pdf_roundtrip"] = _payload_q61
 # q49 contract over pages that interleave text with inline-image binary
 # whose bytes are ADVERSARIAL — phantom '(decoy) Tj' shows, 'BT' blocks,
 # 'm … l S' ruling decoys, raw high bytes. The image extents must be
-# invisible to every walk (flat text, positioned runs, rulings): engine
-# blanks them at the _page_contents choke point
+# invisible to every walk (positioned runs, rulings, tagged): engine
+# blanks them at the _page_contents_full choke point
 # (pdftext._strip_inline_images), the oracle with its own char-cursor
 # walk (_oracle_strip_inline). Reference parity: the reference's library
 # chain (extract_text.py:39-66) skips inline images inside pdfplumber;
@@ -440,7 +440,7 @@ PINNED_PAYLOAD_BUILDERS["q64_form_xobject_pdf_roundtrip"] = _payload_q64
 # §7.5.8.2), with the standard handler rotated per doc across V1/R2 RC4,
 # V2/R3 RC4, V4/R4 AESV2 and V5/R6 AESV3. The /ObjStm container decrypts
 # AS A WHOLE under its own object key (members inherit); the engine
-# re-expands containers after key derivation (pdftext._page_contents),
+# re-expands containers after key derivation (pdftext._page_contents_full),
 # the oracle resolves the trailer fields from the xref-stream object
 # body. R6's Algorithm 2.B hashes ride the q58 seed machinery. Reuses
 # q49's SQL twin. Reference parity: the reference opens these through

@@ -39,16 +39,6 @@ def md5_long_col(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5_long_sql(expr: str) -> str:
-    """DuckDB side of the portable 60-bit hash."""
-    return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def minhash_sql(hash_expr: str, i: int) -> str:
-    a, b = MINHASH_AB[i]
-    return f"(({a} * (({hash_expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
-
-
 def solve_lsh_bands(threshold: float, n_perms: int = NUM_PERMS) -> tuple[int, int]:
     """(n_bands, band_size) whose S-curve midpoint (1/b)^(1/r) sits closest
     to the target jaccard threshold, over the divisors of n_perms — the

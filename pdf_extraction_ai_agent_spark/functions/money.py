@@ -1,9 +1,6 @@
-"""U3/U4/U5 — money handling as native expressions.
+"""U4 — money coercion as a native expression.
 
-Reference:
-- U3 string-preserving extract  text_lob_llm_extractor.py:391-398
-- U4 coerce to number           streamlit_e2e_app.py:379-397 (_coerce_money)
-- U5 compare normalization      src/claim_extractor/compare_models.py:24-31
+Reference: streamlit_e2e_app.py:379-397 (_coerce_money).
 
 U4 returns DECIMAL(18,2) rather than double so cluster-scale aggregation is
 exact and order-independent (a 100 TB sum of doubles is not reproducible
@@ -14,15 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# U3 (text_lob_llm_extractor.py:396): first money-looking token, kept as str.
-MONEY_PAT = r"([-$]?\d{1,3}(?:,\d{3})*(?:\.\d+)?|[-$]?\d+(?:\.\d+)?)"
-
-
-def money_extract_col(col: Column) -> Column:
-    """U3 — first money token as-written; falls back to trimmed input."""
-    m = F.nullif(F.regexp_extract(col, MONEY_PAT, 1), F.lit(""))
-    return F.coalesce(m, F.trim(col))
 
 
 def money_coerce_col(col: Column) -> Column:
@@ -41,9 +29,3 @@ def money_coerce_col(col: Column) -> Column:
     num = cleaned.try_cast("decimal(18,2)")  # junk → NULL
     signed = F.when(is_paren, -num).otherwise(num)
     return F.when(col.isNull() | cleaned.isin("", "-"), zero).otherwise(F.coalesce(signed, zero))
-
-
-def money_compare_norm_col(col: Column) -> Column:
-    """U5 — ensure leading '$', drop 'USD' and spaces (compare_models.py:24-31)."""
-    s = F.regexp_replace(F.trim(F.regexp_replace(col.cast("string"), "USD", "")), " ", "")
-    return F.when(s.startswith("$"), s).otherwise(F.concat(F.lit("$"), s))

@@ -1,23 +1,12 @@
-"""U6/U7/U10 — string normalizers for comparisons and fuzzy matching.
+"""U10 — string normalizers for fuzzy matching.
 
-Reference: compare_models.py:34-44, streamlit_e2e_app.py:376-377,
-mock_storage.py:88-109.
+Reference: mock_storage.py:88-109.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def norm_claim_no(col: Column) -> Column:
-    """upper + trim (compare_models.py:34-35)."""
-    return F.upper(F.trim(F.coalesce(col, F.lit(""))))
-
-
-def norm_reason(col: Column) -> Column:
-    """lower + trim (compare_models.py:38-39)."""
-    return F.lower(F.trim(F.coalesce(col, F.lit(""))))
 
 
 def norm_fuzzy(col: Column) -> Column:

@@ -1,7 +1,8 @@
-"""A1-A4 — the summary/query layer over parsed claim records.
+"""A3/A4 — the summary/query layer over parsed claim records (the A1/A2
+per-LOB rollup is q06's inline aggregate, with the column set its DuckDB
+twin pins).
 
-Reference: streamlit_e2e_app.py:410-470 (compute_lob_summary),
-:1003-1014 (rollup + avg), :1058/:1082-1089 (top-N, frequency).
+Reference: streamlit_e2e_app.py:1058/:1082-1089 (top-N, frequency).
 
 All are built-in hash aggregates: Spark performs partial (map-side) then
 final aggregation — no custom UDAFs needed, and top-N compiles to
@@ -15,31 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.money import money_coerce_col
-
-
-def lob_summary(df: DataFrame, lob_col: str = "lob", paid_col: str = "amount",
-                alae_col: str | None = None, claim_col: str = "claim_number") -> DataFrame:
-    """A1/A2 — per-LOB rows, paid/ALAE totals, claim count, avg claim.
-
-    Mirrors compute_lob_summary + the rollup's `Avg Claim = Total / Count`
-    with 0.0 when count = 0 (streamlit_e2e_app.py:1014).
-    """
-    paid = money_coerce_col(F.col(paid_col))
-    alae = money_coerce_col(F.col(alae_col)) if alae_col else F.lit(0).cast("decimal(18,2)")
-    agg = df.groupBy(F.col(lob_col).alias("lob")).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(paid).cast("decimal(18,2)").alias("total_paid_loss"),
-        F.sum(alae).cast("decimal(18,2)").alias("total_alae"),
-        F.count(F.when(F.col(claim_col).isNotNull() & (F.trim(claim_col) != ""), 1)).alias(
-            "claim_count"
-        ),
-    )
-    return agg.withColumn(
-        "avg_claim",
-        F.when(F.col("claim_count") > 0,
-               (F.col("total_paid_loss") / F.col("claim_count")).cast("decimal(18,2)"))
-        .otherwise(F.lit(0).cast("decimal(18,2)")),
-    )
 
 
 def top_claims_by_loss(df: DataFrame, n: int = 10, loss_col: str = "amount",

@@ -1475,8 +1475,9 @@ _ESCAPES = {
 def _literal_bytes(content: bytes, i: int) -> tuple[bytes, int]:
     """Decode the literal string starting at ``content[i] == '('`` into its
     raw BYTES (escape/nesting/continuation aware); returns (bytes, index
-    one past the closing paren). Shared by the flat-text and positioned
-    walks so a show's bytes decode identically before the font stage."""
+    one past the closing paren). Shared by the positioned, tagged and
+    /ActualText walks so a show's bytes decode identically before the font
+    stage."""
     buf = bytearray()
     depth = 1
     i += 1
@@ -1514,97 +1515,6 @@ def _literal_bytes(content: bytes, i: int) -> tuple[bytes, int]:
         buf.append(ch)
         i += 1
     return bytes(buf), i
-
-
-def _tokenize_content(
-    content: bytes,
-    fonts: dict[bytes, tuple[str, dict[int, str]] | None] | None = None,
-    strict_fonts: bool = False,
-) -> str | None:
-    """Text-showing pass over one page's content stream. None → rung bail
-    (CID string under a Type0 font that the ToUnicode map cannot decode,
-    or an unresolvable Tf name while the file declares a Type0 font or a
-    /Differences encoding)."""
-    out: list[str] = []
-    pending_newline = False
-    shown_any = False
-    cur_map: dict[int, str] | None = None
-    i, n = 0, len(content)
-
-    def emit(s: str):
-        nonlocal pending_newline, shown_any
-        if pending_newline and shown_any:
-            out.append("\n")
-        pending_newline = False
-        shown_any = True
-        out.append(s)
-
-    while i < n:
-        c = content[i]
-        if c == 0x28:  # ( literal string
-            raw_s, i = _literal_bytes(content, i)
-            txt = _decode_shown(raw_s, cur_map)
-            if txt is None:
-                return None
-            # look ahead for the operator consuming this string
-            m = re.match(rb"\s*(Tj|'|\")", content[i:])
-            if m:
-                if m.group(1) in (b"'", b'"'):
-                    pending_newline = True
-                emit(txt)
-                i += m.end()
-            else:
-                # string inside a TJ array (or non-text op): emit raw, the
-                # closing `] TJ` is consumed by the scanner below
-                emit(txt)
-            continue
-        if c == 0x3C and content[i : i + 2] != b"<<":  # <hex>
-            end = content.find(b">", i)
-            if end < 0:
-                break
-            hexs = re.sub(rb"\s", b"", content[i + 1 : end])
-            if len(hexs) % 2:
-                hexs += b"0"
-            try:
-                raw_s = bytes.fromhex(hexs.decode("ascii"))
-            except ValueError:
-                i = end + 1
-                continue
-            txt = _decode_shown(raw_s, cur_map)
-            if txt is None:
-                return None
-            # same operator lookahead as the literal branch: a <hex> string
-            # consumed by a ' / " quote-show carries the line advance too
-            # (the positioned walk and the oracle both model it)
-            i = end + 1
-            m = re.match(rb"\s*(Tj|'|\")", content[i:])
-            if m:
-                if m.group(1) in (b"'", b'"'):
-                    pending_newline = True
-                emit(txt)
-                i += m.end()
-            else:
-                emit(txt)
-            continue
-        if c == 0x2F:  # /Name — font selection via Tf
-            tfm = _TF_RE.match(content, i)
-            if tfm:
-                name = tfm.group(1)
-                if fonts is not None and name in fonts:
-                    cur_map = fonts[name]
-                elif strict_fonts:
-                    return None  # can't prove the font is simple — bail
-                else:
-                    cur_map = None
-                i = tfm.end()
-                continue
-        m = re.match(rb"(?:Td|TD|Tm)\b|T\*", content[i:])
-        if m:
-            pending_newline = True
-            i += m.end()
-            continue
-        i += 1
-    return "".join(out)
 
 
 _NUM = rb"-?[0-9]+(?:\.[0-9]+)?"
@@ -1866,22 +1776,12 @@ def _expand_forms(
     return bytes(out)
 
 
-def _page_contents(data: bytes, passwords: tuple[bytes, ...] = ()):
-    """Shared page walk: `(pages, strict_fonts)` — see _page_contents_full
-    (which additionally exposes the object map and page object numbers for
-    the structure-tree walk)."""
-    res = _page_contents_full(data, passwords)
-    if res is None:
-        return None
-    pages, strict_fonts, _objs, _page_nums = res
-    return pages, strict_fonts
-
-
 def _page_contents_full(data: bytes, passwords: tuple[bytes, ...] = ()):
-    """Shared page walk: a list of (content_bytes, fonts) per page plus the
-    file-wide strict-fonts flag, the object map and the page object
-    numbers — `(pages, strict_fonts, objs, page_nums)` — or None overall
-    when the file is out of scope. Handles standard-handler encryption
+    """The one page walk behind every tokenizer (runs, rulings, tagged): a
+    list of (content_bytes, fonts) per page plus the file-wide
+    strict-fonts flag, the object map and the page object numbers —
+    `(pages, strict_fonts, objs, page_nums)` — or None overall when the
+    file is out of scope. Handles standard-handler encryption
     in-line (_encryption_key, with ``passwords`` as the candidate
     user-password book) and resolves each page's font resources (ToUnicode
     maps for Type0 fonts); any other encrypted or font configuration
@@ -1934,8 +1834,8 @@ def _page_contents_full(data: bytes, passwords: tuple[bytes, ...] = ()):
             if part is None:
                 return None
             content += part + b"\n"
-        # one choke point for every walk (flat text, positioned runs,
-        # rulings): inline-image extents are blanked before any scan
+        # one choke point for every walk (positioned runs, rulings,
+        # tagged): inline-image extents are blanked before any scan
         content = _strip_inline_images(content)
         if content is None:
             return None
@@ -1999,10 +1899,10 @@ def tokenize_pdf_rulings(
     the file is out of this rung's scope."""
     if not data.startswith(b"%PDF-"):
         return None
-    res = _page_contents(data, passwords)
+    res = _page_contents_full(data, passwords)
     if res is None:
         return None
-    pages, _has_type0 = res
+    pages = res[0]
     out = []
     for content, _fonts in pages:
         segs = _top_level_segments_ctm(content)
@@ -2258,10 +2158,10 @@ def tokenize_pdf_runs(
     placement on REAL PDF bytes."""
     if not data.startswith(b"%PDF-"):
         return None
-    res = _page_contents(data, passwords)
+    res = _page_contents_full(data, passwords)
     if res is None:
         return None
-    pages, strict_fonts = res
+    pages, strict_fonts, _objs, _page_nums = res
     out: list[list[tuple[float, float, str]]] = []
     for content, fonts in pages:
         runs: list[tuple[float, float, str]] = []
@@ -2570,28 +2470,6 @@ def _string_end(body: bytes, start: int) -> int:
     return len(body)
 
 
-def tokenize_pdf_text(
-    data: bytes, passwords: tuple[bytes, ...] = ()
-) -> list[str] | None:
-    """Per-page extracted text for a real PDF in STREAM order (flat; the
-    layout-aware path is tokenize_pdf_runs + assemble_reading_order), or
-    None when the file is outside this rung's scope (caller falls through
-    to pdfplumber/fitz)."""
-    if not data.startswith(b"%PDF-"):
-        return None
-    res = _page_contents(data, passwords)
-    if res is None:
-        return None
-    pages, strict_fonts = res
-    out: list[str] = []
-    for content, fonts in pages:
-        txt = _tokenize_content(content, fonts, strict_fonts)
-        if txt is None:
-            return None
-        out.append(txt)
-    return out
-
-
 # --- Tagged-PDF logical reading order (ISO 32000 §14.7–14.8) ---------------
 #
 # Multi-column documents carry marked-content sequences (`/P <</MCID n>>
@@ -2737,9 +2615,9 @@ def _tagged_frags(
     tag is the active MCID (int) inside a marked-content sequence whose
     properties carry /MCID, the string 'artifact' inside an /Artifact
     span (§14.8.2.2: artifacts are NOT logical content), else None.
-    Line-advance ops contribute '\\n' fragments under the active tag with
-    the flat walk's semantics (only after that tag has shown text; a
-    quote-show's advance lands before its own string). None → out of twin
+    Line-advance ops contribute '\\n' fragments under the active tag, only
+    after that tag has shown text (a quote-show's advance lands before its
+    own string). None → out of twin
     scope: indirect BDC property lists, BDC with no property dict,
     unbalanced BDC/EMC, nested MCIDs, or an undecodable string — and any
     page carrying /ActualText (§14.9.4): the logical walk does not model

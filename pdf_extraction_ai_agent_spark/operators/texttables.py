@@ -191,7 +191,8 @@ def lattice_cells_from_docs(
     Each doc's pages come from one of two parses, chosen by its text with
     extract.py's dispatch rule:
     - REAL PDF bytes (``%PDF-`` but not spec.PDF_HEADER, latin-1 string
-      payloads): pdftext.tokenize_pdf_runs / tokenize_pdf_rulings, pages
+      payloads): pdftext.tokenize_pdf_runs / tokenize_pdf_rulings with
+      extract.py's password book (spec.KNOWN_USER_PASSWORDS), pages
       numbered from 1. A doc either tokenizer cannot parse yields no cells
       (the extract error channel is where parse failures surface).
     - everything else, as pseudo-PDF lines: split on \n; the ^-anchored
@@ -250,8 +251,8 @@ def lattice_cells_from_docs(
         from .pdftext import tokenize_pdf_rulings, tokenize_pdf_runs
 
         data = text.encode("latin-1", errors="ignore")
-        runs = tokenize_pdf_runs(data)
-        rules = tokenize_pdf_rulings(data)
+        runs = tokenize_pdf_runs(data, passwords=spec.KNOWN_USER_PASSWORDS)
+        rules = tokenize_pdf_rulings(data, passwords=spec.KNOWN_USER_PASSWORDS)
         if runs is None or rules is None:
             return {}
         return dict(enumerate(zip(rules, runs), start=1))

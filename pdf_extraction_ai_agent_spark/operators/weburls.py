@@ -9,8 +9,8 @@ slash, fold the bare ``www.`` alias — implemented entirely as Catalyst
 regexp expressions (map-only, whole-stage codegen; no UDF, no shuffle), so
 the DuckDB oracle replays it verbatim.
 
-Scale shape: canonicalization is a narrow map; host rollups shuffle on the
-canonical host (bounded-cardinality key).  Nothing here looks at document
+Scale shape: canonicalization is a narrow map; the host budget shuffles on
+the canonical host (bounded-cardinality key).  Nothing here looks at document
 content, so at 100 TB this runs over the URL column alone (column pruning
 keeps the scan narrow).
 """
@@ -85,19 +85,6 @@ def canonicalize_urls(
     return df.select(
         "*", canon
     ).withColumn("host", host_col(F.col("canon_url")))
-
-
-def host_rollup(urls: DataFrame) -> DataFrame:
-    """Per-host URL stats over canonicalized rows: distinct canonical URLs
-    (the post-canonicalization fetch frontier), total raw occurrences and
-    documents citing the host.  One shuffle keyed on host; distinct counts
-    are exact (expand) — at 100 TB swap for approx_count_distinct at the
-    call site if ±2% is acceptable."""
-    return urls.groupBy("host").agg(
-        F.countDistinct("canon_url").alias("n_canonical_urls"),
-        F.count(F.lit(1)).alias("n_occurrences"),
-        F.countDistinct("doc_id").alias("n_docs"),
-    )
 
 
 def host_budget(urls: DataFrame, k: int = 5) -> DataFrame:

@@ -32,10 +32,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
+# One lineage row: what a bucket group reports (LineageStore.append's
+# input), then the commit stamp the append adds at write time.
+_GROUP_ROW = (
     "run_group string, part_id int, n_rows long, n_errors long, wall_ms long, "
-    "turns_per_sec double, finished_at timestamp"
+    "turns_per_sec double"
 )
+LINEAGE_SCHEMA = _GROUP_ROW + ", finished_at timestamp"
 
 
 def with_part_id(df: DataFrame, n_buckets: int = 64,
@@ -93,8 +96,7 @@ class LineageStore:
                 )
                 for r in rows
             ],
-            "run_group string, part_id int, n_rows long, n_errors long, "
-            "wall_ms long, turns_per_sec double",
+            _GROUP_ROW,
         ).withColumn("finished_at", F.current_timestamp())
         df.write.format(self.fmt).mode("append").save(self.path)
 

@@ -64,7 +64,6 @@ OCR_MIN_CHARS = 40
 
 # Page marker contract (fitzTest3.py:92-95).
 PAGE_MARKER_FMT = "--- PAGE {n} ---"
-PAGE_MARKER_RE = r"^--- PAGE\s+(\d+)\s+---$"
 
 # HTML boilerplate scoring (north_star: Readability/Boilerpipe-style).
 # A block is MAIN CONTENT iff:

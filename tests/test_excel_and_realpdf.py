@@ -75,7 +75,9 @@ def test_minipdf_tokenizer_property_roundtrip():
 
     from pdf_extraction_ai_agent_spark import spec
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -98,7 +100,7 @@ def test_minipdf_tokenizer_property_roundtrip():
         data = write_minimal_pdf(
             pages, compress=compress, tj_arrays=tj, leading=leading
         )
-        assert tokenize_pdf_text(data) == pages
+        assert assemble_reading_order(tokenize_pdf_runs(data)) == pages
         # the independent char-scanner oracle produces the same marked text
         text, _ocr = extract_real_pdf(data.decode("latin-1"))
         expected = "\n".join(
@@ -116,7 +118,7 @@ def test_pdf_tokenizer_hex_shows_and_endobj_in_stream():
     inside an uncompressed content stream must not truncate the object."""
     from pdf_extraction_ai_agent_spark.operators.extract import extract_real_pdf_text
     from pdf_extraction_ai_agent_spark.operators.pdftext import (
-        tokenize_pdf_runs, tokenize_pdf_text,
+        assemble_reading_order, tokenize_pdf_runs,
     )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
@@ -142,7 +144,9 @@ def test_pdf_tokenizer_hex_shows_and_endobj_in_stream():
 
     # (b) 'endobj' inside the (uncompressed) stream text
     tricky = write_minimal_pdf(["the endobj keyword mid-stream\nsecond line"])
-    assert tokenize_pdf_text(tricky) == ["the endobj keyword mid-stream\nsecond line"]
+    assert assemble_reading_order(tokenize_pdf_runs(tricky)) == [
+        "the endobj keyword mid-stream\nsecond line"
+    ]
     eng2, _ = extract_real_pdf_text(tricky)
     orc2, _ = extract_real_pdf(tricky.decode("latin-1"))
     assert eng2 == orc2
@@ -305,7 +309,7 @@ def test_oracle_real_pdf_quote_show_matches_engine():
 def test_round6_walk_parity_fixes():
     """Round-6 advice findings, all three agreed by BOTH twins:
     (a) a <hex> string consumed by a ' / " quote-show carries the line
-    advance in the FLAT walk too (it already did in the positioned walk);
+    advance, as a literal string does;
     (b) several pending strings before a quote-show — earlier ones flush
     at the CURRENT origin, only the quote-adjacent operand moves;
     (c) a stale /Name (e.g. /GS0 left over from a gs op) never feeds a
@@ -317,7 +321,6 @@ def test_round6_walk_parity_fixes():
         write_differences_pdf, write_minimal_pdf,
     )
     from pdf_extraction_ai_agent_spark.operators.extract import extract_real_pdf_text
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -329,12 +332,9 @@ def test_round6_walk_parity_fixes():
 
     base = write_minimal_pdf(["line one\nline two"])
 
-    # (a) hex + quote-show is the ONLY line advance: the flat walk must
-    # model the bare quote's advance after a <hex> string (the literal
-    # branch already did) — before the fix this came out "line oneline two"
+    # (a) hex + quote-show is the ONLY line advance
     hx = "line two".encode("latin-1").hex().encode("ascii")
     hexq = fix_len(base.replace(b"0 -16 Td\n(line two) Tj", b"<" + hx + b"> '"))
-    assert tokenize_pdf_text(hexq) == ["line one\nline two"]
     eng, _ = extract_real_pdf_text(hexq)
     orc, _ = extract_real_pdf(hexq.decode("latin-1"))
     # positioned walk: leading 0 → same baseline → same visual line
@@ -827,14 +827,16 @@ def test_plaintext_pdf_with_encrypt_tokens_in_text():
     somewhere in the file bytes (they must appear within one object body
     to mean an encrypted layout)."""
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
 
     pages = ["see /Encrypt spec", "and the /XRef chapter"]
     data = write_minimal_pdf(pages, compress=False)
-    assert tokenize_pdf_text(data) == pages
+    assert assemble_reading_order(tokenize_pdf_runs(data)) == pages
     text, _ocr = extract_real_pdf(data.decode("latin-1"))
     assert "/Encrypt spec" in text and "/XRef chapter" in text
 
@@ -848,7 +850,9 @@ def test_cid_pdf_property_roundtrip():
 
     from pdf_extraction_ai_agent_spark import spec
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_cid_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -870,7 +874,7 @@ def test_cid_pdf_property_roundtrip():
         data = write_cid_pdf(
             pages, compress=compress, tj_arrays=tj, array_ranges=arr
         )
-        assert tokenize_pdf_text(data) == pages
+        assert assemble_reading_order(tokenize_pdf_runs(data)) == pages
         text, _ocr = extract_real_pdf(data.decode("latin-1"))
         expected = "\n".join(
             spec.PAGE_MARKER_FMT.format(n=i + 1) + "\n" + p.strip()
@@ -890,44 +894,43 @@ def test_cid_pdf_corruption_falls_through():
 
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_cid_pdf
     from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order,
         tokenize_pdf_runs,
-        tokenize_pdf_text,
     )
 
     pages = ["claim text here\nsecond line"]
     good = write_cid_pdf(pages)
-    assert tokenize_pdf_text(good) == pages
+    assert assemble_reading_order(tokenize_pdf_runs(good)) == pages
 
     # (a) truncate the bfchar/bfrange table inside the CMap stream
     cut = good.replace(b"endbfchar", b"endbfXXXX").replace(
         b"endbfrange", b"endbfXXXX"
     )
-    assert tokenize_pdf_text(cut) is None and tokenize_pdf_runs(cut) is None
+    assert tokenize_pdf_runs(cut) is None
 
     # (b) a shown CID with no CMap entry: bump one code beyond the map
     m = _re.search(rb"<([0-9A-Fa-f]{4})([0-9A-Fa-f]{4})", good)
     assert m
     missing = good[: m.start(1)] + b"FFFE" + good[m.end(1):]
-    assert tokenize_pdf_text(missing) is None
     assert tokenize_pdf_runs(missing) is None
 
     # (c) Type0 without ToUnicode
     no_tu = good.replace(b"/ToUnicode 5 0 R", b"/ToUnicodX 5 0 R")
-    assert tokenize_pdf_text(no_tu) is None
+    assert tokenize_pdf_runs(no_tu) is None
 
     # (d) non-Identity-H encoding
     enc = good.replace(b"/Encoding /Identity-H", b"/Encoding /UniGB-UCS2-H")
-    assert tokenize_pdf_text(enc) is None
+    assert tokenize_pdf_runs(enc) is None
 
     # (e) Tf naming an unresolvable font while the file declares Type0
     tf = good.replace(b"/F1 12 Tf", b"/F9 12 Tf")
-    assert tokenize_pdf_text(tf) is None
+    assert tokenize_pdf_runs(tf) is None
 
     # (f) simple-font files are untouched by the same rename (no Type0)
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
 
     simple = write_minimal_pdf(pages).replace(b"/F1 12 Tf", b"/F9 12 Tf")
-    assert tokenize_pdf_text(simple) == pages
+    assert assemble_reading_order(tokenize_pdf_runs(simple)) == pages
 
 
 def test_aes_encrypted_pdf_roundtrip_and_bails():
@@ -939,14 +942,16 @@ def test_aes_encrypted_pdf_roundtrip_and_bails():
 
     from pdf_extraction_ai_agent_spark import spec
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_encrypted_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
 
     pages = ["aes secret claim text\nline two", "page 2 body"]
     data = write_encrypted_pdf(pages, owner_pwd=b"owner-x", revision=4)
-    assert tokenize_pdf_text(data) == pages
+    assert assemble_reading_order(tokenize_pdf_runs(data)) == pages
     expected = "\n".join(
         spec.PAGE_MARKER_FMT.format(n=i + 1) + "\n" + p.strip()
         for i, p in enumerate(pages)
@@ -955,7 +960,7 @@ def test_aes_encrypted_pdf_roundtrip_and_bails():
 
     # wrong (non-empty) user password → /U check fails on both sides
     locked = write_encrypted_pdf(pages, user_pwd=b"secret", revision=4)
-    assert tokenize_pdf_text(locked) is None
+    assert tokenize_pdf_runs(locked) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(locked.decode("latin-1"))
 
@@ -966,13 +971,13 @@ def test_aes_encrypted_pdf_roundtrip_and_bails():
     s_at = data.find(b"stream\n") + len(b"stream\n")
     at = s_at + 95  # /Length 96 payload
     corrupt = data[:at] + bytes([data[at] ^ 0xFF]) + data[at + 1:]
-    assert tokenize_pdf_text(corrupt) is None
+    assert tokenize_pdf_runs(corrupt) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(corrupt.decode("latin-1"))
 
     # unmodeled V4 crypt filter must bail, not decrypt garbage
     v4r = data.replace(b"/CFM /AESV2", b"/CFM /AESV3")
-    assert tokenize_pdf_text(v4r) is None
+    assert tokenize_pdf_runs(v4r) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(v4r.decode("latin-1"))
 
@@ -986,7 +991,9 @@ def test_differences_pdf_property_roundtrip():
 
     from pdf_extraction_ai_agent_spark import spec
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_differences_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -1005,7 +1012,7 @@ def test_differences_pdf_property_roundtrip():
     )
     def check(pages, compress, ref):
         data = write_differences_pdf(pages, compress=compress, encoding_ref=ref)
-        assert tokenize_pdf_text(data) == pages
+        assert assemble_reading_order(tokenize_pdf_runs(data)) == pages
         text, _ocr = extract_real_pdf(data.decode("latin-1"))
         expected = "\n".join(
             spec.PAGE_MARKER_FMT.format(n=i + 1) + "\n" + p.strip()
@@ -1022,18 +1029,20 @@ def test_differences_pdf_unknown_glyph_bails():
     import pytest as _pytest
 
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_differences_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
 
     pages = ["claim text alpha"]
     good = write_differences_pdf(pages)
-    assert tokenize_pdf_text(good) == pages
+    assert assemble_reading_order(tokenize_pdf_runs(good)) == pages
     # swap one known glyph name for a subset-glyph name of equal length
     assert b"/a " in good
     bad = good.replace(b"/a ", b"/g7 ", 1)
-    assert tokenize_pdf_text(bad) is None
+    assert tokenize_pdf_runs(bad) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(bad.decode("latin-1"))
 
@@ -1047,14 +1056,16 @@ def test_aes256_encrypted_pdf_roundtrip_and_bails():
 
     from pdf_extraction_ai_agent_spark import spec
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_encrypted_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
 
     pages = ["aes-256 claim body\nline two", "page 2 body"]
     data = write_encrypted_pdf(pages, owner_pwd=b"owner-z", revision=6)
-    assert tokenize_pdf_text(data) == pages
+    assert assemble_reading_order(tokenize_pdf_runs(data)) == pages
     expected = "\n".join(
         spec.PAGE_MARKER_FMT.format(n=i + 1) + "\n" + p.strip()
         for i, p in enumerate(pages)
@@ -1062,7 +1073,7 @@ def test_aes256_encrypted_pdf_roundtrip_and_bails():
     assert extract_real_pdf(data.decode("latin-1"))[0] == expected
 
     locked = write_encrypted_pdf(pages, user_pwd=b"secret", revision=6)
-    assert tokenize_pdf_text(locked) is None
+    assert tokenize_pdf_runs(locked) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(locked.decode("latin-1"))
 
@@ -1073,13 +1084,13 @@ def test_aes256_encrypted_pdf_roundtrip_and_bails():
     ln = int(_re.search(rb"/Length (\d+)", data).group(1))
     at = s_at + ln - 1
     corrupt = data[:at] + bytes([data[at] ^ 0xFF]) + data[at + 1:]
-    assert tokenize_pdf_text(corrupt) is None
+    assert tokenize_pdf_runs(corrupt) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(corrupt.decode("latin-1"))
 
     # unmodeled V5 crypt filter bails, never decrypts garbage
     v5x = data.replace(b"/CFM /AESV3", b"/CFM /AESV4")
-    assert tokenize_pdf_text(v5x) is None
+    assert tokenize_pdf_runs(v5x) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(v5x.decode("latin-1"))
 
@@ -1094,7 +1105,9 @@ def test_base_encoded_pdf_parity_matrix():
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import (
         write_base_encoded_pdf,
     )
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -1126,7 +1139,7 @@ def test_base_encoded_pdf_parity_matrix():
                         indirect=indirect,
                         compress=compress,
                     )
-                    got = tokenize_pdf_text(data)
+                    got = assemble_reading_order(tokenize_pdf_runs(data))
                     assert got == pages, (enc, differences, indirect, compress)
                     text, ocr = extract_real_pdf(data.decode("latin-1"))
                     expected = "\n".join(
@@ -1146,7 +1159,9 @@ def test_subset_font_pdf_cmap_is_authoritative():
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import (
         write_subset_font_pdf,
     )
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -1157,7 +1172,8 @@ def test_subset_font_pdf_cmap_is_authoritative():
             data = write_subset_font_pdf(
                 pages, compress=compress, cmap_compress=cmap_compress
             )
-            assert tokenize_pdf_text(data) == pages, (compress, cmap_compress)
+            got = assemble_reading_order(tokenize_pdf_runs(data))
+            assert got == pages, (compress, cmap_compress)
             text, _ = extract_real_pdf(data.decode("latin-1"))
             expected = "\n".join(
                 spec.PAGE_MARKER_FMT.format(n=i + 1) + "\n" + p.strip()
@@ -1175,21 +1191,23 @@ def test_base_encoding_bails_never_guess():
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import (
         write_base_encoded_pdf, write_subset_font_pdf,
     )
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
 
     good = write_base_encoded_pdf(["claim “text”"], encoding="WinAnsiEncoding")
-    assert tokenize_pdf_text(good) == ["claim “text”"]
+    assert assemble_reading_order(tokenize_pdf_runs(good)) == ["claim “text”"]
 
     # the 0x93 byte in the content IS the curly quote — never U+0093
-    pages = tokenize_pdf_text(good)
+    pages = assemble_reading_order(tokenize_pdf_runs(good))
     assert "\x93" not in pages[0]
 
     # unmodeled base-encoding name bails at the tokenizer rung
     bad_name = good.replace(b"/WinAnsiEncoding", b"/PDFDocEncodingX")
-    assert tokenize_pdf_text(bad_name) is None
+    assert tokenize_pdf_runs(bad_name) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(bad_name.decode("latin-1"))
 
@@ -1197,14 +1215,14 @@ def test_base_encoding_bails_never_guess():
     s_at = good.find(b"claim \x93text\x94")
     assert s_at > 0
     hole = good[:s_at] + b"\x81" + good[s_at + 1:]
-    assert tokenize_pdf_text(hole) is None
+    assert tokenize_pdf_runs(hole) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(hole.decode("latin-1"))
 
     # corrupting the subset CMap must bail, not fall back to garbage
     sub = write_subset_font_pdf(["alpha beta"])
     broken = sub.replace(b"beginbfchar", b"beginbfchaX", 1)
-    assert tokenize_pdf_text(broken) is None
+    assert tokenize_pdf_runs(broken) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(broken.decode("latin-1"))
 
@@ -1218,7 +1236,9 @@ def test_user_password_book_opens_and_bails():
 
     from pdf_extraction_ai_agent_spark import spec
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_encrypted_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -1229,14 +1249,16 @@ def test_user_password_book_opens_and_bails():
             data = write_encrypted_pdf(
                 pages, owner_pwd=b"own", user_pwd=pw, revision=rev
             )
-            got = tokenize_pdf_text(data, passwords=spec.KNOWN_USER_PASSWORDS)
+            got = assemble_reading_order(
+                tokenize_pdf_runs(data, passwords=spec.KNOWN_USER_PASSWORDS)
+            )
             assert got == pages, (rev, pw)
             text, _ = extract_real_pdf(data.decode("latin-1"))
             assert pages[0] in text
         bad = write_encrypted_pdf(
             pages, user_pwd=b"not-in-the-book", revision=rev
         )
-        assert tokenize_pdf_text(bad, passwords=spec.KNOWN_USER_PASSWORDS) is None
+        assert tokenize_pdf_runs(bad, passwords=spec.KNOWN_USER_PASSWORDS) is None
         with _pytest.raises(RuntimeError):
             extract_real_pdf(bad.decode("latin-1"))
 
@@ -1244,11 +1266,13 @@ def test_user_password_book_opens_and_bails():
     # one roundtrip + one wrong-password bail)
     pw = spec.KNOWN_USER_PASSWORDS[0]
     data = write_encrypted_pdf(pages, owner_pwd=b"own6", user_pwd=pw, revision=6)
-    assert tokenize_pdf_text(data, passwords=spec.KNOWN_USER_PASSWORDS) == pages
+    assert assemble_reading_order(
+        tokenize_pdf_runs(data, passwords=spec.KNOWN_USER_PASSWORDS)
+    ) == pages
     text, _ = extract_real_pdf(data.decode("latin-1"))
     assert pages[0] in text
     bad = write_encrypted_pdf(pages, user_pwd=b"wrong-r6-pass", revision=6)
-    assert tokenize_pdf_text(bad, passwords=spec.KNOWN_USER_PASSWORDS) is None
+    assert tokenize_pdf_runs(bad, passwords=spec.KNOWN_USER_PASSWORDS) is None
     with _pytest.raises(RuntimeError):
         extract_real_pdf(bad.decode("latin-1"))
 
@@ -1264,7 +1288,9 @@ def test_filtered_pdf_parity_matrix():
     from pdf_extraction_ai_agent_spark.operators.extract import (
         extract_real_pdf_text,
     )
-    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_text
+    from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order, tokenize_pdf_runs,
+    )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -1285,7 +1311,7 @@ def test_filtered_pdf_parity_matrix():
     for chain in chains:
         for pages in pages_sets:
             data = write_filtered_pdf(pages, chain)
-            assert tokenize_pdf_text(data) == pages, chain
+            assert assemble_reading_order(tokenize_pdf_runs(data)) == pages, chain
             etext, eocr = extract_real_pdf_text(data)
             otext, oocr = extract_real_pdf(data.decode("latin-1"))
             assert (etext, eocr) == (otext, oocr), chain
@@ -1376,7 +1402,7 @@ def test_filtered_pdf_corruption_falls_through():
 def test_inline_image_pdf_invisible_to_all_walks():
     """Inline images (BI…ID…EI): adversarial binary — phantom '(…) Tj'
     shows, BT blocks, 'm … l S' ruling decoys — must be invisible to the
-    flat walk, the positioned walk AND the rulings walk, on both twins,
+    positioned walk AND the rulings walk, on both twins,
     compressed or not; and a 'BI ID EI' SHOWN INSIDE a literal string is
     text, not an image."""
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
@@ -1384,9 +1410,9 @@ def test_inline_image_pdf_invisible_to_all_walks():
         extract_real_pdf_text,
     )
     from pdf_extraction_ai_agent_spark.operators.pdftext import (
+        assemble_reading_order,
         tokenize_pdf_rulings,
         tokenize_pdf_runs,
-        tokenize_pdf_text,
     )
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
@@ -1404,7 +1430,7 @@ def test_inline_image_pdf_invisible_to_all_walks():
             ("image", decoy),
         ]
         pdf = write_minimal_pdf([items], compress=compress)
-        assert tokenize_pdf_text(pdf) == [
+        assert assemble_reading_order(tokenize_pdf_runs(pdf)) == [
             "Real claim line one goes here\nthe BI ID EI letters inside text"
         ]
         runs = tokenize_pdf_runs(pdf)
@@ -1426,10 +1452,7 @@ def test_inline_image_truncation_falls_through():
     import pytest as _pytest
 
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
-    from pdf_extraction_ai_agent_spark.operators.pdftext import (
-        tokenize_pdf_runs,
-        tokenize_pdf_text,
-    )
+    from pdf_extraction_ai_agent_spark.operators.pdftext import tokenize_pdf_runs
     from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
         extract_real_pdf,
     )
@@ -1446,7 +1469,6 @@ def test_inline_image_truncation_falls_through():
         assert at > 0
         broken = pdf[:at] + cut.replace(b"EI", b"XX").replace(b"ID", b"XX") \
             + pdf[at + len(cut):]
-        assert tokenize_pdf_text(broken) is None, cut
         assert tokenize_pdf_runs(broken) is None, cut
         with _pytest.raises(RuntimeError):
             extract_real_pdf(broken.decode("latin-1"))

@@ -165,10 +165,14 @@ def test_lattice_on_real_pdf_bytes(spark):
     stroked ruling segments and per-row-jittered cell text; the
     dependency-free tokenizers recover positioned runs + rulings, and
     lattice_cells_from_docs extracts the 3×2 grid that x-alignment cannot.
-    One call over a frame that mixes the real PDF with a pseudo-PDF doc
-    and an unparseable %PDF- doc: each doc yields exactly its own cells,
-    and the bad doc yields none rather than an error."""
-    from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
+    One call over a frame that mixes the real PDF, its twin encrypted
+    under a user password from spec.KNOWN_USER_PASSWORDS, a pseudo-PDF doc
+    and an unparseable %PDF- doc: each doc yields exactly its own cells
+    (the encrypted twin the plaintext doc's), and the bad doc yields none
+    rather than an error."""
+    from pdf_extraction_ai_agent_spark.fixtures.minipdf import (
+        write_encrypted_pdf, write_minimal_pdf,
+    )
     from pdf_extraction_ai_agent_spark.operators.texttables import (
         lattice_cells_from_docs,
     )
@@ -184,10 +188,13 @@ def test_lattice_on_real_pdf_bytes(spark):
         ("text", 83, 260, "W-2"), ("text", 255, 260, "200.00"),
         ("text", 90, 120, "Prose below"),
     ]
-    data = write_minimal_pdf([page, "second page, just prose"], compress=True)
+    pages = [page, "second page, just prose"]
+    data = write_minimal_pdf(pages, compress=True)
+    locked = write_encrypted_pdf(pages, user_pwd=b"wc-lossrun", revision=4)
     df = spark.createDataFrame(
         [
             (9, data.decode("latin-1")),
+            (8, locked.decode("latin-1")),
             (7, _JITTERED_GRID_DOC),
             (5, "%PDF-1.4\nnot a pdf at all"),
         ],
@@ -201,8 +208,9 @@ def test_lattice_on_real_pdf_bytes(spark):
         (1, 1, 0): "W-1", (1, 1, 1): "100.00",
         (1, 2, 0): "W-2", (1, 2, 1): "200.00",
     }
+    assert got[8] == got[9]
     assert got[7] == {(1, ri, ci): t for (ri, ci), t in _JITTERED_GRID_CELLS.items()}
-    assert set(got) == {7, 9}
+    assert set(got) == {7, 8, 9}
 
 
 def test_layout_tables_match_oracle_twin(spark):

@@ -133,7 +133,11 @@ def test_bookkeeping_frames_run_no_python_tasks(spark, tmp_path_factory):
     """LineageStore's locally built rows reach the JVM as a local relation.
     createDataFrame over a Python list is a PythonRDD: every action on it
     runs Python worker tasks, which pay a worker's per-task fixed cost."""
-    from pdf_extraction_ai_agent_spark.plans.lineage import _local_frame
+    from pyspark.sql.types import StructType
+
+    from pdf_extraction_ai_agent_spark.plans.lineage import (
+        LINEAGE_SCHEMA, _local_frame,
+    )
 
     lin = os.path.join(str(tmp_path_factory.mktemp("lineage")), "lineage")
     store = LineageStore(spark, lin)
@@ -154,6 +158,10 @@ def test_bookkeeping_frames_run_no_python_tasks(spark, tmp_path_factory):
 
     store.append([{"run_group": "g", "part_id": 3, "n_rows": 7, "wall_ms": 12,
                    "turns_per_sec": 1.5}])
+    # the appended table is exactly the declared lineage row
+    assert spark.read.parquet(lin).schema.simpleString() == (
+        StructType.fromDDL(LINEAGE_SCHEMA).simpleString()
+    )
     store.put_stat("g", "max_conv_rows", 42.0)
     assert [r.part_id for r in store.completed_part_ids("g").collect()] == [3]
     assert store.get_stat("g", "max_conv_rows") == 42.0

@@ -206,7 +206,11 @@ def test_ann_exact_topk_plan_is_two_stage(spark, sf_dir):
     rank<=k filter stays adjacent to the window and k ≤
     spark.sql.window.group.limit.threshold; this pin catches any refactor
     that breaks the pattern. Plans print parent-first, so Final must
-    appear before Exchange, which must appear before Partial."""
+    appear before Exchange, which must appear before Partial.
+
+    The brute-force scan is Catalyst-only, so it reads ``embeddings``
+    unspread: no vec_id exchange. q36's per-bucket Python kernel still
+    consumes a spread scan, so its plan keeps that exchange."""
     import __spark_entry__ as entry
 
     plan = _plan(entry.queries()["q16_ann_cosine_topk"](spark, sf_dir))
@@ -215,6 +219,9 @@ def test_ann_exact_topk_plan_is_two_stage(spark, sf_dir):
     i_partial = plan.index(", Partial")
     i_exchange = plan.index("Exchange hashpartitioning(query_id")
     assert i_final < i_exchange < i_partial, plan
+    assert "Exchange hashpartitioning(vec_id" not in plan, plan
+    q36 = _plan(entry.queries()["q36_embedding_near_dups"](spark, sf_dir))
+    assert "Exchange hashpartitioning(vec_id" in q36, q36
 
 
 def test_salted_rollup_matches_unsalted(spark, sf_dir):
