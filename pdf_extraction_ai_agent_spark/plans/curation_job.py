@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import norm_text_col
 from ..functions.hashing import md5_long_col
-from .lineage import LineageStore
+from .lineage import read_committed
 
 
 def exact_dup_losers(docs: DataFrame, id_col: str = "doc_id",
@@ -64,22 +64,9 @@ def cached_exact_dup_losers(
     (run_with_lineage assumes the input snapshot is stable per run-group,
     so the cache key is sound)."""
     sub = f"{lineage_path.rstrip('/')}_losers/run_group={run_group}"
-    try:
-        cached = spark.read.format(fmt).load(sub)
-        cached.limit(1).collect()  # existence probe (empty dir → raise)
+    cached = read_committed(spark, sub, fmt)
+    if cached is not None:
         return cached
-    except Exception as e:
-        # only a MISSING cache may fall through to a recompute (advisor
-        # finding: swallowing every read error silently re-scanned the
-        # corpus AND overwrote the stored loser list on e.g. a transient
-        # permission failure or a corrupt file — fail loudly instead)
-        name = type(e).__name__
-        missing = (
-            "AnalysisException" in name
-            and ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e))
-        ) or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        if not missing:
-            raise
     losers = exact_dup_losers(docs, id_col, text_col)
     losers.write.format(fmt).mode("overwrite").save(sub)
     return spark.read.format(fmt).load(sub)

@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,6 +68,27 @@ def _local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     return spark.createDataFrame(table)
 
 
+def read_committed(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame | None:
+    """The table committed at ``path``, or None while there is none: no
+    path, no table, or a directory that holds no data file (a first write
+    that never committed). Any other read error raises — reading an
+    unreadable table as absent would silently redo every committed bucket
+    and then fail at the write. Checking a parquet path's existence first
+    also keeps Spark from logging a stack trace for the expected miss."""
+    if fmt == "parquet":
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+            return None
+    try:
+        return spark.read.format(fmt).load(path)
+    except AnalysisException as e:
+        # Iceberg's catalog reports a missing table as Spark's
+        # NoSuchTableException, which carries TABLE_OR_VIEW_NOT_FOUND
+        if e.getCondition() in ("TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 class LineageStore:
     """Tiny lineage/metrics table on parquet (sandbox) or Iceberg (cluster)."""
 
@@ -76,9 +98,8 @@ class LineageStore:
         self.fmt = fmt
 
     def completed_part_ids(self, run_group: str) -> DataFrame:
-        try:
-            df = self.spark.read.format(self.fmt).load(self.path)
-        except Exception:
+        df = read_committed(self.spark, self.path, self.fmt)
+        if df is None:
             return _local_frame(self.spark, [], "part_id int")
         return df.filter(F.col("run_group") == run_group).select("part_id").distinct()
 
@@ -111,9 +132,8 @@ class LineageStore:
         return self.path.rstrip("/") + "_stats"
 
     def get_stat(self, run_group: str, stat: str) -> float | None:
-        try:
-            df = self.spark.read.format(self.fmt).load(self._stats_path())
-        except Exception:
+        df = read_committed(self.spark, self._stats_path(), self.fmt)
+        if df is None:
             return None
         rows = (
             df.filter((F.col("run_group") == run_group) & (F.col("stat") == stat))

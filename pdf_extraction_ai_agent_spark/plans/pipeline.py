@@ -79,7 +79,8 @@ def precompute_kdf_seed(
     text_col: str = "text",
     passwords: tuple[bytes, ...] | None = None,
 ) -> dict:
-    """AES-256 KDF pre-stage (round-6 verdict item 1).
+    """AES-256 KDF pre-stage: {(password, salt, b"") → Algorithm 2.B hash}
+    for every V5/R6 encrypt dict in the corpus.
 
     ISO 32000-2 Algorithm 2.B is ~1s/call pure Python BY DESIGN, and its
     lru_cache lives per python WORKER — so without this stage a corpus of
@@ -87,9 +88,9 @@ def precompute_kdf_seed(
     of KDF. This derives each distinct salt pair ONCE: filter to encrypted
     real-PDF payloads (substring predicates, JVM-side), extract the V5/R6
     salts with a cheap Arrow kernel (pdftext.aesv3_kdf_salts — trailer
-    parse only, no KDF), distinct (the shuffle carries 16-byte rows), run
-    the KDF once per distinct salt ON THE EXECUTORS, and collect the tiny
-    {(pwd, salt, udata) → hash} map to close over the extract UDF
+    parse only, no KDF; None for any other encryption), distinct (the
+    shuffle carries 16-byte rows), run the KDF once per distinct salt ON
+    THE EXECUTORS, and collect the tiny map to close over the extract UDF
     (with_extraction(kdf_seed=...)). At 100 TB the map is bounded by the
     number of DISTINCT encrypt dicts, not files — the collect is safe, and
     extract workers then do only AES-CBC, never the KDF. Misses still
@@ -99,14 +100,37 @@ def precompute_kdf_seed(
     the pipeline's candidate user-password book: _encryption_key's V5/R6
     validation loop tries the empty password then each candidate in
     order, so a book-locked file would otherwise re-pay ~1s/KDF per
-    candidate per worker — exactly the trap the pre-pass exists to kill."""
+    candidate per worker — exactly the trap the pre-pass exists to kill.
+    The seed holds 2 × (1 + len(passwords)) entries per distinct salt
+    pair (validation and key salt, empty password first)."""
     from .. import spec
-    from ..operators.pdftext import aesv3_kdf_salts, kdf_seed_for_salts
 
     pwds = tuple(
         p[:127] for p in
         ((b"",) + tuple(spec.KNOWN_USER_PASSWORDS if passwords is None else passwords))
     )
+    seed: dict = {}
+    for r in _kdf_salt_frame(transcripts, text_col, pwds).collect():
+        if r["s"] is None:  # encrypted, but with no V5/R6 salts
+            continue
+        s, h = bytes(r["s"]), bytes(r["h"])
+        for i, p in enumerate(pwds):
+            seed[(p, s[:8], b"")] = h[i * 64 : i * 64 + 32]
+            seed[(p, s[8:16], b"")] = h[i * 64 + 32 : i * 64 + 64]
+    return seed
+
+
+def _kdf_salt_frame(
+    transcripts: DataFrame, text_col: str, pwds: tuple[bytes, ...]
+) -> DataFrame:
+    """precompute_kdf_seed's pre-pass: one (s, h) row per distinct salt
+    pair ``s`` (validation ‖ key salt, 16 bytes) with ``h`` its packed
+    hashes, plus at most one null-``s`` row for the encrypted PDFs that
+    carry no V5/R6 salts. That row is kept on purpose: a filter on the
+    ``_salts`` output is pushed below its projection, so Catalyst would
+    evaluate ``_salts`` twice in one stage — two Python workers per task
+    and every encrypted PDF's bytes sent to Python twice."""
+    from ..operators.pdftext import aesv3_kdf_salts, kdf_seed_for_salts
 
     @F.pandas_udf("binary")
     def _salts(t: pd.Series) -> pd.Series:
@@ -119,28 +143,21 @@ def precompute_kdf_seed(
     def _kdf_pack(s: pd.Series) -> pd.Series:
         # per password: validation-salt hash ‖ key-salt hash (64 bytes),
         # packed in book order → len(pwds) × 64 bytes total
-        def pack(b) -> bytes:
+        def pack(b) -> bytes | None:
+            if b is None:
+                return None
             d = kdf_seed_for_salts(bytes(b), pwds[1:])
             v, k = bytes(b)[:8], bytes(b)[8:16]
             return b"".join(d[(p, v, b"")] + d[(p, k, b"")] for p in pwds)
         return s.map(pack)
 
-    rows = (
+    return (
         transcripts.select(F.col(text_col).alias("t"))
         .filter(F.col("t").startswith("%PDF-") & F.col("t").contains("/Encrypt"))
         .select(_salts("t").alias("s"))
-        .filter(F.col("s").isNotNull())
         .distinct()
         .select("s", _kdf_pack("s").alias("h"))
-        .collect()
     )
-    seed: dict = {}
-    for r in rows:
-        s, h = bytes(r["s"]), bytes(r["h"])
-        for i, p in enumerate(pwds):
-            seed[(p, s[:8], b"")] = h[i * 64 : i * 64 + 32]
-            seed[(p, s[8:16], b"")] = h[i * 64 + 32 : i * 64 + 64]
-    return seed
 
 
 def salted_repartition(df: DataFrame, num_partitions: int | None, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:

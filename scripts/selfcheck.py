@@ -13,6 +13,7 @@ input file sizes), and the first diffing rows of both frames.
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 import sys
@@ -37,13 +38,18 @@ def _norm_cell(v):
     return v
 
 
+def _sort_key(s: pd.Series) -> pd.Series:
+    """The row-order key of one normalized column: ``"0" + str(x)``, or
+    ``"1"`` for None, so cells sort as the tuples ``(x is None, str(x))``
+    would, without building a tuple per cell. Only object columns hold
+    None after ``_norm_cell``; a float column's NaN sorts as "nan"."""
+    key = "0" + s.astype(str)
+    return key.mask(s.isna(), "1") if s.dtype == object else key
+
+
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        df[c] = df[c].map(_norm_cell)
-    return df.sort_values(by=list(df.columns), key=lambda s: s.map(lambda x: (x is None, str(x)))).reset_index(
-        drop=True
-    )
+    df = pd.DataFrame({c: df[c].map(_norm_cell) for c in sorted(df.columns)})
+    return df.sort_values(by=list(df.columns), key=_sort_key, ignore_index=True)
 
 
 def _dump_failure(dump_root: str, name: str, sf_dir: str, spark, df=None,
@@ -94,6 +100,59 @@ def _dump_failure(dump_root: str, name: str, sf_dir: str, spark, df=None,
     return d
 
 
+def _check(name, fn, spark, con, sql, sf_dir, dump_root, cache_cap):
+    """Run one query on Spark and its oracle on DuckDB and compare them.
+    Returns (passed, persistent-RDD count after the Spark action, None if
+    it failed). Every frame of the query lives in this call only."""
+    df = None
+    try:
+        df = fn(spark, sf_dir)
+        got = df.toPandas()
+        n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        if n_cached > cache_cap:
+            print(f"[FAIL] {name}: {n_cached} persistent RDDs > cap {cache_cap} (cache leak)")
+            return False, n_cached
+    except Exception as e:
+        print(f"[FAIL] {name}: spark error: {e}")
+        if dump_root:
+            print(f"  dump: {_dump_failure(dump_root, name, sf_dir, spark, df=df, err=str(e))}")
+        return False, None
+    if sql is None:
+        print(f"[rows-only] {name}: {len(got)} rows")
+        return True, n_cached
+    try:
+        exp = con.sql(sql).df()
+    except Exception as e:
+        print(f"[FAIL] {name}: duckdb error: {e}")
+        if dump_root:
+            print(f"  dump: {_dump_failure(dump_root, name, sf_dir, spark, df=df, got=got, err=str(e))}")
+        return False, n_cached
+    status = []
+    if len(got) != len(exp):
+        status.append(f"rowcount {len(got)} != {len(exp)}")
+    if sorted(got.columns) != sorted(exp.columns):
+        status.append(f"columns {sorted(got.columns)} != {sorted(exp.columns)}")
+    if not status:
+        g, e = _normalize(got), _normalize(exp)
+        neq_cols = []
+        for c in g.columns:
+            if not g[c].equals(e[c]):
+                mask = ~(g[c].astype(object).fillna("∅") == e[c].astype(object).fillna("∅"))
+                n_bad = int(mask.sum())
+                neq_cols.append((c, n_bad))
+                idx = mask.idxmax()
+                print(f"    col {c}: {n_bad} diffs; first: got={g[c][idx]!r} exp={e[c][idx]!r}")
+        if neq_cols:
+            status.append(f"value diffs in {neq_cols}")
+    if status:
+        print(f"[FAIL] {name}: {'; '.join(status)}")
+        if dump_root:
+            print(f"  dump: {_dump_failure(dump_root, name, sf_dir, spark, df=df, got=got, exp=exp, err='; '.join(status))}")
+        return False, n_cached
+    print(f"[OK]   {name}: {len(got)} rows")
+    return True, n_cached
+
+
 def main():
     args = list(sys.argv[1:])
     dump_root = None
@@ -107,6 +166,10 @@ def main():
     import __spark_entry__ as entry
     from pdf_extraction_ai_agent_spark.session import get_spark
 
+    # The driver JVM and this process's pandas frames share one host: a
+    # heap capped below get_spark's 8g default leaves room for the largest
+    # query's Spark and DuckDB frames side by side (sf0.1 q45: ~1M rows).
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
     spark = get_spark(app_name="selfcheck", master="local[8]", shuffle_partitions=8)
 
     con = duckdb.connect()
@@ -129,58 +192,15 @@ def main():
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        df = None
-        try:
-            df = fn(spark, sf_dir)
-            got = df.toPandas()
-            n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        ok, n_cached = _check(name, fn, spark, con, oracles.get(name), sf_dir,
+                              dump_root, CACHE_CAP)
+        if n_cached is not None:
             max_cached = max(max_cached, n_cached)
-            if n_cached > CACHE_CAP:
-                failures.append(name)
-                print(f"[FAIL] {name}: {n_cached} persistent RDDs > cap {CACHE_CAP} (cache leak)")
-                continue
-        except Exception as e:
+        if not ok:
             failures.append(name)
-            print(f"[FAIL] {name}: spark error: {e}")
-            if dump_root:
-                print(f"  dump: {_dump_failure(dump_root, name, sf_dir, spark, df=df, err=str(e))}")
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"[rows-only] {name}: {len(got)} rows")
-            continue
-        try:
-            exp = con.sql(sql).df()
-        except Exception as e:
-            failures.append(name)
-            print(f"[FAIL] {name}: duckdb error: {e}")
-            if dump_root:
-                print(f"  dump: {_dump_failure(dump_root, name, sf_dir, spark, df=df, got=got, err=str(e))}")
-            continue
-        status = []
-        if len(got) != len(exp):
-            status.append(f"rowcount {len(got)} != {len(exp)}")
-        if sorted(got.columns) != sorted(exp.columns):
-            status.append(f"columns {sorted(got.columns)} != {sorted(exp.columns)}")
-        if not status:
-            g, e = _normalize(got), _normalize(exp)
-            neq_cols = []
-            for c in g.columns:
-                if not g[c].equals(e[c]):
-                    mask = ~(g[c].astype(object).fillna("∅") == e[c].astype(object).fillna("∅"))
-                    n_bad = int(mask.sum())
-                    neq_cols.append((c, n_bad))
-                    idx = mask.idxmax()
-                    print(f"    col {c}: {n_bad} diffs; first: got={g[c][idx]!r} exp={e[c][idx]!r}")
-            if neq_cols:
-                status.append(f"value diffs in {neq_cols}")
-        if status:
-            failures.append(name)
-            print(f"[FAIL] {name}: {'; '.join(status)}")
-            if dump_root:
-                print(f"  dump: {_dump_failure(dump_root, name, sf_dir, spark, df=df, got=got, exp=exp, err='; '.join(status))}")
-        else:
-            print(f"[OK]   {name}: {len(got)} rows")
+        # the query's frames are freed on _check's return; collect their
+        # cycles now so the next query's peak does not stack on them
+        gc.collect()
     from pdf_extraction_ai_agent_spark.plans.cache import release_tracked
 
     release_tracked()

@@ -79,6 +79,31 @@ def test_precompute_seed_covers_password_book(spark, monkeypatch):
     assert "Claim WC-77 locked body" in joined
 
 
+def test_precompute_seed_mixed_corpus_keeps_only_r6_entries(spark):
+    """Over a mixed corpus the seed holds exactly the R6 file's entries.
+    The R3 (RC4) file passes the JVM-side /Encrypt filter but has no
+    V5/R6 salts: its null salt row reaches the KDF stage (no filter on the
+    UDF output, which would evaluate ``_salts`` twice) and must add
+    nothing. The plaintext PDF and the plain turn never reach Python."""
+    from pdf_extraction_ai_agent_spark.plans.pipeline import precompute_kdf_seed
+
+    r6 = minipdf.write_encrypted_pdf(["Claim R6 body"], revision=6)
+    r3 = minipdf.write_encrypted_pdf(["Claim R3 body"], revision=3)
+    assert pdftext.aesv3_kdf_salts(r3) is None
+    plain = minipdf.write_minimal_pdf(["Claim plain body"])
+    texts = [d.decode("latin-1") for d in (r6, r3, plain)] + ["just a chat turn"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+
+    seed = precompute_kdf_seed(df)
+    vsalt, ksalt, _, _ = minipdf.r6_salts(1)
+    pwds = (b"",) + tuple(spec.KNOWN_USER_PASSWORDS)
+    assert len(seed) == 2 * (1 + len(spec.KNOWN_USER_PASSWORDS))
+    # values from the fixture writer's own Algorithm 2.B twin
+    assert seed == {
+        (p, salt, b""): minipdf.hash_2b(p, salt) for p in pwds for salt in (vsalt, ksalt)
+    }
+
+
 def test_aesv3_salts_from_xref_stream_trailer():
     """aesv3_kdf_salts parses the modern trailer-less layout too (advice
     r6 #1): the q65 shape's /Encrypt lives in the xref STREAM dict."""

@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extraction_ai_agent_spark.plans.lineage import (
@@ -165,3 +166,34 @@ def test_bookkeeping_frames_run_no_python_tasks(spark, tmp_path_factory):
     store.put_stat("g", "max_conv_rows", 42.0)
     assert [r.part_id for r in store.completed_part_ids("g").collect()] == [3]
     assert store.get_stat("g", "max_conv_rows") == 42.0
+
+
+def test_unreadable_lineage_raises_before_any_bucket(spark, transcripts_df, tmp_path_factory):
+    """Only a missing lineage table reads as "nothing done". A lineage path
+    that exists but does not hold parquet must raise before any bucket
+    runs: treating it as empty would re-process every bucket and then
+    fail at the lineage append."""
+    base = str(tmp_path_factory.mktemp("lineage_bad"))
+    out, lin = os.path.join(base, "out"), os.path.join(base, "lineage")
+    for d in (lin, lin + "_stats"):
+        os.makedirs(d)
+        with open(os.path.join(d, "part-00000.parquet"), "w") as f:
+            f.write("not a parquet file\n")
+
+    built = []
+
+    def plan(df):
+        built.append(df)
+        return _plan(df)
+
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_with_lineage(spark, transcripts_df, plan, out, lin, run_group="bad",
+                         n_buckets=4, bucket_group_size=2)
+    assert built == [] and not os.path.exists(out)
+    # a stats table in the same state raises too; a missing one, or a
+    # directory a first write left without any data file, reads None
+    with pytest.raises(Exception, match="(?i)parquet"):
+        LineageStore(spark, lin).get_stat("bad", "max_conv_rows")
+    assert LineageStore(spark, os.path.join(base, "absent")).get_stat("bad", "x") is None
+    os.makedirs(os.path.join(base, "crashed_stats", "_temporary"))
+    assert LineageStore(spark, os.path.join(base, "crashed")).get_stat("bad", "x") is None

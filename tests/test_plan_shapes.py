@@ -488,3 +488,53 @@ def test_cached_ivf_centroids_fit_once(spark, sf_dir, tmp_path_factory, monkeypa
            for r in S.cosine_topk_ivf(emb, [0, 1, 2], k=5, centroids=c1).collect()}
     assert calls["n"] == 0
     assert got == expect
+
+
+def _python_evals(plan: str) -> dict[str, int]:
+    """UDF name → number of ``*EvalPython`` nodes of ``plan`` that evaluate
+    it. A node prints ``ArrowEvalPython [f(a#1)#2, g(...)#3], [out…]``:
+    its UDFs are the top-level entries of the first bracket list."""
+    from collections import Counter
+
+    counts: Counter = Counter()
+    for m in re.finditer(r"EvalPython \[", plan):
+        depth, entry, i = 0, "", m.end()
+        while depth or plan[i] != "]":
+            ch = plan[i]
+            depth += (ch in "([") - (ch in ")]")
+            if ch == "," and not depth:
+                counts[entry.strip().split("(", 1)[0]] += 1
+                entry = ""
+            else:
+                entry += ch
+            i += 1
+        counts[entry.strip().split("(", 1)[0]] += 1
+    return dict(counts)
+
+
+def test_every_python_udf_evaluates_once(spark, transcripts_df):
+    """Each Python UDF runs in exactly ONE eval node of its plan. A filter
+    on a UDF's output is pushed below the projection that computes it, so
+    Catalyst re-evaluates the UDF under the filter: two Python workers per
+    task and the input sent to Python twice. The KDF pre-pass did this
+    with ``.filter(s.isNotNull())`` on its ``_salts`` output."""
+    from pdf_extraction_ai_agent_spark.plans import pipeline as P
+    from pdf_extraction_ai_agent_spark.plans.lineage import with_part_id
+
+    pre = _python_evals(_plan(P._kdf_salt_frame(transcripts_df, "text", (b"",))))
+    assert pre == {"_salts": 1, "_kdf_pack": 1}, pre
+
+    # the resumable job's per-bucket-group plan, built with its arguments
+    group = with_part_id(transcripts_df, n_buckets=4).filter(F.col("part_id").isin([0, 1]))
+    seed = {(b"", b"\x00" * 8, b""): b"\x00" * 32}
+    plans = {
+        "static": (P.extract_pipeline(transcripts_df), {"_kernel"}),
+        "auto": (P.extract_pipeline(transcripts_df, salt_buckets="auto"), {"_kernel"}),
+        "ocr": (P.extract_pipeline(transcripts_df, ocr="fixture"),
+                {"_kernel", "_ocr_batch", "_rescan"}),
+        "job_group": (P.extract_pipeline(group, salt_buckets="auto", max_conv_rows=10,
+                                         kdf_seed=seed), {"_kernel"}),
+    }
+    for name, (df, udfs) in plans.items():
+        evals = _python_evals(_plan(df))
+        assert evals == dict.fromkeys(udfs, 1), (name, evals)
