@@ -53,11 +53,11 @@ def main():
         curation_plan,
     )
     from pdf_extraction_ai_agent_spark.plans.lineage import run_with_lineage
+    from pdf_extraction_ai_agent_spark.session import ENGINE_CONF
 
     spark = (
         SparkSession.builder.appName("corpus-curation")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

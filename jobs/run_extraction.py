@@ -54,19 +54,21 @@ def main():
     from pyspark.sql import SparkSession
 
     from pdf_extraction_ai_agent_spark.plans.lineage import (
+        LineageStore,
         cached_max_conv_rows,
         run_with_lineage,
     )
-    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+    from pdf_extraction_ai_agent_spark.plans.pipeline import (
+        extract_pipeline,
+        precompute_kdf_seed,
+    )
+    from pdf_extraction_ai_agent_spark.session import ENGINE_CONF
 
-    # on a cluster, master/executors come from spark-submit; only engine
-    # defaults are set here
+    # on a cluster, master/executors come from spark-submit; only the
+    # engine's settings are set here
     spark = (
         SparkSession.builder.appName("transcript-extraction")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 
@@ -75,25 +77,30 @@ def main():
     else:
         transcripts = spark.read.parquet(args.input)
 
-    mx = None
-    if salt == "auto":
-        mx = cached_max_conv_rows(
-            spark, transcripts, args.lineage, run_group=args.run_group,
-            fmt=args.format,
-        )
+    # the pre-passes scan the whole input: run them only when a bucket is
+    # left (the committed part ids are at most --buckets rows)
+    done = LineageStore(spark, args.lineage, fmt=args.format).completed_part_ids(
+        args.run_group
+    )
+    bucket_left = bool(set(range(args.buckets)) - {r.part_id for r in done.collect()})
 
-    # AES-256 KDF pre-stage: derive the per-encrypt-dict Algorithm 2.B
-    # hashes ONCE over the whole input and reuse the seed in every bucket
-    # group (the per-group pipeline would otherwise re-run the pre-pass)
-    from pdf_extraction_ai_agent_spark.plans.pipeline import precompute_kdf_seed
-
-    kdf_seed = precompute_kdf_seed(transcripts)
+    mx = kdf_seed = None
+    if bucket_left:
+        if salt == "auto":
+            mx = cached_max_conv_rows(
+                spark, transcripts, args.lineage, run_group=args.run_group,
+                fmt=args.format,
+            )
+        # AES-256 KDF pre-stage: derive the per-encrypt-dict Algorithm 2.B
+        # hashes ONCE over the whole input and reuse the seed in every
+        # bucket group (the per-group pipeline would otherwise re-run it)
+        kdf_seed = precompute_kdf_seed(transcripts)
 
     metrics = run_with_lineage(
         spark,
         transcripts,
         lambda df: extract_pipeline(
-            df, salt_buckets=salt, max_conv_rows=mx, kdf_seed=kdf_seed or False,
+            df, salt_buckets=salt, max_conv_rows=mx, kdf_seed=kdf_seed,
             ocr=None if args.ocr == "off" else args.ocr,
         ),
         out_path=args.output,

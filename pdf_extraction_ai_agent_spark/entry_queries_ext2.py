@@ -242,9 +242,12 @@ def _q28_sql(doc_cte: str | None = None) -> str:
     )
 
     def moneycol(cat: str) -> str:
+        # the LAST matching part's money (part_no is unique per line). A
+        # MAX over {'k': part_no, 'v': money} structs computes the same
+        # value but held GBs of aggregate state at sf0.1.
         return (
-            "COALESCE((MAX(CASE WHEN free AND moneycat = '" + cat + "'"
-            " THEN {'k': part_no, 'v': money} END)).v, '')"
+            "COALESCE(arg_max(money, part_no)"
+            f" FILTER (WHERE free AND moneycat = '{cat}'), '')"
         )
 
     if doc_cte is None:

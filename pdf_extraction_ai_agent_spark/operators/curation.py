@@ -97,61 +97,6 @@ def _gram_hashes(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame
     )
 
 
-def contamination_map_only(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """Zero-shuffle twin of ``contamination``: the eval gram-hash inventory
-    is collected once (a fit parameter, same shape as IVF centroids — 8
-    bytes per distinct eval gram; a million-gram eval set is 8 MB) and
-    shipped as a broadcast variable into an Arrow kernel that shingles,
-    hashes and counts per document locally. NO shuffle at all — each doc's
-    grams never leave the row — so it also runs unchanged on a STREAMING
-    DataFrame (stateless map; see tests). Same output and values as the
-    declarative form (pinned by test)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.hashing import md5_long_py
-
-    ev_rows = _gram_hashes(eval_docs, id_col, text_col, k).select("h").distinct().collect()
-    ev = np.array(sorted(int(r.h) for r in ev_rows), dtype=np.int64)
-    bc = docs.sparkSession.sparkContext.broadcast(ev)
-    cols = ["doc_id", "n_grams", "n_contaminated", "contamination"]
-
-    def kernel(batches):
-        import re as _re
-
-        ev_sorted = bc.value
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                norm = _re.sub(" +", " ", _re.sub("[^a-z0-9]+", " ", str(text).lower())).strip()
-                w = norm.split(" ")
-                if norm == "" or len(w) < k:
-                    continue
-                grams = {" ".join(w[i : i + k]) for i in range(len(w) - k + 1)}
-                grams.discard("")
-                if not grams:
-                    continue
-                hs = np.fromiter((md5_long_py(g) for g in grams), dtype=np.int64,
-                                 count=len(grams))
-                idx = np.searchsorted(ev_sorted, hs)
-                idx[idx >= len(ev_sorted)] = max(len(ev_sorted) - 1, 0)
-                hits = int((ev_sorted[idx] == hs).sum()) if len(ev_sorted) else 0
-                rows.append(
-                    (int(doc_id), len(grams), hits, round(hits / len(grams), 6))
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        kernel, schema="doc_id long, n_grams long, n_contaminated long, contamination double"
-    )
-
-
 def contamination(
     docs: DataFrame,
     eval_docs: DataFrame,
@@ -201,10 +146,10 @@ def contaminated_spans(
     spans are therefore disjoint and each covers every word from
     ``start_word`` to ``end_word`` = last hit start + k − 1.
 
-    Plan: same zero-shuffle shape as ``contamination_map_only`` — the eval
-    gram-hash inventory is a collected fit parameter (8 bytes/gram)
-    broadcast into an Arrow kernel; a document's grams never leave its row,
-    so the operator is a stateless map that also runs on streaming frames.
+    Plan: zero-shuffle — the eval gram-hash inventory is a collected fit
+    parameter (8 bytes per distinct eval gram) broadcast into an Arrow
+    kernel; a document's grams never leave its row, so the operator is a
+    stateless map that also runs on streaming frames.
     """
     import numpy as np
     import pandas as pd

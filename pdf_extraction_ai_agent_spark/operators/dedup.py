@@ -1,22 +1,24 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, all declarative DataFrame plans (scale notes inline):
+Four families (scale notes inline):
 
 - exact        hash-groupBy on normalized text. One shuffle on a 60-bit
                digest; at 100 TB use the digest (not the text) as the
                shuffle key so shuffle rows are ~50 bytes, not documents.
-- minhash+LSH  shingle → minhash signature (narrow map + partial min-agg)
+- minhash+LSH  shingle → minhash signature (map-only Arrow kernel)
                → band buckets → bucket self-join (shuffle bounded by bucket
                sizes) → similarity estimate from signatures. No O(n²) pair
                enumeration; the classic MMDS construction.
-- simhash      64-bit sign-aggregated word-hash; near-dups = small Hamming
-               distance. Computed with explode + groupBy bit-sums (narrow +
-               one partial agg); banding on 16-bit chunks for candidates.
+- simhash      32-bit sign-aggregated word-hash signature (map-only Arrow
+               kernel); near-dups = small Hamming distance.
 - n-gram jaccard  exact verification on candidate pairs (or small corpora):
                explode distinct words, equi-join, count ratio.
 
-Everything uses the portable md5-based hash (functions/hashing.py) so the
-DuckDB oracles replay the exact same numbers.
+The two signature kernels share one body per operator: a batch is
+flattened to one token list, hashed by one call to the ``hash_impl``
+family ('fnv', 'fast' or 'md5' — md5 is the portable hash of
+functions/hashing.py that the DuckDB oracles replay) and reduced per
+document with one ``reduceat``.
 """
 
 from __future__ import annotations
@@ -138,7 +140,55 @@ def _hash_tokens_fnv(tokens: list) -> "np.ndarray":  # noqa: F821
     return (h & np.uint64((1 << 60) - 1)).astype(np.int64)
 
 
-_FAST_HASHES = {"fast": _hash_tokens_fast, "fnv": _hash_tokens_fnv}
+def _hash_tokens_md5(tokens: list) -> "np.ndarray":  # noqa: F821
+    """The portable 60-bit md5 hash (functions/hashing.md5_long_py) that
+    the DuckDB oracles replay — one hashlib call per token, so the slowest
+    family; the oracle-gated queries pin it."""
+    import numpy as np
+
+    from ..functions.hashing import md5_long_py
+
+    return np.fromiter((md5_long_py(t) for t in tokens), dtype=np.int64, count=len(tokens))
+
+
+_TOKEN_HASHES = {"fast": _hash_tokens_fast, "fnv": _hash_tokens_fnv, "md5": _hash_tokens_md5}
+
+
+def _token_hash(hash_impl: str):
+    """The batch token-hash function for ``hash_impl``; raises on any other
+    name, so a typo cannot silently pick a family."""
+    if hash_impl not in _TOKEN_HASHES:
+        raise ValueError(
+            f"hash_impl must be one of {sorted(_TOKEN_HASHES)}, got {hash_impl!r}"
+        )
+    return _TOKEN_HASHES[hash_impl]
+
+
+def _flat_tokens(ids, texts, tokens_of) -> tuple:
+    """One Arrow batch flattened for the signature kernels: every kept
+    doc's tokens in one list, the offset where each kept doc starts, and
+    the kept doc ids. ``tokens_of`` maps a normalized text (norm_text_col's
+    rule) to its token list; a doc with no tokens is skipped. One hash call
+    and one ``reduceat`` then cover the whole batch."""
+    import numpy as np
+
+    norm = (
+        texts.astype(str).str.lower()
+        .str.replace("[^a-z0-9]+", " ", regex=True)
+        .str.replace(" +", " ", regex=True)
+        .str.strip()
+    )
+    flat: list = []
+    bounds: list[int] = []
+    kept: list[int] = []
+    for doc_id, s in zip(ids, norm):
+        toks = tokens_of(s)
+        if not toks:
+            continue
+        bounds.append(len(flat))
+        flat.extend(toks)
+        kept.append(int(doc_id))
+    return flat, np.array(bounds, dtype=np.int64), np.array(kept, dtype=np.int64)
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -167,59 +217,33 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     import numpy as np
     import pandas as pd
 
-    from ..functions.hashing import MERSENNE_P, MINHASH_AB, md5_long_py
+    from ..functions.hashing import MERSENNE_P, MINHASH_AB
 
+    hash_tokens = _token_hash(hash_impl)
     cols = ["doc_id"] + [f"mh_{i}" for i in range(NUM_PERMS)]
     schema = ", ".join(f"{c} long" for c in cols)
     A = np.array([a for a, _ in MINHASH_AB], dtype=np.int64)[:, None]
     B = np.array([b for _, b in MINHASH_AB], dtype=np.int64)[:, None]
 
+    def shingles(s: str) -> list:
+        if s == "":
+            return []
+        w = s.split(" ")
+        return [" ".join(w[i : i + k]) for i in range(len(w) - k + 1)]
+
     def kernel(batches):
         for pdf in batches:
-            norm = (
-                pdf[text_col].astype(str).str.lower()
-                .str.replace("[^a-z0-9]+", " ", regex=True)
-                .str.replace(" +", " ", regex=True)
-                .str.strip()
-            )
-            if hash_impl in _FAST_HASHES:
-                # flat shingle list + doc boundaries → ONE vectorized hash
-                # call and one reduceat per permutation for the whole batch
-                flat: list = []
-                bounds: list[int] = []
-                ids: list[int] = []
-                for doc_id, s in zip(pdf[id_col], norm):
-                    w = s.split(" ")
-                    n = len(w) - k + 1
-                    if n <= 0 or s == "":
-                        continue
-                    bounds.append(len(flat))
-                    flat.extend(" ".join(w[i : i + k]) for i in range(n))
-                    ids.append(int(doc_id))
-                if not ids:
-                    yield pd.DataFrame(columns=cols).astype("int64")
-                    continue
-                hs = _FAST_HASHES[hash_impl](flat)
-                perms = (A * (hs[None, :] % MERSENNE_P) + B) % MERSENNE_P  # (16, n)
-                mins = np.minimum.reduceat(perms, np.array(bounds), axis=1)  # (16, docs)
-                out = pd.DataFrame({"doc_id": np.array(ids, dtype=np.int64)})
-                for i in range(NUM_PERMS):
-                    out[f"mh_{i}"] = mins[i]
-                yield out.astype("int64")
+            flat, bounds, ids = _flat_tokens(pdf[id_col], pdf[text_col], shingles)
+            if not len(ids):
+                yield pd.DataFrame(columns=cols).astype("int64")
                 continue
-            rows = []
-            for doc_id, s in zip(pdf[id_col], norm):
-                w = s.split(" ")
-                n = len(w) - k + 1
-                if n <= 0 or s == "":
-                    continue
-                hs = np.fromiter(
-                    (md5_long_py(" ".join(w[i : i + k])) for i in range(n)),
-                    dtype=np.int64, count=n,
-                )
-                sig = ((A * (hs[None, :] % MERSENNE_P) + B) % MERSENNE_P).min(axis=1)
-                rows.append((int(doc_id), *map(int, sig)))
-            yield pd.DataFrame(rows, columns=cols).astype("int64")
+            hs = hash_tokens(flat)
+            perms = (A * (hs[None, :] % MERSENNE_P) + B) % MERSENNE_P  # (16, n)
+            mins = np.minimum.reduceat(perms, bounds, axis=1)  # (16, docs)
+            out = pd.DataFrame({"doc_id": ids})
+            for i in range(NUM_PERMS):
+                out[f"mh_{i}"] = mins[i]
+            yield out.astype("int64")
 
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(kernel, schema=schema)
 
@@ -382,92 +406,27 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     import numpy as np
     import pandas as pd
 
-    from ..functions.hashing import md5_long_py
-
+    hash_tokens = _token_hash(hash_impl)
     bits = np.arange(SIMHASH_BITS, dtype=np.int64)
+
+    def distinct_words(s: str) -> list:
+        return sorted(set(w for w in s.split(" ") if w))
 
     def kernel(batches):
         for pdf in batches:
-            norm = (
-                pdf[text_col].astype(str).str.lower()
-                .str.replace("[^a-z0-9]+", " ", regex=True)
-                .str.replace(" +", " ", regex=True)
-                .str.strip()
-            )
-            if hash_impl in _FAST_HASHES:
-                flat: list = []
-                bounds: list[int] = []
-                ids: list[int] = []
-                for doc_id, s in zip(pdf[id_col], norm):
-                    words = sorted(set(w for w in s.split(" ") if w))
-                    if not words:
-                        continue
-                    bounds.append(len(flat))
-                    flat.extend(words)
-                    ids.append(int(doc_id))
-                if not ids:
-                    yield pd.DataFrame(columns=["doc_id", "simhash"]).astype("int64")
-                    continue
-                hs = _FAST_HASHES[hash_impl](flat)
-                signs = np.where(((hs[:, None] >> bits[None, :]) & 1) == 1, 1, -1)
-                sums = np.add.reduceat(signs, np.array(bounds), axis=0)  # (docs, 32)
-                sigs = ((sums > 0).astype(np.int64) << bits).sum(axis=1)
-                yield pd.DataFrame(
-                    {"doc_id": np.array(ids, dtype=np.int64), "simhash": sigs}
-                ).astype("int64")
+            flat, bounds, ids = _flat_tokens(pdf[id_col], pdf[text_col], distinct_words)
+            if not len(ids):
+                yield pd.DataFrame(columns=["doc_id", "simhash"]).astype("int64")
                 continue
-            rows = []
-            for doc_id, s in zip(pdf[id_col], norm):
-                words = sorted(set(w for w in s.split(" ") if w))
-                if not words:
-                    continue
-                hs = np.fromiter((md5_long_py(w) for w in words), dtype=np.int64,
-                                 count=len(words))
-                bit_vals = (hs[:, None] >> bits[None, :]) & 1  # (words, 32)
-                sums = np.where(bit_vals == 1, 1, -1).sum(axis=0)
-                sig = int(((sums > 0).astype(np.int64) << bits).sum())
-                rows.append((int(doc_id), sig))
-            yield pd.DataFrame(rows, columns=["doc_id", "simhash"]).astype("int64")
+            hs = hash_tokens(flat)
+            signs = np.where(((hs[:, None] >> bits[None, :]) & 1) == 1, 1, -1)
+            sums = np.add.reduceat(signs, bounds, axis=0)  # (docs, 32)
+            sigs = ((sums > 0).astype(np.int64) << bits).sum(axis=1)
+            yield pd.DataFrame({"doc_id": ids, "simhash": sigs}).astype("int64")
 
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
         kernel, schema="doc_id long, simhash long"
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                  max_hamming: int = 3, hash_impl: str = "fnv") -> DataFrame:
-    """Near-dup pairs by simhash banding: split the 32-bit sig into 4 bytes;
-    pairs sharing ≥1 byte-band are candidates (pigeonhole covers ≤3 flips),
-    verified by exact Hamming distance."""
-    sig = tracked_persist(simhash(df, id_col, text_col, hash_impl))  # two join legs below
-    bands = sig.select(
-        "doc_id", "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band_idx"),
-                         F.shiftright(F.col("simhash"), 8 * b).bitwiseAND(F.lit(255)).alias("band_key"))
-                for b in range(4)
-            ])
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_idx", "band.band_key")
-    l = bands.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"),
-                     "band_idx", "band_key")
-    r = bands.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"),
-                     "band_idx", "band_key")
-    cand = (
-        l.join(r, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    return cand.select(
-        "doc_a", "doc_b",
-        hamming64(F.col("sig_a"), F.col("sig_b")).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------

@@ -647,40 +647,6 @@ def ivf_assignments(
     )
 
 
-def cached_ivf_centroids(
-    emb: DataFrame,
-    store_path: str,
-    snapshot_key: str = "default",
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iters: int = IVF_ITERS,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Persisted coarse-quantizer centroids, fitted AT MOST ONCE per
-    (corpus snapshot, geometry) — the same discipline as the pipeline's
-    max-conv stat (plans/lineage.py cached_max_conv_rows): the first call
-    runs the seeded Lloyd fit and writes the k×dim centroid table under
-    ``store_path``; every later ANN query over the same snapshot reads
-    k×dim longs instead of re-scanning the corpus. Feed the result to
-    ``cosine_topk_ivf(..., centroids=…)`` / ``ivf_assignments``. At
-    cluster scale the store is an Iceberg table; here parquet."""
-    spark = emb.sparkSession
-    sub = (
-        f"{store_path.rstrip('/')}/snapshot={snapshot_key}"
-        f"/k{n_centroids}_it{n_iters}"
-    )
-    try:
-        cached = spark.read.format(fmt).load(sub)
-        cached.limit(1).collect()  # existence probe (empty dir → raise)
-        return cached
-    except Exception:
-        pass
-    cents = ivf_centroids_df(emb, n_centroids, id_col, vec_col, n_iters)
-    cents.write.format(fmt).mode("overwrite").save(sub)
-    return spark.read.format(fmt).load(sub)
-
-
 def cosine_topk_ivf(
     emb: DataFrame,
     query_ids: list[int],
@@ -690,21 +656,15 @@ def cosine_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_iters: int = IVF_ITERS,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-pruned ANN: score only vectors whose centroid is among the
     query's ``nprobe`` closest centroids. Exact re-rank on the candidate
     set; recall vs brute force asserted in tests (recall@k curve over
     nprobe ∈ {1,2,4} in test_ivf_recall_curve_over_nprobe). The k-means is
     fitted ONCE and threaded through both the assignment and the probe
-    selection (round-3 verdict item 4); pass ``centroids`` (e.g. from
-    cached_ivf_centroids) to skip the fit entirely."""
+    selection (round-3 verdict item 4)."""
     base = emb.select(F.col(id_col).alias("vid"), quantize_col(F.col(vec_col)).alias("q"))
-    cents_df = (
-        centroids
-        if centroids is not None
-        else ivf_centroids_df(emb, n_centroids, id_col, vec_col, n_iters)
-    )
+    cents_df = ivf_centroids_df(emb, n_centroids, id_col, vec_col, n_iters)
     assign = ivf_assignments(
         emb, n_centroids, id_col, vec_col, n_iters, centroids=cents_df
     )
@@ -743,7 +703,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_iters: int = IVF_ITERS,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster the embedding space with the
     IVF coarse quantizer, then drop every vector that has a MORE SENIOR
@@ -755,9 +714,8 @@ def semantic_dedup(
     global near-dups pair-by-pair; SemDeDup prunes dense semantic regions
     wholesale.
 
-    Scale shape: one seeded integer k-means fit (pass ``centroids`` to
-    reuse a cached_ivf_centroids table), assignment is a broadcast join +
-    per-vid max (no corpus shuffle beyond the groupBy), and the pair step
+    Scale shape: one seeded integer k-means fit, assignment is a broadcast
+    join + per-vid max (no corpus shuffle beyond the groupBy), and the pair step
     self-equi-joins ON centroid_id only — both legs derive from the
     assignment with per-leg renames (the .alias() self-join trap), so the
     shuffle is keyed and bounded by cluster sizes, never all-pairs.
@@ -771,9 +729,9 @@ def semantic_dedup(
     base = emb.select(
         F.col(id_col).alias("vid"), quantize_col(F.col(vec_col)).alias("q")
     )
-    assigned = ivf_assignments(
-        emb, n_centroids, id_col, vec_col, n_iters, centroids=centroids
-    ).select(F.col("vec_id").alias("vid"), "centroid_id")
+    assigned = ivf_assignments(emb, n_centroids, id_col, vec_col, n_iters).select(
+        F.col("vec_id").alias("vid"), "centroid_id"
+    )
     # persisted: the assignment subtree (centroid broadcast + per-vid
     # top-1) feeds BOTH pair legs and the output join — without this the
     # plan re-scans the corpus three times (caught in the r7 plan audit)

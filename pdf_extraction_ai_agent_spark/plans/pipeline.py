@@ -38,26 +38,13 @@ from ..functions.fields import with_parsed_fields
 DEFAULT_SALT_BUCKETS = 8
 
 
-def auto_salt_buckets(
-    transcripts: DataFrame, target_rows_per_task: int = 50_000, cap: int = 512
-) -> int:
-    """ROADMAP 3 — derive the salt fan-out from a runtime stat instead of a
-    static 8: one cheap pre-pass (count_min-style groupBy count on conv_id
-    only — column-pruned to one string column) takes the LARGEST
-    conversation and salts it down to ~target_rows_per_task rows per task.
-    Mega-conversations get more salt; uniform corpora get salt 1 (no
-    artificial fan-out). The pre-pass is one partial-agg job over a single
-    column — at 100 TB that's the cheapest full scan there is, and it runs
-    once per batch, not per consumer."""
-    return _salt_for_max_rows(_max_conv_rows(transcripts), target_rows_per_task, cap)
-
-
 def _salt_for_max_rows(
     mx: int, target_rows_per_task: int = 50_000, cap: int = 512
 ) -> int:
     """The one formula mapping a max-conversation row count to a salt
-    fan-out — shared by auto_salt_buckets and extract_pipeline's 'auto'
-    branch so the two paths cannot drift."""
+    fan-out: the largest conversation is salted down to about
+    ``target_rows_per_task`` rows per task, so mega-conversations get more
+    salt and uniform corpora get salt 1 (no artificial fan-out)."""
     return max(1, min(cap, -(-mx // target_rows_per_task)))
 
 
@@ -178,15 +165,15 @@ def extract_pipeline(
     salt_buckets: int | str = DEFAULT_SALT_BUCKETS,
     observation=None,
     max_conv_rows: int | None = None,
-    kdf_seed: dict | bool | None = None,
+    kdf_seed: dict | None = None,
     with_spans: bool = True,
     ocr: str | None = None,
 ) -> DataFrame:
     """Transcripts → per-turn extraction rows.
 
     ``salt_buckets='auto'`` runs the _max_conv_rows pre-pass once and
-    derives BOTH tunables from it: the salt fan-out (auto_salt_buckets
-    formula) AND the ordering strategy — when the largest conversation
+    derives BOTH tunables from it: the salt fan-out (_salt_for_max_rows)
+    AND the ordering strategy — when the largest conversation
     fits a single ordering bucket, the two-phase diamond buys nothing, so
     the plain conv-wide window (no counts re-scan, no offsets join) is
     used instead (ROADMAP round-5 item 2). Static configurations keep the
@@ -201,12 +188,10 @@ def extract_pipeline(
     no eager pre-pass, no second scan of the text column; AES-256 misses
     derive Algorithm 2.B in-worker on first touch and memoize per worker
     (pdftext lru_cache), bounding the cost at (distinct encrypt dicts ×
-    workers) instead of per file. True opts into the eager
-    precompute_kdf_seed pre-pass (worth it only when the corpus is known
-    to carry V5/R6 PDFs AND the caller runs ONE big batch — the extra
-    full-text scan amortizes); a dict reuses a seed the caller derived
-    once for the whole input (the resumable job does this —
-    jobs/run_extraction.py, the right shape at 100 TB).
+    workers) instead of per file. A dict reuses a seed the caller derived
+    once for the whole input with precompute_kdf_seed (the resumable job
+    does this — jobs/run_extraction.py, the right shape at 100 TB); an
+    empty seed may be passed as False.
 
     ``ocr`` (None | 'auto' | 'fixture' | 'real' | 'stub') executes the OCR
     fallback on ``needs_ocr`` rows inside the pipeline (map-only,
@@ -235,8 +220,6 @@ def extract_pipeline(
         salt_buckets = _salt_for_max_rows(mx)
         if mx <= DEFAULT_TURN_BUCKET_WIDTH:
             ordering_bucket_width = None  # no conv needs the fan-out
-    if kdf_seed is True:
-        kdf_seed = precompute_kdf_seed(transcripts)
     df = transcripts.select("conv_id", "turn_idx", "ts", "text", "tool")
     df = salted_repartition(df, num_partitions, salt_buckets)
     df = with_extraction(

@@ -28,6 +28,26 @@ from pyspark.sql import SparkSession
 # wall time (both 66k and 74k turns/sec flagship runs measured here).
 ARROW_MAX_RECORDS_PER_BATCH = 2048
 
+# The engine's settings: what its plans are built and measured under.
+# get_spark applies them, and so do both spark-submit jobs
+# (jobs/run_extraction.py, jobs/run_curation.py), so a cluster run executes
+# the configuration the tests and perfbench see. Deployment settings
+# (master, shuffle partitions, driver memory, the UI) stay in get_spark.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS_PER_BATCH),
+    # Don't let tiny parquet files create thousands of splits locally.
+    "spark.sql.files.maxPartitionBytes": "128m",
+    # zstd beats lz4 on text-heavy shuffle blocks (payload strings +
+    # span structs) — measured ~12% on the extraction job's shuffles.
+    "spark.io.compression.codec": "zstd",
+    # Timestamps in fixtures are naive; pin session TZ for determinism.
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(
     app_name: str = "pdf_extraction_ai_agent_spark",
@@ -55,19 +75,8 @@ def get_spark(
             shuffle_partitions = 32
 
     conf = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
+        **ENGINE_CONF,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS_PER_BATCH),
-        # Don't let tiny parquet files create thousands of splits locally.
-        "spark.sql.files.maxPartitionBytes": "128m",
-        # zstd beats lz4 on text-heavy shuffle blocks (payload strings +
-        # span structs) — measured ~12% on the extraction job's shuffles.
-        "spark.io.compression.codec": "zstd",
-        # Timestamps in fixtures are naive; pin session TZ for determinism.
-        "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
     }

@@ -53,9 +53,63 @@ def test_simhash_hamming(docs):
     assert ham(1, 4) <= 8
     assert ham(1, 5) > 8
 
-    pairs = {(r.doc_a, r.doc_b)
-             for r in dedup.simhash_pairs(docs, max_hamming=8, hash_impl="md5").collect()}
-    assert (1, 2) in pairs and (1, 4) in pairs
+
+def test_md5_signatures_equal_scalar_recomputation(spark, docs):
+    """The batched md5 kernels equal a per-document scalar recomputation
+    (hashlib md5 per token, Python-int permutations and bit sums),
+    including docs that produce no row: empty text, punctuation only and
+    fewer than k=3 words. One input partition holds only such docs, so the
+    kernels also see a batch in which no document qualifies."""
+    import re
+
+    from pdf_extraction_ai_agent_spark.functions.hashing import (
+        MERSENNE_P, MINHASH_AB, md5_long_py,
+    )
+
+    def norm(t):
+        return re.sub(" +", " ", re.sub("[^a-z0-9]+", " ", t.lower())).strip()
+
+    def minhash_ref(t, k=3):
+        w = norm(t).split(" ")
+        if norm(t) == "" or len(w) < k:
+            return None
+        hs = [md5_long_py(" ".join(w[i : i + k])) for i in range(len(w) - k + 1)]
+        return tuple(min((a * (h % MERSENNE_P) + b) % MERSENNE_P for h in hs)
+                     for a, b in MINHASH_AB)
+
+    def simhash_ref(t):
+        words = sorted(set(w for w in norm(t).split(" ") if w))
+        if not words:
+            return None
+        hs = [md5_long_py(w) for w in words]
+        return sum(1 << bit for bit in range(dedup.SIMHASH_BITS)
+                   if sum(1 if (h >> bit) & 1 else -1 for h in hs) > 0)
+
+    none_qualify = spark.createDataFrame(
+        [(90, ""), (91, "!!! ???"), (92, "   ")], "doc_id long, text string"
+    ).coalesce(1)
+    short = spark.createDataFrame([(93, "two words"), (94, "one")], "doc_id long, text string")
+    corpus = docs.unionByName(short).unionByName(none_qualify)
+    texts = {r.doc_id: r.text for r in corpus.collect()}
+
+    assert dedup.minhash_signatures(none_qualify, hash_impl="md5").count() == 0
+    assert dedup.simhash(none_qualify, hash_impl="md5").count() == 0
+
+    got_mh = {r.doc_id: tuple(r)[1:]
+              for r in dedup.minhash_signatures(corpus, hash_impl="md5").collect()}
+    exp_mh = {d: minhash_ref(t) for d, t in texts.items() if minhash_ref(t) is not None}
+    assert got_mh == exp_mh and set(exp_mh) == {1, 2, 3, 4, 5, 6}
+    got_sh = {r.doc_id: r.simhash for r in dedup.simhash(corpus, hash_impl="md5").collect()}
+    exp_sh = {d: simhash_ref(t) for d, t in texts.items() if simhash_ref(t) is not None}
+    assert got_sh == exp_sh and set(exp_sh) == {1, 2, 3, 4, 5, 6, 93, 94}
+
+
+def test_unknown_hash_impl_raises(docs):
+    """An unknown hash family fails when the plan is built instead of
+    silently taking one of the three."""
+    for op in (dedup.minhash_signatures, dedup.simhash):
+        with pytest.raises(ValueError, match="'fast', 'fnv', 'md5'"):
+            op(docs, hash_impl="sha1")
 
 
 def test_fast_hash_kernels_same_semantics(docs, spark, sf_dir):

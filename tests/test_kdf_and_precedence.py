@@ -20,7 +20,7 @@ from pdf_extraction_ai_agent_spark.oracle import reference_extractor as oracle
 
 def test_pipeline_construction_is_lazy(spark):
     """extract_pipeline() with defaults is side-effect-free: building the
-    plan runs NO Spark action (the old kdf_seed=True default paid an eager
+    plan runs NO Spark action (an eager KDF pre-pass by default paid a
     full scan of the text column on every call — r6 verdict item 2). A
     poison UDF in the text column fires on any eager evaluation."""
     from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline

@@ -197,3 +197,53 @@ def test_unreadable_lineage_raises_before_any_bucket(spark, transcripts_df, tmp_
     assert LineageStore(spark, os.path.join(base, "absent")).get_stat("bad", "x") is None
     os.makedirs(os.path.join(base, "crashed_stats", "_temporary"))
     assert LineageStore(spark, os.path.join(base, "crashed")).get_stat("bad", "x") is None
+
+
+def test_job_rerun_runs_no_prepass(spark, transcripts_df, tmp_path_factory, monkeypatch, capsys):
+    """jobs/run_extraction.py's main, run in-process twice: the first run
+    derives the KDF seed once; the rerun finds every bucket committed and
+    runs no pre-pass (neither the KDF seed nor the max-conversation stat)."""
+    import importlib.util
+    import json
+    import sys
+
+    from pdf_extraction_ai_agent_spark.plans import lineage, pipeline
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "run_extraction", os.path.join(root, "jobs", "run_extraction.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    calls = {"kdf": 0, "max_conv": 0}
+    real_kdf, real_mx = pipeline.precompute_kdf_seed, lineage.cached_max_conv_rows
+
+    def counting_kdf(*a, **kw):
+        calls["kdf"] += 1
+        return real_kdf(*a, **kw)
+
+    def counting_mx(*a, **kw):
+        calls["max_conv"] += 1
+        return real_mx(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "precompute_kdf_seed", counting_kdf)
+    monkeypatch.setattr(lineage, "cached_max_conv_rows", counting_mx)
+
+    base = str(tmp_path_factory.mktemp("job_rerun"))
+    inp = os.path.join(base, "in")
+    transcripts_df.write.parquet(inp)
+    argv = ["run_extraction.py", "--input", inp, "--output", os.path.join(base, "out"),
+            "--lineage", os.path.join(base, "lineage"), "--buckets", "4",
+            "--bucket-group-size", "2", "--run-group", "r"]
+    monkeypatch.setattr(sys, "argv", argv)
+
+    job.main()
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert calls == {"kdf": 1, "max_conv": 1}
+    assert sum(g["rows"] for g in first["groups"]) == transcripts_df.count()
+
+    job.main()
+    rerun = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert calls == {"kdf": 1, "max_conv": 1}
+    assert rerun["skipped_buckets"] == 4 and rerun["groups"] == []

@@ -131,54 +131,6 @@ def test_streaming_lsh_candidates_match_batch(spark, tmp_path_factory):
     assert any(a == 1 and b in (3, 4) for a, b in got)
 
 
-def test_contamination_map_only_matches_declarative_and_streams(spark, sf_dir, tmp_path_factory):
-    """The zero-shuffle contamination kernel must equal the declarative
-    explode+groupBy form value-for-value, and — being a stateless map —
-    run unchanged on a streaming DataFrame with the per-microbatch union
-    equal to the batch result."""
-    from pdf_extraction_ai_agent_spark.operators import curation
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    ev = docs.filter(F.col("doc_id") % 11 == 0)
-    decl = {
-        r.doc_id: (r.n_grams, r.n_contaminated, r.contamination)
-        for r in curation.contamination(docs, ev).collect()
-    }
-    mapo = {
-        r.doc_id: (r.n_grams, r.n_contaminated, r.contamination)
-        for r in curation.contamination_map_only(docs, ev).collect()
-    }
-    assert mapo == decl
-    # no shuffle in the map-only plan (probe over the raw scan — the test
-    # corpus's .limit() would otherwise inject its own GlobalLimit exchange)
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = curation.contamination_map_only(raw, ev)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-    base = tmp_path_factory.mktemp("contam_stream")
-    src = str(base / "src")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(src)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    got: dict = {}
-
-    def sink(batch_df, _bid):
-        got.update(
-            {r.doc_id: (r.n_grams, r.n_contaminated, r.contamination)
-             for r in batch_df.collect()}
-        )
-
-    q = (
-        curation.contamination_map_only(stream, ev)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(base / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert got == decl
-
-
 def test_streaming_lsh_capped_bucket_poisons(spark, tmp_path_factory):
     """max_bucket mirrors batch semantics going forward: four identical docs
     share every band; with cap=2 the bucket poisons when doc 3 arrives, so

@@ -224,33 +224,6 @@ def test_ann_exact_topk_plan_is_two_stage(spark, sf_dir):
     assert "Exchange hashpartitioning(vec_id" in q36, q36
 
 
-def test_salted_rollup_matches_unsalted(spark, sf_dir):
-    """q43's fact join with explicit salting (skew known up front — e.g. a
-    mega-customer's orders) must produce the identical rollup, and the plan
-    must show the dim replicated via the salt explode with the salt in the
-    join keys (round-2 verdict item 9)."""
-    from pdf_extraction_ai_agent_spark.plans.skew import salted_join
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_custkey"
-    )
-    plain = li.join(o, ["l_orderkey"]).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("s"),
-    )
-    salted = salted_join(li, o, ["l_orderkey"], n_salts=4).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("s"),
-    )
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
-    plan = _plan(salted)
-    assert "__salt" in plan and "Generate explode" in plan, plan
-
-
 def test_aqe_skew_join_split_engages(spark, tmp_path_factory):
     """AQE's skew-join split is the runtime answer for skew discovered at
     execution: with one hot key dominating the fact side and split
@@ -352,16 +325,21 @@ def test_bucketed_sink_kills_downstream_window_exchange(spark, transcripts_df):
 
 
 def test_auto_salt_buckets(spark):
-    from pdf_extraction_ai_agent_spark.plans.pipeline import auto_salt_buckets
+    """salt_buckets='auto' salts the largest conversation down to about
+    target_rows_per_task rows per task; a uniform corpus gets salt 1."""
+    from pdf_extraction_ai_agent_spark.plans.pipeline import (
+        _max_conv_rows,
+        _salt_for_max_rows,
+    )
 
     uniform = spark.range(100).select(
         (F.col("id") % 50).cast("string").alias("conv_id")
     )
-    assert auto_salt_buckets(uniform, target_rows_per_task=1000) == 1
+    assert _salt_for_max_rows(_max_conv_rows(uniform), 1000) == 1
     skewed = spark.range(10_000).select(
         F.when(F.col("id") < 9_000, "mega").otherwise(F.col("id").cast("string")).alias("conv_id")
     )
-    assert auto_salt_buckets(skewed, target_rows_per_task=1000) == 9
+    assert _salt_for_max_rows(_max_conv_rows(skewed), 1000) == 9
 
 
 def test_lsh_band_solver():
@@ -445,49 +423,6 @@ def test_lattice_normalize_no_recompute(spark, sf_dir):
     s45 = _plan(q45).count("Scan parquet")
     s46 = _plan(q46).count("Scan parquet")
     assert s46 <= s45, f"q46 re-executes the parse subtree: {s46} scans vs q45 {s45}"
-
-
-def test_cached_ivf_centroids_fit_once(spark, sf_dir, tmp_path_factory, monkeypatch):
-    """The coarse-quantizer fit runs AT MOST ONCE per (snapshot, geometry):
-    the first call writes the centroid table; a second call — even over a
-    poisoned corpus frame — reads it back without invoking the Lloyd fit,
-    and cosine_topk_ivf(centroids=cached) runs zero fits."""
-    from pdf_extraction_ai_agent_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    store = str(tmp_path_factory.mktemp("ivf")) + "/centroids"
-
-    calls = {"n": 0}
-    real_fit = S._ivf_fit_centroids
-
-    def counting_fit(*a, **kw):
-        calls["n"] += 1
-        return real_fit(*a, **kw)
-
-    monkeypatch.setattr(S, "_ivf_fit_centroids", counting_fit)
-    c1 = S.cached_ivf_centroids(emb, store, snapshot_key="s1")
-    got1 = {r.centroid_id: list(r.cq) for r in c1.collect()}
-    assert calls["n"] == 1
-
-    poisoned = emb.limit(3)
-    c2 = S.cached_ivf_centroids(poisoned, store, snapshot_key="s1")
-    got2 = {r.centroid_id: list(r.cq) for r in c2.collect()}
-    assert calls["n"] == 1  # cache hit — no refit
-    assert got1 == got2
-
-    # a different geometry under the same snapshot refits
-    S.cached_ivf_centroids(emb, store, snapshot_key="s1", n_centroids=8)
-    assert calls["n"] == 2
-
-    # threading the cached frame through the ANN query adds no fit, and
-    # the result matches the fit-inline query exactly
-    expect = {(r.query_id, r.neighbor_id)
-              for r in S.cosine_topk_ivf(emb, [0, 1, 2], k=5).collect()}
-    calls["n"] = 0
-    got = {(r.query_id, r.neighbor_id)
-           for r in S.cosine_topk_ivf(emb, [0, 1, 2], k=5, centroids=c1).collect()}
-    assert calls["n"] == 0
-    assert got == expect
 
 
 def _python_evals(plan: str) -> dict[str, int]:
