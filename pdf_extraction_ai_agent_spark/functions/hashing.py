@@ -39,24 +39,6 @@ def md5_long_col(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def solve_lsh_bands(threshold: float, n_perms: int = NUM_PERMS) -> tuple[int, int]:
-    """(n_bands, band_size) whose S-curve midpoint (1/b)^(1/r) sits closest
-    to the target jaccard threshold, over the divisors of n_perms — the
-    calibration the fixed 8×2 default was eyeballed from (threshold≈0.35).
-    For a 0.8-threshold near-dup pass with 128 perms this picks ~16×8."""
-    best: tuple[float, int, int] | None = None
-    for r in range(1, n_perms + 1):
-        if n_perms % r:
-            continue
-        b = n_perms // r
-        mid = (1.0 / b) ** (1.0 / r)
-        score = abs(mid - threshold)
-        if best is None or score < best[0]:
-            best = (score, b, r)
-    assert best is not None
-    return best[1], best[2]
-
-
 def md5_long_py(s: str) -> int:
     import hashlib
 

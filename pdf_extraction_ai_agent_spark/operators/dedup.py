@@ -168,12 +168,13 @@ def _flat_tokens(ids, texts, tokens_of) -> tuple:
     """One Arrow batch flattened for the signature kernels: every kept
     doc's tokens in one list, the offset where each kept doc starts, and
     the kept doc ids. ``tokens_of`` maps a normalized text (norm_text_col's
-    rule) to its token list; a doc with no tokens is skipped. One hash call
-    and one ``reduceat`` then cover the whole batch."""
+    rule) to its token list; a doc with no tokens, a null text among them,
+    is skipped. One hash call and one ``reduceat`` then cover the whole
+    batch."""
     import numpy as np
 
     norm = (
-        texts.astype(str).str.lower()
+        texts.fillna("").astype(str).str.lower()
         .str.replace("[^a-z0-9]+", " ", regex=True)
         .str.replace(" +", " ", regex=True)
         .str.strip()

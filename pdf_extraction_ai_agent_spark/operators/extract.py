@@ -300,8 +300,7 @@ def extract_real_pdf_text(payload) -> tuple[str, bool]:
 
     The PDF libraries are not in this sandbox image — when neither imports,
     this raises RuntimeError, which the batch kernel's per-row error
-    channel converts into an error row (same decode_real/decode_stub
-    pattern as operators/multimodal.py). On a cluster image with the libs
+    channel converts into an error row. On a cluster image with the libs
     installed the dispatch runs for real; unit-tested via a fake module.
     """
     data = payload if isinstance(payload, (bytes, bytearray)) else str(payload).encode(

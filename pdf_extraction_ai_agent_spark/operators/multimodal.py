@@ -1,10 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed by Arrow-batched ``mapInPandas``.
 
-The container has no image/audio codecs, so the DECODE step is stubbed
-behind ``decode_stub`` (deterministic fake) / ``decode_real`` (raises
-NotImplementedError and documents the real integration point). Everything
-Spark-side — schema, partition sizing, UDF signatures, batch shapes — is
+The container has no image/audio codecs, so the DECODE step is the
+deterministic fake ``decode_stub``; a real codec (PIL / pyav) plugs in at
+its call site. Everything Spark-side — schema, partition sizing, UDF signatures, batch shapes — is
 real and tested.
 
 Scale notes: binary payloads dominate partition size, so the pre-UDF
@@ -28,14 +27,6 @@ MEDIA_META_SCHEMA = (
     "media_id long, kind string, payload_bytes long, digest string, "
     "fake_width int, fake_height int, frame_count int"
 )
-
-
-def decode_real(payload: bytes, kind: str):
-    """Integration point for real codecs (PIL / torchaudio / pyav)."""
-    raise NotImplementedError(
-        "media codecs are not available in this environment; "
-        "plug PIL/pyav here on a real cluster"
-    )
 
 
 def decode_stub(payload: bytes, kind: str) -> dict:
@@ -185,10 +176,3 @@ def with_rendered_pages(df: DataFrame, payload_col: str = "payload",
     return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
         batches, schema=f"{id_col} long, page_no int, png binary, error string"
     )
-
-
-def frame_sample_plan(meta: DataFrame, every_n: int = 30) -> DataFrame:
-    """Deterministic frame-sampling plan: one row per sampled frame index —
-    a pure lateral explode (no Python), ready to feed a decode UDF."""
-    idx = F.sequence(F.lit(0), F.greatest(F.col("frame_count") - 1, F.lit(0)), F.lit(every_n))
-    return meta.select("media_id", "kind", F.explode(idx).alias("frame_idx"))

@@ -1,10 +1,9 @@
-"""F6/F7/F8 registry search + J3 LOB→recipient broadcast join.
+"""F6/F8 registry search + J3 LOB→recipient broadcast join.
 
 Reference: mock_storage.py:124-191 (search_files: fuzzy account, LOB alias
-resolution, partial policy, normalized-date equality), app.py:1202-1211
-(date-range with unparsable passthrough), streamlit_agent_reference_app.py:
-230-274 (criteria AND-filter), email_agent.py:33-39 + lob_email_mapping.csv
-(LOB → recipients dim).
+resolution, partial policy, normalized-date equality),
+streamlit_agent_reference_app.py:230-274 (criteria AND-filter),
+email_agent.py:33-39 + lob_email_mapping.csv (LOB → recipients dim).
 
 Criteria are driver-side scalars (they come from one parsed user query), so
 search compiles to plain `filter`s over the registry table — Catalyst pushes
@@ -46,15 +45,6 @@ def search_files(registry: DataFrame, account: str | None = None, lob: str | Non
             == date_to_folder_format(F.lit(date))
         )
     return out
-
-
-def filter_date_range(df: DataFrame, date_col: str, start: str, end: str) -> DataFrame:
-    """F7 — keep rows in [start, end]; unparsable/NULL dates pass through
-    (app.py:1202-1211)."""
-    from ..functions.dates import normalize_date_col
-
-    d = normalize_date_col(F.col(date_col))
-    return df.filter(d.between(start, end) | d.isNull())
 
 
 def with_recipients(df: DataFrame, lob_emails: DataFrame, lob_col: str = "lob") -> DataFrame:

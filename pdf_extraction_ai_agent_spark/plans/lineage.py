@@ -229,8 +229,10 @@ def run_with_lineage(
             .save(out_path)
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
-        # row counts come from the committed output (parquet footers /
-        # Iceberg manifests — metadata-only, no recompute of the UDF stage)
+        # row counts come from the committed output, not a recompute of
+        # the UDF stage: one aggregate job reads the group's part_id and
+        # error columns back and shuffles them by part_id (0.55-0.67 CPU-s
+        # of a 4.7-5.6 CPU-s warm job_heavyconv pass at local[2], 4 vCPUs)
         committed = (
             spark.read.format(fmt).load(out_path).filter(F.col("part_id").isin(group))
         )

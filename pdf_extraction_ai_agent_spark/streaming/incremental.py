@@ -1,29 +1,18 @@
-"""Incremental / streaming ingestion of transcript or event tables.
+"""Windowed event aggregation, checked by q23's DuckDB oracle.
 
-The reference is batch-only (SURVEY §2.11); the engine supports two
-incremental modes:
-
-1. **Available-now structured streaming** over a file/Iceberg source:
-   ``readStream → watermark → windowed agg / extraction → writeStream``
-   with ``Trigger.AvailableNow`` — processes the backlog exactly once and
-   stops; checkpointing gives exactly-once sinks on reruns.
-2. **Batch resume** via the lineage anti-join (plans/lineage.py) when a
-   streaming runtime is unavailable.
-
-Windowed-aggregation semantics (tumbling window + watermark for late data)
-are shared with the batch twin ``windowed_event_counts`` so the oracle can
-verify them.
+The reference is batch-only (SURVEY §2.11). The jobs run incrementally
+through the lineage anti-join in plans/lineage.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Batch twin of the streaming agg: tumbling-window counts + value sums
-    per event_type (decimal-exact sums)."""
+    """Tumbling-window counts + value sums per event_type (decimal-exact
+    sums)."""
     return (
         events.groupBy(
             F.window("ts", window).alias("w"), F.col("event_type")
@@ -39,40 +28,3 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour") -> DataFram
             "total_value",
         )
     )
-
-
-def run_available_now_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    schema: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> None:
-    """Structured-streaming version: file source → watermarked tumbling agg
-    → parquet sink, Trigger.AvailableNow (drain backlog, then stop).
-
-    On a cluster the source/sink become Iceberg tables; the checkpoint dir
-    carries offsets + state so reruns are exactly-once.
-    """
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(source_dir)
-        .withWatermark("ts", watermark)
-    )
-    agg = (
-        src.groupBy(F.window("ts", window), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("window_start"), "event_type", "n_events")
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -57,9 +57,10 @@ def test_simhash_hamming(docs):
 def test_md5_signatures_equal_scalar_recomputation(spark, docs):
     """The batched md5 kernels equal a per-document scalar recomputation
     (hashlib md5 per token, Python-int permutations and bit sums),
-    including docs that produce no row: empty text, punctuation only and
-    fewer than k=3 words. One input partition holds only such docs, so the
-    kernels also see a batch in which no document qualifies."""
+    including docs that produce no row: null text, empty text,
+    punctuation only and fewer than k=3 words. One input partition holds
+    only such docs, so the kernels also see a batch in which no document
+    qualifies. A null text has no words, as in the DuckDB oracles."""
     import re
 
     from pdf_extraction_ai_agent_spark.functions.hashing import (
@@ -67,7 +68,7 @@ def test_md5_signatures_equal_scalar_recomputation(spark, docs):
     )
 
     def norm(t):
-        return re.sub(" +", " ", re.sub("[^a-z0-9]+", " ", t.lower())).strip()
+        return re.sub(" +", " ", re.sub("[^a-z0-9]+", " ", (t or "").lower())).strip()
 
     def minhash_ref(t, k=3):
         w = norm(t).split(" ")
@@ -86,7 +87,7 @@ def test_md5_signatures_equal_scalar_recomputation(spark, docs):
                    if sum(1 if (h >> bit) & 1 else -1 for h in hs) > 0)
 
     none_qualify = spark.createDataFrame(
-        [(90, ""), (91, "!!! ???"), (92, "   ")], "doc_id long, text string"
+        [(90, ""), (91, "!!! ???"), (92, "   "), (95, None)], "doc_id long, text string"
     ).coalesce(1)
     short = spark.createDataFrame([(93, "two words"), (94, "one")], "doc_id long, text string")
     corpus = docs.unionByName(short).unionByName(none_qualify)
@@ -102,6 +103,7 @@ def test_md5_signatures_equal_scalar_recomputation(spark, docs):
     got_sh = {r.doc_id: r.simhash for r in dedup.simhash(corpus, hash_impl="md5").collect()}
     exp_sh = {d: simhash_ref(t) for d, t in texts.items() if simhash_ref(t) is not None}
     assert got_sh == exp_sh and set(exp_sh) == {1, 2, 3, 4, 5, 6, 93, 94}
+    assert 95 not in got_mh and 95 not in got_sh
 
 
 def test_unknown_hash_impl_raises(docs):

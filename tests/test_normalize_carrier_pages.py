@@ -203,11 +203,3 @@ def test_registry_folder_path_and_recipients(spark, reg):
     assert got["claim_report.pdf"] == "auto-team@example.com"
     assert got["workplace_injury.pdf"] == "wc-team@example.com"
     assert got["property_damage_report.pdf"] is None
-
-
-def test_date_range_passthrough(spark):
-    df = spark.createDataFrame(
-        [(1, "02/15/1995"), (2, "01/01/2001"), (3, "junk")], "id long, d string"
-    )
-    got = {r.id for r in registry.filter_date_range(df, "d", "1994-01-01", "1996-12-31").collect()}
-    assert got == {1, 3}  # in-range + unparsable passthrough

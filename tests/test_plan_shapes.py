@@ -4,7 +4,6 @@ joins where dims are small, top-N without a global sort."""
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -303,27 +302,6 @@ def test_region_rollup_broadcasts_dims(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_bucketed_sink_kills_downstream_window_exchange(spark, transcripts_df):
-    """ROADMAP 2: the extraction output written bucketed by conv_id must
-    satisfy a per-conv window's ClusteredDistribution straight off the scan
-    — zero Exchange, i.e. the payload-sized shuffle of extracted_text is
-    gone for every downstream per-conversation consumer."""
-    from pyspark.sql import Window as W
-
-    from pdf_extraction_ai_agent_spark.plans import sinks
-
-    df = transcripts_df.select("conv_id", "turn_idx", "ts", "text")
-    sinks.write_bucketed(df, "t_bucketed_test", buckets=4)
-    try:
-        back = spark.table("t_bucketed_test")
-        w = W.partitionBy("conv_id").orderBy("turn_idx", "ts")
-        plan = _plan(back.withColumn("turn_pos", F.row_number().over(w)))
-        assert "Exchange" not in plan, plan
-        assert "Window" in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_test")
-
-
 def test_auto_salt_buckets(spark):
     """salt_buckets='auto' salts the largest conversation down to about
     target_rows_per_task rows per task; a uniform corpus gets salt 1."""
@@ -340,41 +318,6 @@ def test_auto_salt_buckets(spark):
         F.when(F.col("id") < 9_000, "mega").otherwise(F.col("id").cast("string")).alias("conv_id")
     )
     assert _salt_for_max_rows(_max_conv_rows(skewed), 1000) == 9
-
-
-def test_lsh_band_solver():
-    from pdf_extraction_ai_agent_spark.functions.hashing import (
-        LSH_BAND_SIZE, NUM_PERMS, solve_lsh_bands,
-    )
-
-    # the shipped 8×2 default is what the solver picks for its threshold
-    b, r = solve_lsh_bands(0.35)
-    assert (b, r) == (NUM_PERMS // LSH_BAND_SIZE, LSH_BAND_SIZE)
-    # high-threshold dedup wants wider bands (fewer, longer)
-    b_hi, r_hi = solve_lsh_bands(0.9, n_perms=128)
-    assert r_hi > r and (1.0 / b_hi) ** (1.0 / r_hi) == pytest.approx(0.9, abs=0.15)
-
-
-def test_sinks_roundtrip(spark, tmp_path_factory):
-    from pdf_extraction_ai_agent_spark.plans import sinks
-
-    base = str(tmp_path_factory.mktemp("sinks"))
-    df = spark.createDataFrame(
-        [("f1", "ABC-1", "Jo Doe", "2024-01-01", 1.0, None, "AUTO"),
-         ("f2", "XYZ-2", None, None, 0.4, "boom", "WC")],
-        "file_path string, claim_number string, name string, date string, confidence double, error string, lob string",
-    )
-    sinks.write_csv(df, base + "/csv")
-    got = spark.read.option("header", True).csv(base + "/csv")
-    assert got.columns == sinks.CLI_CSV_COLUMNS
-
-    sinks.write_per_lob(df, base + "/lob")
-    back = spark.read.parquet(base + "/lob")
-    assert back.count() == 2
-    assert {r.lob for r in back.select("lob").distinct().collect()} == {"AUTO", "WC"}
-    # per-LOB partition readable directly (the "per-LOB workbook")
-    auto = spark.read.parquet(base + "/lob/lob=AUTO")
-    assert auto.count() == 1
 
 
 def test_auto_ordering_strategy(spark, transcripts_df):
