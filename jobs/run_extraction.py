@@ -4,13 +4,19 @@
         jobs/run_extraction.py \\
         --input <iceberg-table-or-parquet-path> \\
         --output <table-or-path> --lineage <table-or-path> \\
-        [--format iceberg|parquet] [--buckets 4096] [--run-group r1]
+        [--format iceberg|parquet] [--buckets 4096] [--run-group r1] \\
+        [--ocr off|auto|fixture|real]
 
 Reads the transcript table, runs the extraction pipeline with per-partition
 lineage checkpointing (idempotent resume: rerunning after a failure
-processes only unfinished buckets), writes (conv_id, turn_idx, ts, turn_pos,
-extracted_text, spans, needs_ocr, payload_kind, fields…) partitioned by
-part_id.
+processes only unfinished buckets), writes (conv_id, turn_idx, ts,
+extracted_text, spans, needs_ocr, payload_kind, error, turn_pos,
+claim_number, name, date, confidence, lob, lobs) partitioned by part_id.
+
+The salt fan-out and the ordering strategy come from the largest
+conversation (extract_pipeline's ``salt_buckets='auto'``): one
+column-pruned pre-pass whose result is cached in the lineage stats table
+per run-group, so resumes skip it.
 
 Packaging: `python jobs/package.py` produces the zip for --py-files.
 """
@@ -31,25 +37,17 @@ def main():
                     help="lineage buckets = resume granularity; ~2-4× executor count")
     ap.add_argument("--bucket-group-size", type=int, default=8)
     ap.add_argument("--run-group", default="default")
-    ap.add_argument("--salt-buckets", default="auto",
-                    help="'auto' (default) derives the fan-out AND ordering "
-                         "strategy from the largest conversation — one "
-                         "column-pruned pre-pass whose result is cached in "
-                         "the lineage stats table per run-group, so resumes "
-                         "skip it; or a fixed int")
     ap.add_argument("--ocr", default="off",
                     choices=["off", "auto", "fixture", "real"],
                     help="execute the OCR fallback on needs_ocr rows inside "
-                         "the job (reference extract_text.py:18-24): 'real' "
-                         "= rasterize+tesseract (cluster image), 'fixture' = "
-                         "the dependency-free template matcher for generated "
-                         "scans, 'auto' = real-when-installed else fixture. "
-                         "Map-only and flag-guarded; failures land in the "
-                         "per-row error channel, never a job abort. Default "
-                         "off: rows keep the needs_ocr flag for a downstream "
-                         "OCR pass")
+                         "the extract kernel (reference extract_text.py:18-24): "
+                         "'real' = rasterize+tesseract (cluster image), "
+                         "'fixture' = the dependency-free template matcher "
+                         "for generated scans, 'auto' = real-when-installed "
+                         "else fixture. Failures land in the per-row error "
+                         "channel, never a job abort. Default off: rows keep "
+                         "the needs_ocr flag for a downstream OCR pass")
     args = ap.parse_args()
-    salt = args.salt_buckets if args.salt_buckets == "auto" else int(args.salt_buckets)
 
     from pyspark.sql import SparkSession
 
@@ -86,11 +84,10 @@ def main():
 
     mx = kdf_seed = None
     if bucket_left:
-        if salt == "auto":
-            mx = cached_max_conv_rows(
-                spark, transcripts, args.lineage, run_group=args.run_group,
-                fmt=args.format,
-            )
+        mx = cached_max_conv_rows(
+            spark, transcripts, args.lineage, run_group=args.run_group,
+            fmt=args.format,
+        )
         # AES-256 KDF pre-stage: derive the per-encrypt-dict Algorithm 2.B
         # hashes ONCE over the whole input and reuse the seed in every
         # bucket group (the per-group pipeline would otherwise re-run it)
@@ -100,7 +97,7 @@ def main():
         spark,
         transcripts,
         lambda df: extract_pipeline(
-            df, salt_buckets=salt, max_conv_rows=mx, kdf_seed=kdf_seed,
+            df, salt_buckets="auto", max_conv_rows=mx, kdf_seed=kdf_seed,
             ocr=None if args.ocr == "off" else args.ocr,
         ),
         out_path=args.output,

@@ -147,6 +147,29 @@ def _roundtrip_kernel(builder):
 
 
 _ROUNDTRIP_SCHEMA = "doc_id long, extracted_text string, needs_ocr boolean"
+_OCR_ROUNDTRIP_SCHEMA = _ROUNDTRIP_SCHEMA + ", ocr_error string"
+
+
+def _ocr_roundtrip_frame(doc_ids, payloads: list[str]):
+    """One batch of scan payloads (latin-1 strings) → (doc_id,
+    extracted_text, needs_ocr, ocr_error) through the extract kernel with
+    ``ocr='fixture'``: the shared body of q69/q70 and their pinned A/B
+    arm, so an OCR failure reaches the error channel in both."""
+    import pandas as pd
+
+    from .operators.extract import extract_turn_batch
+
+    text = pd.Series(payloads, dtype=object)
+    res = extract_turn_batch(
+        text, pd.Series(None, index=text.index, dtype=object),
+        with_spans=False, with_lob=False, ocr="fixture",
+    )
+    return pd.DataFrame({
+        "doc_id": [int(d) for d in doc_ids],
+        "extracted_text": res["extracted_text"],
+        "needs_ocr": res["needs_ocr"],
+        "ocr_error": res["error"],
+    })
 
 
 def q49_real_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,30 +774,15 @@ def pinned_queries() -> dict:
                 "q69_scanned_pdf_ocr_roundtrip",
                 "q70_noisy_scan_ocr_roundtrip",
             ):
-                # the scanned corpus measures extract + the fixture OCR
-                # rung (the entry query's with_ocr_fallback semantics)
-                from .operators.extract import extract_real_pdf_text
-                from .operators.ocr import ocr_payload_fixture
-
+                # the scanned corpus measures the entry query's kernel:
+                # extract + the fixture OCR rung in one call
                 def kernel(batches):
-                    import pandas as pd
-
                     for frame in batches:
-                        rows = []
-                        for doc_id, pdf_bytes in zip(
-                            frame["doc_id"], frame["pdf"]
-                        ):
-                            payload = bytes(pdf_bytes)
-                            t, ocr = extract_real_pdf_text(payload)
-                            if ocr:
-                                t = ocr_payload_fixture(payload)
-                            rows.append((int(doc_id), t, ocr))
-                        yield pd.DataFrame(
-                            rows,
-                            columns=[
-                                "doc_id", "extracted_text", "needs_ocr",
-                            ],
-                        )
+                        yield _ocr_roundtrip_frame(frame["doc_id"], [
+                            bytes(p).decode("latin-1") for p in frame["pdf"]
+                        ])
+
+                return df.mapInPandas(kernel, schema=_OCR_ROUNDTRIP_SCHEMA)
 
             elif name == "q71_render_pages_roundtrip":
                 # the render corpus measures the executed render slice:

@@ -5,14 +5,15 @@ the ORACLE GATE: per document a genuine scanned PDF is written (pages
 carry ONLY a grayscale image XObject rendered from the deterministic
 spec.OCR_FONT_5X7 bitmaps — no text layer), the extraction rung yields
 an empty page and trips the <OCR_MIN_CHARS ``needs_ocr`` flag on BOTH
-twins, and the REAL Spark OCR operator (operators/ocr.py
-``with_ocr_fallback``) recovers the text by template match — the
-in-sandbox stand-in for the reference's rasterize→pytesseract fallback
-(src/claim_extractor/extract_text.py:18-24). The DuckDB twin predicts
-the recovered text straight from the table, so the gate proves
-scan→raster→extract→OCR is the identity on semantics. Honest scope:
-the fixture OCR rung reads generated scans only; real-world scans still
-need the OCR stack on a cluster image (impl='real'/'auto').
+twins, and the extract kernel's OCR step (operators/extract.py
+``extract_turn_batch(..., ocr='fixture')``) recovers the text by
+template match — the in-sandbox stand-in for the reference's
+rasterize→pytesseract fallback (src/claim_extractor/extract_text.py:18-24).
+The DuckDB twin predicts the recovered text straight from the table, so
+the gate proves scan→raster→extract→OCR is the identity on semantics.
+Honest scope: the fixture OCR rung reads generated scans only;
+real-world scans still need the OCR stack on a cluster image
+(ocr='real'/'auto').
 
 q70 is the REALISM rung (ROADMAP r7 item 5): the same roundtrip over
 scans degraded with deterministic salt-and-pepper noise — background
@@ -30,7 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .entry_queries_ext import _docs
-from .entry_queries_ext7 import PINNED_PAYLOAD_BUILDERS
+from .entry_queries_ext7 import (
+    _OCR_ROUNDTRIP_SCHEMA,
+    PINNED_PAYLOAD_BUILDERS,
+    _ocr_roundtrip_frame,
+)
 
 EXT9_QUERIES: dict = {}
 _EXT9_ORACLES: dict = {}
@@ -66,41 +71,19 @@ def _payload_q70(doc_id: int, text: str) -> bytes:
 
 
 def _scan_roundtrip(payload_builder):
-    """scan bytes → extract (empty page + needs_ocr) → with_ocr_fallback
-    (the flag-guarded map-only operator, impl='fixture') → text."""
+    """scan bytes → the extract kernel with ``ocr='fixture'`` (empty page
+    + needs_ocr, then the OCR fallback on the same row) → text."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import pandas as pd
-
-        from .operators.extract import extract_real_pdf_text
-        from .operators.ocr import with_ocr_fallback
-
         def kernel(batches):
             for pdf in batches:
-                rows = []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    doc_id = int(doc_id)
-                    payload = payload_builder(
-                        doc_id, str(text)
-                    ).decode("latin-1")
-                    t, ocr = extract_real_pdf_text(payload)
-                    rows.append((doc_id, payload, t, ocr))
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "text", "extracted_text", "needs_ocr",
-                    ],
-                )
+                yield _ocr_roundtrip_frame(pdf["doc_id"], [
+                    payload_builder(int(d), str(t)).decode("latin-1")
+                    for d, t in zip(pdf["doc_id"], pdf["text"])
+                ])
 
-        ext = _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-            kernel,
-            schema="doc_id long, text string, extracted_text string, "
-                   "needs_ocr boolean",
-        )
-        out = with_ocr_fallback(ext, impl="fixture")
-        return out.select(
-            "doc_id", "extracted_text", "needs_ocr",
-            F.col("error").alias("ocr_error"),
+        return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
+            kernel, schema=_OCR_ROUNDTRIP_SCHEMA
         )
 
     return run

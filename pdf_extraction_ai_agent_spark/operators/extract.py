@@ -543,7 +543,8 @@ def _spans_batch(texts: pd.Series) -> pd.Series:
 
 
 def extract_turn_batch(
-    text: pd.Series, tool: pd.Series, with_spans: bool = True, with_lob: bool = True
+    text: pd.Series, tool: pd.Series, with_spans: bool = True, with_lob: bool = True,
+    ocr: str | None = None,
 ) -> pd.DataFrame:
     """Pure-pandas batch kernel (also unit-testable off-Spark).
 
@@ -564,6 +565,13 @@ def extract_turn_batch(
     ``with_lob`` appends the C1/C2 LOB classification of the extracted
     text (``lob``, ``lobs`` — operators.classify.score_lobs) so the
     pipeline's classification rides this kernel's Arrow round trip.
+
+    ``ocr`` (None | 'auto' | 'fixture' | 'real', resolved through
+    operators.ocr.OCR_IMPLS) runs the OCR fallback on the ``needs_ocr``
+    rows (reference extract_text.py:18-24): their text becomes the OCR
+    output of the raw payload, and an OCR failure keeps the text layer's
+    text and lands in ``error``. Spans and LOB then describe the final
+    text. None keeps the flag-only contract.
     """
     text = text.fillna("")
     is_pdf = text.str.startswith(spec.PDF_HEADER)
@@ -638,6 +646,16 @@ def extract_turn_batch(
     _guarded(is_pdf, pdf_batch, pdf_row)
     _guarded(is_real_pdf, real_pdf_batch, real_pdf_row)
 
+    if ocr:
+        from .ocr import OCR_IMPLS
+
+        fn = OCR_IMPLS[ocr]
+        for idx, payload in text[needs_ocr].items():
+            try:
+                extracted.at[idx] = fn(payload)
+            except Exception as e:  # error channel; the text layer's text stays
+                error.at[idx] = f"{type(e).__name__}: {e}"[:500]
+
     kind = pd.Series(
         np.select(
             [is_pdf, is_real_pdf, is_html], ["pdf", "pdf_real", "html"], default="plain"
@@ -657,7 +675,7 @@ def extract_turn_batch(
 
 def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
                     kdf_seed: dict | None = None, with_spans: bool = True,
-                    with_lob: bool = False):
+                    with_lob: bool = False, ocr: str | None = None):
     """Append extraction columns to a transcripts DataFrame.
 
     Declarative so Catalyst keeps column pruning/pushdown around the UDF;
@@ -677,7 +695,15 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
     ``with_lob=True`` has the kernel classify its own extracted text and
     appends ``lob``/``lobs`` after ``error`` (extract_pipeline moves them
     to the end of its output).
+
+    ``ocr`` runs the OCR fallback on ``needs_ocr`` rows inside the same
+    kernel (extract_turn_batch), so the payload crosses to Python once.
     """
+    if ocr:
+        from .ocr import OCR_IMPLS
+
+        if ocr not in OCR_IMPLS:
+            raise ValueError(f"ocr must be None or one of {sorted(OCR_IMPLS)}: {ocr!r}")
     rtype = extract_result_type(with_spans, with_lob)
     seed = dict(kdf_seed) if kdf_seed else None
 
@@ -687,7 +713,8 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
 
             seed_kdf(seed)
         pdf = extract_turn_batch(
-            text.to_pandas(), tool.to_pandas(), with_spans=with_spans, with_lob=with_lob
+            text.to_pandas(), tool.to_pandas(), with_spans=with_spans, with_lob=with_lob,
+            ocr=ocr,
         )
         return to_arrow_struct(pdf, rtype)
 

@@ -1,26 +1,20 @@
 """OCR fallback execution (reference: extract_text.py:18-24 — when the
 text layer yields <40 stripped chars, rasterize each page and run
-pytesseract; the engine's extract stage sets ``needs_ocr`` on exactly that
-trigger, this operator executes the fallback).
+pytesseract; the extract kernel sets ``needs_ocr`` on exactly that
+trigger and, given ``ocr=``, runs the fallback on the flagged rows
+itself — operators/extract.py::extract_turn_batch).
 
-Same dispatch pattern as the real-PDF branch and multimodal decode:
-``impl='real'`` needs pdf2image/PyMuPDF + pytesseract (not in this sandbox
-image — raises a documented RuntimeError that the per-row error channel
-captures); ``impl='stub'`` is a deterministic fake that exercises the full
-Spark plumbing (flag-filtered mapInPandas, union back) so the plan shape
-and schema are tested here and only the codec swap happens on a cluster
-image; ``impl='fixture'`` (r7, verdict item 7) EXECUTES OCR in-sandbox on
+``OCR_IMPLS`` is the one table the ``ocr`` values resolve through, the
+same dispatch pattern as the real-PDF branch and multimodal decode:
+``'real'`` needs PyMuPDF + pytesseract + PIL (not in this sandbox image —
+raises a documented RuntimeError that the per-row error channel
+captures); ``'fixture'`` (r7, verdict item 7) EXECUTES OCR in-sandbox on
 generated scanned fixtures — a template match against the deterministic
-spec.OCR_FONT_5X7 bitmaps — and ``impl='auto'`` picks real-when-installed,
+spec.OCR_FONT_5X7 bitmaps — and ``'auto'`` picks real-when-installed,
 fixture otherwise.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..functions.hashing import md5_long_py
 
 
 def ocr_payload_real(payload) -> str:
@@ -48,12 +42,6 @@ def ocr_payload_real(payload) -> str:
         img = Image.open(io.BytesIO(pix.tobytes("png")))
         out.append(pytesseract.image_to_string(img))
     return "\n".join(out).strip()
-
-
-def ocr_payload_stub(payload) -> str:
-    """Deterministic fake OCR output (hash-derived) for plumbing tests."""
-    s = payload if isinstance(payload, str) else bytes(payload).decode("latin-1", "ignore")
-    return f"OCR-STUB {md5_long_py(s) % 100000:05d}"
 
 
 def _scan_images(data: bytes):
@@ -335,7 +323,7 @@ def ocr_payload_fixture(payload) -> str:
     byte-identical q69 behavior), then the NEAREST-template matcher with
     a confidence threshold (noisy scans, q70); a failure of both raises.
     Honest scope: raises on anything that is not the generated-scan
-    shape; real scans still need ``impl='real'`` on a cluster image."""
+    shape; real scans still need ``ocr='real'`` on a cluster image."""
     data = payload if isinstance(payload, (bytes, bytearray)) else str(
         payload
     ).encode("latin-1", errors="ignore")
@@ -365,57 +353,8 @@ def ocr_payload_auto(payload) -> str:
     return ocr_payload_real(payload)
 
 
-def with_ocr_fallback(
-    df: DataFrame,
-    payload_col: str = "text",
-    flag_col: str = "needs_ocr",
-    text_col: str = "extracted_text",
-    impl: str = "real",
-) -> DataFrame:
-    """Replace ``text_col`` with OCR output on rows where ``flag_col`` is
-    true. Map-only: flagged rows run the OCR kernel where they live, the
-    (typically huge) unflagged majority passes through untouched — no
-    shuffle, no union split (a single guarded kernel avoids re-partitioning
-    the 99.9% clean side)."""
-    import pandas as pd
-
-    fn = {
-        "real": ocr_payload_real,
-        "stub": ocr_payload_stub,
-        "fixture": ocr_payload_fixture,
-        "auto": ocr_payload_auto,
-    }[impl]
-
-    def _ocr_batch(payload, flag):  # unannotated: struct-returning pandas UDF
-        txts, errs = [], []
-        for p, f in zip(payload, flag):
-            if not f:
-                txts.append(None)
-                errs.append(None)
-                continue
-            try:
-                txts.append(fn(p))
-                errs.append(None)
-            except Exception as e:  # error channel, never a job abort
-                txts.append(None)
-                errs.append(f"{type(e).__name__}: {e}"[:500])
-        return pd.DataFrame({"txt": txts, "err": errs})
-
-    ocr_udf = F.pandas_udf(_ocr_batch, "struct<txt: string, err: string>")
-    res = ocr_udf(F.col(payload_col), F.col(flag_col))
-    out = df.withColumn("_ocr", res)
-    return (
-        out.withColumn(
-            text_col,
-            F.when(
-                F.col(flag_col) & F.col("_ocr.txt").isNotNull(), F.col("_ocr.txt")
-            ).otherwise(F.col(text_col)),
-        )
-        .withColumn(
-            "error",
-            F.coalesce(F.col("_ocr.err"), F.col("error"))
-            if "error" in df.columns
-            else F.col("_ocr.err"),
-        )
-        .drop("_ocr")
-    )
+OCR_IMPLS = {
+    "real": ocr_payload_real,
+    "fixture": ocr_payload_fixture,
+    "auto": ocr_payload_auto,
+}

@@ -11,14 +11,17 @@ Shape:
                              independent, SURVEY §7 risk 5)
       → extract_turn_batch  (Arrow UDF (pandas body): payload sniff, HTML
                              boilerplate strip, pseudo-PDF layout parse,
-                             span extraction, LOB keyword scoring)
+                             opt-in OCR fallback, span extraction, LOB
+                             keyword scoring)
       → stable ordering     (row_number over conv_id ordered by turn_idx,ts)
       → field projections   (native regexp_extract ladders)
 
 The two shuffles are exactly the ones the north rule prescribes: the
 explicit pre-UDF repartition and the ordering window. The one Arrow
 kernel carries every per-turn Python step (LOB classification included:
-keyword counting is C-speed ``str.count`` there, a byte loop in Catalyst);
+keyword counting is C-speed ``str.count`` there, a byte loop in Catalyst;
+OCR too: a chained Python UDF would hold its own worker and re-ship the
+payload);
 everything after it is narrow and stays in whole-stage codegen.
 """
 
@@ -27,7 +30,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..operators.extract import with_extraction
 from ..operators.ordering import with_turn_pos
@@ -193,11 +195,11 @@ def extract_pipeline(
     does this — jobs/run_extraction.py, the right shape at 100 TB); an
     empty seed may be passed as False.
 
-    ``ocr`` (None | 'auto' | 'fixture' | 'real' | 'stub') executes the OCR
-    fallback on ``needs_ocr`` rows inside the pipeline (map-only,
-    flag-guarded, per-row error channel) and re-scans those rows' spans
-    and lob/lobs from the final text. None (default) keeps the flag-only
-    contract — downstream systems run their own OCR pass.
+    ``ocr`` (None | 'auto' | 'fixture' | 'real') has the extract kernel
+    run the OCR fallback on ``needs_ocr`` rows (per-row error channel)
+    before it scans spans and lob/lobs, so those describe the final text.
+    None (default) keeps the flag-only contract — downstream systems run
+    their own OCR pass.
 
     ``with_spans=False`` prunes the span scan inside the extract UDF
     (~half the kernel) and omits the spans column — for consumers whose
@@ -208,8 +210,8 @@ def extract_pipeline(
     extracted text (C1 ``lob``, C2 ``lobs`` — operators.classify);
     ``with_lob=False`` drops both from the kernel's return type.
 
-    Output: (conv_id, turn_idx, ts, turn_pos, extracted_text, spans,
-    needs_ocr, payload_kind [, claim_number, name, date, confidence]
+    Output: (conv_id, turn_idx, ts, extracted_text [, spans], needs_ocr,
+    payload_kind, error, turn_pos [, claim_number, name, date, confidence]
     [, lob, lobs]).
     """
     from ..operators.ordering import DEFAULT_TURN_BUCKET_WIDTH
@@ -223,22 +225,16 @@ def extract_pipeline(
     df = transcripts.select("conv_id", "turn_idx", "ts", "text", "tool")
     df = salted_repartition(df, num_partitions, salt_buckets)
     df = with_extraction(
-        df, kdf_seed=kdf_seed or None, with_spans=with_spans, with_lob=with_lob
+        df, kdf_seed=kdf_seed or None, with_spans=with_spans, with_lob=with_lob,
+        ocr=ocr,
     )
-    if ocr:
-        # OCR fallback INSIDE the pipeline (reference extract_text.py:18-24
-        # always falls back; here opt-in via jobs --ocr): map-only,
-        # flag-guarded, before the payload column drops out of the plan.
-        from ..operators.ocr import with_ocr_fallback
-
-        df = with_ocr_fallback(df, impl=ocr)
-        if with_spans or with_lob:
-            df = _rescan_ocr_rows(df, with_spans, with_lob)
     df = df.drop("text", "tool")
     df = with_turn_pos(df, bucket_width=ordering_bucket_width)
-    # zero-cost pipeline metrics (the A9 'knowledge base' as observe();
-    # pass a pyspark Observation to read them after an action, else they
-    # land in QueryExecution.observedMetrics for listeners / lineage rows).
+    # zero-cost pipeline metrics (the A9 'knowledge base' as observe()):
+    # a caller-passed pyspark Observation reads them after an action (today
+    # only tests/test_error_channel.py does); unnamed, they land in
+    # QueryExecution.observedMetrics, which no engine code reads — the
+    # lineage counts come from reading back the committed output.
     # Placement matters: observe sits ABOVE the two-phase ordering join (a
     # 1:1 inner join, so the counts are unchanged) — a CollectMetrics BELOW
     # it would pin the extraction columns into the ordering's counts branch
@@ -260,36 +256,3 @@ def extract_pipeline(
         df = df.select(*[c for c in df.columns if c not in ("lob", "lobs")], "lob", "lobs")
     return df
 
-
-def _rescan_ocr_rows(df: DataFrame, with_spans: bool, with_lob: bool) -> DataFrame:
-    """spans and lob/lobs must describe the FINAL text (the reference
-    derives fields from whichever text won): one Arrow UDF re-scans the
-    ``needs_ocr`` rows from the current extracted_text with the kernel's
-    own span scan and LOB scorer, returned through the kernel's
-    to_arrow_struct. Idempotent when OCR failed or left the text
-    unchanged; untouched rows keep the kernel's values."""
-    from ..operators.classify import score_lobs
-    from ..operators.extract import _spans_chunked, extract_result_type, to_arrow_struct
-
-    rtype = StructType([
-        f for f in extract_result_type(with_spans, with_lob).fields
-        if f.name in ("spans", "lob", "lobs")
-    ])
-
-    def _rescan(text, flag):  # unannotated: arrow_udf's default is scalar
-        final = [(t or "") if f else "" for t, f in zip(text.to_pylist(), flag.to_pylist())]
-        cols = {}
-        if with_spans:
-            cols["spans"] = [_spans_chunked(t) if t else [] for t in final]
-        if with_lob:
-            cols["lob"], cols["lobs"] = score_lobs(final)
-        return to_arrow_struct(pd.DataFrame(cols), rtype)
-
-    res = F.arrow_udf(_rescan, rtype)("extracted_text", "needs_ocr")
-    df = df.withColumn("_rescan", res)
-    for f in rtype.fields:
-        df = df.withColumn(
-            f.name,
-            F.when(F.col("needs_ocr"), F.col("_rescan." + f.name)).otherwise(F.col(f.name)),
-        )
-    return df.drop("_rescan")

@@ -647,24 +647,24 @@ def test_pdf_page_render_dispatch(monkeypatch, spark):
     assert pages == [(1, b"PNG\x00"), (2, b"PNG\x01")]
 
 
-def test_ocr_fallback_plumbing(spark):
-    """Flagged rows get OCR text (stub impl), clean rows pass through, and
-    with impl='real' (stack absent here) the error channel captures the
-    integration message instead of aborting."""
-    from pdf_extraction_ai_agent_spark.operators.ocr import with_ocr_fallback
+def test_kernel_ocr_real_without_stack():
+    """With ocr='real' and the OCR stack absent (as here), the flagged row
+    carries an error naming the missing stack and keeps its text-layer
+    text; the unflagged row is untouched — never a job abort."""
+    import pandas as pd
 
-    df = spark.createDataFrame(
-        [("%PDF-1.4 x", True, ""), ("hello", False, "hello")],
-        "text string, needs_ocr boolean, extracted_text string",
-    )
-    got = {r.text: r for r in with_ocr_fallback(df, impl="stub").collect()}
-    assert got["%PDF-1.4 x"].extracted_text.startswith("OCR-STUB ")
-    assert got["hello"].extracted_text == "hello"
+    from pdf_extraction_ai_agent_spark.fixtures.scanned import write_scanned_pdf
+    from pdf_extraction_ai_agent_spark.operators.extract import extract_turn_batch
 
-    real = {r.text: r for r in with_ocr_fallback(df, impl="real").collect()}
-    assert "pytesseract" in (real["%PDF-1.4 x"].error or "")
-    assert real["hello"].error is None
-    assert real["hello"].extracted_text == "hello"
+    scan = write_scanned_pdf([["CLAIM C7"]]).decode("latin-1")
+    text = pd.Series([scan, "hello"])
+    tool = pd.Series([None, None])
+    base = extract_turn_batch(text, tool)
+    real = extract_turn_batch(text, tool, ocr="real")
+    assert bool(real.at[0, "needs_ocr"])
+    assert "pytesseract" in real.at[0, "error"]
+    assert real.at[0, "extracted_text"] == base.at[0, "extracted_text"] == "--- PAGE 1 ---"
+    assert real.loc[1].to_dict() == base.loc[1].to_dict()
 
 
 def test_chaos_fuzzed_payloads_never_abort():

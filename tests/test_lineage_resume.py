@@ -199,15 +199,9 @@ def test_unreadable_lineage_raises_before_any_bucket(spark, transcripts_df, tmp_
     assert LineageStore(spark, os.path.join(base, "crashed")).get_stat("bad", "x") is None
 
 
-def test_job_rerun_runs_no_prepass(spark, transcripts_df, tmp_path_factory, monkeypatch, capsys):
-    """jobs/run_extraction.py's main, run in-process twice: the first run
-    derives the KDF seed once; the rerun finds every bucket committed and
-    runs no pre-pass (neither the KDF seed nor the max-conversation stat)."""
+def _load_extraction_job():
+    """jobs/run_extraction.py as a module (jobs/ is not a package)."""
     import importlib.util
-    import json
-    import sys
-
-    from pdf_extraction_ai_agent_spark.plans import lineage, pipeline
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
@@ -215,7 +209,19 @@ def test_job_rerun_runs_no_prepass(spark, transcripts_df, tmp_path_factory, monk
     )
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
+    return job
 
+
+def test_job_rerun_runs_no_prepass(spark, transcripts_df, tmp_path_factory, monkeypatch, capsys):
+    """jobs/run_extraction.py's main, run in-process twice: the first run
+    derives the KDF seed once; the rerun finds every bucket committed and
+    runs no pre-pass (neither the KDF seed nor the max-conversation stat)."""
+    import json
+    import sys
+
+    from pdf_extraction_ai_agent_spark.plans import lineage, pipeline
+
+    job = _load_extraction_job()
     calls = {"kdf": 0, "max_conv": 0}
     real_kdf, real_mx = pipeline.precompute_kdf_seed, lineage.cached_max_conv_rows
 
@@ -247,3 +253,48 @@ def test_job_rerun_runs_no_prepass(spark, transcripts_df, tmp_path_factory, monk
     rerun = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert calls == {"kdf": 1, "max_conv": 1}
     assert rerun["skipped_buckets"] == 4 and rerun["groups"] == []
+
+
+def test_job_ocr_fixture_commits_ocr_text(spark, transcripts_df, tmp_path_factory, monkeypatch):
+    """jobs/run_extraction.py's main, in-process, with --ocr fixture over a
+    corpus holding scanned turns: each committed scan carries the OCR text
+    and the spans scanned from it, and the lineage counts every input row
+    with no error. The pseudo-PDF turns are left out: they carry no scan
+    image, so fixture OCR reports their needs_ocr rows as errors."""
+    import datetime
+    import sys
+
+    from pdf_extraction_ai_agent_spark import spec
+    from pdf_extraction_ai_agent_spark.fixtures.scanned import write_scanned_pdf
+
+    job = _load_extraction_job()
+    scans = [
+        (f"scan{i}", 0, "user",
+         write_scanned_pdf([[f"CLAIM NO: AB-1234{i}", "REASON: FIRE DAMAGE"]]).decode("latin-1"),
+         "pdf_upload", datetime.datetime(2026, 1, 1))
+        for i in range(2)
+    ]
+    corpus = transcripts_df.filter(~F.col("text").startswith(spec.PDF_HEADER)).unionByName(
+        spark.createDataFrame(scans, transcripts_df.schema)
+    )
+    base = str(tmp_path_factory.mktemp("job_ocr"))
+    inp, out, lin = (os.path.join(base, d) for d in ("in", "out", "lineage"))
+    corpus.write.parquet(inp)
+    monkeypatch.setattr(sys, "argv", [
+        "run_extraction.py", "--input", inp, "--output", out, "--lineage", lin,
+        "--buckets", "4", "--bucket-group-size", "2", "--run-group", "r", "--ocr", "fixture",
+    ])
+    job.main()
+
+    committed = spark.read.parquet(out).filter(F.col("conv_id").startswith("scan"))
+    got = {r["conv_id"]: r for r in committed.collect()}
+    for i in range(2):
+        row = got[f"scan{i}"]
+        assert row["needs_ocr"] and row["error"] is None
+        assert row["extracted_text"] == f"CLAIM NO: AB-1234{i}\nREASON: FIRE DAMAGE"
+        assert row["claim_number"] == f"AB-1234{i}"
+        claim = next(s for s in row["spans"] if s["field"] == "claim_number")
+        assert row["extracted_text"][claim["start"]:claim["end"]] == f"AB-1234{i}"
+    lineage_rows = spark.read.parquet(lin).filter(F.col("run_group") == "r").collect()
+    assert sum(r["n_rows"] for r in lineage_rows) == spark.read.parquet(inp).count()
+    assert sum(r["n_errors"] for r in lineage_rows) == 0

@@ -2,11 +2,11 @@
 rasterizer (fixtures/scanned.py, spec.OCR_FONT_5X7) + template-matching
 OCR rung (operators/ocr.py) turn the S4 fallback from dispatch-only into
 an EXECUTED differential on generated scanned fixtures — no tesseract
-needed. Real scans still require the cluster OCR stack (impl='real'),
+needed. Real scans still require the cluster OCR stack (ocr='real'),
 kept honest by the separate deps-gated test."""
 
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pdf_extraction_ai_agent_spark import spec
 from pdf_extraction_ai_agent_spark.fixtures.scanned import (
@@ -16,11 +16,11 @@ from pdf_extraction_ai_agent_spark.fixtures.scanned import (
 )
 from pdf_extraction_ai_agent_spark.operators.extract import (
     extract_real_pdf_text,
+    extract_turn_batch,
 )
 from pdf_extraction_ai_agent_spark.operators.ocr import (
     ocr_bitmap,
     ocr_payload_fixture,
-    with_ocr_fallback,
 )
 from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
     extract_real_pdf,
@@ -78,29 +78,37 @@ def test_ocr_bitmap_bails_on_unknown_glyphs():
         ocr_payload_fixture(write_minimal_pdf(["HELLO"]))
 
 
-def test_with_ocr_fallback_fixture_impl(spark):
-    """The Spark operator end to end: needs_ocr rows GAIN text from the
-    fixture OCR rung, clean rows pass through untouched, and a
-    non-fixture payload lands in the error channel (never a job abort)."""
-    scan = write_scanned_pdf([["CLAIM C7", "TOTAL 3.00"]]).decode("latin-1")
-    rows = [
-        ("scan", scan, "", True),
-        ("clean", "plain text row", "plain text row", False),
-        ("badscan", "%PDF-1.4 not a real scan", "", True),
-    ]
-    df = spark.createDataFrame(
-        rows, "id string, text string, extracted_text string, needs_ocr boolean"
+def test_kernel_ocr_fixture():
+    """The extract kernel's OCR step, off-Spark: the needs_ocr scan GAINS
+    text (and spans) from the fixture OCR rung, the clean row is the
+    flag-only kernel's row, and a flagged text-layer PDF with no scan
+    image lands in the error channel with its text kept (never a job
+    abort)."""
+    from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
+
+    scan = write_scanned_pdf(
+        [["CLAIM NO: AB-12345", "WORKERS COMPENSATION", "TOTAL 3.00"]]
+    ).decode("latin-1")
+    badscan = write_minimal_pdf(["HELLO"]).decode("latin-1")
+    text = pd.Series([scan, "plain text row", badscan], index=["scan", "clean", "badscan"])
+    tool = pd.Series(None, index=text.index, dtype=object)
+    base = extract_turn_batch(text, tool)
+    got = extract_turn_batch(text, tool, ocr="fixture")
+    assert base["needs_ocr"].tolist() == [True, False, True]
+
+    assert got.at["scan", "extracted_text"] == (
+        "CLAIM NO: AB-12345\nWORKERS COMPENSATION\nTOTAL 3.00"
     )
-    got = {
-        r["id"]: r
-        for r in with_ocr_fallback(df, impl="fixture").collect()
-    }
-    assert got["scan"]["extracted_text"] == "CLAIM C7\nTOTAL 3.00"
-    assert got["scan"]["error"] is None
-    assert got["clean"]["extracted_text"] == "plain text row"
-    assert got["clean"]["error"] is None
-    assert got["badscan"]["extracted_text"] == ""  # unchanged
-    assert "RuntimeError" in got["badscan"]["error"]
+    assert pd.isna(got.at["scan", "error"])
+    assert got.at["scan", "spans"][0]["value"] == "AB-12345"
+    assert got.at["scan", "lob"] == "WC"
+    # spans and LOB describe the final text: the OCR'd text as a plain turn
+    plain = extract_turn_batch(pd.Series([got.at["scan", "extracted_text"]]), pd.Series([None]))
+    for col in ("spans", "lob", "lobs"):
+        assert got.at["scan", col] == plain.at[0, col], col
+    assert got.loc["clean"].to_dict() == base.loc["clean"].to_dict()
+    assert got.at["badscan", "extracted_text"] == base.at["badscan", "extracted_text"]
+    assert "RuntimeError: no scan images" in got.at["badscan", "error"]
 
 
 def test_noisy_scan_roundtrip_exact_recovery():

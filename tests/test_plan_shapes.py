@@ -408,11 +408,33 @@ def test_every_python_udf_evaluates_once(spark, transcripts_df):
     plans = {
         "static": (P.extract_pipeline(transcripts_df), {"_kernel"}),
         "auto": (P.extract_pipeline(transcripts_df, salt_buckets="auto"), {"_kernel"}),
-        "ocr": (P.extract_pipeline(transcripts_df, ocr="fixture"),
-                {"_kernel", "_ocr_batch", "_rescan"}),
+        "ocr": (P.extract_pipeline(transcripts_df, ocr="fixture"), {"_kernel"}),
         "job_group": (P.extract_pipeline(group, salt_buckets="auto", max_conv_rows=10,
                                          kdf_seed=seed), {"_kernel"}),
+        "job_group_ocr": (P.extract_pipeline(group, salt_buckets="auto", max_conv_rows=10,
+                                             kdf_seed=seed, ocr="fixture"), {"_kernel"}),
     }
     for name, (df, udfs) in plans.items():
         evals = _python_evals(_plan(df))
         assert evals == dict.fromkeys(udfs, 1), (name, evals)
+
+
+def test_extract_pipeline_output_columns(transcripts_df):
+    """The documented output contract, in order (perfbench's digest hashes
+    the columns in this order): the kernel's columns, then turn_pos, the
+    parsed fields and lob/lobs. OCR changes values, never the columns; an
+    unknown ``ocr`` value is refused while the plan is built, not in every
+    task."""
+    import pytest
+
+    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+
+    want = [
+        "conv_id", "turn_idx", "ts", "extracted_text", "spans", "needs_ocr",
+        "payload_kind", "error", "turn_pos", "claim_number", "name", "date",
+        "confidence", "lob", "lobs",
+    ]
+    assert extract_pipeline(transcripts_df).columns == want
+    assert extract_pipeline(transcripts_df, ocr="fixture").columns == want
+    with pytest.raises(ValueError, match="'stub'"):
+        extract_pipeline(transcripts_df, ocr="stub")
