@@ -44,9 +44,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # auto: one cheap single-column pre-pass picks the salt fan-out and the
     # ordering strategy (uniform corpus → salt 1 + plain conv-wide window)
-    out = extract_pipeline(
-        transcripts, with_fields=True, with_lob=True, salt_buckets="auto"
-    )
+    out = extract_pipeline(transcripts, salt_buckets="auto")
     return out.select(
         "conv_id", "turn_idx", "turn_pos", "extracted_text", "needs_ocr",
         "payload_kind", "claim_number", "date", "confidence", "lob",

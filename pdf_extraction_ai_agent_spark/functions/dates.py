@@ -2,11 +2,11 @@
 excel_lob_consolidator.py:31-36, mock_storage.py:63-85).
 
 The reference calls ``dateutil.parse(..., fuzzy=True)`` per value. The Spark
-plan keeps the hot path native: a ``coalesce(to_date(...fmt_i))`` ladder over
-the observed format corpus (FIXTURES.md §dates) compiled into whole-stage
-codegen; only values the ladder misses fall into a small Arrow-batched
-residue UDF that calls dateutil — so the slow path executes for ~0% of rows
-at scale.
+plan keeps it native: a ``coalesce(to_date(...fmt_i))`` ladder over the
+observed format corpus (FIXTURES.md §dates) compiled into whole-stage
+codegen; a value every format misses is NULL. The Python twin
+(``normalize_date_py``, which validates date spans inside the extract
+kernel) keeps dateutil as its last rung.
 """
 
 from __future__ import annotations
@@ -79,7 +79,7 @@ def _normalize_date_fast(s: str) -> str | None | bool:
 
 def normalize_date_py(raw: str | None) -> str | None:
     """Python-side twin of the ladder (used inside the extraction UDF to
-    validate date-span candidates, and by the residue UDF)."""
+    validate date-span candidates)."""
     if not raw:
         return None
     from datetime import datetime
@@ -103,31 +103,6 @@ def normalize_date_py(raw: str | None) -> str | None:
         return None
 
 
-def _fuzzy_residue_udf():
-    # pandas imported lazily: this module sits on the registry import path
-    # of every fresh-JVM bench child / driver start; the annotation is the
-    # only module-level pandas use
-    import pandas as pd
-
-    @F.pandas_udf("string")
-    def fuzzy_parse(raw: pd.Series) -> pd.Series:
-        from dateutil import parser as date_parser
-
-        def one(v):
-            if v is None or not str(v).strip():
-                return None
-            try:
-                return date_parser.parse(
-                    str(v), dayfirst=False, yearfirst=False, fuzzy=True
-                ).strftime("%Y-%m-%d")
-            except Exception:
-                return None
-
-        return raw.map(one)
-
-    return fuzzy_parse
-
-
 def _try_fmt(trimmed: Column, fmt: str) -> Column:
     c = F.try_to_timestamp(trimmed, F.lit(fmt)).cast("date")
     if fmt.endswith("yy") and not fmt.endswith("yyyy"):
@@ -140,16 +115,11 @@ def _try_fmt(trimmed: Column, fmt: str) -> Column:
     return c
 
 
-def normalize_date_col(col: Column, with_fuzzy_residue: bool = False) -> Column:
-    """``yyyy-MM-dd`` string or NULL. Ladder is pure codegen; the optional
-    dateutil residue only fires where every format misses."""
+def normalize_date_col(col: Column) -> Column:
+    """``yyyy-MM-dd`` string or NULL; the ladder is pure codegen."""
     trimmed = F.trim(col)
     ladder = F.coalesce(*[_try_fmt(trimmed, fmt) for fmt in _JAVA_FORMATS])
-    out = F.date_format(ladder, "yyyy-MM-dd")
-    if with_fuzzy_residue:
-        fuzzy = _fuzzy_residue_udf()
-        out = F.coalesce(out, F.when(trimmed.isNotNull() & (trimmed != ""), fuzzy(trimmed)))
-    return out
+    return F.date_format(ladder, "yyyy-MM-dd")
 
 
 def date_to_folder_format(col: Column) -> Column:

@@ -34,9 +34,9 @@ def raw_date_col(text: Column) -> Column:
     return _first_match(text, spec.DATE_PATTERNS)
 
 
-def date_col(text: Column, with_fuzzy_residue: bool = False) -> Column:
+def date_col(text: Column) -> Column:
     """Normalized yyyy-MM-dd of the first date hit (parse_fields.py:58-59)."""
-    return normalize_date_col(raw_date_col(text), with_fuzzy_residue=with_fuzzy_residue)
+    return normalize_date_col(raw_date_col(text))
 
 
 def confidence_col(claim: Column, name: Column, date: Column) -> Column:
@@ -51,12 +51,12 @@ def confidence_col(claim: Column, name: Column, date: Column) -> Column:
     )
 
 
-def with_parsed_fields(df, text_col: str = "extracted_text", fuzzy: bool = False):
+def with_parsed_fields(df, text_col: str = "extracted_text"):
     """F2 — append claim_number / name / date / confidence columns."""
     text = F.col(text_col)
     claim = claim_number_col(text)
     name = name_col(text)
-    date = date_col(text, with_fuzzy_residue=fuzzy)
+    date = date_col(text)
     return (
         df.withColumn("claim_number", claim)
         .withColumn("name", name)
@@ -85,15 +85,12 @@ def record_reason_col(chunk: Column) -> Column:
     return F.nullif(F.trim(F.regexp_extract(chunk, spec.REASON_PAT, 1)), F.lit(""))
 
 
-def record_date_col(chunk: Column, with_fuzzy_residue: bool = False) -> Column:
+def record_date_col(chunk: Column) -> Column:
     """First DATE_PATTERN whose match normalizes (regex_extractor.py:40-46):
     coalesce over normalize(extract(p_i))."""
     return F.coalesce(
         *[
-            normalize_date_col(
-                F.nullif(F.regexp_extract(chunk, p, 1), F.lit("")),
-                with_fuzzy_residue=with_fuzzy_residue,
-            )
+            normalize_date_col(F.nullif(F.regexp_extract(chunk, p, 1), F.lit("")))
             for p in spec.DATE_PATTERNS
         ]
     )

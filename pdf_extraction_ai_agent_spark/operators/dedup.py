@@ -535,24 +535,22 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
 
 
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                  block_col: str | None = None, threshold: float = 0.5,
-                  pairs: DataFrame | None = None, unit: str = "word") -> DataFrame:
+                  threshold: float = 0.5, pairs: DataFrame | None = None,
+                  unit: str = "word") -> DataFrame:
     """Exact set jaccard over ``unit`` tokens ("word" or "shingle" — word
     3-grams, the same unit the minhash signatures estimate).
 
     Production shape: pass ``pairs`` (doc_a, doc_b — e.g. lsh_candidates)
     with ``unit="shingle"`` — LSH candidates then verify the exact same
     quantity the bands estimated, and the intersection join touches
-    candidate pairs only. Without a pair source the plan is quadratic
-    within a block (``block_col`` restricts pairs to equal blocks) —
-    verification/baseline use only.
+    candidate pairs only. Without a pair source the plan is quadratic —
+    the verification baseline tests compare the candidate form against.
     """
     tokens = (
         shingles_col(F.col(text_col)) if unit == "shingle" else words_col(F.col(text_col))
     )
     w = df.select(
         F.col(id_col).alias("doc_id"),
-        *( [F.col(block_col).alias("block")] if block_col and pairs is None else [] ),
         F.explode(F.array_distinct(tokens)).alias("word"),
     ).filter(F.col("word") != "")
     if pairs is not None:
@@ -585,11 +583,10 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             .agg(F.count(F.lit(1)).alias("n_common"))
         )
     else:
-        join_keys = ["word"] + (["block"] if block_col else [])
-        l = w.select(F.col("doc_id").alias("doc_a"), *join_keys)
-        r = w.select(F.col("doc_id").alias("doc_b"), *join_keys)
+        l = w.select(F.col("doc_id").alias("doc_a"), "word")
+        r = w.select(F.col("doc_id").alias("doc_b"), "word")
         inter = (
-            l.join(r, join_keys)
+            l.join(r, "word")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("n_common"))

@@ -537,6 +537,11 @@ def _spans_batch(texts: pd.Series) -> pd.Series:
     return pd.Series([_spans_chunked(t) for t in texts], index=texts.index, dtype=object)
 
 
+def _error_message(e: Exception) -> str:
+    """The error channel's per-row value."""
+    return f"{type(e).__name__}: {e}"[:500]
+
+
 # ---------------------------------------------------------------------------
 # the UDF
 # ---------------------------------------------------------------------------
@@ -551,9 +556,10 @@ def extract_turn_batch(
     Error channel (reference cli.py:41-49 — exceptions become per-row
     `error` values, never a job abort): if a vectorized branch raises, the
     affected rows are retried ONE AT A TIME and only the truly poisoned
-    rows carry an error string. One pathological document in 10^12 turns
-    must not kill a multi-hour job; Spark task retries only cover infra
-    failures, not deterministic poison input.
+    rows carry an error string. Real PDFs have no vectorized form: one
+    loop extracts each and catches its error. One pathological document
+    in 10^12 turns must not kill a multi-hour job; Spark task retries only
+    cover infra failures, not deterministic poison input.
 
     ``with_spans=False`` skips the span scan entirely (~half the kernel on
     transcript corpora) and omits the column — manual column pruning
@@ -591,9 +597,9 @@ def extract_turn_batch(
     needs_ocr = pd.Series(False, index=text.index)
     error = pd.Series(None, index=text.index, dtype=object)
 
-    def _guarded(mask, batch_fn, row_fn):
-        """Run the vectorized branch; on failure, per-row fallback that
-        captures errors instead of raising."""
+    def _guarded(mask, batch_fn):
+        """Run the vectorized branch; on failure, retry it on one-row
+        slices so only the poison rows land in the error channel."""
         if not mask.any():
             return
         sub = text[mask]
@@ -602,49 +608,45 @@ def extract_turn_batch(
             return
         except Exception:
             pass
-        for idx, val in sub.items():
+        for i in range(len(sub)):
+            row = sub.iloc[i : i + 1]
             try:
-                row_fn(idx, val)
+                batch_fn(row)
             except Exception as e:  # poison row → error channel
-                extracted.at[idx] = ""
-                error.at[idx] = f"{type(e).__name__}: {e}"[:500]
+                extracted.at[row.index[0]] = ""
+                error.at[row.index[0]] = _error_message(e)
 
     def plain_batch(sub):
         extracted[sub.index] = sub.str.strip()
 
-    def plain_row(idx, val):
-        extracted.at[idx] = val.strip()
-
     def html_batch(sub):
         extracted[sub.index] = _extract_html_batch(sub)
-
-    def html_row(idx, val):
-        extracted.at[idx] = _extract_html_batch(pd.Series([val], index=[idx])).iloc[0]
 
     def pdf_batch(sub):
         pdf_text, pdf_ocr = _extract_pdf_batch(sub)
         extracted[sub.index] = pdf_text
         needs_ocr[sub.index] = pdf_ocr.to_numpy(dtype=bool)
 
-    def pdf_row(idx, val):
-        t, o = _extract_pdf_batch(pd.Series([val], index=[idx]))
-        extracted.at[idx] = t.iloc[0]
-        needs_ocr.at[idx] = bool(o.iloc[0])
+    _guarded(is_plain, plain_batch)
+    _guarded(is_html, html_batch)
+    _guarded(is_pdf, pdf_batch)
 
-    def real_pdf_batch(sub):
-        # no vectorized form: per-row library dispatch; raise to route every
-        # row through _guarded's per-row path (error channel when libs absent)
-        raise RuntimeError("per-row dispatch")
-
-    def real_pdf_row(idx, val):
-        t, o = extract_real_pdf_text(val)
-        extracted.at[idx] = t
-        needs_ocr.at[idx] = o
-
-    _guarded(is_plain, plain_batch, plain_row)
-    _guarded(is_html, html_batch, html_row)
-    _guarded(is_pdf, pdf_batch, pdf_row)
-    _guarded(is_real_pdf, real_pdf_batch, real_pdf_row)
+    if is_real_pdf.any():
+        # library dispatch per document (error channel when libs are absent);
+        # collect every row, then write each column once
+        texts, flags, errors = [], [], []
+        for val in text[is_real_pdf]:
+            try:
+                t, o = extract_real_pdf_text(val)
+                e = None
+            except Exception as exc:  # poison row → error channel
+                t, o, e = "", False, _error_message(exc)
+            texts.append(t)
+            flags.append(o)
+            errors.append(e)
+        extracted[is_real_pdf] = texts
+        needs_ocr[is_real_pdf] = flags
+        error[is_real_pdf] = errors
 
     if ocr:
         from .ocr import OCR_IMPLS
@@ -654,7 +656,7 @@ def extract_turn_batch(
             try:
                 extracted.at[idx] = fn(payload)
             except Exception as e:  # error channel; the text layer's text stays
-                error.at[idx] = f"{type(e).__name__}: {e}"[:500]
+                error.at[idx] = _error_message(e)
 
     kind = pd.Series(
         np.select(

@@ -91,7 +91,7 @@ def _cell(row: Column, idx: Column) -> Column:
 
 def _norm_date_passthrough(raw: Column) -> Column:
     """_normalize_date_str: yyyy-MM-dd on success, input on failure, ''-safe."""
-    return F.coalesce(normalize_date_col(F.nullif(raw, F.lit("")), with_fuzzy_residue=False), raw)
+    return F.coalesce(normalize_date_col(F.nullif(raw, F.lit(""))), raw)
 
 
 def normalize_tables(df: DataFrame, lob: str, doc_col: str = "doc_id",

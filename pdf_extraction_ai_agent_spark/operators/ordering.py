@@ -45,8 +45,9 @@ def with_turn_pos(
     """Stable 1-based position of each turn within its conversation —
     semantically ``row_number() over (partition by conv_id order by
     turn_idx, ts)``, computed two-phase (module docstring) so no task ever
-    sorts a whole conversation. ``bucket_width=None`` falls back to the
-    single-window plan (useful only for differential testing)."""
+    sorts a whole conversation. ``bucket_width=None`` is the single-window
+    plan: extract_pipeline picks it under ``salt_buckets='auto'`` when no
+    conversation exceeds one bucket (the job, the flagship query)."""
     if bucket_width is None:
         w = Window.partitionBy("conv_id").orderBy(
             F.col("turn_idx").asc(), F.col("ts").asc()
@@ -85,7 +86,7 @@ def with_turn_pos(
     # mis-resolution — CLAUDE.md gotcha); eqNullSafe on conv_id so a NULL
     # conv_id row keeps its position (the window path numbers the NULL
     # partition too — a plain == join would silently DROP those rows and
-    # break the 1:1 contract pipeline.py's observe() placement relies on)
+    # break the one-row-per-turn contract)
     joined = local.join(
         offsets,
         local["conv_id"].eqNullSafe(offsets["__oc"])

@@ -30,7 +30,6 @@ def split_records(
     df: DataFrame,
     text_col: str = "extracted_text",
     keep_cols: list[str] | None = None,
-    fuzzy_dates: bool = False,
 ) -> DataFrame:
     """One row per claim record, keyed by (*keep_cols, record_pos)."""
     keep_cols = keep_cols if keep_cols is not None else ["conv_id", "turn_idx"]
@@ -45,7 +44,7 @@ def split_records(
         record_claim_no_col(F.col("chunk")).alias("claim_number"),
         record_amount_col(F.col("chunk")).alias("amount"),
         record_reason_col(F.col("chunk")).alias("reason"),
-        record_date_col(F.col("chunk"), with_fuzzy_residue=fuzzy_dates).alias("date"),
+        record_date_col(F.col("chunk")).alias("date"),
     )
     # F4 (regex_extractor.py:48): keep iff any field matched
     return parsed.filter(

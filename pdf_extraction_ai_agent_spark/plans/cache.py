@@ -23,20 +23,9 @@ from pyspark.sql import DataFrame
 _TRACKED: list[DataFrame] = []
 
 
-def tracked_persist(df: DataFrame, serialized: bool = False) -> DataFrame:
-    """persist() + register for deferred release via release_tracked().
-
-    ``serialized=True`` stores MEMORY_AND_DISK (serialized columnar blocks)
-    instead of the DataFrame default deserialized level — the right choice
-    for corpus-sized intermediates (r8: the lattice elements cache held
-    deserialized row objects whose GC pressure measurably slowed every
-    query that ran after it in a shared session)."""
-    if serialized:
-        from pyspark import StorageLevel
-
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        df.persist()
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """persist() + register for deferred release via release_tracked()."""
+    df.persist()
     _TRACKED.append(df)
     return df
 

@@ -63,11 +63,7 @@ def _max_conv_rows(transcripts: DataFrame) -> int:
     return int(row.mx or 0)
 
 
-def precompute_kdf_seed(
-    transcripts: DataFrame,
-    text_col: str = "text",
-    passwords: tuple[bytes, ...] | None = None,
-) -> dict:
+def precompute_kdf_seed(transcripts: DataFrame, text_col: str = "text") -> dict:
     """AES-256 KDF pre-stage: {(password, salt, b"") → Algorithm 2.B hash}
     for every V5/R6 encrypt dict in the corpus.
 
@@ -85,19 +81,16 @@ def precompute_kdf_seed(
     extract workers then do only AES-CBC, never the KDF. Misses still
     re-derive in-worker, so the seed is a pure cache.
 
-    ``passwords`` (default spec.KNOWN_USER_PASSWORDS) extends the seed to
-    the pipeline's candidate user-password book: _encryption_key's V5/R6
-    validation loop tries the empty password then each candidate in
-    order, so a book-locked file would otherwise re-pay ~1s/KDF per
-    candidate per worker — exactly the trap the pre-pass exists to kill.
-    The seed holds 2 × (1 + len(passwords)) entries per distinct salt
-    pair (validation and key salt, empty password first)."""
+    The seed covers the pipeline's candidate user-password book
+    (spec.KNOWN_USER_PASSWORDS): _encryption_key's V5/R6 validation loop
+    tries the empty password then each candidate in order, so a book-locked
+    file would otherwise re-pay ~1s/KDF per candidate per worker — exactly
+    the trap the pre-pass exists to kill. The seed holds
+    2 × (1 + len(KNOWN_USER_PASSWORDS)) entries per distinct salt pair
+    (validation and key salt, empty password first)."""
     from .. import spec
 
-    pwds = tuple(
-        p[:127] for p in
-        ((b"",) + tuple(spec.KNOWN_USER_PASSWORDS if passwords is None else passwords))
-    )
+    pwds = tuple(p[:127] for p in (b"", *spec.KNOWN_USER_PASSWORDS))
     seed: dict = {}
     for r in _kdf_salt_frame(transcripts, text_col, pwds).collect():
         if r["s"] is None:  # encrypted, but with no V5/R6 salts
@@ -162,13 +155,9 @@ def salted_repartition(df: DataFrame, num_partitions: int | None, salt_buckets: 
 def extract_pipeline(
     transcripts: DataFrame,
     num_partitions: int | None = None,
-    with_fields: bool = True,
-    with_lob: bool = True,
     salt_buckets: int | str = DEFAULT_SALT_BUCKETS,
-    observation=None,
     max_conv_rows: int | None = None,
     kdf_seed: dict | None = None,
-    with_spans: bool = True,
     ocr: str | None = None,
 ) -> DataFrame:
     """Transcripts → per-turn extraction rows.
@@ -201,18 +190,12 @@ def extract_pipeline(
     None (default) keeps the flag-only contract — downstream systems run
     their own OCR pass.
 
-    ``with_spans=False`` prunes the span scan inside the extract UDF
-    (~half the kernel) and omits the spans column — for consumers whose
-    output contract carries no spans. The default keeps the full
-    north-rule contract (the resumable job and the flagship always do).
+    The extract kernel also classifies each turn's extracted text (C1
+    ``lob``, C2 ``lobs`` — operators.classify).
 
-    ``with_lob`` (default) has the extract kernel classify each turn's
-    extracted text (C1 ``lob``, C2 ``lobs`` — operators.classify);
-    ``with_lob=False`` drops both from the kernel's return type.
-
-    Output: (conv_id, turn_idx, ts, extracted_text [, spans], needs_ocr,
-    payload_kind, error, turn_pos [, claim_number, name, date, confidence]
-    [, lob, lobs]).
+    Output: (conv_id, turn_idx, ts, extracted_text, spans, needs_ocr,
+    payload_kind, error, turn_pos, claim_number, name, date, confidence,
+    lob, lobs).
     """
     from ..operators.ordering import DEFAULT_TURN_BUCKET_WIDTH
 
@@ -224,35 +207,9 @@ def extract_pipeline(
             ordering_bucket_width = None  # no conv needs the fan-out
     df = transcripts.select("conv_id", "turn_idx", "ts", "text", "tool")
     df = salted_repartition(df, num_partitions, salt_buckets)
-    df = with_extraction(
-        df, kdf_seed=kdf_seed or None, with_spans=with_spans, with_lob=with_lob,
-        ocr=ocr,
-    )
+    df = with_extraction(df, kdf_seed=kdf_seed or None, with_lob=True, ocr=ocr)
     df = df.drop("text", "tool")
     df = with_turn_pos(df, bucket_width=ordering_bucket_width)
-    # zero-cost pipeline metrics (the A9 'knowledge base' as observe()):
-    # a caller-passed pyspark Observation reads them after an action (today
-    # only tests/test_error_channel.py does); unnamed, they land in
-    # QueryExecution.observedMetrics, which no engine code reads — the
-    # lineage counts come from reading back the committed output.
-    # Placement matters: observe sits ABOVE the two-phase ordering join (a
-    # 1:1 inner join, so the counts are unchanged) — a CollectMetrics BELOW
-    # it would pin the extraction columns into the ordering's counts branch
-    # and force the Arrow UDF to execute twice; above the diamond, Catalyst
-    # prunes the counts branch down to a NARROW re-scan (conv_id, turn_idx
-    # only — a pushed-down 2-column read on parquet/Iceberg sources) with
-    # zero UDF nodes (pinned by test_turn_ordering_never_full_conv_sorts).
-    df = df.observe(
-        observation if observation is not None else "extract_metrics",
-        F.count(F.lit(1)).alias("turns"),
-        F.count(F.when(F.col("needs_ocr"), 1)).alias("needs_ocr_turns"),
-        F.count(F.when(F.col("error").isNotNull(), 1)).alias("error_turns"),
-        F.sum(F.length("extracted_text")).alias("extracted_chars"),
-    )
-    if with_fields:
-        df = with_parsed_fields(df, "extracted_text")
-    if with_lob:
-        # the kernel emitted lob/lobs; the output contract keeps them last
-        df = df.select(*[c for c in df.columns if c not in ("lob", "lobs")], "lob", "lobs")
-    return df
-
+    df = with_parsed_fields(df, "extracted_text")
+    # the kernel emitted lob/lobs; the output contract keeps them last
+    return df.select(*[c for c in df.columns if c not in ("lob", "lobs")], "lob", "lobs")

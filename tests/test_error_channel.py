@@ -3,7 +3,6 @@ cli.py:41-49 semantics), never a failed batch/job; healthy rows in the same
 batch are unaffected."""
 
 import pandas as pd
-import pytest
 
 from pdf_extraction_ai_agent_spark.operators import extract as ex
 
@@ -42,17 +41,26 @@ def test_no_error_on_clean_corpus(transcripts_pdf):
     assert out["error"].isna().all()
 
 
-def test_observe_metrics(spark, transcripts_df):
-    from pyspark.sql import Observation
+def test_poison_real_pdf_isolated(monkeypatch):
+    """Real PDFs go through one per-document loop: a poison PDF yields an
+    error row, and the healthy PDF in the same batch keeps its text and
+    needs_ocr flag."""
 
-    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+    def fake_real_pdf(payload):
+        if "POISON" in payload:
+            raise ValueError("xref exploded")
+        return "healthy pdf text", True
 
-    obs = Observation("extract_metrics")
-    extract_pipeline(
-        transcripts_df, with_fields=False, with_lob=False, observation=obs
-    ).count()
-    got = obs.get
-    assert got["turns"] == transcripts_df.count()
-    assert got["error_turns"] == 0
-    assert got["needs_ocr_turns"] > 0
-    assert got["extracted_chars"] > 0
+    monkeypatch.setattr(ex, "extract_real_pdf_text", fake_real_pdf)
+    texts = pd.Series(["%PDF-1.4 healthy", "%PDF-1.4 POISON", "plain row"])
+    out = ex.extract_turn_batch(texts, pd.Series([None, None, None]))
+
+    assert out["payload_kind"].tolist() == ["pdf_real", "pdf_real", "plain"]
+    assert pd.isna(out.iloc[0]["error"])
+    assert out.iloc[0]["extracted_text"] == "healthy pdf text"
+    assert bool(out.iloc[0]["needs_ocr"]) is True
+    assert out.iloc[1]["error"] == "ValueError: xref exploded"
+    assert out.iloc[1]["extracted_text"] == ""
+    assert bool(out.iloc[1]["needs_ocr"]) is False
+    assert pd.isna(out.iloc[2]["error"])
+    assert out.iloc[2]["extracted_text"] == "plain row"

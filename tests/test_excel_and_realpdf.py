@@ -493,9 +493,7 @@ def test_real_pdf_golden_no_optional_libs(spark):
         assert texts.str.contains(token, regex=False).any(), token
 
     got = (
-        extract_pipeline(
-            spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), with_fields=False
-        )
+        extract_pipeline(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA))
         .select("conv_id", "turn_pos", "extracted_text", "needs_ocr", "payload_kind")
         .toPandas()
         .set_index(["conv_id", "turn_pos"])

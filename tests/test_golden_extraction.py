@@ -17,7 +17,11 @@ from pyspark.sql import functions as F
 def engine_out(spark, transcripts_df):
     from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
 
-    return extract_pipeline(transcripts_df, with_fields=True, with_lob=False).cache()
+    out = extract_pipeline(transcripts_df).cache()
+    yield out
+    # a cached frame substitutes into any later plan with the same shape
+    # (the plan-shape tests build extract_pipeline(transcripts_df) too)
+    out.unpersist()
 
 
 def _golden_with_pos(golden_pdf):

@@ -18,7 +18,7 @@ def test_second_seed_golden(spark):
 
     df = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
     got = (
-        extract_pipeline(df, with_fields=False, with_lob=False)
+        extract_pipeline(df)
         .select("conv_id", "turn_pos", "extracted_text", "needs_ocr", "payload_kind",
                 F.size("spans").alias("n_spans"))
         .toPandas()

@@ -115,16 +115,14 @@ def test_job_over_mixed_real_pdf_corpus(spark, tmp_path_factory):
 
     m = run_with_lineage(
         spark, df,
-        lambda d: extract_pipeline(d, salt_buckets="auto", with_fields=False,
-                                   with_lob=False),
+        lambda d: extract_pipeline(d, salt_buckets="auto"),
         out, lin, run_group="mix", n_buckets=4, bucket_group_size=2,
     )
     assert sum(g["rows"] for g in m["groups"]) == len(pdf)
     assert all(g["errors"] == 0 for g in m["groups"])
     m2 = run_with_lineage(
         spark, df,
-        lambda d: extract_pipeline(d, salt_buckets="auto", with_fields=False,
-                                   with_lob=False),
+        lambda d: extract_pipeline(d, salt_buckets="auto"),
         out, lin, run_group="mix", n_buckets=4, bucket_group_size=2,
     )
     assert m2["skipped_buckets"] == 4 and not m2["groups"]

@@ -2,8 +2,8 @@
 
 The engine classifies inside the extract kernel (operators.classify's
 keyword scorer); the oracle (oracle.reference_extractor) is an independent
-row-at-a-time C1/C2. The golden tests run the FULL pipeline with
-``with_lob=True`` over both transcript fixture seeds and compare per turn;
+row-at-a-time C1/C2. The golden tests run the FULL pipeline over both
+transcript fixture seeds and compare per turn;
 the hand cases pin the semantics the reference implies: NULL/empty text,
 the AUTO → GL → WC tiebreak, nested keywords, non-overlapping counts.
 """
@@ -59,7 +59,7 @@ def _golden_with_pos(pdf):
 def test_pipeline_lob_matches_oracle(spark, seed, kw):
     pdf = generate_transcripts(seed=seed, **kw)
     exp = _golden_with_pos(pdf)
-    out = extract_pipeline(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA), with_lob=True)
+    out = extract_pipeline(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA))
     # contract: lob/lobs close the output, after the field projections
     assert out.columns[-3:] == ["confidence", "lob", "lobs"]
     types = dict(out.dtypes)
@@ -109,7 +109,7 @@ def test_hand_cases_through_spark(spark):
     )
     piped = {
         r["turn_idx"]: (r["lob"], list(r["lobs"]))
-        for r in extract_pipeline(turns, with_fields=False, with_lob=True).collect()
+        for r in extract_pipeline(turns).select("turn_idx", "lob", "lobs").collect()
     }
     # the kernel classifies the STRIPPED plain text; every hand case is
     # insensitive to surrounding whitespace

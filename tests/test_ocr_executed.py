@@ -81,9 +81,9 @@ def test_ocr_bitmap_bails_on_unknown_glyphs():
 def test_kernel_ocr_fixture():
     """The extract kernel's OCR step, off-Spark: the needs_ocr scan GAINS
     text (and spans) from the fixture OCR rung, the clean row is the
-    flag-only kernel's row, and a flagged text-layer PDF with no scan
-    image lands in the error channel with its text kept (never a job
-    abort)."""
+    flag-only kernel's row, a flagged text-layer PDF with no scan image
+    lands in the error channel with its text kept (never a job abort),
+    and LOB still describes the final text with spans pruned."""
     from pdf_extraction_ai_agent_spark.fixtures.minipdf import write_minimal_pdf
 
     scan = write_scanned_pdf(
@@ -109,6 +109,9 @@ def test_kernel_ocr_fixture():
     assert got.loc["clean"].to_dict() == base.loc["clean"].to_dict()
     assert got.at["badscan", "extracted_text"] == base.at["badscan", "extracted_text"]
     assert "RuntimeError: no scan images" in got.at["badscan", "error"]
+    # the span-pruned form q69/q70 run: the same rows without spans
+    pruned = extract_turn_batch(text, tool, with_spans=False, ocr="fixture")
+    pd.testing.assert_frame_equal(pruned, got.drop(columns="spans"))
 
 
 def test_noisy_scan_roundtrip_exact_recovery():

@@ -27,9 +27,7 @@ def test_pipeline_ocr_fixture_replaces_text_and_respans(spark):
     df = _rows(spark)
     out = {
         r["turn_idx"]: r
-        for r in extract_pipeline(
-            df, with_fields=True, with_lob=False, ocr="fixture"
-        ).collect()
+        for r in extract_pipeline(df, ocr="fixture").collect()
     }
     scanned = out[1]
     assert scanned["needs_ocr"] is True
@@ -46,9 +44,7 @@ def test_pipeline_ocr_fixture_replaces_text_and_respans(spark):
     # the clean row is untouched relative to the flag-only pipeline
     base = {
         r["turn_idx"]: r
-        for r in extract_pipeline(
-            df, with_fields=True, with_lob=False
-        ).collect()
+        for r in extract_pipeline(df).collect()
     }
     assert out[2] == base[2]
 
@@ -59,7 +55,7 @@ def test_pipeline_ocr_default_keeps_flag_only_contract(spark):
     df = _rows(spark)
     out = {
         r["turn_idx"]: r
-        for r in extract_pipeline(df, with_fields=False, with_lob=False).collect()
+        for r in extract_pipeline(df).select("turn_idx", "needs_ocr", "extracted_text").collect()
     }
     assert out[1]["needs_ocr"] is True
     assert out[1]["extracted_text"] == "--- PAGE 1 ---"  # no OCR executed
@@ -84,24 +80,15 @@ def test_pipeline_ocr_reclassifies_lob_from_final_text(spark):
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.to_timestamp(F.lit("2026-01-01")))
 
-    for with_spans in (True, False):
-        out = {
-            r["turn_idx"]: r
-            for r in extract_pipeline(
-                df, with_lob=True, with_spans=with_spans, ocr="fixture"
-            ).collect()
-        }
-        flag_only = {
-            r["turn_idx"]: r
-            for r in extract_pipeline(df, with_lob=True, with_spans=with_spans).collect()
-        }
-        assert flag_only[1]["lob"] == "UNKNOWN" and flag_only[1]["lobs"] == ["AUTO"]
-        scanned = out[1]
-        assert scanned["extracted_text"] == (
-            "CLAIM NO: AB-12345\nWORKERS COMPENSATION - LOST TIME"
-        )
-        assert scanned["lob"] == "WC" and scanned["lobs"] == ["WC"]
-        assert scanned["lob"] == classify_lob_oracle(scanned["extracted_text"])
-        assert scanned["lobs"] == classify_lobs_oracle(scanned["extracted_text"])
-        assert out[2]["lob"] == "AUTO" and out[2]["lobs"] == ["AUTO"]
-        assert out[2] == flag_only[2]
+    out = {r["turn_idx"]: r for r in extract_pipeline(df, ocr="fixture").collect()}
+    flag_only = {r["turn_idx"]: r for r in extract_pipeline(df).collect()}
+    assert flag_only[1]["lob"] == "UNKNOWN" and flag_only[1]["lobs"] == ["AUTO"]
+    scanned = out[1]
+    assert scanned["extracted_text"] == (
+        "CLAIM NO: AB-12345\nWORKERS COMPENSATION - LOST TIME"
+    )
+    assert scanned["lob"] == "WC" and scanned["lobs"] == ["WC"]
+    assert scanned["lob"] == classify_lob_oracle(scanned["extracted_text"])
+    assert scanned["lobs"] == classify_lobs_oracle(scanned["extracted_text"])
+    assert out[2]["lob"] == "AUTO" and out[2]["lobs"] == ["AUTO"]
+    assert out[2] == flag_only[2]

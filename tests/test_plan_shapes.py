@@ -326,10 +326,7 @@ def test_auto_ordering_strategy(spark, transcripts_df):
     corpus with a bucket-exceeding conversation keeps the two-phase plan."""
     from pdf_extraction_ai_agent_spark.plans import pipeline as P
 
-    small = P.extract_pipeline(
-        transcripts_df, num_partitions=4, salt_buckets="auto",
-        with_fields=False, with_lob=False,
-    )
+    small = P.extract_pipeline(transcripts_df, num_partitions=4, salt_buckets="auto")
     plan = _plan(small)
     assert "__turn_bkt" not in plan  # single-window path chosen
     assert re.search(r"windowspecdefinition\(conv_id#\d+, turn_idx#", plan)
@@ -339,10 +336,7 @@ def test_auto_ordering_strategy(spark, transcripts_df):
     orig = O.DEFAULT_TURN_BUCKET_WIDTH
     try:
         O.DEFAULT_TURN_BUCKET_WIDTH = 4
-        big = P.extract_pipeline(
-            transcripts_df, num_partitions=4, salt_buckets="auto",
-            with_fields=False, with_lob=False,
-        )
+        big = P.extract_pipeline(transcripts_df, num_partitions=4, salt_buckets="auto")
         assert "__turn_bkt" in _plan(big)
     finally:
         O.DEFAULT_TURN_BUCKET_WIDTH = orig

@@ -13,6 +13,16 @@ delete it with the tests that check nothing else. The allowlist holds the
 deliberate exceptions, each with its reason: an oracle twin, a reference
 that tests compare against, or the sole port of a reference capability
 that COVERAGE.md names.
+
+The flag census does the same for on/off parameters, which the name-based
+census cannot see behind: every parameter defaulting to True, False or None
+must get at least two values from runner files and package code (tests do
+not count). Call sites are matched by name (a bare name, an attribute, or
+the class name for ``__init__``); a site gives the constant it passes, the
+default when it omits the argument, and any value for a non-constant
+argument, ``*args`` or ``**kwargs``. An argument forwarding a parameter of
+the enclosing def gives that parameter's values, found the same way. A flag
+with one value in use is a constant: delete the other branch.
 """
 
 from __future__ import annotations
@@ -140,6 +150,180 @@ def census(root: Path = ROOT, runners=RUNNERS, tests=TESTS, allowlist=ALLOWLIST)
     return unreached, stale
 
 
+# Flag census: every package parameter whose default is True, False or None
+# needs runners that give it at least two values; an option with one value in
+# use is a constant. Test-data writers and the reference twin are out of scope.
+FLAG_SCOPE_EXCLUDED = ("fixtures/", "oracle/")
+
+# "<module path under the package>::<qualified def name>(<param>)" -> why
+# runners give it one value only.
+FLAG_ALLOWLIST = {
+    **{
+        f"{k}(max_bucket)": "heavy-key guard no query enables; ROADMAP direction 5 replaces it"
+        for k in (
+            "operators/dedup.py::lsh_candidates",
+            "operators/dedup.py::incremental_lsh_candidates",
+            "operators/similarity.py::embedding_near_dup_pairs",
+        )
+    },
+    **{
+        f"{k}(doc_cte)": "oracle-twin hook that lets test_differential_sql run "
+                         "the DuckDB SQL over its own table"
+        for k in ("entry_queries_ext2.py::_q28_sql", "entry_queries_ext6.py::_q42_sql")
+    },
+}
+
+ANY = "<any>"  # a non-constant argument, *args or **kwargs
+
+
+def _literal(node) -> str:
+    return repr(node.value) if isinstance(node, ast.Constant) else ANY
+
+
+class _Def:
+    """One function or method: its parameters with their default
+    expressions (None when required), and the ones a call fills by
+    position."""
+
+    def __init__(self, node, qualname: str, rel: str | None, is_method: bool):
+        a = node.args
+        positional = a.posonlyargs + a.args
+        defaults = [None] * (len(positional) - len(a.defaults)) + list(a.defaults)
+        self.params = {p.arg: d for p, d in zip(positional, defaults)}
+        self.params.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults)})
+        self.positional = [p.arg for p in positional]
+        static = any(getattr(d, "id", None) == "staticmethod" for d in node.decorator_list)
+        if is_method and not static:
+            self.positional = self.positional[1:]  # self/cls is bound at the call
+        self.qualname, self.rel = qualname, rel
+        # a parameter assigned in the body no longer forwards what callers passed
+        self.rebound = {n.id for n in ast.walk(node)
+                        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+
+
+def _scan(tree: ast.AST, rel: str | None, defs: list, calls: list) -> None:
+    """Collect every def (with the name its callers use) and every call
+    (with the stack of defs that encloses it)."""
+
+    def visit(node, stack: list, cls: str | None, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                d = _Def(child, prefix + child.name, rel, cls is not None)
+                call_name = cls if cls is not None and child.name == "__init__" else child.name
+                defs.append((call_name, d))
+                visit(child, stack + [d], None, d.qualname + ".")
+            elif isinstance(child, ast.ClassDef):
+                visit(child, stack, child.name, prefix + child.name + ".")
+            else:
+                if isinstance(child, ast.Call):
+                    f = child.func
+                    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if name:
+                        calls.append((name, child, stack))
+                visit(child, stack, cls, prefix)
+
+    visit(tree, [], None, "")
+
+
+def flag_census(root: Path = ROOT, runners=RUNNERS, tests=TESTS,
+                allowlist=FLAG_ALLOWLIST, exempt=ALLOWLIST):
+    """(in-scope flags runners give fewer than two values, mapped to the
+    sorted values they do get; allowlist entries that are not in-scope
+    flags or that now get two values). Parameters of ``exempt``
+    definitions are out of scope."""
+    pkg = root / PACKAGE
+    test_files = set(_python_files(root, tests))
+    runner_files = [p for p in _python_files(root, runners) if p not in test_files]
+    defs: list[tuple[str, _Def]] = []
+    calls: list[tuple[str, ast.Call, list]] = []
+    for path in sorted(pkg.rglob("*.py")):
+        _scan(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(), defs, calls)
+    for path in runner_files:
+        _scan(ast.parse(path.read_text()), None, defs, calls)
+    by_name: dict[str, list[_Def]] = {}
+    for name, d in defs:
+        by_name.setdefault(name, []).append(d)
+
+    sites: dict[int, list] = {}  # id(def) -> [(call, enclosing defs)]
+    for name, call, stack in calls:
+        for d in by_name.get(name, ()):
+            sites.setdefault(id(d), []).append((call, stack))
+
+    def arg_at(call: ast.Call, d: _Def, p: str):
+        """The expression passed for ``p`` at ``call``, its default when
+        omitted (None when required), or ANY."""
+        for kw in call.keywords:
+            if kw.arg == p:
+                return kw.value
+        if p in d.positional:
+            i = d.positional.index(p)
+            starred = [j for j, a in enumerate(call.args) if isinstance(a, ast.Starred)]
+            if starred and starred[0] <= i:
+                return ANY
+            if i < len(call.args):
+                return call.args[i]
+        if any(kw.arg is None for kw in call.keywords):
+            return ANY
+        return d.params[p]
+
+    memo: dict = {}
+    previous: dict = {}
+    active: set = set()
+
+    def values(d: _Def, p: str) -> set:
+        """Every value callers give ``p``; a forwarded parameter of the
+        enclosing def contributes that parameter's values."""
+        key = (id(d), p)
+        if key in memo:
+            return memo[key]
+        if key in active:  # a forwarding cycle: the previous round's answer
+            return previous.get(key, set())
+        active.add(key)
+        out: set = set()
+        for call, stack in sites.get(id(d), ()):
+            expr = arg_at(call, d, p)
+            if expr is None:  # required and not passed: a same-named def's call
+                continue
+            outer = isinstance(expr, ast.Name) and next(
+                (e for e in reversed(stack) if expr.id in e.params and expr.id not in e.rebound),
+                None,
+            )
+            out |= values(outer, expr.id) if outer else {_literal(expr)}
+        active.discard(key)
+        memo[key] = out
+        return out
+
+    flags = {
+        f"{d.rel}::{d.qualname}({p})": (d, p)
+        for _, d in defs
+        if d.rel is not None and not d.rel.startswith(FLAG_SCOPE_EXCLUDED)
+        and f"{d.rel}::{d.qualname.split('.')[0]}" not in exempt
+        for p, default in d.params.items()
+        if isinstance(default, ast.Constant)
+        and any(default.value is v for v in (True, False, None))
+    }
+    while True:  # to a fixpoint: forwarding cycles see the previous round
+        memo = {}
+        got = {k: values(d, p) for k, (d, p) in flags.items()}
+        if memo == previous:
+            break
+        previous = memo
+    few = {k: sorted(v) for k, v in sorted(got.items()) if ANY not in v and len(v) < 2}
+    flagged = {k: v for k, v in few.items() if k not in allowlist}
+    stale = sorted(k for k in allowlist if k not in few)
+    return flagged, stale
+
+
+def test_every_engine_flag_has_runners_for_two_values():
+    flagged, stale = flag_census()
+    assert not flagged, (
+        "flags runners give one value only (or none); make each a constant "
+        "and delete the tests that only switch it, or allowlist it with its "
+        "reason:\n  " + "\n  ".join(f"{k}: {v}" for k, v in flagged.items())
+    )
+    assert not stale, f"flag allowlist entries that are gone or that runners now switch: {stale}"
+
+
 def test_every_package_definition_is_reachable_from_a_runner():
     unreached, stale = census()
     assert not unreached, (
@@ -179,3 +363,37 @@ def test_census_flags_a_function_only_a_test_calls(tmp_path):
     allowed = {"ops/core.py::only_tested": "a reference", "ops/core.py::run": "stale"}
     got = census(tmp_path, runners=("jobs",), tests=("tests",), allowlist=allowed)
     assert got == ({"ops/core.py::dead": "nothing"}, ["ops/core.py::run"])
+
+
+def test_flag_census_flags_a_flag_only_a_test_switches(tmp_path):
+    """The flag census itself: on a toy tree, a flag only a test switches
+    is flagged, one a runner switches through a forwarding wrapper is not
+    (while a forwarded flag no runner switches still is), and an allowlist
+    entry for a flag runners switch is reported stale."""
+    pkg = tmp_path / PACKAGE / "ops"
+    pkg.mkdir(parents=True)
+    (tmp_path / PACKAGE / "__init__.py").write_text("")
+    (pkg / "__init__.py").write_text("")
+    (pkg / "core.py").write_text(
+        "def kernel(x, fast=False, tidy=True):\n    return x\n"
+        "def wrapper(x, fast=False, tidy=True):\n    return kernel(x, fast=fast, tidy=tidy)\n"
+        "def only_tested(x, strict=False):\n    return x\n"
+    )
+    (tmp_path / "jobs").mkdir()
+    (tmp_path / "jobs" / "job.py").write_text(
+        f"from {PACKAGE}.ops.core import only_tested, wrapper\n"
+        "wrapper(1)\nwrapper(2, fast=True)\nonly_tested(3)\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_x.py").write_text(
+        f"from {PACKAGE}.ops.core import only_tested\nonly_tested(3, strict=True)\n"
+    )
+    kw = dict(runners=("jobs",), tests=("tests",), exempt={})
+    flagged = {
+        "ops/core.py::kernel(tidy)": ["True"],
+        "ops/core.py::only_tested(strict)": ["False"],
+        "ops/core.py::wrapper(tidy)": ["True"],
+    }
+    assert flag_census(tmp_path, allowlist={}, **kw) == (flagged, [])
+    stale = {"ops/core.py::kernel(fast)": "switched by a runner"}
+    assert flag_census(tmp_path, allowlist=stale, **kw) == (flagged, ["ops/core.py::kernel(fast)"])

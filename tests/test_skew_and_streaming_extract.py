@@ -36,7 +36,7 @@ def test_salting_spreads_skewed_conversation(spark, transcripts_pdf):
 
     # and the ordering window still produces dense per-conv positions after
     # extraction on salted partitions (the two-pass safety argument)
-    out = extract_pipeline(df, num_partitions=8, with_fields=False, with_lob=False)
+    out = extract_pipeline(df, num_partitions=8)
     hot_rows = out.filter(F.col("conv_id") == hot).select("turn_pos").collect()
     positions = sorted(r.turn_pos for r in hot_rows)
     assert positions == list(range(1, len(positions) + 1))

@@ -1,7 +1,8 @@
 """with_spans=False — manual column pruning through the UDF boundary
 (r7): Catalyst prunes around a pandas UDF but cannot reach inside it, so
-the kernel offers the prune explicitly. The default (spans on) remains
-the north-rule contract and is what every golden test pins."""
+the kernel offers the prune explicitly (q91/q92 use it). The default
+(spans on) remains the north-rule contract and is what every golden test
+pins."""
 
 import pandas as pd
 
@@ -24,7 +25,8 @@ def test_kernel_with_spans_false_matches_otherwise():
 
 
 def test_pipeline_with_spans_false_prunes_column_and_udf_work(spark):
-    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+    """The span-pruned operator q91/q92 run (with_spans=False)."""
+    from pdf_extraction_ai_agent_spark.operators.extract import with_extraction
 
     df = spark.createDataFrame(
         [("c", i, "u", f"Claim C{i}\nreason: fire damage $12.50", "t", None)
@@ -32,14 +34,12 @@ def test_pipeline_with_spans_false_prunes_column_and_udf_work(spark):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
     )
-    out = extract_pipeline(df, with_fields=False, with_lob=False,
-                           with_spans=False)
+    out = with_extraction(df, with_spans=False)
     assert "spans" not in out.columns
     rows = out.collect()
     assert len(rows) == 30 and all(r["extracted_text"] for r in rows)
     # the default contract is unchanged
-    full = extract_pipeline(df, with_fields=False, with_lob=False)
-    assert "spans" in full.columns
+    assert "spans" in with_extraction(df).columns
 
 
 def test_kernel_with_lob_false_prunes_classification():
@@ -55,10 +55,12 @@ def test_kernel_with_lob_false_prunes_classification():
 
 
 def test_pipeline_with_lob_false_prunes_kernel_output(spark):
-    """with_lob=False drops lob/lobs from the kernel's return type (no
-    field of the Python node is named lob) and from the output."""
+    """with_extraction's default with_lob=False drops lob/lobs from the
+    kernel's return type (no field of the Python node is named lob) and
+    from the output; extract_pipeline classifies and keeps them last."""
     import re
 
+    from pdf_extraction_ai_agent_spark.operators.extract import with_extraction
     from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
 
     df = spark.createDataFrame(
@@ -71,7 +73,7 @@ def test_pipeline_with_lob_false_prunes_kernel_output(spark):
     def plan(d):
         return d._jdf.queryExecution().executedPlan().toString()
 
-    out = extract_pipeline(df, with_lob=False)
+    out = with_extraction(df)
     assert "lob" not in out.columns and "lobs" not in out.columns
     assert not re.search(r"\blobs?\b", plan(out))
     assert len(out.collect()) == 30
