@@ -6,7 +6,9 @@
   parse → LOB classify).
 - ``queries()`` / ``oracle_sql()``: one entry per implemented operator from
   SURVEY.md §2, with DuckDB oracle SQL (see
-  ``pdf_extraction_ai_agent_spark/entry_queries.py``).
+  ``pdf_extraction_ai_agent_spark/entry_queries.py``; the PDF roundtrip
+  queries are the rows of ``entry_roundtrips.ROUNDTRIPS``).
+- ``pinned_queries()``: the roundtrip queries' data-pinned A/B arms.
 """
 
 from __future__ import annotations
@@ -107,14 +109,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from pdf_extraction_ai_agent_spark.entry_queries_ext5 import EXT5_QUERIES
     from pdf_extraction_ai_agent_spark.entry_queries_ext6 import EXT6_QUERIES
     from pdf_extraction_ai_agent_spark.entry_queries_ext7 import EXT7_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext8 import EXT8_QUERIES
     from pdf_extraction_ai_agent_spark.entry_queries_ext9 import EXT9_QUERIES
     from pdf_extraction_ai_agent_spark.entry_queries_ext10 import EXT10_QUERIES
     from pdf_extraction_ai_agent_spark.entry_queries_ext11 import EXT11_QUERIES
+    from pdf_extraction_ai_agent_spark.entry_roundtrips import roundtrip_queries
 
     merged = {**CORE_QUERIES, **EXT_QUERIES, **EXT2_QUERIES, **EXT3_QUERIES,
               **EXT4_QUERIES, **EXT5_QUERIES, **EXT6_QUERIES, **EXT7_QUERIES,
-              **EXT8_QUERIES, **EXT9_QUERIES, **EXT10_QUERIES, **EXT11_QUERIES}
+              **EXT9_QUERIES, **EXT10_QUERIES, **EXT11_QUERIES, **roundtrip_queries()}
     return {name: _release_then(merged[name]) for name in _rotate(sorted(merged))}
 
 
@@ -127,27 +129,23 @@ def oracle_sql() -> dict[str, str]:
     from pdf_extraction_ai_agent_spark.entry_queries_ext5 import ext5_oracles
     from pdf_extraction_ai_agent_spark.entry_queries_ext6 import ext6_oracles
     from pdf_extraction_ai_agent_spark.entry_queries_ext7 import ext7_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext8 import ext8_oracles
     from pdf_extraction_ai_agent_spark.entry_queries_ext9 import ext9_oracles
     from pdf_extraction_ai_agent_spark.entry_queries_ext10 import ext10_oracles
     from pdf_extraction_ai_agent_spark.entry_queries_ext11 import ext11_oracles
+    from pdf_extraction_ai_agent_spark.entry_roundtrips import roundtrip_oracles
 
     merged = {**core_oracles(), **ext_oracles(), **ext2_oracles(), **ext3_oracles(),
               **ext4_oracles(), **ext5_oracles(), **ext6_oracles(), **ext7_oracles(),
-              **ext8_oracles(), **ext9_oracles(), **ext10_oracles(), **ext11_oracles()}
+              **ext9_oracles(), **ext10_oracles(), **ext11_oracles(), **roundtrip_oracles()}
     # mirror queries()'s rotation so side-by-side iteration pairs up
     return {name: merged[name] for name in _rotate(sorted(merged))}
 
 def pinned_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """name -> (spark, pinned_parquet_path) -> DataFrame: extraction-only
-    arms over a pre-materialized (doc_id, pdf) corpus, used by the
-    data-pinned A/B bench (scripts/bench_headline_child.py). Not part of
-    the driver contract — the driver uses queries()/oracle_sql()."""
-    from pdf_extraction_ai_agent_spark import entry_queries_ext8  # noqa: F401
-    from pdf_extraction_ai_agent_spark import entry_queries_ext9  # noqa: F401
-    from pdf_extraction_ai_agent_spark.entry_queries_ext7 import (
-        pinned_queries as _pq,
-    )
+    """name -> (spark, pinned_parquet_path) -> DataFrame: every PDF roundtrip
+    query's extraction over a pre-materialized (doc_id, pdf) corpus (written
+    by scripts/bench_pin_corpus.py), for the data-pinned A/B bench
+    (scripts/bench_headline_child.py). The oracle gate reads
+    queries()/oracle_sql() only."""
+    from pdf_extraction_ai_agent_spark.entry_roundtrips import pinned_queries as _pq
 
-    # importing ext8/ext9 registers their builders in PINNED_PAYLOAD_BUILDERS
     return _pq()

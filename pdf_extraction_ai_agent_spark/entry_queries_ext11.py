@@ -21,6 +21,10 @@ q91/q92 run the REAL extraction operator (with_extraction pandas-UDF path,
 span-pruned) over payloads synthesized from (doc_id, source, text)
 identically on both sides; the DuckDB twins predict the extracted text
 from the table alone.
+
+The pack also holds the payload builder of q97 (annotation text never
+leaks into extraction); that query is a row of
+entry_roundtrips.ROUNDTRIPS, with the shared three-line oracle template.
 """
 
 from __future__ import annotations
@@ -425,42 +429,6 @@ def _payload_q97(doc_id: int, text: str) -> bytes:
         f"amount $9,999.99 (do not extract)"
     )
     return write_minimal_pdf([page], annots=[note])
-
-
-def q97_annotations_ignored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q97), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q97_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Annot A' || CAST(doc_id AS VARCHAR) AS l1,
-         'Body ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Gross ' || CAST(doc_id % 83 AS VARCHAR) || '.10' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-EXT11_QUERIES["q97_annotations_ignored"] = q97_annotations_ignored
-_EXT11_ORACLES["q97_annotations_ignored"] = _Q97_SQL
-
-
-def _register_pinned():
-    from .entry_queries_ext7 import PINNED_PAYLOAD_BUILDERS
-
-    PINNED_PAYLOAD_BUILDERS["q97_annotations_ignored"] = _payload_q97
-
-
-_register_pinned()
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,11 @@ hash-bucket membership, the reproducible alternative to sample()).
 q48 — benchmark decontamination: per-document fraction of distinct 3-gram
 hashes appearing in a deterministic eval subset's gram inventory; the eval
 docs themselves surface at contamination 1.0.
+
+The pack also holds the payload builders of the first PDF roundtrip
+carriers (q49, q51, q54-q58) and their shared page layouts. Each of those
+queries is a row of entry_roundtrips.ROUNDTRIPS: builder, oracle SQL,
+extraction rung and R6 seed.
 """
 
 from __future__ import annotations
@@ -12,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .entry_queries import _spread, _t
+from .entry_queries import _t
 from .entry_queries_ext import _SHINGLES_SQL, _WORDS_SQL, _docs, _md5l
 from .operators import curation
 
@@ -86,6 +91,9 @@ def ext7_oracles() -> dict[str, str]:
     }
 
 
+_EXT7_ORACLES_EXTRA: dict = {}
+
+
 # ---------------------------------------------------------------------------
 # q49 — real-PDF round trip under the ORACLE GATE: per document, build a
 # genuine PDF (fixtures/minipdf.py — page tree, xref, FlateDecode on odd
@@ -122,82 +130,6 @@ def _payload_q49(doc_id: int, text: str) -> bytes:
     return write_minimal_pdf(
         [_positioned_items(doc_id, text)], compress=bool(doc_id % 2)
     )
-
-
-def _roundtrip_kernel(builder):
-    """(doc_id, text) batches → (doc_id, extracted_text, needs_ocr) via
-    builder + the engine's real-PDF rung — the shared body of every
-    roundtrip query kernel."""
-    import pandas as pd
-
-    from .operators.extract import extract_real_pdf_text
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                t, ocr = extract_real_pdf_text(builder(doc_id, str(text)))
-                rows.append((doc_id, t, ocr))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "extracted_text", "needs_ocr"]
-            )
-
-    return kernel
-
-
-_ROUNDTRIP_SCHEMA = "doc_id long, extracted_text string, needs_ocr boolean"
-_OCR_ROUNDTRIP_SCHEMA = _ROUNDTRIP_SCHEMA + ", ocr_error string"
-
-
-def _ocr_roundtrip_frame(doc_ids, payloads: list[str]):
-    """One batch of scan payloads (latin-1 strings) → (doc_id,
-    extracted_text, needs_ocr, ocr_error) through the extract kernel with
-    ``ocr='fixture'``: the shared body of q69/q70 and their pinned A/B
-    arm, so an OCR failure reaches the error channel in both."""
-    import pandas as pd
-
-    from .operators.extract import extract_turn_batch
-
-    text = pd.Series(payloads, dtype=object)
-    res = extract_turn_batch(
-        text, pd.Series(None, index=text.index, dtype=object),
-        with_spans=False, with_lob=False, ocr="fixture",
-    )
-    return pd.DataFrame({
-        "doc_id": [int(d) for d in doc_ids],
-        "extracted_text": res["extracted_text"],
-        "needs_ocr": res["needs_ocr"],
-        "ocr_error": res["error"],
-    })
-
-
-def q49_real_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q49), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q49_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Claim C' || CAST(doc_id AS VARCHAR) AS l1,
-         'Body ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Total ' || CAST(doc_id % 97 AS VARCHAR) || '.00' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT7_QUERIES["q49_real_pdf_roundtrip"] = q49_real_pdf_roundtrip
-
-
-_EXT7_ORACLES_EXTRA = {"q49_real_pdf_roundtrip": _Q49_SQL}
 
 
 # ---------------------------------------------------------------------------
@@ -261,21 +193,6 @@ def _payload_q51(doc_id: int, text: str) -> bytes:
         compress=bool(doc_id % 2),
         predictor=bool(doc_id % 3),
     )
-
-
-def q51_objstm_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q51), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-# Same contract as q49 — the oracle computes expected text from the table,
-# independent of which PDF flavor carried it — so q51 REUSES q49's SQL twin
-# (one maintained copy; review finding).
-
-
-EXT7_QUERIES["q51_objstm_pdf_roundtrip"] = q51_objstm_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q51_objstm_pdf_roundtrip"] = _Q49_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -416,16 +333,6 @@ def _payload_q54(doc_id: int, text: str) -> bytes:
     )
 
 
-def q54_encrypted_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q54), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT7_QUERIES["q54_encrypted_pdf_roundtrip"] = q54_encrypted_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q54_encrypted_pdf_roundtrip"] = _Q49_SQL
-
-
 # ---------------------------------------------------------------------------
 # q55 — CID-FONT PDF round trip under the ORACLE GATE: the q49 text
 # contract over PDFs whose text is shown through a Type0 (CID-keyed) font
@@ -455,32 +362,6 @@ def _payload_q55(doc_id: int, text: str) -> bytes:
     )
 
 
-def q55_cid_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q55), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q55_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Claim C' || CAST(doc_id AS VARCHAR) AS l1,
-         'Body ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Total ' || CAST(doc_id % 97 AS VARCHAR) || '.00' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT7_QUERIES["q55_cid_pdf_roundtrip"] = q55_cid_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q55_cid_pdf_roundtrip"] = _Q55_SQL
-
-
 # ---------------------------------------------------------------------------
 # q56 — AESV2-ENCRYPTED PDF round trip under the ORACLE GATE: the q49
 # contract over files encrypted with the V4/R4 standard security handler
@@ -500,16 +381,6 @@ def _payload_q56(doc_id: int, text: str) -> bytes:
         owner_pwd=b"aes-owner-%d" % (doc_id % 11),
         revision=4,
     )
-
-
-def q56_aes_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q56), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT7_QUERIES["q56_aes_pdf_roundtrip"] = q56_aes_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q56_aes_pdf_roundtrip"] = _Q49_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -533,16 +404,6 @@ def _payload_q57(doc_id: int, text: str) -> bytes:
     )
 
 
-def q57_differences_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q57), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT7_QUERIES["q57_differences_pdf_roundtrip"] = q57_differences_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q57_differences_pdf_roundtrip"] = _Q55_SQL
-
-
 # ---------------------------------------------------------------------------
 # q58 — AES-256 (V5/R6) ENCRYPTED PDF round trip under the ORACLE GATE:
 # the q49 contract over files using the AESV3 crypt filter — Algorithm
@@ -551,129 +412,6 @@ _EXT7_ORACLES_EXTRA["q57_differences_pdf_roundtrip"] = _Q55_SQL
 # Three independent AES-256 implementations (engine tables / oracle
 # spec-style / writer forward), FIPS-197-pinned. Reuses q49's SQL twin.
 # ---------------------------------------------------------------------------
-
-
-_Q58_SEED_CACHE: dict[tuple[bytes, int, bytes], tuple[dict, dict]] = {}
-
-
-def _q58_kdf_seeds(
-    spark: SparkSession, owner_pwd: bytes, pages_count: int = 1,
-    user_pwd: bytes = b"",
-) -> tuple[dict, dict]:
-    """Distributed ONE-wave Algorithm 2.B derivation for ONE R6 encrypt
-    dict (r8: was two sequential jobs — user hashes, then owner hashes
-    that need u_value): every hash is one parallel task, and each OWNER
-    task derives its own u_value prerequisite in-task (one duplicated
-    user-hash computation per owner task buys removing a whole job +
-    barrier — wall is max(1, 2) calls instead of 1 + 1 plus two job
-    overheads). Writer-side and engine-side values run through each
-    side's OWN impl (twin independence intact). With a non-empty
-    ``user_pwd`` (q60) the engine side also gets the (empty, vsalt)
-    probe it tries first. Results are plain dicts seeded into workers by
-    the kernel — a pure cache, misses re-derive."""
-    from .fixtures import minipdf
-    from .operators import pdftext
-
-    hit = _Q58_SEED_CACHE.get((owner_pwd, pages_count, user_pwd))
-    if hit is not None:
-        return hit
-    vsalt, ksalt, ovs, oks = minipdf.r6_salts(pages_count)
-    sc = spark.sparkContext
-
-    # the tasks go through each side's memoized entry point, so reused
-    # python workers answer repeat derivations from cache (~0s)
-    def _run(t):
-        side, pwd, salt = t
-        if side == "w":
-            return t, minipdf.hash_2b(pwd, salt)
-        if side == "e":
-            return t, pdftext._hash_2b_compute(pwd, salt)
-        # side == "o": owner hash — derive the u_value dependency locally
-        # (lru-answered if this worker already computed it)
-        u = minipdf.hash_2b(user_pwd, vsalt) + vsalt + ksalt
-        return t, minipdf.hash_2b(owner_pwd, salt, u)
-
-    tasks = [("w", user_pwd, vsalt), ("w", user_pwd, ksalt),
-             ("e", user_pwd, vsalt), ("e", user_pwd, ksalt),
-             ("o", owner_pwd, ovs), ("o", owner_pwd, oks)]
-    if user_pwd != b"":
-        tasks.append(("e", b"", vsalt))  # the empty-password probe
-    res = dict(sc.parallelize(tasks, len(tasks)).map(_run).collect())
-    w1 = {k: v for k, v in res.items() if k[0] in ("w", "e")}
-    u_value = w1[("w", user_pwd, vsalt)] + vsalt + ksalt
-    w2 = {ovs: res[("o", owner_pwd, ovs)], oks: res[("o", owner_pwd, oks)]}
-    writer_seed = {
-        (user_pwd, vsalt, b""): w1[("w", user_pwd, vsalt)],
-        (user_pwd, ksalt, b""): w1[("w", user_pwd, ksalt)],
-        (owner_pwd, ovs, u_value): w2[ovs],
-        (owner_pwd, oks, u_value): w2[oks],
-    }
-    engine_seed = {
-        (pwd, salt, b""): h for (side, pwd, salt), h in w1.items() if side == "e"
-    }
-    _Q58_SEED_CACHE[(owner_pwd, pages_count, user_pwd)] = (writer_seed, engine_seed)
-    return writer_seed, engine_seed
-
-
-_Q58_ENGINE_SEED_CACHE: dict[tuple[int, bytes], dict] = {}
-
-
-def _q58_engine_seeds(
-    spark: SparkSession, pages_count: int = 1, user_pwd: bytes = b""
-) -> dict:
-    """Engine-side-only Algorithm 2.B seeds in ONE parallel wave — for
-    extraction-only callers (the data-pinned A/B arm reads pre-written
-    bytes, so the writer/owner hashes of _q58_kdf_seeds are dead weight
-    there and its second wave pure overhead: 2 sequential Spark jobs ≈
-    +2s of fixed cost that showed up as a phantom q58 'regression')."""
-    from .fixtures import minipdf
-    from .operators import pdftext
-
-    hit = _Q58_ENGINE_SEED_CACHE.get((pages_count, user_pwd))
-    if hit is not None:
-        return hit
-    vsalt, ksalt, _ovs, _oks = minipdf.r6_salts(pages_count)
-    tasks = [(user_pwd, vsalt), (user_pwd, ksalt)]
-    if user_pwd != b"":
-        tasks.append((b"", vsalt))  # the empty-password probe
-    seeds = dict(
-        spark.sparkContext.parallelize(tasks, len(tasks))
-        .map(lambda t: ((t[0], t[1], b""), pdftext._hash_2b_compute(*t)))
-        .collect()
-    )
-    _Q58_ENGINE_SEED_CACHE[(pages_count, user_pwd)] = seeds
-    return seeds
-
-
-def q58_aes256_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .fixtures import minipdf
-    from .operators import pdftext
-    from .operators.extract import extract_real_pdf_text
-
-    docs = _docs(spark, sf_dir)
-
-    # ONE owner pwd, and the Algorithm 2.B results derived ONCE in a tiny
-    # 2-wave parallel stage (_q58_kdf_seeds) then seeded into every worker
-    # — per-worker KDF cost was the round-5 scale-killer (VERDICT: ~1s/call
-    # × workers × distinct dicts); the query now times writer AES-CBC + the
-    # engine's AES-256 stream path.
-    writer_seed, engine_seed = _q58_kdf_seeds(spark, b"r6-owner")
-    inner = _roundtrip_kernel(_payload_q58)
-
-    def kernel(batches):
-        minipdf.seed_kdf(writer_seed)
-        pdftext.seed_kdf(engine_seed)
-        yield from inner(batches)
-
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT7_QUERIES["q58_aes256_pdf_roundtrip"] = q58_aes256_pdf_roundtrip
-_EXT7_ORACLES_EXTRA["q58_aes256_pdf_roundtrip"] = _Q49_SQL
 
 
 def _payload_q58(doc_id: int, text: str) -> bytes:
@@ -686,139 +424,3 @@ def _payload_q58(doc_id: int, text: str) -> bytes:
     return minipdf.write_encrypted_pdf(
         [_positioned_items(doc_id, text)], owner_pwd=b"r6-owner", revision=6
     )
-
-
-# --- data-pinned A/B support (round-6 verdict item 2) ----------------------
-# bench.py materializes these ONCE per bench session (HEAD's generator) as
-# (doc_id, pdf) parquet and both A/B arms extract the SAME bytes — ratios
-# then measure extraction code, not fixture-generator drift.
-PINNED_PAYLOAD_BUILDERS = {
-    "q49_real_pdf_roundtrip": _payload_q49,
-    "q51_objstm_pdf_roundtrip": _payload_q51,
-    "q54_encrypted_pdf_roundtrip": _payload_q54,
-    "q55_cid_pdf_roundtrip": _payload_q55,
-    "q56_aes_pdf_roundtrip": _payload_q56,
-    "q57_differences_pdf_roundtrip": _payload_q57,
-    "q58_aes256_pdf_roundtrip": _payload_q58,
-}
-
-
-def _pinned_extract_kernel(tagged: bool = False):
-    """(doc_id, pdf) batches -> (doc_id, extracted_text, needs_ocr): the
-    extraction half of the roundtrip kernels, over pre-materialized bytes.
-    ``tagged`` swaps in the tagged-PDF rung (q66 measures the logical-
-    order path it ships, not geometric extraction of the same bytes)."""
-    import pandas as pd
-
-    from .operators.extract import (
-        extract_real_pdf_text,
-        extract_tagged_pdf_text,
-    )
-
-    fn = extract_tagged_pdf_text if tagged else extract_real_pdf_text
-
-    def kernel(batches):
-        for b in batches:
-            rows = []
-            for doc_id, payload in zip(b["doc_id"], b["pdf"]):
-                t, ocr = fn(bytes(payload))
-                rows.append((int(doc_id), t, ocr))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "extracted_text", "needs_ocr"]
-            )
-
-    return kernel
-
-
-def pinned_queries() -> dict:
-    """name -> (spark, parquet_path) -> DataFrame over the materialized
-    (doc_id, pdf) corpus — the extraction-only arm of the data-pinned A/B.
-    Runs THIS tree's extraction strategy (q58 keeps its KDF pre-seeding,
-    which is part of the code under comparison) on bytes both arms share."""
-
-    def make(name):
-        def run(spark: SparkSession, path: str) -> DataFrame:
-            # the materialized corpus is one small parquet file = ONE input
-            # split; without the spread every per-doc AES/parse kernel
-            # serializes onto a single core (measured: q58 pinned ran 5000
-            # docs in 1 task, ~8s where ~1s is the 8-core number)
-            df = _spread(spark.read.parquet(path).select("doc_id", "pdf"), "doc_id")
-            base = _pinned_extract_kernel(
-                tagged=(name == "q66_tagged_pdf_roundtrip")
-            )
-            if name == "q58_aes256_pdf_roundtrip":
-                from .operators import pdftext
-
-                engine_seed = _q58_engine_seeds(spark)
-
-                def kernel(batches):
-                    pdftext.seed_kdf(engine_seed)
-                    yield from base(batches)
-
-            elif name == "q60_password_pdf_roundtrip":
-                # the R6 quarter of the q60 corpus validates a BOOK
-                # password — seed its 2.B hashes (+ the empty probe) so
-                # workers never pay the KDF, same as the entry query
-                from . import spec
-                from .operators import pdftext
-
-                engine_seed = _q58_engine_seeds(
-                    spark, 1, spec.KNOWN_USER_PASSWORDS[0]
-                )
-
-                def kernel(batches):
-                    pdftext.seed_kdf(engine_seed)
-                    yield from base(batches)
-
-            elif name in (
-                "q69_scanned_pdf_ocr_roundtrip",
-                "q70_noisy_scan_ocr_roundtrip",
-            ):
-                # the scanned corpus measures the entry query's kernel:
-                # extract + the fixture OCR rung in one call
-                def kernel(batches):
-                    for frame in batches:
-                        yield _ocr_roundtrip_frame(frame["doc_id"], [
-                            bytes(p).decode("latin-1") for p in frame["pdf"]
-                        ])
-
-                return df.mapInPandas(kernel, schema=_OCR_ROUNDTRIP_SCHEMA)
-
-            elif name == "q71_render_pages_roundtrip":
-                # the render corpus measures the executed render slice:
-                # fixture render → strict PNG decode → template match
-                from .operators.multimodal import render_pdf_pages_fixture
-                from .operators.ocr import ocr_bitmap
-                from .operators.raster import decode_png_gray
-
-                def kernel(batches):
-                    import pandas as pd
-
-                    for frame in batches:
-                        rows = []
-                        for doc_id, pdf_bytes in zip(
-                            frame["doc_id"], frame["pdf"]
-                        ):
-                            texts = []
-                            for _, png in render_pdf_pages_fixture(
-                                bytes(pdf_bytes)
-                            ):
-                                w, h, raw = decode_png_gray(png)
-                                texts.append(ocr_bitmap(w, h, raw))
-                            rows.append(
-                                (int(doc_id), "\n".join(texts), False)
-                            )
-                        yield pd.DataFrame(
-                            rows,
-                            columns=[
-                                "doc_id", "extracted_text", "needs_ocr",
-                            ],
-                        )
-
-            else:
-                kernel = base
-            return df.mapInPandas(kernel, schema=_ROUNDTRIP_SCHEMA)
-
-        return run
-
-    return {name: make(name) for name in PINNED_PAYLOAD_BUILDERS}

@@ -1,5 +1,10 @@
-"""Entry queries, extension pack 8 (round 6): simple-font encoding
-coverage — named Annex D base encodings and subset fonts.
+"""Payload builders and DuckDB twins of the round-6 PDF roundtrip
+carriers q59–q68: named Annex D base encodings and subset fonts, the user
+password book, classic stream filters, inline images, incremental
+updates, form XObjects, encrypted object streams, tagged reading order,
+Type3 fonts and hybrid-reference files. Each query is a row of
+entry_roundtrips.ROUNDTRIPS (builder, oracle SQL, extraction rung, R6
+seed); this module defines no query of its own.
 
 Reference parity: the reference reads these real-world font shapes
 through pdfplumber/fitz (src/claim_extractor/extract_text.py:27-36,
@@ -13,19 +18,7 @@ identity against a DuckDB twin computed straight from the table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .entry_queries_ext7 import (
-    PINNED_PAYLOAD_BUILDERS,
-    _docs,
-    _page_lines,
-    _positioned_items,
-    _q58_kdf_seeds,
-    _Q49_SQL,
-    _Q55_SQL,
-    _ROUNDTRIP_SCHEMA,
-    _roundtrip_kernel,
-)
+from .entry_queries_ext7 import _page_lines, _positioned_items
 
 # ---------------------------------------------------------------------------
 # q59 — simple-font ENCODING MATRIX round trip under the ORACLE GATE: the
@@ -70,14 +63,6 @@ def _payload_q59(doc_id: int, text: str) -> bytes:
     )
 
 
-def q59_font_encodings_pdf_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q59), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
 _Q59_SQL = r"""
 WITH parts AS (
   SELECT doc_id,
@@ -93,21 +78,6 @@ SELECT doc_id,
        (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES = {
-    "q59_font_encodings_pdf_roundtrip": q59_font_encodings_pdf_roundtrip,
-}
-
-_EXT8_ORACLES = {
-    "q59_font_encodings_pdf_roundtrip": _Q59_SQL,
-}
-
-PINNED_PAYLOAD_BUILDERS["q59_font_encodings_pdf_roundtrip"] = _payload_q59
-
-
-def ext8_oracles() -> dict[str, str]:
-    return dict(_EXT8_ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -150,32 +120,6 @@ def _payload_q60(doc_id: int, text: str) -> bytes:
     )
 
 
-def q60_password_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import spec
-    from .fixtures import minipdf
-    from .operators import pdftext
-
-    docs = _docs(spark, sf_dir)
-    writer_seed, engine_seed = _q58_kdf_seeds(
-        spark, _Q60_R6_OWNER, 1, user_pwd=spec.KNOWN_USER_PASSWORDS[0]
-    )
-    inner = _roundtrip_kernel(_payload_q60)
-
-    def kernel(batches):
-        minipdf.seed_kdf(writer_seed)
-        pdftext.seed_kdf(engine_seed)
-        yield from inner(batches)
-
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT8_QUERIES["q60_password_pdf_roundtrip"] = q60_password_pdf_roundtrip
-_EXT8_ORACLES["q60_password_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q60_password_pdf_roundtrip"] = _payload_q60
-
-
 # ---------------------------------------------------------------------------
 # q61 — CLASSIC STREAM FILTERS round trip under the ORACLE GATE: the
 # pre-PDF-1.5 corpus shapes VERDICT r5 item 7 named — /LZWDecode (9→12
@@ -205,17 +149,6 @@ def _payload_q61(doc_id: int, text: str) -> bytes:
     )
 
 
-def q61_filtered_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q61), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT8_QUERIES["q61_filtered_pdf_roundtrip"] = q61_filtered_pdf_roundtrip
-_EXT8_ORACLES["q61_filtered_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q61_filtered_pdf_roundtrip"] = _payload_q61
-
-
 # ---------------------------------------------------------------------------
 # q62 — INLINE IMAGES (BI/ID/EI) round trip under the ORACLE GATE: the
 # q49 contract over pages that interleave text with inline-image binary
@@ -242,17 +175,6 @@ def _payload_q62(doc_id: int, text: str) -> bytes:
     # image placement rotates: before / between / after the text items
     items.insert(doc_id % (len(items) + 1), ("image", decoy))
     return write_minimal_pdf([items], compress=bool(doc_id % 2))
-
-
-def q62_inline_image_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q62), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT8_QUERIES["q62_inline_image_pdf_roundtrip"] = q62_inline_image_pdf_roundtrip
-_EXT8_ORACLES["q62_inline_image_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q62_inline_image_pdf_roundtrip"] = _payload_q62
 
 
 # ---------------------------------------------------------------------------
@@ -291,12 +213,6 @@ def _payload_q63(doc_id: int, text: str) -> bytes:
     return write_incremental_pdf([stale], [v2_p1, amended], compress=compress)
 
 
-def q63_incremental_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q63), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
 _Q63_SQL = r"""
 WITH parts AS (
   SELECT doc_id,
@@ -315,11 +231,6 @@ SELECT doc_id,
         + CASE WHEN k > 0 THEN len(trim(l4)) ELSE 0 END) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES["q63_incremental_pdf_roundtrip"] = q63_incremental_pdf_roundtrip
-_EXT8_ORACLES["q63_incremental_pdf_roundtrip"] = _Q63_SQL
-PINNED_PAYLOAD_BUILDERS["q63_incremental_pdf_roundtrip"] = _payload_q63
 
 
 # ---------------------------------------------------------------------------
@@ -396,14 +307,6 @@ def _payload_q64(doc_id: int, text: str) -> bytes:
     )
 
 
-def q64_form_xobject_pdf_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q64), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
 _Q64_SQL = r"""
 WITH parts AS (
   SELECT doc_id,
@@ -424,11 +327,6 @@ SELECT doc_id,
         + len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES["q64_form_xobject_pdf_roundtrip"] = q64_form_xobject_pdf_roundtrip
-_EXT8_ORACLES["q64_form_xobject_pdf_roundtrip"] = _Q64_SQL
-PINNED_PAYLOAD_BUILDERS["q64_form_xobject_pdf_roundtrip"] = _payload_q64
 
 
 # ---------------------------------------------------------------------------
@@ -464,34 +362,6 @@ def _payload_q65(doc_id: int, text: str) -> bytes:
         revision=rev,
         predictor=bool(doc_id % 2),
     )
-
-
-def q65_encrypted_objstm_pdf_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from .fixtures import minipdf
-    from .operators import pdftext
-
-    # the R6 quarter pays Algorithm 2.B exactly once per distinct encrypt
-    # dict: derived in the q58 2-wave parallel stage, seeded into workers
-    writer_seed, engine_seed = _q58_kdf_seeds(spark, b"r6-owner")
-    inner = _roundtrip_kernel(_payload_q65)
-
-    def kernel(batches):
-        minipdf.seed_kdf(writer_seed)
-        pdftext.seed_kdf(engine_seed)
-        yield from inner(batches)
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        kernel, schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT8_QUERIES["q65_encrypted_objstm_pdf_roundtrip"] = (
-    q65_encrypted_objstm_pdf_roundtrip
-)
-_EXT8_ORACLES["q65_encrypted_objstm_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q65_encrypted_objstm_pdf_roundtrip"] = _payload_q65
 
 
 # ---------------------------------------------------------------------------
@@ -538,33 +408,6 @@ def _payload_q66(doc_id: int, text: str) -> bytes:
     )
 
 
-def _tagged_roundtrip_kernel(builder):
-    """(doc_id, text) batches → (doc_id, extracted_text, needs_ocr) via
-    builder + the engine's TAGGED rung (logical reading order)."""
-    import pandas as pd
-
-    from .operators.extract import extract_tagged_pdf_text
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                t, ocr = extract_tagged_pdf_text(builder(doc_id, str(text)))
-                rows.append((doc_id, t, ocr))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "extracted_text", "needs_ocr"]
-            )
-
-    return kernel
-
-
-def q66_tagged_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _tagged_roundtrip_kernel(_payload_q66), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
 _Q66_SQL = r"""
 WITH parts AS (
   SELECT doc_id,
@@ -580,11 +423,6 @@ SELECT doc_id,
        (len(l1) + len(l2) + len(l3) + len(l4) + 3) < 40 AS needs_ocr
 FROM parts
 """
-
-
-EXT8_QUERIES["q66_tagged_pdf_roundtrip"] = q66_tagged_pdf_roundtrip
-_EXT8_ORACLES["q66_tagged_pdf_roundtrip"] = _Q66_SQL
-PINNED_PAYLOAD_BUILDERS["q66_tagged_pdf_roundtrip"] = _payload_q66
 
 
 # ---------------------------------------------------------------------------
@@ -614,17 +452,6 @@ def _payload_q67(doc_id: int, text: str) -> bytes:
     )
 
 
-def q67_type3_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q67), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT8_QUERIES["q67_type3_pdf_roundtrip"] = q67_type3_pdf_roundtrip
-_EXT8_ORACLES["q67_type3_pdf_roundtrip"] = _Q55_SQL
-PINNED_PAYLOAD_BUILDERS["q67_type3_pdf_roundtrip"] = _payload_q67
-
-
 # ---------------------------------------------------------------------------
 # q68 — HYBRID-REFERENCE file round trip under the ORACLE GATE: the q49
 # positioned-page contract where every payload is the Acrobat 6 compat
@@ -647,12 +474,3 @@ def _payload_q68(doc_id: int, text: str) -> bytes:
     )
 
 
-def q68_hybrid_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q68), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-EXT8_QUERIES["q68_hybrid_pdf_roundtrip"] = q68_hybrid_pdf_roundtrip
-_EXT8_ORACLES["q68_hybrid_pdf_roundtrip"] = _Q49_SQL
-PINNED_PAYLOAD_BUILDERS["q68_hybrid_pdf_roundtrip"] = _payload_q68

@@ -1,4 +1,9 @@
-"""Entry queries, extension pack 9 (round 7): the EXECUTED OCR slice.
+"""Entry queries, extension pack 9 (round 7): the EXECUTED OCR slice,
+the round-7 PDF carriers, and training-data quality operators (q79–q83).
+
+The roundtrip queries q69–q78 are rows of entry_roundtrips.ROUNDTRIPS;
+this pack holds their payload builders and the twins the shared
+three-line template (entry_roundtrips._three_line_sql) cannot express.
 
 q69 drives the scanned-document path end to end, in-sandbox and under
 the ORACLE GATE: per document a genuine scanned PDF is written (pages
@@ -31,11 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .entry_queries_ext import _docs
-from .entry_queries_ext7 import (
-    _OCR_ROUNDTRIP_SCHEMA,
-    PINNED_PAYLOAD_BUILDERS,
-    _ocr_roundtrip_frame,
-)
 
 EXT9_QUERIES: dict = {}
 _EXT9_ORACLES: dict = {}
@@ -68,29 +68,6 @@ def _payload_q70(doc_id: int, text: str) -> bytes:
         [[f"NOISY N{doc_id}", body, f"AMOUNT {doc_id % 89}.25"]],
         noise_seed=doc_id,
     )
-
-
-def _scan_roundtrip(payload_builder):
-    """scan bytes → the extract kernel with ``ocr='fixture'`` (empty page
-    + needs_ocr, then the OCR fallback on the same row) → text."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        def kernel(batches):
-            for pdf in batches:
-                yield _ocr_roundtrip_frame(pdf["doc_id"], [
-                    payload_builder(int(d), str(t)).decode("latin-1")
-                    for d, t in zip(pdf["doc_id"], pdf["text"])
-                ])
-
-        return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-            kernel, schema=_OCR_ROUNDTRIP_SCHEMA
-        )
-
-    return run
-
-
-q69_scanned_pdf_ocr_roundtrip = _scan_roundtrip(_payload_q69)
-q70_noisy_scan_ocr_roundtrip = _scan_roundtrip(_payload_q70)
 
 
 # the charset class mirrors spec.OCR_FONT_CHARSET (A-Z 0-9 # , - . / : sp);
@@ -134,14 +111,6 @@ FROM parts
 """
 
 
-EXT9_QUERIES["q69_scanned_pdf_ocr_roundtrip"] = q69_scanned_pdf_ocr_roundtrip
-_EXT9_ORACLES["q69_scanned_pdf_ocr_roundtrip"] = _Q69_SQL
-PINNED_PAYLOAD_BUILDERS["q69_scanned_pdf_ocr_roundtrip"] = _payload_q69
-EXT9_QUERIES["q70_noisy_scan_ocr_roundtrip"] = q70_noisy_scan_ocr_roundtrip
-_EXT9_ORACLES["q70_noisy_scan_ocr_roundtrip"] = _Q70_SQL
-PINNED_PAYLOAD_BUILDERS["q70_noisy_scan_ocr_roundtrip"] = _payload_q70
-
-
 # ---------------------------------------------------------------------------
 # q71 — EXECUTED page render under the ORACLE GATE (S7 closure, reference
 # claude_pdf_image_extractor.py:62-74). Per document a PDF is built — even
@@ -176,63 +145,6 @@ def _payload_q71(doc_id: int, text: str) -> bytes:
     return write_scanned_pdf([lines])
 
 
-def q71_render_pages_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .operators.multimodal import with_rendered_pages
-    from .operators.ocr import ocr_bitmap
-    from .operators.raster import decode_png_gray
-
-    def build(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(d) for d in pdf["doc_id"]],
-                    "payload": [
-                        _payload_q71(int(d), str(t))
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    payloads = _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        build, schema="doc_id long, payload binary"
-    )
-    rendered = with_rendered_pages(
-        payloads, payload_col="payload", id_col="doc_id", impl="fixture"
-    )
-
-    def verify(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, page_no, png, err in zip(
-                pdf["doc_id"], pdf["page_no"], pdf["png"], pdf["error"]
-            ):
-                if err is not None and not (
-                    isinstance(err, float) and pd.isna(err)
-                ):
-                    rows.append(
-                        (int(doc_id), None, None, None, None, str(err))
-                    )
-                    continue
-                w, h, raw = decode_png_gray(bytes(png))
-                rows.append(
-                    (int(doc_id), int(page_no), w, h, ocr_bitmap(w, h, raw),
-                     None)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "page_no", "width", "height",
-                         "recovered_text", "render_error"],
-            )
-
-    return rendered.mapInPandas(
-        verify,
-        schema="doc_id long, page_no int, width int, height int, "
-               "recovered_text string, render_error string",
-    )
-
-
 # geometry twin: width = 2*margin + cell_w * longest line, height =
 # 2*margin + line_pitch * (n_lines - 1) + 7 — spec.OCR_SCAN_* as literals
 # (4 / 6 / 10), 3 lines → height 35; identical for both carrier parities
@@ -254,11 +166,6 @@ SELECT doc_id,
        CAST(NULL AS VARCHAR) AS render_error
 FROM parts
 """
-
-
-EXT9_QUERIES["q71_render_pages_roundtrip"] = q71_render_pages_roundtrip
-_EXT9_ORACLES["q71_render_pages_roundtrip"] = _Q71_SQL
-PINNED_PAYLOAD_BUILDERS["q71_render_pages_roundtrip"] = _payload_q71
 
 
 # ---------------------------------------------------------------------------
@@ -308,37 +215,6 @@ def _payload_q72(doc_id: int, text: str) -> bytes:
     return write_minimal_pdf([ops])
 
 
-def q72_ctm_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q72), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-# all six matrix variants preserve line order and clustering, so the twin
-# is matrix-blind: one predicted text per document (the q55 shape)
-_Q72_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Matrix M' || CAST(doc_id AS VARCHAR) AS l1,
-         'Ctm ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Grand ' || CAST(doc_id % 79 AS VARCHAR) || '.75' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT9_QUERIES["q72_ctm_pdf_roundtrip"] = q72_ctm_pdf_roundtrip
-_EXT9_ORACLES["q72_ctm_pdf_roundtrip"] = _Q72_SQL
-PINNED_PAYLOAD_BUILDERS["q72_ctm_pdf_roundtrip"] = _payload_q72
-
-
 # ---------------------------------------------------------------------------
 # q73 — CTM × FORM-XOBJECT composition under the ORACLE GATE (r7): the
 # letterhead shape under a page CTM. Do saves/restores graphics state
@@ -380,14 +256,6 @@ def _payload_q73(doc_id: int, text: str) -> bytes:
     return write_form_pdf([page], header)  # control: no wrapper
 
 
-def q73_ctm_form_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q73), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
 # matrix-blind twin: every variant preserves line order and the 16-pt
 # cluster pitch (scaled pitches stay inside (PDF_Y_TOL, PDF_PARA_GAP))
 _Q73_SQL = r"""
@@ -406,11 +274,6 @@ SELECT doc_id,
          AS needs_ocr
 FROM parts
 """
-
-
-EXT9_QUERIES["q73_ctm_form_roundtrip"] = q73_ctm_form_roundtrip
-_EXT9_ORACLES["q73_ctm_form_roundtrip"] = _Q73_SQL
-PINNED_PAYLOAD_BUILDERS["q73_ctm_form_roundtrip"] = _payload_q73
 
 
 # ---------------------------------------------------------------------------
@@ -473,35 +336,6 @@ def _payload_q74(doc_id: int, text: str) -> bytes:
     return write_minimal_pdf([ops])
 
 
-def q74_tm_matrix_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q74), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q74_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Tmx T' || CAST(doc_id AS VARCHAR) AS l1,
-         'Text ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Due ' || CAST(doc_id % 71 AS VARCHAR) || '.10' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT9_QUERIES["q74_tm_matrix_roundtrip"] = q74_tm_matrix_roundtrip
-_EXT9_ORACLES["q74_tm_matrix_roundtrip"] = _Q74_SQL
-PINNED_PAYLOAD_BUILDERS["q74_tm_matrix_roundtrip"] = _payload_q74
-
-
 # ---------------------------------------------------------------------------
 # q75 — INHERITED PAGE RESOURCES under the ORACLE GATE (r7; ISO 32000
 # §7.7.3.4): real generators hoist the shared /Resources dict onto a
@@ -529,39 +363,6 @@ def _payload_q75(doc_id: int, text: str) -> bytes:
     if variant == 2:
         return write_differences_pdf([page], resources_parent=2)
     return write_differences_pdf([page], resources_parent=1, compress=True)
-
-
-def q75_inherited_resources_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q75), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q75_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Inherit I' || CAST(doc_id AS VARCHAR) AS l1,
-         'Res ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Sum ' || CAST(doc_id % 67 AS VARCHAR) || '.40' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT9_QUERIES["q75_inherited_resources_roundtrip"] = (
-    q75_inherited_resources_roundtrip
-)
-_EXT9_ORACLES["q75_inherited_resources_roundtrip"] = _Q75_SQL
-PINNED_PAYLOAD_BUILDERS["q75_inherited_resources_roundtrip"] = _payload_q75
 
 
 # ---------------------------------------------------------------------------
@@ -623,35 +424,6 @@ def _payload_q76(doc_id: int, text: str) -> bytes:
     )
     pdf = write_minimal_pdf([[("raw", raw)]], rotate=90, rotate_on_pages=True)
     return pdf.replace(b"/MediaBox [0 0 612 792]", b"/MediaBox [20 30 632 822]")
-
-
-def q76_rotate_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q76), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q76_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Rot R' || CAST(doc_id AS VARCHAR) AS l1,
-         'View ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Amt ' || CAST(doc_id % 61 AS VARCHAR) || '.80' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT9_QUERIES["q76_rotate_pdf_roundtrip"] = q76_rotate_pdf_roundtrip
-_EXT9_ORACLES["q76_rotate_pdf_roundtrip"] = _Q76_SQL
-PINNED_PAYLOAD_BUILDERS["q76_rotate_pdf_roundtrip"] = _payload_q76
 
 
 # ---------------------------------------------------------------------------
@@ -718,35 +490,6 @@ def _payload_q77(doc_id: int, text: str) -> bytes:
     return write_minimal_pdf([[("raw", raw)]])
 
 
-def q77_actualtext_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q77), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q77_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Act A' || CAST(doc_id AS VARCHAR) AS l1,
-         'Text ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Sum ' || CAST(doc_id % 67 AS VARCHAR) || '.40' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT9_QUERIES["q77_actualtext_pdf_roundtrip"] = q77_actualtext_pdf_roundtrip
-_EXT9_ORACLES["q77_actualtext_pdf_roundtrip"] = _Q77_SQL
-PINNED_PAYLOAD_BUILDERS["q77_actualtext_pdf_roundtrip"] = _payload_q77
-
-
 # ---------------------------------------------------------------------------
 # q78 — TJ word-break synthesis under the ORACLE GATE (r7, §9.4.3 +
 # spec.TJ_SPACE_KERN): generators that kern word gaps inside TJ arrays
@@ -795,35 +538,6 @@ def _payload_q78(doc_id: int, text: str) -> bytes:
         f"0 -16 Td ({esc(l3)}) Tj ET"
     )
     return write_minimal_pdf([[("raw", raw)]])
-
-
-def q78_tj_kern_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .entry_queries_ext7 import _ROUNDTRIP_SCHEMA, _roundtrip_kernel
-
-    return _docs(spark, sf_dir).select("doc_id", "text").mapInPandas(
-        _roundtrip_kernel(_payload_q78), schema=_ROUNDTRIP_SCHEMA
-    )
-
-
-_Q78_SQL = r"""
-WITH parts AS (
-  SELECT doc_id,
-         'Kern K' || CAST(doc_id AS VARCHAR) AS l1,
-         'Text ' || trim(regexp_replace(substr(text, 1, 30), '\s+', ' ', 'g')) AS l2,
-         'Net ' || CAST(doc_id % 59 AS VARCHAR) || '.60' AS l3
-  FROM documents
-)
-SELECT doc_id,
-       '--- PAGE 1 ---' || chr(10) || l1 || chr(10) || l2 || chr(10) || l3
-         AS extracted_text,
-       (len(trim(l1)) + len(trim(l2)) + len(trim(l3))) < 40 AS needs_ocr
-FROM parts
-"""
-
-
-EXT9_QUERIES["q78_tj_kern_pdf_roundtrip"] = q78_tj_kern_pdf_roundtrip
-_EXT9_ORACLES["q78_tj_kern_pdf_roundtrip"] = _Q78_SQL
-PINNED_PAYLOAD_BUILDERS["q78_tj_kern_pdf_roundtrip"] = _payload_q78
 
 
 # ---------------------------------------------------------------------------

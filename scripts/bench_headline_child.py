@@ -13,11 +13,13 @@ Data-pinned arm (round-6 verdict item 2): when
 ``$SPARK_GRAFT_BENCH_PINNED_DIR`` holds a materialized (doc_id, pdf)
 corpus for a query (written by scripts/bench_pin_corpus.py from HEAD's
 generators), the child times extraction over THOSE bytes instead of the
-arm's own fixture generator — via the arm's exported ``pinned_queries()``
-when present (so e.g. q58's KDF pre-seeding, a code change under test,
-stays in the measurement), else a generic kernel over the arm's
-``extract_real_pdf_text``. Either way both arms see identical input, so
-the ratio measures code, not corpus drift.
+arm's own fixture generator, through the arm's exported
+``pinned_queries()``: each roundtrip query's own extraction path (its
+rung and its KDF pre-seeding, code under test, stay in the measurement)
+over input both arms share, so the ratio measures code, not corpus
+drift. A pinned name the arm does not export reports null, as a missing
+query does; every tree since the ``round 8:`` commit (bench.py's default
+A/B base) exports one for each roundtrip query.
 """
 
 from __future__ import annotations
@@ -26,42 +28,6 @@ import json
 import os
 import sys
 import time
-
-
-def _generic_pinned_fn(name: str):
-    """Fallback pinned extractor for trees predating pinned_queries():
-    the arm's extract_real_pdf_text over the shared bytes."""
-
-    def run(spark, path):
-        import pandas as pd
-
-        from pdf_extraction_ai_agent_spark.operators.extract import (
-            extract_real_pdf_text,
-        )
-
-        def kernel(batches):
-            for b in batches:
-                rows = []
-                for doc_id, payload in zip(b["doc_id"], b["pdf"]):
-                    t, ocr = extract_real_pdf_text(bytes(payload))
-                    rows.append((int(doc_id), t, ocr))
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "extracted_text", "needs_ocr"]
-                )
-
-        return (
-            spark.read.parquet(path)
-            .select("doc_id", "pdf")
-            # one small file = one input split — spread it or the per-doc
-            # kernels run on a single core (same fix as pinned_queries())
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(
-                kernel,
-                schema="doc_id long, extracted_text string, needs_ocr boolean",
-            )
-        )
-
-    return run
 
 
 def main() -> None:
@@ -95,7 +61,9 @@ def main() -> None:
         try:
             ppath = os.path.join(pinned_dir, name) if pinned_dir else ""
             if ppath and os.path.isdir(ppath) and name in qs:
-                fn = pinned_fns.get(name) or _generic_pinned_fn(name)
+                fn = pinned_fns.get(name)
+                if fn is None:
+                    return None
                 if name not in pinned_ran:
                     pinned_ran.append(name)
                 t0 = time.monotonic()

@@ -1,12 +1,14 @@
 """Materialize the pinned roundtrip corpora for the data-pinned A/B.
 
-Builds each named query's (doc_id, pdf) payload corpus ONCE from THIS
-tree's fixture generators (``PINNED_PAYLOAD_BUILDERS``) over the sf
-documents table and writes it as parquet under ``out_dir/<name>``. Both
-A/B arms then extract the SAME bytes (bench.py passes the directory via
-``$SPARK_GRAFT_BENCH_PINNED_DIR``), so a ratio measures extraction code,
-not fixture-generator drift between commits — round-5's q49/q51/q54
-"regressions" were exactly that confound (VERDICT r5, item 2).
+Builds each named roundtrip query's (doc_id, pdf) payload corpus ONCE
+over the sf documents table, through the build half of THIS tree's
+roundtrip kernel (``entry_roundtrips.pinned_corpus``: the row's payload
+builder, as the live query runs it), and writes it as parquet under
+``out_dir/<name>``. Both A/B arms then extract the SAME bytes (bench.py
+passes the directory via ``$SPARK_GRAFT_BENCH_PINNED_DIR``), so a ratio
+measures extraction code, not fixture-generator drift between commits —
+round-5's q49/q51/q54 "regressions" were exactly that confound (VERDICT
+r5, item 2). Names that are not roundtrip rows are skipped.
 
 Usage: bench_pin_corpus.py <out_dir> <sf_dir> <cpus> <name> [name...]
 Prints ONE JSON line {"pinned": {name: rows|"cached"}, "dir": out_dir}.
@@ -25,16 +27,13 @@ def main() -> None:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, root)
 
-    import pandas as pd
-
-    from pdf_extraction_ai_agent_spark import entry_queries_ext8  # noqa: F401
-    from pdf_extraction_ai_agent_spark import entry_queries_ext9  # noqa: F401
-    from pdf_extraction_ai_agent_spark.entry_queries_ext7 import (
-        PINNED_PAYLOAD_BUILDERS,  # ext8/ext9 imports register their builders
+    from pdf_extraction_ai_agent_spark.entry_roundtrips import (
+        ROUNDTRIPS,
+        pinned_corpus,
     )
     from pdf_extraction_ai_agent_spark.session import get_spark
 
-    wanted = [n for n in names if n in PINNED_PAYLOAD_BUILDERS]
+    wanted = [n for n in names if n in ROUNDTRIPS]
     todo = [n for n in wanted if not os.path.isdir(os.path.join(out_dir, n))]
     counts: dict[str, object] = {
         n: "cached" for n in wanted if n not in todo
@@ -58,23 +57,9 @@ def main() -> None:
             .repartition(4 * cpus)
         )
         for name in todo:
-            builder = PINNED_PAYLOAD_BUILDERS[name]
-
-            def kernel(batches, _b=builder):
-                for b in batches:
-                    rows = [
-                        (int(i), _b(int(i), str(t)))
-                        for i, t in zip(b["doc_id"], b["text"])
-                    ]
-                    yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
-
             dest = os.path.join(out_dir, name)
             tmp = dest + ".tmp"
-            (
-                docs.mapInPandas(kernel, schema="doc_id long, pdf binary")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
+            pinned_corpus(docs, name).write.mode("overwrite").parquet(tmp)
             counts[name] = spark.read.parquet(tmp).count()
             os.rename(tmp, dest)  # atomic: a killed run never half-pins
         spark.stop()

@@ -362,25 +362,36 @@ def test_lattice_normalize_no_recompute(spark, sf_dir):
     assert s46 <= s45, f"q46 re-executes the parse subtree: {s46} scans vs q45 {s45}"
 
 
-def _python_evals(plan: str) -> dict[str, int]:
-    """UDF name → number of ``*EvalPython`` nodes of ``plan`` that evaluate
-    it. A node prints ``ArrowEvalPython [f(a#1)#2, g(...)#3], [out…]``:
-    its UDFs are the top-level entries of the first bracket list."""
+def _python_evals(df) -> dict[str, int]:
+    """UDF name → number of ``*EvalPythonExec`` nodes of ``df``'s physical
+    plan that evaluate it. Walks the plan objects over py4j, not the plan
+    string: a plan that reads a cached frame prints that frame's adaptive
+    plan twice (final and initial), so one evaluation would read as two.
+    An adaptive node is followed into its current plan, a query stage of
+    an executed one into the stage's plan, and a cached-frame scan into
+    the frame's own plan. A reused exchange is not followed: its subtree
+    runs once, where it is first planned."""
     from collections import Counter
 
     counts: Counter = Counter()
-    for m in re.finditer(r"EvalPython \[", plan):
-        depth, entry, i = 0, "", m.end()
-        while depth or plan[i] != "]":
-            ch = plan[i]
-            depth += (ch in "([") - (ch in ")]")
-            if ch == "," and not depth:
-                counts[entry.strip().split("(", 1)[0]] += 1
-                entry = ""
-            else:
-                entry += ch
-            i += 1
-        counts[entry.strip().split("(", 1)[0]] += 1
+
+    def items(seq) -> list:
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def walk(node) -> None:
+        kind = node.getClass().getSimpleName()
+        if kind.endswith("EvalPythonExec"):
+            counts.update(udf.name() for udf in items(node.udfs()))
+        if kind == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            walk(node.plan())
+        elif kind == "InMemoryTableScanExec":
+            walk(node.relation().cachedPlan())
+        for child in items(node.children()):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
     return dict(counts)
 
 
@@ -393,7 +404,7 @@ def test_every_python_udf_evaluates_once(spark, transcripts_df):
     from pdf_extraction_ai_agent_spark.plans import pipeline as P
     from pdf_extraction_ai_agent_spark.plans.lineage import with_part_id
 
-    pre = _python_evals(_plan(P._kdf_salt_frame(transcripts_df, "text", (b"",))))
+    pre = _python_evals(P._kdf_salt_frame(transcripts_df, "text", (b"",)))
     assert pre == {"_salts": 1, "_kdf_pack": 1}, pre
 
     # the resumable job's per-bucket-group plan, built with its arguments
@@ -409,7 +420,7 @@ def test_every_python_udf_evaluates_once(spark, transcripts_df):
                                              kdf_seed=seed, ocr="fixture"), {"_kernel"}),
     }
     for name, (df, udfs) in plans.items():
-        evals = _python_evals(_plan(df))
+        evals = _python_evals(df)
         assert evals == dict.fromkeys(udfs, 1), (name, evals)
 
 
