@@ -7,7 +7,8 @@ byte-stream / plain text), boilerplate stripping via text-density +
 link-density node scoring, layout parsing with reading-order sort, regex
 field extraction, LOB classification, normalization, aggregation — all
 declared as DataFrame plans so Catalyst/Tungsten pick the physical strategy,
-with the single heavy stage expressed as a vectorized Arrow UDF (pandas body).
+with the single heavy stage expressed as a vectorized Arrow UDF whose
+body never imports pandas.
 
 Design target: a 10^12-turn Iceberg transcript table on a 1000-executor
 cluster. Tested at small scale on local[*].

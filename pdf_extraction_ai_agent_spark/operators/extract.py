@@ -1,19 +1,26 @@
 """`extract_turn_batch` — the engine's single heavy stage, as a vectorized
-Arrow UDF (pandas body; BASELINE.json input_hint: "vectorized pandas/Arrow
-UDFs, no per-row Python").
+Arrow UDF (pandas-free body over Python lists; BASELINE.json input_hint:
+"vectorized pandas/Arrow UDFs, no per-row Python").
 
 Independent, batch-vectorized implementation of the extraction SPEC
 (``..spec``); the golden tests compare it bit-for-bit against the
 row-at-a-time oracle in ``..oracle.reference_extractor``.
 
-Per batch:
-- payload sniff (pseudo-PDF header / HTML / plain) — numpy select
-- HTML boilerplate strip — pandas str ops over exploded block lines
-  (tag strip, entity unescape, link-density + text-length scoring)
-- pseudo-PDF layout parse — extractall → y-cluster via sorted groupby
-  diff/cumsum → reading-order sort → page markers, needs_ocr flag
-- span extraction — compiled-regex scan per record chunk (the only
-  per-element loop; regex time dominates and runs in C)
+Per Arrow batch (``_extract_columns``: the batch's ``text`` and ``tool``
+as lists in, one list per output column out):
+- payload sniff (pseudo-PDF header / HTML / plain)
+- HTML boilerplate strip — per document over compiled regexes (tag strip,
+  entity unescape, link-density + text-length scoring per block line)
+- pseudo-PDF layout parse — per document: page markers, run parse,
+  y-cluster, reading-order sort, paragraph gaps, needs_ocr flag
+- span extraction — compiled-regex scan per record chunk (regex time
+  dominates and runs in C)
+- the output columns become Arrow arrays through ``arrow_column``, built
+  from buffers: pyarrow 16's ``pa.array`` imports pandas, so a worker
+  that runs only this kernel never loads it.
+
+pandas ``.str`` methods on object columns loop in Python per element
+too, so per-document code over compiled regexes costs no more per turn.
 
 Reference semantics citations: extract_text.py:39-66 (candidate/OCR),
 fitzTest3.py:92-95 (markers), regex_extractor.py:7-19 (patterns/split),
@@ -22,10 +29,10 @@ claude_text_extractor.py:63-84 (pagewise extraction).
 
 from __future__ import annotations
 
+import itertools
+import math
 import re
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -71,220 +78,231 @@ def extract_result_type(with_spans: bool = True, with_lob: bool = False) -> Stru
     return StructType(fields)
 
 
-def to_arrow_struct(pdf: pd.DataFrame, rtype: StructType):
-    """The one pandas → Arrow conversion of a struct-returning kernel: a
-    ``pa.StructArray`` of ``rtype``'s fields, each column converted whole
-    by ``pa.Array.from_pandas`` (NaN/None in object columns become null).
-    Returned from an Arrow UDF it skips PySpark's pandas converter, which
-    walks ``array<struct>`` columns such as ``spans`` element by element
-    (0.52 CPU-s per 20k turns against 0.06 here)."""
+# ---------------------------------------------------------------------------
+# Arrow column builder (pandas-free)
+# ---------------------------------------------------------------------------
+
+
+def _bitmap(flags: list):
+    """Arrow's little-endian bit buffer of ``flags``."""
+    import numpy as np
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    atype = to_arrow_type(rtype)
-    return pa.StructArray.from_arrays(
-        [pa.Array.from_pandas(pdf[f.name], type=f.type) for f in atype],
-        fields=list(atype),
-    )
+    return pa.py_buffer(np.packbits(np.array(flags, dtype=bool), bitorder="little"))
+
+
+def _offsets(lengths: list, large: bool):
+    """The n + 1 offsets buffer of ``lengths``: int64 for the large
+    types, else int32 (a total past 2**31 - 1 raises, as pa.array does
+    for a single chunk)."""
+    import numpy as np
+    import pyarrow as pa
+
+    off = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=off[1:])
+    if not large:
+        if off[-1] > np.iinfo(np.int32).max:
+            raise OverflowError(f"{off[-1]} bytes or items overflow int32 offsets")
+        off = off.astype(np.int32)
+    return pa.py_buffer(off)
+
+
+def arrow_column(values: list, atype):
+    """``values`` (Python objects, None for null) as an Arrow array of
+    ``atype``, equal to ``pa.array(values, atype)``.
+
+    Built from buffers because pyarrow 16's ``pa.array`` (also
+    ``pa.scalar``, ``RecordBatch.from_pylist``) imports pandas through its
+    pandas shim, even on a numpy input: a Python worker that builds its
+    output that way holds ~35-50 MiB more. ``Array.from_buffers``,
+    ``StructArray``/``ListArray.from_arrays`` and ``Array.to_pylist`` do
+    not import it. Covers the types the kernels emit: bool, fixed-width
+    integers, struct (dict values), (large) list, (large) string and
+    (large) binary (bytes values)."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = pa.types
+    n = len(values)
+    null_count = values.count(None)
+    if null_count:
+        nulls = [v is None for v in values]
+        validity = _bitmap([not x for x in nulls])
+        mask = pa.Array.from_buffers(pa.bool_(), n, [None, _bitmap(nulls)])
+    else:
+        validity = mask = None
+    if t.is_boolean(atype):
+        bits = _bitmap([bool(v) for v in values])
+        return pa.Array.from_buffers(atype, n, [validity, bits], null_count)
+    if t.is_integer(atype):
+        ints = np.array([v or 0 for v in values] if null_count else values, dtype=str(atype))
+        return pa.Array.from_buffers(atype, n, [validity, pa.py_buffer(ints)], null_count)
+    if t.is_struct(atype):
+        children = []
+        for f in atype:
+            key = f.name  # a pyarrow property that builds a new str: read it once
+            children.append(arrow_column([None if v is None else v[key] for v in values], f.type))
+        return pa.StructArray.from_arrays(children, fields=list(atype), mask=mask)
+    if t.is_list(atype) or t.is_large_list(atype):
+        large = t.is_large_list(atype)
+        lists = [v or () for v in values] if null_count else values
+        offsets = pa.Array.from_buffers(pa.int64() if large else pa.int32(), n + 1,
+                                        [None, _offsets(list(map(len, lists)), large)])
+        items = arrow_column(list(itertools.chain.from_iterable(lists)), atype.value_type)
+        cls = pa.LargeListArray if large else pa.ListArray
+        return cls.from_arrays(offsets, items, type=atype, mask=mask)
+    if t.is_string(atype) or t.is_large_string(atype):
+        strs = [v or "" for v in values] if null_count else values
+        joined = "".join(strs)
+        if joined.isascii():  # one encode; byte lengths are char lengths
+            data, lengths = joined.encode("ascii"), list(map(len, strs))
+        else:  # a lone surrogate raises UnicodeEncodeError, as pa.array does
+            enc = [v.encode() for v in strs]
+            data, lengths = b"".join(enc), list(map(len, enc))
+        large = t.is_large_string(atype)
+    elif t.is_binary(atype) or t.is_large_binary(atype):
+        enc = [v or b"" for v in values] if null_count else values
+        data, lengths = b"".join(enc), list(map(len, enc))
+        large = t.is_large_binary(atype)
+    else:
+        raise TypeError(f"arrow_column: no buffer builder for {atype}")
+    buffers = [validity, _offsets(lengths, large), pa.py_buffer(data)]
+    return pa.Array.from_buffers(atype, n, buffers, null_count)
 
 
 # ---------------------------------------------------------------------------
-# HTML branch (fully vectorized)
+# HTML branch (per document over compiled regexes)
 # ---------------------------------------------------------------------------
 
-_TAG_RE = r"<[^>]+>"
-_LINK_RE = r"<a\s[^>]*>(.*?)</a>"
+_TAG = re.compile(r"<[^>]+>")
+_LINK = re.compile(r"<a\s[^>]*>(.*?)</a>", re.S)
+_WS = re.compile(r"\s+")
+_BR = re.compile(r"(?i)<br\s*/?\s*>")
 # spec.HTML_SKIP_TAGS subtree removal (Readability rule): whole well-formed
 # spans, dotall so multi-line <style>/<script> bodies vanish BEFORE the
 # line split (their removal leaves blank lines → zero-length → dropped).
-_SKIP_SPAN_RE = (
+_SKIP_SPAN = re.compile(
     r"(?is)<(" + "|".join(spec.HTML_SKIP_TAGS) + r")\b[^>]*>.*?</\1\s*>"
 )
+_SKIP_OPENERS = tuple("<" + t for t in spec.HTML_SKIP_TAGS)
 # Table linearization (spec.HTML_CELL_SEP): td/th and tr boundaries become
 # the pipe separator. Applied on the raw payload, so a table whose rows sit
 # on separate lines collapses onto ONE line — the same one-block view the
 # oracle's DOM takes of the whole <table>.
-_CELL_BOUND_RE = r"(?is)</t[dh]\s*>\s*<t[dh][^>]*>|</tr\s*>\s*<tr[^>]*>"
+_CELL_BOUND = re.compile(r"(?is)</t[dh]\s*>\s*<t[dh][^>]*>|</tr\s*>\s*<tr[^>]*>")
 
 
-def _extract_html_batch(s: pd.Series) -> pd.Series:
-    """Boilerplate strip over a batch of HTML payloads (one block per line,
-    per the generator/SPEC contract; scoring matches the oracle's DOM-node
+def _html_main_text(s: str) -> str:
+    """Boilerplate strip of one HTML payload (one block per line, per the
+    generator/SPEC contract; scoring matches the oracle's DOM-node
     scoring on that grammar)."""
-    if s.empty:
-        return pd.Series([], dtype=object)
-    # C-substring prefilters before the (slow, dotall) realism regexes —
-    # corpora without script/style/table markup pay ~nothing (same
-    # discipline as pdftext's /ObjStm prefilter)
-    # case=False (r8, advisor finding): the rewrite regexes are (?i) and
-    # the oracle's HTMLParser lowercases tag names, so a case-sensitive
-    # prefilter would skip '<SCRIPT>'/'<BR>'/'</TD>' payloads on the
-    # engine side only — a latent twin-parity break; one lowered copy
-    # keeps the gate a C-level scan
-    low = s.str.lower()
-    skip_mask = pd.Series(False, index=s.index)
-    for t in spec.HTML_SKIP_TAGS:
-        skip_mask |= low.str.contains("<" + t, regex=False, na=False)
-    if skip_mask.any():
-        s = s.copy()
-        s[skip_mask] = s[skip_mask].str.replace(_SKIP_SPAN_RE, "", regex=True)
-    br_mask = low.str.contains("<br", regex=False, na=False)
-    if br_mask.any():
-        s = s.copy()
-        s[br_mask] = s[br_mask].str.replace(
-            r"(?i)<br\s*/?\s*>", " ", regex=True
-        )
-    cell_mask = low.str.contains("</td", regex=False, na=False) | low.str.contains(
-        "</th", regex=False, na=False
-    ) | low.str.contains("</tr", regex=False, na=False)
-    if cell_mask.any():
-        s = s.copy()
-        s[cell_mask] = s[cell_mask].str.replace(
-            _CELL_BOUND_RE, spec.HTML_CELL_SEP, regex=True
-        )
-    lines = s.str.split("\n").explode()
-    # link text chars per line — findall only where "<a" occurs at all
-    # (~27% of fixture lines; the regex needs that literal to match, so the
-    # C-substring prefilter is a strict superset). Assignment goes through
-    # numpy positions: the exploded index has duplicates, and index-aligned
-    # Series assignment would misalign them.
-    import numpy as np
+    # C-substring prefilters before the (slow, dotall) realism regexes,
+    # all read off the payload as it came in: corpora without
+    # script/style/table markup pay ~nothing. Lowered, because the rewrite
+    # regexes are (?i) and the oracle's HTMLParser lowercases tag names: a
+    # case-sensitive gate would skip '<SCRIPT>'/'<BR>'/'</TD>' payloads on
+    # the engine side only
+    low = s.lower()
+    if any(o in low for o in _SKIP_OPENERS):
+        s = _SKIP_SPAN.sub("", s)
+    if "<br" in low:
+        s = _BR.sub(" ", s)
+    if "</td" in low or "</th" in low or "</tr" in low:
+        s = _CELL_BOUND.sub(spec.HTML_CELL_SEP, s)
+    kept = []
+    for line in s.split("\n"):
+        # link text chars: the regex needs the literal "<a" to match
+        link = sum(map(len, _LINK.findall(line))) if "<a" in line else 0
+        # strip tags, unescape the generator's entity set, collapse whitespace
+        text = _TAG.sub("", line).replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
+        text = _WS.sub(" ", text).strip()
+        n = len(text)
+        if n >= spec.HTML_MIN_TEXT_LEN and link / max(n, 1) <= spec.HTML_MAX_LINK_DENSITY:
+            kept.append(text)
+    return spec.HTML_BLOCK_JOINER.join(kept)
 
-    lc_vals = np.zeros(len(lines), dtype="int64")
-    # na=False keeps the mask strictly boolean: a null payload routed here
-    # would otherwise make contains() return NaN (object dtype) and the
-    # positional assignment below raise instead of scoring the row as 0
-    mask = lines.str.contains("<a", regex=False, na=False).to_numpy()
-    if mask.any():
-        lc_vals[mask] = (
-            lines[mask]
-            .str.findall(_LINK_RE, flags=re.S)
-            .map(lambda l: sum(len(x) for x in l) if isinstance(l, list) else 0)
-            .to_numpy(dtype="int64")
-        )
-    link_chars = pd.Series(lc_vals, index=lines.index)
-    # strip tags, unescape the generator's entity set, collapse whitespace
-    text = lines.str.replace(_TAG_RE, "", regex=True)
-    text = (
-        text.str.replace("&lt;", "<", regex=False)
-        .str.replace("&gt;", ">", regex=False)
-        .str.replace("&amp;", "&", regex=False)
-    )
-    text = text.str.replace(r"\s+", " ", regex=True).str.strip()
-    tlen = text.str.len()
-    keep = (tlen >= spec.HTML_MIN_TEXT_LEN) & (link_chars / tlen.clip(lower=1) <= spec.HTML_MAX_LINK_DENSITY)
-    kept = text[keep]
-    joined = kept.groupby(level=0).agg(spec.HTML_BLOCK_JOINER.join)
-    return joined.reindex(s.index, fill_value="")
+
+def _extract_html_batch(texts: list) -> list:
+    """The HTML branch over a batch of payloads (the ``_guarded`` unit)."""
+    return [_html_main_text(s) for s in texts]
 
 
 # ---------------------------------------------------------------------------
-# pseudo-PDF branch (vectorized layout parse)
+# pseudo-PDF branch (per-document layout parse)
 # ---------------------------------------------------------------------------
 
-_PAGE_EXTRACT = r"^%%PAGE (\d+)$"
-_RUN_EXTRACT = r"^BT ([0-9.]+) ([0-9.]+) Td \((.*)\) Tj ET$"
+_PAGE_LINE = re.compile(r"^%%PAGE (\d+)$")
+_RUN_LINE = re.compile(r"^BT ([0-9.]+) ([0-9.]+) Td \((.*)\) Tj ET$")
 
 
-def _extract_pdf_batch(s: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Returns (extracted_text, needs_ocr) for a batch of pseudo-PDF payloads.
+def _number(s: str) -> float | None:
+    """A captured page number or coordinate as a float; None where the
+    run is malformed: non-ASCII digits ("\\d" matches them), a bad dot
+    pattern ("1.2.3", "."), or out of float range. These are the strings
+    pandas' ``to_numeric(errors='coerce')`` dropped; past 17 significant
+    digits ``float`` rounds correctly where pandas' parser did not."""
+    if not s.isascii():
+        return None
+    try:
+        v = float(s)
+    except ValueError:
+        return None
+    return None if math.isinf(v) else v
 
-    Assembly is separator-interleaved numpy (one C-level ``str.join`` per
-    page / doc) instead of pandas pure-python groupby-agg chains — the
-    round-1 profile attributed ~30-48% of kernel time to those aggs. The
-    layout semantics (y-clustering, x-order join, paragraph gaps, page
-    strip, marker-only pages) are unchanged and pinned by the golden suite.
-    """
-    if s.empty:
-        return pd.Series([], dtype=object), pd.Series([], dtype=bool)
-    lines = s.str.split("\n").explode()
-    df = pd.DataFrame({"doc": lines.index, "line": lines.values})
-    page = df["line"].str.extract(_PAGE_EXTRACT, expand=False)
-    runs = df["line"].str.extract(_RUN_EXTRACT)
-    df["page"] = pd.to_numeric(page, errors="coerce").groupby(df["doc"]).ffill()
-    df["x"] = pd.to_numeric(runs[0], errors="coerce")
-    df["y"] = pd.to_numeric(runs[1], errors="coerce")
-    df["txt"] = runs[2]
-    rdf = df.dropna(subset=["x", "y", "page"])[["doc", "page", "x", "y", "txt"]].copy()
 
-    # needs_ocr: total stripped run chars per doc < OCR_MIN_CHARS
-    chars = rdf["txt"].str.strip().str.len().groupby(rdf["doc"]).sum()
-    needs_ocr = chars.reindex(s.index, fill_value=0) < spec.OCR_MIN_CHARS
+def _pdf_layout_text(s: str) -> tuple[str, bool]:
+    """(page-marked text, needs_ocr) of one pseudo-PDF payload.
 
-    # y-cluster: sort (doc, page, -y), new line when gap > PDF_Y_TOL
-    rdf = rdf.sort_values(["doc", "page", "y"], ascending=[True, True, False], kind="mergesort")
-    grp = rdf.groupby(["doc", "page"], sort=False)
-    gap = grp["y"].diff().fillna(0.0) * -1.0  # positive gaps going down
-    rdf["cluster"] = (gap > spec.PDF_Y_TOL).cumsum()
-    # line_y = max y within (doc, page, cluster) — cluster ids are a global
-    # cumsum that does NOT reset at page boundaries, so the page keys matter
-    rdf["line_y"] = rdf.groupby(["doc", "page", "cluster"], sort=False)["y"].transform("max")
+    A run belongs to the last well-formed page marker above it (runs
+    before the first one are dropped); pages print in ascending number,
+    a repeated number merging its runs, and a marker-only page prints its
+    marker alone. Within a page: y descending (stable), a new line when
+    the gap to the previous run's y exceeds PDF_Y_TOL, x ascending
+    (stable) within a line, and a blank line between lines whose line-y
+    (the line's max y) gap is at least PDF_PARA_GAP."""
+    pages: dict[float, list] = {}
+    runs = None  # the current page's (x, y, text) list
+    chars = 0  # stripped run characters: needs_ocr when < OCR_MIN_CHARS
+    for line in s.split("\n"):
+        if line.startswith("BT "):
+            m = _RUN_LINE.search(line)
+            if m and runs is not None:
+                x, y = _number(m.group(1)), _number(m.group(2))
+                if x is not None and y is not None:
+                    txt = m.group(3)
+                    runs.append((x, y, txt))
+                    chars += len(txt.strip())
+        elif line.startswith("%%PAGE "):
+            m = _PAGE_LINE.search(line)
+            p = _number(m.group(1)) if m else None
+            if p is not None:
+                runs = pages.setdefault(p, [])
+    out = []
+    for p in sorted(pages):
+        lines: list[list] = []  # [line_y, [(x, text), ...]] top to bottom
+        prev_y = None
+        for x, y, txt in sorted(pages[p], key=lambda r: -r[1]):
+            if prev_y is None or prev_y - y > spec.PDF_Y_TOL:
+                lines.append([y, []])
+            lines[-1][1].append((x, txt))
+            prev_y = y
+        parts = []
+        prev_line_y = None
+        for line_y, row in lines:
+            if prev_line_y is not None:
+                parts.append("\n\n" if prev_line_y - line_y >= spec.PDF_PARA_GAP else "\n")
+            row.sort(key=lambda r: r[0])
+            parts.append(" ".join([t for _, t in row]))
+            prev_line_y = line_y
+        out.append(spec.PAGE_MARKER_FMT.format(n=int(p)) + "\n" + "".join(parts).strip())
+    return "\n".join(out).strip(), chars < spec.OCR_MIN_CHARS
 
-    # within a cluster: x ascending (reading order)
-    rdf = rdf.sort_values(["doc", "page", "cluster", "x"], kind="mergesort")
 
-    doc = rdf["doc"].to_numpy()
-    pg = rdf["page"].to_numpy()
-    clu = rdf["cluster"].to_numpy()
-    line_y = rdf["line_y"].to_numpy()
-    txt = rdf["txt"].to_numpy(dtype=object)
-    n = len(rdf)
-
-    # row-level separator BEFORE each row, within its page:
-    #   same cluster            → ' '   (x-order join)
-    #   new cluster, gap < PARA → '\n'
-    #   new cluster, gap ≥ PARA → '\n\n' (paragraph blank line)
-    #   first row of page       → ''
-    bodies: dict[tuple, str] = {}
-    if n:  # marker-only batches have zero runs
-        new_page = np.empty(n, dtype=bool)
-        new_page[0] = True
-        new_page[1:] = (doc[1:] != doc[:-1]) | (pg[1:] != pg[:-1])
-        new_cluster = np.empty(n, dtype=bool)
-        new_cluster[0] = True
-        new_cluster[1:] = clu[1:] != clu[:-1]
-        prev_line_y = np.empty(n, dtype=np.float64)
-        prev_line_y[0] = np.nan
-        prev_line_y[1:] = line_y[:-1]
-        para = new_cluster & ~new_page & ((prev_line_y - line_y) >= spec.PDF_PARA_GAP)
-        seps = np.where(
-            new_page, "", np.where(~new_cluster, " ", np.where(para, "\n\n", "\n"))
-        ).astype(object)
-
-        # one interleaved C-join per page, then strip (page-body contract)
-        parts = np.empty(2 * n, dtype=object)
-        parts[0::2] = seps
-        parts[1::2] = txt
-        page_starts = np.flatnonzero(new_page)
-        page_ends = np.append(page_starts[1:], n)
-        join = "".join
-        for ps, pe in zip(page_starts, page_ends):
-            bodies[(doc[ps], pg[ps])] = join(parts[2 * ps : 2 * pe]).strip()
-
-    # docs may contain page markers with zero runs (near-empty last pages are
-    # not emitted by the generator, but handle marker-only pages anyway)
-    markers = (
-        df.dropna(subset=["page"])[["doc", "page"]]
-        .drop_duplicates()
-        .sort_values(["doc", "page"], kind="mergesort")
-    )
-    mdoc = markers["doc"].to_numpy()
-    mpg = markers["page"].to_numpy()
-    out: dict = {}
-    cur_doc = None
-    acc: list[str] = []
-    for i in range(len(markers)):
-        d = mdoc[i]
-        if d != cur_doc:
-            if cur_doc is not None:
-                out[cur_doc] = "\n".join(acc).strip()
-            cur_doc, acc = d, []
-        acc.append(f"--- PAGE {int(mpg[i])} ---\n" + bodies.get((d, mpg[i]), ""))
-    if cur_doc is not None:
-        out[cur_doc] = "\n".join(acc).strip()
-
-    text = pd.Series(out, dtype=object)
-    return text.reindex(s.index, fill_value=""), needs_ocr
+def _extract_pdf_batch(texts: list) -> tuple[list, list]:
+    """(extracted texts, needs_ocr flags) for a batch of pseudo-PDF
+    payloads (the ``_guarded`` unit)."""
+    res = [_pdf_layout_text(s) for s in texts]
+    return [t for t, _ in res], [o for _, o in res]
 
 
 # ---------------------------------------------------------------------------
@@ -533,33 +551,121 @@ def _spans_chunked(t: str) -> list[dict]:
     return recs
 
 
-def _spans_batch(texts: pd.Series) -> pd.Series:
-    return pd.Series([_spans_chunked(t) for t in texts], index=texts.index, dtype=object)
-
-
 def _error_message(e: Exception) -> str:
     """The error channel's per-row value."""
     return f"{type(e).__name__}: {e}"[:500]
 
 
 # ---------------------------------------------------------------------------
-# the UDF
+# the kernel
 # ---------------------------------------------------------------------------
 
 
-def extract_turn_batch(
-    text: pd.Series, tool: pd.Series, with_spans: bool = True, with_lob: bool = True,
-    ocr: str | None = None,
-) -> pd.DataFrame:
-    """Pure-pandas batch kernel (also unit-testable off-Spark).
+def _payload_kind(t: str, tool) -> str:
+    if t.startswith(spec.PDF_HEADER):
+        return "pdf"
+    # real PDF byte streams ("%PDF-1.x"): dispatched to the library chain
+    # (extract_real_pdf_text); rows land in the error channel when the libs
+    # are absent instead of being silently treated as plain text
+    if t.startswith("%PDF-"):
+        return "pdf_real"
+    if tool == "html_paste" or t.lstrip().startswith(("<html", "<!DOCTYPE")):
+        return "html"
+    return "plain"
+
+
+def _extract_columns(text: list, tool: list, with_spans: bool, with_lob: bool,
+                     ocr: str | None) -> dict[str, list]:
+    """The kernel over one batch: ``text``/``tool`` values (None for
+    null) in, one list per output column out (extract_result_type's
+    fields, in order).
 
     Error channel (reference cli.py:41-49 — exceptions become per-row
-    `error` values, never a job abort): if a vectorized branch raises, the
-    affected rows are retried ONE AT A TIME and only the truly poisoned
-    rows carry an error string. Real PDFs have no vectorized form: one
-    loop extracts each and catches its error. One pathological document
-    in 10^12 turns must not kill a multi-hour job; Spark task retries only
-    cover infra failures, not deterministic poison input.
+    `error` values, never a job abort): if a branch raises on its batch,
+    its rows are retried ONE AT A TIME and only the truly poisoned rows
+    carry an error string. Real PDFs go through one loop that extracts
+    each and catches its error. One pathological document in 10^12 turns
+    must not kill a multi-hour job; Spark task retries only cover infra
+    failures, not deterministic poison input."""
+    text = [t if isinstance(t, str) else "" for t in text]
+    kind = [_payload_kind(t, tl) for t, tl in zip(text, tool)]
+    n = len(text)
+    extracted = [""] * n
+    needs_ocr = [False] * n
+    error = [None] * n
+
+    def _guarded(k, batch_fn):
+        """Run a branch over the rows of kind ``k``; on failure, retry it
+        on one-row slices so only the poison rows land in the error
+        channel."""
+        rows = [i for i in range(n) if kind[i] == k]
+        if not rows:
+            return
+        try:
+            batch_fn(rows)
+            return
+        except Exception:
+            pass
+        for i in rows:
+            try:
+                batch_fn([i])
+            except Exception as e:  # poison row → error channel
+                extracted[i] = ""
+                error[i] = _error_message(e)
+
+    def plain_batch(rows):
+        for i in rows:
+            extracted[i] = text[i].strip()
+
+    def html_batch(rows):
+        for i, t in zip(rows, _extract_html_batch([text[i] for i in rows])):
+            extracted[i] = t
+
+    def pdf_batch(rows):
+        texts, flags = _extract_pdf_batch([text[i] for i in rows])
+        for i, t, o in zip(rows, texts, flags):
+            extracted[i], needs_ocr[i] = t, o
+
+    _guarded("plain", plain_batch)
+    _guarded("html", html_batch)
+    _guarded("pdf", pdf_batch)
+
+    for i in range(n):
+        if kind[i] == "pdf_real":  # library dispatch per document
+            try:
+                extracted[i], needs_ocr[i] = extract_real_pdf_text(text[i])
+            except Exception as exc:  # poison row → error channel
+                error[i] = _error_message(exc)
+
+    if ocr:
+        from .ocr import OCR_IMPLS
+
+        fn = OCR_IMPLS[ocr]
+        for i in range(n):
+            if needs_ocr[i]:
+                try:
+                    extracted[i] = fn(text[i])
+                except Exception as e:  # error channel; the text layer's text stays
+                    error[i] = _error_message(e)
+
+    cols = {"extracted_text": extracted}
+    if with_spans:
+        cols["spans"] = [_spans_chunked(t) for t in extracted]
+    cols.update({"needs_ocr": needs_ocr, "payload_kind": kind, "error": error})
+    if with_lob:
+        cols["lob"], cols["lobs"] = score_lobs(extracted)
+    return cols
+
+
+def extract_turn_batch(
+    text, tool, with_spans: bool = True, with_lob: bool = True,
+    ocr: str | None = None,
+):
+    """The kernel off Spark: ``text``/``tool`` are any sequences (pandas
+    Series included; NaN and None are null), and the result is a pandas
+    DataFrame of ``_extract_columns``' lists, indexed like ``text`` when
+    it is a Series. An adapter for tests, perfbench's kernel replay and
+    driver-side callers; the Spark UDF calls the list kernel directly.
 
     ``with_spans=False`` skips the span scan entirely (~half the kernel on
     transcript corpora) and omits the column — manual column pruning
@@ -579,100 +685,34 @@ def extract_turn_batch(
     text and lands in ``error``. Spans and LOB then describe the final
     text. None keeps the flag-only contract.
     """
-    text = text.fillna("")
-    is_pdf = text.str.startswith(spec.PDF_HEADER)
-    # real PDF byte streams ("%PDF-1.x"): dispatched to the library chain
-    # (extract_real_pdf_text); rows land in the error channel when the libs
-    # are absent instead of being silently treated as plain text
-    is_real_pdf = (~is_pdf) & text.str.startswith("%PDF-")
-    lstripped = text.str.lstrip()
-    is_html = (~is_pdf) & (~is_real_pdf) & (
-        lstripped.str.startswith("<html")
-        | lstripped.str.startswith("<!DOCTYPE")
-        | (tool.fillna("") == "html_paste")
-    )
-    is_plain = ~is_pdf & ~is_real_pdf & ~is_html
+    import pandas as pd
 
-    extracted = pd.Series("", index=text.index, dtype=object)
-    needs_ocr = pd.Series(False, index=text.index)
-    error = pd.Series(None, index=text.index, dtype=object)
+    cols = _extract_columns(list(text), list(tool), with_spans, with_lob, ocr)
+    return pd.DataFrame(cols, index=text.index if isinstance(text, pd.Series) else None)
 
-    def _guarded(mask, batch_fn):
-        """Run the vectorized branch; on failure, retry it on one-row
-        slices so only the poison rows land in the error channel."""
-        if not mask.any():
-            return
-        sub = text[mask]
-        try:
-            batch_fn(sub)
-            return
-        except Exception:
-            pass
-        for i in range(len(sub)):
-            row = sub.iloc[i : i + 1]
-            try:
-                batch_fn(row)
-            except Exception as e:  # poison row → error channel
-                extracted.at[row.index[0]] = ""
-                error.at[row.index[0]] = _error_message(e)
 
-    def plain_batch(sub):
-        extracted[sub.index] = sub.str.strip()
+def _arrow_kernel(with_spans: bool, with_lob: bool, ocr: str | None, seed: dict | None):
+    """The extract UDF's body: Arrow ``text``/``tool`` arrays in, one
+    struct array of extract_result_type out, pandas never imported.
+    ``seed`` (Algorithm 2.B entries, or None) is installed in the worker
+    before the batch runs."""
+    rtype = extract_result_type(with_spans, with_lob)
 
-    def html_batch(sub):
-        extracted[sub.index] = _extract_html_batch(sub)
+    def _kernel(text, tool):  # unannotated: arrow_udf's default is scalar (eval type 250)
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-    def pdf_batch(sub):
-        pdf_text, pdf_ocr = _extract_pdf_batch(sub)
-        extracted[sub.index] = pdf_text
-        needs_ocr[sub.index] = pdf_ocr.to_numpy(dtype=bool)
+        if seed is not None:
+            from .pdftext import seed_kdf
 
-    _guarded(is_plain, plain_batch)
-    _guarded(is_html, html_batch)
-    _guarded(is_pdf, pdf_batch)
+            seed_kdf(seed)
+        cols = _extract_columns(text.to_pylist(), tool.to_pylist(), with_spans, with_lob, ocr)
+        atype = to_arrow_type(rtype)
+        return pa.StructArray.from_arrays(
+            [arrow_column(cols[f.name], f.type) for f in atype], fields=list(atype)
+        )
 
-    if is_real_pdf.any():
-        # library dispatch per document (error channel when libs are absent);
-        # collect every row, then write each column once
-        texts, flags, errors = [], [], []
-        for val in text[is_real_pdf]:
-            try:
-                t, o = extract_real_pdf_text(val)
-                e = None
-            except Exception as exc:  # poison row → error channel
-                t, o, e = "", False, _error_message(exc)
-            texts.append(t)
-            flags.append(o)
-            errors.append(e)
-        extracted[is_real_pdf] = texts
-        needs_ocr[is_real_pdf] = flags
-        error[is_real_pdf] = errors
-
-    if ocr:
-        from .ocr import OCR_IMPLS
-
-        fn = OCR_IMPLS[ocr]
-        for idx, payload in text[needs_ocr].items():
-            try:
-                extracted.at[idx] = fn(payload)
-            except Exception as e:  # error channel; the text layer's text stays
-                error.at[idx] = _error_message(e)
-
-    kind = pd.Series(
-        np.select(
-            [is_pdf, is_real_pdf, is_html], ["pdf", "pdf_real", "html"], default="plain"
-        ),
-        index=text.index,
-    )
-    cols = {"extracted_text": extracted}
-    if with_spans:
-        cols["spans"] = _spans_batch(extracted)
-    cols.update(
-        {"needs_ocr": needs_ocr, "payload_kind": kind, "error": error}
-    )
-    if with_lob:
-        cols["lob"], cols["lobs"] = score_lobs(extracted)
-    return pd.DataFrame(cols)
+    return _kernel
 
 
 def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
@@ -700,27 +740,20 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
 
     ``ocr`` runs the OCR fallback on ``needs_ocr`` rows inside the same
     kernel (extract_turn_batch), so the payload crosses to Python once.
+
+    The UDF is a scalar Arrow UDF: Arrow arrays in, one struct array out,
+    built by ``arrow_column`` without pandas. Returning the struct itself
+    also skips PySpark's pandas converter, which walks ``array<struct>``
+    columns such as ``spans`` element by element.
     """
     if ocr:
         from .ocr import OCR_IMPLS
 
         if ocr not in OCR_IMPLS:
             raise ValueError(f"ocr must be None or one of {sorted(OCR_IMPLS)}: {ocr!r}")
-    rtype = extract_result_type(with_spans, with_lob)
     seed = dict(kdf_seed) if kdf_seed else None
-
-    def _kernel(text, tool):  # unannotated: arrow_udf's default is scalar (eval type 250)
-        if seed is not None:
-            from .pdftext import seed_kdf
-
-            seed_kdf(seed)
-        pdf = extract_turn_batch(
-            text.to_pandas(), tool.to_pandas(), with_spans=with_spans, with_lob=with_lob,
-            ocr=ocr,
-        )
-        return to_arrow_struct(pdf, rtype)
-
-    udf = F.arrow_udf(_kernel, rtype)
+    udf = F.arrow_udf(_arrow_kernel(with_spans, with_lob, ocr, seed),
+                      extract_result_type(with_spans, with_lob))
     res = udf(F.col(text_col), F.col(tool_col))
     out = df.withColumn("_ex", res).withColumn(
         "extracted_text", F.col("_ex.extracted_text")

@@ -9,7 +9,7 @@ Shape:
                              spread across S tasks for the map-only UDF
                              stage; safe because extraction is per-turn
                              independent, SURVEY §7 risk 5)
-      → extract_turn_batch  (Arrow UDF (pandas body): payload sniff, HTML
+      → extract_turn_batch  (Arrow UDF, pandas-free: payload sniff, HTML
                              boilerplate strip, pseudo-PDF layout parse,
                              opt-in OCR fallback, span extraction, LOB
                              keyword scoring)
@@ -27,7 +27,6 @@ everything after it is narrow and stays in whole-stage codegen.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -112,26 +111,33 @@ def _kdf_salt_frame(
     ``_salts`` output is pushed below its projection, so Catalyst would
     evaluate ``_salts`` twice in one stage — two Python workers per task
     and every encrypted PDF's bytes sent to Python twice."""
+    from ..operators.extract import arrow_column
     from ..operators.pdftext import aesv3_kdf_salts, kdf_seed_for_salts
 
-    @F.pandas_udf("binary")
-    def _salts(t: pd.Series) -> pd.Series:
-        return t.map(
-            lambda s: aesv3_kdf_salts(str(s).encode("latin-1", errors="ignore"))
-            if s is not None else None
-        )
+    def _salts(t):  # unannotated: arrow_udf's default is scalar (eval type 250)
+        import pyarrow as pa
 
-    @F.pandas_udf("binary")
-    def _kdf_pack(s: pd.Series) -> pd.Series:
+        return arrow_column([
+            None if s is None else aesv3_kdf_salts(s.encode("latin-1", errors="ignore"))
+            for s in t.to_pylist()
+        ], pa.binary())
+
+    def _kdf_pack(s):
+        import pyarrow as pa
+
         # per password: validation-salt hash ‖ key-salt hash (64 bytes),
         # packed in book order → len(pwds) × 64 bytes total
-        def pack(b) -> bytes | None:
+        def pack(b: bytes | None) -> bytes | None:
             if b is None:
                 return None
-            d = kdf_seed_for_salts(bytes(b), pwds[1:])
-            v, k = bytes(b)[:8], bytes(b)[8:16]
+            d = kdf_seed_for_salts(b, pwds[1:])
+            v, k = b[:8], b[8:16]
             return b"".join(d[(p, v, b"")] + d[(p, k, b"")] for p in pwds)
-        return s.map(pack)
+
+        return arrow_column([pack(b) for b in s.to_pylist()], pa.binary())
+
+    _salts = F.arrow_udf(_salts, "binary")
+    _kdf_pack = F.arrow_udf(_kdf_pack, "binary")
 
     return (
         transcripts.select(F.col(text_col).alias("t"))

@@ -1,7 +1,8 @@
-"""The extract kernel runs as an Arrow UDF that returns its struct through
-``to_arrow_struct``: on Spark, for every (with_spans, with_lob) pair, the
-output schema and every value must equal the pandas kernel run off-Spark
-row by row — NULL and empty texts, error-channel rows and nulls included."""
+"""The extract kernel runs as an Arrow UDF that builds its struct with
+``arrow_column``: on Spark, for every (with_spans, with_lob) pair, the
+output schema and every value must equal the kernel run off-Spark
+(``extract_turn_batch``) row by row — NULL and empty texts, error-channel
+rows and nulls included."""
 
 import random
 

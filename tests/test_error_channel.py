@@ -10,10 +10,10 @@ from pdf_extraction_ai_agent_spark.operators import extract as ex
 def test_poison_row_isolated(monkeypatch):
     real = ex._extract_html_batch
 
-    def poisoned(s: pd.Series) -> pd.Series:
-        if s.str.contains("POISON").any():
+    def poisoned(texts: list) -> list:
+        if any("POISON" in t for t in texts):
             raise ValueError("decoder exploded")
-        return real(s)
+        return real(texts)
 
     monkeypatch.setattr(ex, "_extract_html_batch", poisoned)
 

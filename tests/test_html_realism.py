@@ -1,10 +1,9 @@
 """Twin differentials for the r7 HTML realism rules: spec.HTML_SKIP_TAGS
 subtree drop and spec.HTML_CELL_SEP table linearization.  The engine
-(vectorized line model, operators/extract.py) and the oracle (DOM model,
+(per-document line model, operators/extract.py) and the oracle (DOM model,
 oracle/reference_extractor.py) are independent implementations — these
 tests pin their equality on the modeled domain."""
 
-import pandas as pd
 import pytest
 
 from pdf_extraction_ai_agent_spark.operators.extract import _extract_html_batch
@@ -14,7 +13,7 @@ from pdf_extraction_ai_agent_spark.oracle.reference_extractor import (
 
 
 def _both(html: str) -> tuple[str, str]:
-    eng = _extract_html_batch(pd.Series([html])).iloc[0]
+    eng = _extract_html_batch([html])[0]
     return eng, extract_html_main_content(html)
 
 
