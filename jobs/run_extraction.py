@@ -13,8 +13,9 @@ processes only unfinished buckets), writes (conv_id, turn_idx, ts,
 extracted_text, spans, needs_ocr, payload_kind, error, turn_pos,
 claim_number, name, date, confidence, lob, lobs) partitioned by part_id.
 
-The salt fan-out and the ordering strategy come from the largest
-conversation (extract_pipeline's ``salt_buckets='auto'``): one
+The partitioning and ordering strategy come from the largest
+conversation (extract_pipeline's ``salt_buckets='auto'``: conv_id alone
+and one window unless a conversation outgrows a turn bucket): one
 column-pruned pre-pass whose result is cached in the lineage stats table
 per run-group, so resumes skip it.
 

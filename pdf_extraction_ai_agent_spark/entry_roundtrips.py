@@ -215,7 +215,7 @@ def _kernel(rung: str, seeds: tuple[dict, dict] | None,
                 text = pd.Series([p.decode("latin-1") for p in pdfs], dtype=object)
                 res = extract.extract_turn_batch(
                     text, pd.Series(None, index=text.index, dtype=object),
-                    with_spans=False, with_lob=False, ocr="fixture",
+                    with_spans=False, with_fields=False, ocr="fixture",
                 )
                 yield pd.DataFrame({
                     "doc_id": ids,

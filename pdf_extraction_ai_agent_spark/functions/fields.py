@@ -2,8 +2,24 @@
 
 Reference: src/claim_extractor/parse_fields.py:25-67 (first-match regex
 ladders + confidence). No UDFs: ``regexp_extract``/``coalesce``/``when``
-compile into whole-stage codegen, so this stage is JVM-side and vectorized
-for free.
+compile into whole-stage codegen.
+
+The flagship pipeline no longer runs the F2 ladders here: the extract
+kernel parses claim_number/name/date/confidence in Python ``re``
+(operators/extract.py ``_parse_fields``), the reference's own regex
+engine, on text it already holds. These Catalyst ladders are Java regex
+and diverge from the reference (``parse_fields_oracle``) where the text
+leaves ASCII:
+
+- ``(?i)`` folds ASCII case only: ``'Claım No: ABC12345'`` (dotless ı)
+  finds no claim, where Python folds ı, İ and ſ onto i/s;
+- ``\\s`` is ASCII whitespace only: ``'Claim No:\\xa0ABC12345'`` and
+  ``'Claimant:\\xa0John Smith'`` find nothing across the no-break space;
+- ``\\d`` is ASCII digits only: ``'Loss date ٣/14/2024'`` finds no date;
+- the date ladder has no dateutil rung: ``'Sept 5, 2024'`` is NULL.
+
+``claim_number_col``/``date_col`` still serve q01, and
+``with_parsed_fields`` is perfbench's ``fields.job_s`` probe.
 """
 
 from __future__ import annotations

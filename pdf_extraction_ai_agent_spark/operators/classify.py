@@ -13,7 +13,7 @@ Reference:
 C1 and C2 are ONE pure-Python keyword scorer (``score_lobs``): the text is
 uppercased once, C1 sums C-level ``str.count`` per LOB keyword list and C2
 tests each padded token with ``in``. The extraction kernel
-(``extract_turn_batch(..., with_lob=True)``) runs it on the text it just
+(``extract_turn_batch(..., with_fields=True)``) runs it on the text it just
 extracted, so the flagship pipeline's ``lob``/``lobs`` ride the kernel's
 existing Arrow round trip. ``classify_lob_c1`` / ``classify_lobs_c2`` are
 thin pandas UDFs over the same scorer for Column callers (q03, q35).

@@ -15,6 +15,8 @@ as lists in, one list per output column out):
   y-cluster, reading-order sort, paragraph gaps, needs_ocr flag
 - span extraction — compiled-regex scan per record chunk (regex time
   dominates and runs in C)
+- F2 fields (optional) — the reference's first-match claim/name/date
+  ladders over the final text in Python ``re``, plus the LOB scores
 - the output columns become Arrow arrays through ``arrow_column``, built
   from buffers: pyarrow 16's ``pa.array`` imports pandas, so a worker
   that runs only this kernel never loads it.
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -68,13 +71,23 @@ EXTRACT_RESULT_TYPE = StructType(
 )
 
 
-def extract_result_type(with_spans: bool = True, with_lob: bool = False) -> StructType:
+FIELDS_RESULT_FIELDS = [
+    StructField("claim_number", StringType()),
+    StructField("name", StringType()),
+    StructField("date", StringType()),
+    StructField("confidence", DoubleType()),
+    StructField("lob", StringType()),
+    StructField("lobs", LOBS_TYPE),
+]
+
+
+def extract_result_type(with_spans: bool = True, with_fields: bool = False) -> StructType:
     """The kernel's return struct: EXTRACT_RESULT_TYPE, minus ``spans``
-    when pruned (manual pruning through the UDF boundary), plus the
-    ``lob``/``lobs`` classification when requested."""
+    when pruned (manual pruning through the UDF boundary), plus the F2
+    fields and the ``lob``/``lobs`` classification when requested."""
     fields = [f for f in EXTRACT_RESULT_TYPE.fields if with_spans or f.name != "spans"]
-    if with_lob:
-        fields += [StructField("lob", StringType()), StructField("lobs", LOBS_TYPE)]
+    if with_fields:
+        fields += FIELDS_RESULT_FIELDS
     return StructType(fields)
 
 
@@ -117,8 +130,8 @@ def arrow_column(values: list, atype):
     output that way holds ~35-50 MiB more. ``Array.from_buffers``,
     ``StructArray``/``ListArray.from_arrays`` and ``Array.to_pylist`` do
     not import it. Covers the types the kernels emit: bool, fixed-width
-    integers, struct (dict values), (large) list, (large) string and
-    (large) binary (bytes values)."""
+    integers, float64, struct (dict values), (large) list, (large) string
+    and (large) binary (bytes values)."""
     import numpy as np
     import pyarrow as pa
 
@@ -134,9 +147,11 @@ def arrow_column(values: list, atype):
     if t.is_boolean(atype):
         bits = _bitmap([bool(v) for v in values])
         return pa.Array.from_buffers(atype, n, [validity, bits], null_count)
-    if t.is_integer(atype):
-        ints = np.array([v or 0 for v in values] if null_count else values, dtype=str(atype))
-        return pa.Array.from_buffers(atype, n, [validity, pa.py_buffer(ints)], null_count)
+    if t.is_integer(atype) or t.is_float64(atype):
+        dtype = "float64" if t.is_float64(atype) else str(atype)
+        nums = np.array([0 if v is None else v for v in values] if null_count else values,
+                        dtype=dtype)
+        return pa.Array.from_buffers(atype, n, [validity, pa.py_buffer(nums)], null_count)
     if t.is_struct(atype):
         children = []
         for f in atype:
@@ -414,21 +429,25 @@ _RECORD_SPLIT = re.compile(spec.RECORD_SPLIT_PAT)
 # field scan order within a record == spec.SPAN_FIELD_ORDER (date handled
 # separately because it needs normalization-validation of candidates).
 # Each field carries a LITERAL PREFILTER: a chunk can only match the regex
-# if its lowercased text contains one of these substrings (they are the
-# case-folded literal anchors of the spec pattern — a SUPERSET of matches,
-# so skipping on a miss is sound). str.find runs ~10× faster per byte than
-# the regex alternation, and the name field hits <3% of chunks (profiled):
-# the prefilter made the whole span scan 1.45× faster, bit-exact.
+# if its lowercased text contains one of its anchors (claim: "claim", "ref";
+# name: "claimant", "insured", "name"; amount: "$"; reason: "reason",
+# "cause", "description" — a SUPERSET of matches, so skipping on a miss is
+# sound). str.find runs ~10× faster per byte than the regex alternation,
+# and the name field hits <3% of chunks (profiled): the prefilter made the
+# whole span scan 1.45× faster, bit-exact.
+# The lowered gates are unsound on text holding one of _FOLD_TRAPS:
+# re.IGNORECASE folds 'İ' (U+0130) and 'ı' (U+0131) onto 'i' and 'ſ'
+# (U+017F) onto 's', and str.lower() does not ('Claım No: ABC12345'
+# matches CLAIM_NO_PAT, its lowered text holds no "claim"). Such text runs
+# every regex. These three and the Kelvin sign (U+212A, which lower() maps
+# to 'k') are the only non-ASCII characters IGNORECASE matches to an ASCII
+# letter (tests/test_kernel_fields.py enumerates them), so on any other
+# text the gates stay sound. ASCII text skips the scan (str.isascii reads
+# a flag); the perfbench corpora hold an em dash in over half their texts.
 # KEEP IN LOCKSTEP with spec.CLAIM_NO_PAT / NAME_PATTERNS[0] / AMOUNT_PAT /
 # REASON_PAT — the oracle-parity golden + hypothesis suites enforce it.
-_FIELD_RES = [
-    ("claim_number", _CLAIM_NO, ("claim", "ref")),
-    ("name", _NAME, ("claimant", "insured", "name")),
-    ("amount", _AMOUNT, ("$",)),
-    ("reason", _REASON, ("reason", "cause", "description")),
-]
-# bound-method search handles for the unrolled hot loop (round-7 item d);
-# _FIELD_RES stays as the declarative table (exp scripts, docs)
+_FOLD_TRAPS = ("\u0130", "\u0131", "\u017f")
+# bound-method search handles for the unrolled hot loop (round-7 item d)
 _FIELD_SEARCHES = (_CLAIM_NO.search, _NAME.search, _AMOUNT.search, _REASON.search)
 _DATE_SEARCHES = tuple(p.search for p in _DATES)
 
@@ -493,6 +512,7 @@ def _spans_chunked(t: str) -> list[dict]:
     split_search = _RECORD_SPLIT.search
     claim_s, name_s, amount_s, reason_s = _FIELD_SEARCHES
     d0_s, d1_s, d2_s = _DATE_SEARCHES
+    trap0, trap1, trap2 = _FOLD_TRAPS
     norm_date = _norm_date_cached
     start = 0
     n = len(t)
@@ -502,17 +522,24 @@ def _spans_chunked(t: str) -> list[dict]:
         chunk = t[start:end]
         if chunk:
             # literal prefilters: a regex cannot match without one of its
-            # anchors (C-level `in` on the lowered chunk); straight-line
-            # per field — unrolled (round-7 measurement d)
-            low = chunk.lower()
-            if "claim" in low or "ref" in low:
+            # anchors (C-level `in` on the lowered chunk, unless it holds a
+            # _FOLD_TRAPS character); straight-line per field — unrolled
+            # (round-7 measurement d)
+            if chunk.isascii() or not (trap0 in chunk or trap1 in chunk or trap2 in chunk):
+                low = chunk.lower()
+                claim_ok = "claim" in low or "ref" in low
+                name_ok = "claimant" in low or "insured" in low or "name" in low
+                reason_ok = "reason" in low or "cause" in low or "description" in low
+            else:
+                claim_ok = name_ok = reason_ok = True
+            if claim_ok:
                 fm = claim_s(chunk)
                 if fm:
                     append(
                         {"field": "claim_number", "start": start + fm.start(1),
                          "end": start + fm.end(1), "value": fm.group(1).strip()}
                     )
-            if "claimant" in low or "insured" in low or "name" in low:
+            if name_ok:
                 fm = name_s(chunk)
                 if fm:
                     append(
@@ -526,7 +553,7 @@ def _spans_chunked(t: str) -> list[dict]:
                         {"field": "amount", "start": start + fm.start(1),
                          "end": start + fm.end(1), "value": fm.group(1).strip()}
                     )
-            if "reason" in low or "cause" in low or "description" in low:
+            if reason_ok:
                 fm = reason_s(chunk)
                 if fm:
                     append(
@@ -549,6 +576,56 @@ def _spans_chunked(t: str) -> list[dict]:
             break
         start = m.end()
     return recs
+
+
+# ---------------------------------------------------------------------------
+# F2 fields (reference parse_fields.py:25-67)
+# ---------------------------------------------------------------------------
+
+_CLAIM_LADDER = tuple(re.compile(p).search for p in spec.CLAIM_PATTERNS)
+_NAME_LADDER = tuple(re.compile(p).search for p in spec.NAME_PATTERNS)
+_W_CLAIM, _W_NAME, _W_DATE = (
+    spec.CONFIDENCE_WEIGHTS[k] for k in ("claim_number", "name", "date")
+)
+
+
+def _first_group(ladder: tuple, t: str) -> str | None:
+    """Group 1 (stripped) of the first ladder pattern that matches ``t``."""
+    for search in ladder:
+        m = search(t)
+        if m:
+            return m.group(1).strip()
+    return None
+
+
+def _parse_fields(texts: list) -> tuple[list, list, list, list]:
+    """(claim_number, name, date, confidence) columns of ``texts``: each
+    ladder's first hit over the whole text, the date normalized to
+    ``yyyy-MM-dd`` (None when it does not normalize), and the weighted
+    confidence rounded to 2 places — parse_fields_oracle's semantics, in
+    the same Python ``re``. The claim ladder is (?i) and the name pattern
+    lists its keywords, so both are gated on their lowered literal anchors
+    like the span scan, on text free of _FOLD_TRAPS."""
+    claims, names, dates, confs = [], [], [], []
+    norm_date = _norm_date_cached
+    trap0, trap1, trap2 = _FOLD_TRAPS
+    for t in texts:
+        if t.isascii() or not (trap0 in t or trap1 in t or trap2 in t):
+            low = t.lower()
+            claim_ok = "claim" in low
+            name_ok = "claimant" in low or "insured" in low or "name" in low
+        else:
+            claim_ok = name_ok = True
+        claim = _first_group(_CLAIM_LADDER, t) if claim_ok else None
+        name = _first_group(_NAME_LADDER, t) if name_ok else None
+        raw = _first_group(_DATE_SEARCHES, t)
+        date = norm_date(raw) if raw else None
+        claims.append(claim)
+        names.append(name)
+        dates.append(date)
+        confs.append(round((_W_CLAIM if claim else 0.0) + (_W_NAME if name else 0.0)
+                           + (_W_DATE if date else 0.0), 2))
+    return claims, names, dates, confs
 
 
 def _error_message(e: Exception) -> str:
@@ -574,7 +651,7 @@ def _payload_kind(t: str, tool) -> str:
     return "plain"
 
 
-def _extract_columns(text: list, tool: list, with_spans: bool, with_lob: bool,
+def _extract_columns(text: list, tool: list, with_spans: bool, with_fields: bool,
                      ocr: str | None) -> dict[str, list]:
     """The kernel over one batch: ``text``/``tool`` values (None for
     null) in, one list per output column out (extract_result_type's
@@ -652,13 +729,15 @@ def _extract_columns(text: list, tool: list, with_spans: bool, with_lob: bool,
     if with_spans:
         cols["spans"] = [_spans_chunked(t) for t in extracted]
     cols.update({"needs_ocr": needs_ocr, "payload_kind": kind, "error": error})
-    if with_lob:
+    if with_fields:
+        (cols["claim_number"], cols["name"], cols["date"],
+         cols["confidence"]) = _parse_fields(extracted)
         cols["lob"], cols["lobs"] = score_lobs(extracted)
     return cols
 
 
 def extract_turn_batch(
-    text, tool, with_spans: bool = True, with_lob: bool = True,
+    text, tool, with_spans: bool = True, with_fields: bool = True,
     ocr: str | None = None,
 ):
     """The kernel off Spark: ``text``/``tool`` are any sequences (pandas
@@ -674,29 +753,31 @@ def extract_turn_batch(
     pipeline and the resumable job keep the default: spans are part of
     the north-rule output contract.
 
-    ``with_lob`` appends the C1/C2 LOB classification of the extracted
-    text (``lob``, ``lobs`` — operators.classify.score_lobs) so the
-    pipeline's classification rides this kernel's Arrow round trip.
+    ``with_fields`` appends the F2 fields of the extracted text
+    (``claim_number``, ``name``, ``date``, ``confidence`` — the
+    reference's parse_fields ladders) and its C1/C2 LOB classification
+    (``lob``, ``lobs`` — operators.classify.score_lobs), so the pipeline's
+    field parse and classification ride this kernel's Arrow round trip.
 
     ``ocr`` (None | 'auto' | 'fixture' | 'real', resolved through
     operators.ocr.OCR_IMPLS) runs the OCR fallback on the ``needs_ocr``
     rows (reference extract_text.py:18-24): their text becomes the OCR
     output of the raw payload, and an OCR failure keeps the text layer's
-    text and lands in ``error``. Spans and LOB then describe the final
-    text. None keeps the flag-only contract.
+    text and lands in ``error``. Spans, fields and LOB then describe the
+    final text. None keeps the flag-only contract.
     """
     import pandas as pd
 
-    cols = _extract_columns(list(text), list(tool), with_spans, with_lob, ocr)
+    cols = _extract_columns(list(text), list(tool), with_spans, with_fields, ocr)
     return pd.DataFrame(cols, index=text.index if isinstance(text, pd.Series) else None)
 
 
-def _arrow_kernel(with_spans: bool, with_lob: bool, ocr: str | None, seed: dict | None):
+def _arrow_kernel(with_spans: bool, with_fields: bool, ocr: str | None, seed: dict | None):
     """The extract UDF's body: Arrow ``text``/``tool`` arrays in, one
     struct array of extract_result_type out, pandas never imported.
     ``seed`` (Algorithm 2.B entries, or None) is installed in the worker
     before the batch runs."""
-    rtype = extract_result_type(with_spans, with_lob)
+    rtype = extract_result_type(with_spans, with_fields)
 
     def _kernel(text, tool):  # unannotated: arrow_udf's default is scalar (eval type 250)
         import pyarrow as pa
@@ -706,7 +787,7 @@ def _arrow_kernel(with_spans: bool, with_lob: bool, ocr: str | None, seed: dict 
             from .pdftext import seed_kdf
 
             seed_kdf(seed)
-        cols = _extract_columns(text.to_pylist(), tool.to_pylist(), with_spans, with_lob, ocr)
+        cols = _extract_columns(text.to_pylist(), tool.to_pylist(), with_spans, with_fields, ocr)
         atype = to_arrow_type(rtype)
         return pa.StructArray.from_arrays(
             [arrow_column(cols[f.name], f.type) for f in atype], fields=list(atype)
@@ -717,7 +798,7 @@ def _arrow_kernel(with_spans: bool, with_lob: bool, ocr: str | None, seed: dict 
 
 def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
                     kdf_seed: dict | None = None, with_spans: bool = True,
-                    with_lob: bool = False, ocr: str | None = None):
+                    with_fields: bool = False, ocr: str | None = None):
     """Append extraction columns to a transcripts DataFrame.
 
     Declarative so Catalyst keeps column pruning/pushdown around the UDF;
@@ -734,9 +815,9 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
     For consumers whose contract omits spans; the flagship pipeline and
     the resumable job keep the default.
 
-    ``with_lob=True`` has the kernel classify its own extracted text and
-    appends ``lob``/``lobs`` after ``error`` (extract_pipeline moves them
-    to the end of its output).
+    ``with_fields=True`` has the kernel parse the F2 fields of its own
+    extracted text and classify it, appending ``claim_number``, ``name``,
+    ``date``, ``confidence``, ``lob`` and ``lobs`` after ``error``.
 
     ``ocr`` runs the OCR fallback on ``needs_ocr`` rows inside the same
     kernel (extract_turn_batch), so the payload crosses to Python once.
@@ -752,19 +833,9 @@ def with_extraction(df, text_col: str = "text", tool_col: str = "tool",
         if ocr not in OCR_IMPLS:
             raise ValueError(f"ocr must be None or one of {sorted(OCR_IMPLS)}: {ocr!r}")
     seed = dict(kdf_seed) if kdf_seed else None
-    udf = F.arrow_udf(_arrow_kernel(with_spans, with_lob, ocr, seed),
-                      extract_result_type(with_spans, with_lob))
+    rtype = extract_result_type(with_spans, with_fields)
+    udf = F.arrow_udf(_arrow_kernel(with_spans, with_fields, ocr, seed), rtype)
     res = udf(F.col(text_col), F.col(tool_col))
-    out = df.withColumn("_ex", res).withColumn(
-        "extracted_text", F.col("_ex.extracted_text")
-    )
-    if with_spans:
-        out = out.withColumn("spans", F.col("_ex.spans"))
-    out = (
-        out.withColumn("needs_ocr", F.col("_ex.needs_ocr"))
-        .withColumn("payload_kind", F.col("_ex.payload_kind"))
-        .withColumn("error", F.col("_ex.error"))
-    )
-    if with_lob:
-        out = out.withColumn("lob", F.col("_ex.lob")).withColumn("lobs", F.col("_ex.lobs"))
-    return out.drop("_ex")
+    return df.withColumn("_ex", res).withColumns(
+        {f.name: F.col(f"_ex.{f.name}") for f in rtype}
+    ).drop("_ex")

@@ -4,25 +4,31 @@ collapsed into one DataFrame program — SURVEY §3).
 Shape:
 
     scan transcripts
-      → salted repartition  (hash(conv_id) ⊕ salt below conv granularity —
-                             a skewed multi-million-turn conversation is
-                             spread across S tasks for the map-only UDF
-                             stage; safe because extraction is per-turn
-                             independent, SURVEY §7 risk 5)
+      → salted repartition  (hash of (conv_id, floor(turn_idx / 65536)):
+                             the order-respecting turn bucket is the salt,
+                             so a multi-million-turn conversation spreads
+                             over one task per bucket; conv_id alone when
+                             'auto' finds no conversation past one bucket)
+      → stable ordering     (row_number per (conv_id, bucket) ordered by
+                             turn_idx, ts, plus per-bucket offsets joined
+                             on the same keys — in the repartition's own
+                             partitioning, no exchange on the turns' side;
+                             one conv_id window on the single-window plan)
       → extract_turn_batch  (Arrow UDF, pandas-free: payload sniff, HTML
                              boilerplate strip, pseudo-PDF layout parse,
-                             opt-in OCR fallback, span extraction, LOB
-                             keyword scoring)
-      → stable ordering     (row_number over conv_id ordered by turn_idx,ts)
-      → field projections   (native regexp_extract ladders)
+                             opt-in OCR fallback, span extraction, F2
+                             field ladders, LOB keyword scoring)
 
-The two shuffles are exactly the ones the north rule prescribes: the
-explicit pre-UDF repartition and the ordering window. The one Arrow
-kernel carries every per-turn Python step (LOB classification included:
-keyword counting is C-speed ``str.count`` there, a byte loop in Catalyst;
-OCR too: a chained Python UDF would hold its own worker and re-ship the
-payload);
-everything after it is narrow and stays in whole-stage codegen.
+Each turn crosses one exchange, the explicit pre-UDF repartition the north
+rule prescribes, and is parsed once, in the one Arrow kernel. The offsets
+come from a second scan of the key columns only (conv_id, turn_idx): a
+partial count per (conversation, bucket), two small shuffles of ~1 row per
+(conversation, bucket), and a broadcast or co-partitioned join. The kernel
+carries every per-turn Python step: the claim/name/date fields use Python
+``re`` there (the reference's own semantics, which Catalyst's Java regex
+does not share), LOB keyword counting is C-speed ``str.count`` (a byte loop
+in Catalyst), and OCR rides it too (a chained Python UDF would hold its own
+worker and re-ship the payload). Nothing after the kernel moves a row.
 """
 
 from __future__ import annotations
@@ -31,27 +37,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.extract import with_extraction
-from ..operators.ordering import with_turn_pos
-from ..functions.fields import with_parsed_fields
-
-# Salt fan-out for the map stage. At cluster scale set ≈ (executor cores ×
-# 2-3) / distinct-heavy-convs; 8 is right-sized for local[32] fixtures.
-DEFAULT_SALT_BUCKETS = 8
-
-
-def _salt_for_max_rows(
-    mx: int, target_rows_per_task: int = 50_000, cap: int = 512
-) -> int:
-    """The one formula mapping a max-conversation row count to a salt
-    fan-out: the largest conversation is salted down to about
-    ``target_rows_per_task`` rows per task, so mega-conversations get more
-    salt and uniform corpora get salt 1 (no artificial fan-out)."""
-    return max(1, min(cap, -(-mx // target_rows_per_task)))
+from ..operators.ordering import (
+    DEFAULT_TURN_BUCKET_WIDTH,
+    number_turns,
+    turn_partition_keys,
+)
 
 
 def _max_conv_rows(transcripts: DataFrame) -> int:
-    """Largest conversation's row count — the one runtime stat both the
-    salt fan-out and the ordering strategy derive from (a single-column
+    """Largest conversation's row count — the one runtime stat the
+    partitioning and ordering strategy derive from (a single-column
     partial-agg scan; the cheapest full pass there is)."""
     row = (
         transcripts.groupBy("conv_id")
@@ -148,33 +143,38 @@ def _kdf_salt_frame(
     )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int | None, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Explicit repartition before the heavy UDF stage (north rule):
-    hash(conv_id) + a turn-level salt so skewed conversations split."""
-    salt = F.pmod(F.hash("turn_idx", "ts"), F.lit(salt_buckets))
-    key = F.hash(F.col("conv_id"), salt)
+def salted_repartition(
+    df: DataFrame,
+    num_partitions: int | None,
+    bucket_width: int | None = DEFAULT_TURN_BUCKET_WIDTH,
+) -> DataFrame:
+    """Explicit repartition before the heavy UDF stage (north rule), on
+    the ordering's own keys (operators.ordering.turn_partition_keys): a
+    conversation longer than ``bucket_width`` turns splits across one hash
+    slot per turn bucket, and the ordering needs no exchange of its own."""
+    keys = turn_partition_keys(bucket_width)
     if num_partitions:
-        return df.repartition(num_partitions, key)
-    return df.repartition(key)
+        return df.repartition(num_partitions, *keys)
+    return df.repartition(*keys)
 
 
 def extract_pipeline(
     transcripts: DataFrame,
     num_partitions: int | None = None,
-    salt_buckets: int | str = DEFAULT_SALT_BUCKETS,
+    salt_buckets: str | None = None,
     max_conv_rows: int | None = None,
     kdf_seed: dict | None = None,
     ocr: str | None = None,
 ) -> DataFrame:
     """Transcripts → per-turn extraction rows.
 
-    ``salt_buckets='auto'`` runs the _max_conv_rows pre-pass once and
-    derives BOTH tunables from it: the salt fan-out (_salt_for_max_rows)
-    AND the ordering strategy — when the largest conversation
-    fits a single ordering bucket, the two-phase diamond buys nothing, so
-    the plain conv-wide window (no counts re-scan, no offsets join) is
-    used instead (ROADMAP round-5 item 2). Static configurations keep the
-    two-phase default: safe at any skew, modest constant overhead.
+    ``salt_buckets=None`` (default) salts by turn bucket and orders
+    two-phase: safe at any skew, at the price of a key-column re-scan and
+    an offsets join. ``salt_buckets='auto'`` runs the _max_conv_rows
+    pre-pass once; when the largest conversation fits one turn bucket it
+    partitions on conv_id alone and numbers turns with one conv-wide
+    window (no counts re-scan, no offsets join). The turn bucket is the
+    only salt, so an integer fan-out is refused.
 
     ``max_conv_rows`` short-circuits the pre-pass when the caller already
     knows the stat (e.g. read from the lineage stats table for this input
@@ -192,30 +192,34 @@ def extract_pipeline(
 
     ``ocr`` (None | 'auto' | 'fixture' | 'real') has the extract kernel
     run the OCR fallback on ``needs_ocr`` rows (per-row error channel)
-    before it scans spans and lob/lobs, so those describe the final text.
-    None (default) keeps the flag-only contract — downstream systems run
-    their own OCR pass.
+    before it scans spans, fields and lob/lobs, so those describe the final
+    text. None (default) keeps the flag-only contract — downstream systems
+    run their own OCR pass.
 
-    The extract kernel also classifies each turn's extracted text (C1
-    ``lob``, C2 ``lobs`` — operators.classify).
+    The extract kernel also parses the F2 fields (claim_number, name,
+    date, confidence — the reference's parse_fields ladders) and
+    classifies each turn (C1 ``lob``, C2 ``lobs`` — operators.classify).
 
     Output: (conv_id, turn_idx, ts, extracted_text, spans, needs_ocr,
     payload_kind, error, turn_pos, claim_number, name, date, confidence,
     lob, lobs).
     """
-    from ..operators.ordering import DEFAULT_TURN_BUCKET_WIDTH
+    from ..operators import ordering
 
-    ordering_bucket_width: int | None = DEFAULT_TURN_BUCKET_WIDTH
+    if salt_buckets not in (None, "auto"):
+        raise ValueError(
+            f"salt_buckets must be None or 'auto' (the turn bucket is the salt): {salt_buckets!r}"
+        )
+    width: int | None = ordering.DEFAULT_TURN_BUCKET_WIDTH
     if salt_buckets == "auto":
         mx = max_conv_rows if max_conv_rows is not None else _max_conv_rows(transcripts)
-        salt_buckets = _salt_for_max_rows(mx)
-        if mx <= DEFAULT_TURN_BUCKET_WIDTH:
-            ordering_bucket_width = None  # no conv needs the fan-out
-    df = transcripts.select("conv_id", "turn_idx", "ts", "text", "tool")
-    df = salted_repartition(df, num_partitions, salt_buckets)
-    df = with_extraction(df, kdf_seed=kdf_seed or None, with_lob=True, ocr=ocr)
-    df = df.drop("text", "tool")
-    df = with_turn_pos(df, bucket_width=ordering_bucket_width)
-    df = with_parsed_fields(df, "extracted_text")
-    # the kernel emitted lob/lobs; the output contract keeps them last
-    return df.select(*[c for c in df.columns if c not in ("lob", "lobs")], "lob", "lobs")
+        if mx <= width:
+            width = None  # no conversation needs the fan-out
+    src = transcripts.select("conv_id", "turn_idx", "ts", "text", "tool")
+    df = number_turns(salted_repartition(src, num_partitions, width), src, "turn_pos", width)
+    df = with_extraction(df, kdf_seed=kdf_seed or None, with_fields=True, ocr=ocr)
+    return df.select(
+        "conv_id", "turn_idx", "ts", "extracted_text", "spans", "needs_ocr",
+        "payload_kind", "error", "turn_pos", "claim_number", "name", "date",
+        "confidence", "lob", "lobs",
+    )

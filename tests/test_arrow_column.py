@@ -38,6 +38,7 @@ KINDS = {
     "large_binary": (pa.large_binary(), st.one_of(st.none(), st.binary(max_size=20))),
     "bool": (pa.bool_(), st.one_of(st.none(), st.booleans())),
     "int32": (pa.int32(), _INT32),
+    "float64": (pa.float64(), st.one_of(st.none(), st.floats(allow_nan=False))),
     "lobs": (to_arrow_type(LOBS_TYPE), st.one_of(st.none(), st.lists(_STR, max_size=4))),
     "large_list": (pa.large_list(pa.string()), st.one_of(st.none(), st.lists(_STR, max_size=4))),
     "spans": (to_arrow_type(SPAN_TYPE), st.one_of(st.none(), st.lists(_SPAN, max_size=4))),
@@ -89,9 +90,11 @@ def test_kernel_struct_equals_pa_array():
         {"extracted_text": "Claim AB-1 $2.00", "spans": [
             {"field": "amount", "start": 11, "end": 16, "value": "$2.00"}],
          "needs_ocr": False, "payload_kind": "plain", "error": None,
-         "lob": "UNKNOWN", "lobs": ["AUTO"]},
+         "claim_number": "AB-12345", "name": None, "date": "2024-03-14",
+         "confidence": 0.7, "lob": "UNKNOWN", "lobs": ["AUTO"]},
         {"extracted_text": "", "spans": [], "needs_ocr": True, "payload_kind": "pdf",
-         "error": "ValueError: x", "lob": "WC", "lobs": ["AUTO", "WC"]},
+         "error": "ValueError: x", "claim_number": None, "name": None, "date": None,
+         "confidence": 0.0, "lob": "WC", "lobs": ["AUTO", "WC"]},
     ]
     cols = {f.name: [r[f.name] for r in rows] for f in atype}
     got = pa.StructArray.from_arrays(
@@ -112,6 +115,11 @@ def test_lone_surrogate_raises_like_from_pandas():
                      to_arrow_type(SPAN_TYPE))
 
 
+def test_float64_with_nulls():
+    """The kernel's ``confidence`` column: float64 with None."""
+    _assert_equal([0.7, None, 0.0, 1.0, None, -0.0, 1e308], pa.float64())
+
+
 def test_unsupported_type_raises():
     with pytest.raises(TypeError):
-        arrow_column([1.5], pa.float64())
+        arrow_column([1.5], pa.float32())

@@ -1,5 +1,5 @@
 """The extract kernel runs as an Arrow UDF that builds its struct with
-``arrow_column``: on Spark, for every (with_spans, with_lob) pair, the
+``arrow_column``: on Spark, for every (with_spans, with_fields) pair, the
 output schema and every value must equal the kernel run off-Spark
 (``extract_turn_batch``) row by row — NULL and empty texts, error-channel
 rows and nulls included."""
@@ -40,10 +40,10 @@ def _rows():
     ]
 
 
-def _expected(text, tool, with_spans, with_lob) -> dict:
+def _expected(text, tool, with_spans, with_fields) -> dict:
     out = extract_turn_batch(
         pd.Series([text], dtype=object), pd.Series([tool], dtype=object),
-        with_spans=with_spans, with_lob=with_lob,
+        with_spans=with_spans, with_fields=with_fields,
     ).iloc[0].to_dict()
     if not isinstance(out["error"], str):  # pandas NaN/None → SQL NULL
         out["error"] = None
@@ -52,19 +52,19 @@ def _expected(text, tool, with_spans, with_lob) -> dict:
 
 
 @pytest.mark.parametrize("with_spans", [True, False])
-@pytest.mark.parametrize("with_lob", [True, False])
-def test_arrow_return_matches_pandas_kernel(spark, with_spans, with_lob):
+@pytest.mark.parametrize("with_fields", [True, False])
+def test_arrow_return_matches_pandas_kernel(spark, with_spans, with_fields):
     rows = _rows()
     df = spark.createDataFrame(rows, "id int, text string, tool string").repartition(3)
-    out = with_extraction(df, with_spans=with_spans, with_lob=with_lob)
+    out = with_extraction(df, with_spans=with_spans, with_fields=with_fields)
 
-    rtype = extract_result_type(with_spans, with_lob)
+    rtype = extract_result_type(with_spans, with_fields)
     assert out.schema.fields[3:] == rtype.fields
 
     got = {r["id"]: r.asDict(recursive=True) for r in out.collect()}
     assert sorted(got) == [r[0] for r in rows]
     for rid, text, tool in rows:
-        exp = _expected(text, tool, with_spans, with_lob)
+        exp = _expected(text, tool, with_spans, with_fields)
         assert {k: got[rid][k] for k in rtype.fieldNames()} == exp, rid
     # the rows the kernel must route: an error row, a real-PDF row with
     # text, a needs_ocr row, and (with spans) a row that carries spans

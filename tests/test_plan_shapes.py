@@ -23,20 +23,80 @@ def test_pipeline_plan_shape(spark, transcripts_df, tmp_path_factory):
     # column pruning reaches the scan: role is never read
     schemas = re.findall(r"ReadSchema: ([^\n]+)", plan)
     assert schemas and all("role" not in s for s in schemas)
-    # two WIDE exchanges (salted pre-UDF + bucketed ordering window) plus the
-    # ordering diamond's narrow branch: a pruned re-scan (no text column),
-    # its repartition + final-count agg, the tiny offsets window, and the
-    # offsets broadcast — 6 exchange nodes total, only 2 carrying text
-    assert plan.count("Exchange") == 6
+    # ONE wide exchange (the turn-bucket-salted repartition, which the
+    # bucketed ordering window reuses) plus the ordering's narrow branch: a
+    # key-column re-scan, its partial-count agg, the tiny offsets window and
+    # the offsets broadcast — 4 exchange nodes total, 1 carrying text
+    assert plan.count("Exchange") == 4
+    assert plan.count("REPARTITION_BY_NUM") == 1
     assert plan.count("BroadcastExchange") == 1
-    assert len(schemas) == 2 and any("text" not in s for s in schemas)
+    # the text column is read by exactly one FileScan; the counts branch
+    # reads the key columns alone
+    assert len(schemas) == 2
+    assert sum("text:" in s for s in schemas) == 1
+    assert any(s.startswith("struct<conv_id:string,turn_idx:int>") for s in schemas), schemas
     # the Arrow extraction stage runs ONCE (the counts branch prunes it out)
-    # and carries the LOB classification too: no second Python node, and no
-    # interpreted higher-order function (array_compact's lambda) left
+    # and carries the fields and the LOB classification too: no second
+    # Python node, no Catalyst field ladder, and no interpreted
+    # higher-order function (array_compact's lambda) left
     assert plan.count("ArrowEvalPython") == 1
+    assert "regexp_extract" not in plan
     assert "lambdafunction" not in plan
     # two windows: bucketed row_number + the tiny cumulative-offsets window
     assert plan.count("Window") == 2
+
+
+def _path_to(node, kind: str) -> list:
+    """The plan nodes from ``node`` down to the first node whose class is
+    ``kind`` (depth-first; adaptive and query-stage nodes followed into
+    their plans), or [] when there is none."""
+    name = node.getClass().getSimpleName()
+    if name == kind:
+        return [node]
+    if name == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+    for child in kids:
+        path = _path_to(child, kind)
+        if path:
+            return [node, *path]
+    return []
+
+
+def test_kernel_rows_cross_one_exchange(spark, transcripts_df, tmp_path_factory):
+    """Each turn is shuffled once: the text side of the executed plan holds
+    one exchange (the salted repartition), and no exchange sits between the
+    kernel and a sink's own aggregate — with broadcast joins off too, so
+    the offsets join, a sort-merge join at scale, keeps the big side in the
+    repartition's partitioning instead of re-shuffling it."""
+    from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline
+
+    path = str(tmp_path_factory.mktemp("one_shuffle")) + "/t"
+    transcripts_df.write.parquet(path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for threshold in (old, "-1"):
+            spark.conf.set(key, threshold)
+            out = extract_pipeline(spark.read.parquet(path), num_partitions=4)
+            sink = out.agg(F.count(F.lit(1)).alias("n"), F.max("turn_pos").alias("mx"),
+                           F.sum(F.length("extracted_text")), F.max("confidence"))
+            assert sink.collect()[0]["n"] == transcripts_df.count()
+            root = sink._jdf.queryExecution().executedPlan()
+            above = _path_to(root, "ArrowEvalPythonExec")
+            kinds = [n.getClass().getSimpleName() for n in above]
+            last_agg = max(i for i, k in enumerate(kinds) if k == "HashAggregateExec")
+            between = kinds[last_agg + 1:]
+            assert not [k for k in between if "Exchange" in k], (threshold, kinds)
+            below = [n.getClass().getSimpleName() for n in _path_to(above[-1], "FileSourceScanExec")]
+            assert below.count("ShuffleExchangeExec") == 1, (threshold, below)
+            if threshold == "-1":
+                assert "SortMergeJoinExec" in below, below
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_turn_ordering_never_full_conv_sorts(spark):
@@ -52,8 +112,9 @@ def test_turn_ordering_never_full_conv_sorts(spark):
     plan = _plan(with_turn_pos(df, bucket_width=4))
     # no window partitioned on conv_id alone over the data (the old shape)
     assert not re.search(r"windowspecdefinition\(conv_id#\d+, turn_idx#", plan)
-    # the big window is bucketed
-    assert re.search(r"windowspecdefinition\(conv_id#\d+, __turn_bkt#", plan)
+    # the big window is bucketed (the conversation key is the null-safe
+    # pair coalesce(conv_id, '') / isnull(conv_id))
+    assert re.search(r"windowspecdefinition\(__ck#\d+, __cn#\d+, __turn_bkt#", plan)
 
 
 def test_turn_ordering_two_phase_matches_window(spark):
@@ -302,34 +363,25 @@ def test_region_rollup_broadcasts_dims(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_auto_salt_buckets(spark):
-    """salt_buckets='auto' salts the largest conversation down to about
-    target_rows_per_task rows per task; a uniform corpus gets salt 1."""
-    from pdf_extraction_ai_agent_spark.plans.pipeline import (
-        _max_conv_rows,
-        _salt_for_max_rows,
-    )
-
-    uniform = spark.range(100).select(
-        (F.col("id") % 50).cast("string").alias("conv_id")
-    )
-    assert _salt_for_max_rows(_max_conv_rows(uniform), 1000) == 1
-    skewed = spark.range(10_000).select(
-        F.when(F.col("id") < 9_000, "mega").otherwise(F.col("id").cast("string")).alias("conv_id")
-    )
-    assert _salt_for_max_rows(_max_conv_rows(skewed), 1000) == 9
-
-
 def test_auto_ordering_strategy(spark, transcripts_df):
     """salt_buckets='auto': when no conversation exceeds one ordering
     bucket, the pipeline uses the plain conv-wide window (no diamond); a
     corpus with a bucket-exceeding conversation keeps the two-phase plan."""
     from pdf_extraction_ai_agent_spark.plans import pipeline as P
 
+    import pytest
+
     small = P.extract_pipeline(transcripts_df, num_partitions=4, salt_buckets="auto")
     plan = _plan(small)
     assert "__turn_bkt" not in plan  # single-window path chosen
     assert re.search(r"windowspecdefinition\(conv_id#\d+, turn_idx#", plan)
+    # ... in the repartition's partitioning: conv_id alone, one exchange
+    assert re.search(r"Exchange hashpartitioning\(conv_id#\d+, 4\)", plan)
+    assert plan.count("Exchange") == 1
+
+    # the turn bucket is the only salt: an integer fan-out is refused
+    with pytest.raises(ValueError, match="salt_buckets"):
+        P.extract_pipeline(transcripts_df, salt_buckets=8)
 
     # force the threshold down so the fixture LOOKS mega → two-phase kept
     import pdf_extraction_ai_agent_spark.operators.ordering as O

@@ -15,9 +15,14 @@ from pdf_extraction_ai_agent_spark.oracle import extract_turn
 
 # -- strategies ---------------------------------------------------------------
 
+# ı, İ and ſ: re.IGNORECASE folds them onto ASCII letters, str.lower()
+# does not — the span scan's lowered literal prefilters must not skip them
 _words = st.lists(
-    st.text(alphabet="abcdefghijklmnop HIJ0123456789$.,:#-/", min_size=1, max_size=12)
-    .map(lambda s: s.replace("\n", " ")),
+    st.one_of(
+        st.text(alphabet="abcdefghijklmnop HIJ0123456789$.,:#-/ıİſ", min_size=1, max_size=12)
+        .map(lambda s: s.replace("\n", " ")),
+        st.sampled_from(["Claım No:", "CLAİM NO:", "Reaſon:", "Descrıption:", "ABC12345"]),
+    ),
     min_size=1, max_size=30,
 )
 _plain_par = _words.map(lambda ws: " ".join(ws))

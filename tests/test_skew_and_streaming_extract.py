@@ -10,35 +10,35 @@ from pdf_extraction_ai_agent_spark.operators.extract import with_extraction
 from pdf_extraction_ai_agent_spark.plans.pipeline import extract_pipeline, salted_repartition
 
 
-def test_salting_spreads_skewed_conversation(spark, transcripts_pdf):
+def test_salting_spreads_skewed_conversation(spark, transcripts_pdf, monkeypatch):
     """The skew fixture (conv 0 has ~300 turns vs median ~4) must NOT
-    serialize into one task: with salting, the hot conversation's turns
-    land in many partitions; without, they collapse into one."""
+    serialize into one task: the turn bucket salts the repartition, so a
+    conversation longer than one bucket lands in several kernel tasks; on
+    conv_id alone it collapses into one."""
     df = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
     hot = "conv-00000000"
 
-    salted = salted_repartition(df, num_partitions=8, salt_buckets=8)
-    hot_parts = (
-        salted.filter(F.col("conv_id") == hot)
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .count()
-    )
-    unsalted = df.repartition(8, F.col("conv_id"))
-    hot_parts_unsalted = (
-        unsalted.filter(F.col("conv_id") == hot)
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .count()
-    )
-    assert hot_parts_unsalted == 1
+    def hot_tasks(d):
+        return (
+            d.filter(F.col("conv_id") == hot)
+            .select(F.spark_partition_id().alias("pid"))
+            .distinct()
+            .count()
+        )
+
+    assert hot_tasks(salted_repartition(df, num_partitions=8, bucket_width=None)) == 1
+    hot_parts = hot_tasks(salted_repartition(df, num_partitions=8, bucket_width=16))
     assert hot_parts >= 4, f"salting spread hot conv over only {hot_parts} partitions"
 
-    # and the ordering window still produces dense per-conv positions after
-    # extraction on salted partitions (the two-pass safety argument)
+    # and the two-phase ordering, run in those partitions before the
+    # kernel, still produces dense per-conv positions
+    import pdf_extraction_ai_agent_spark.operators.ordering as O
+
+    monkeypatch.setattr(O, "DEFAULT_TURN_BUCKET_WIDTH", 16)
     out = extract_pipeline(df, num_partitions=8)
     hot_rows = out.filter(F.col("conv_id") == hot).select("turn_pos").collect()
     positions = sorted(r.turn_pos for r in hot_rows)
+    assert len(positions) > 2 * 16
     assert positions == list(range(1, len(positions) + 1))
 
 

@@ -42,22 +42,26 @@ def test_pipeline_with_spans_false_prunes_column_and_udf_work(spark):
     assert "spans" in with_extraction(df).columns
 
 
-def test_kernel_with_lob_false_prunes_classification():
+_FIELD_COLS = ["claim_number", "name", "date", "confidence", "lob", "lobs"]
+
+
+def test_kernel_with_fields_false_prunes_fields():
     pdf = generate_transcripts(n_convs=40, seed=11)
     full = extract_turn_batch(pdf["text"], pdf["tool"])
-    pruned = extract_turn_batch(pdf["text"], pdf["tool"], with_lob=False)
-    assert list(full.columns[-2:]) == ["lob", "lobs"]
-    assert "lob" not in pruned.columns and "lobs" not in pruned.columns
+    pruned = extract_turn_batch(pdf["text"], pdf["tool"], with_fields=False)
+    assert list(full.columns[-6:]) == _FIELD_COLS
+    assert not set(_FIELD_COLS) & set(pruned.columns)
     for col in pruned.columns:
         pd.testing.assert_series_equal(full[col], pruned[col])
-    assert [f.name for f in extract_result_type(True, True).fields][-2:] == ["lob", "lobs"]
-    assert not {"lob", "lobs"} & set(extract_result_type(True, False).names)
+    assert [f.name for f in extract_result_type(True, True).fields][-6:] == _FIELD_COLS
+    assert not set(_FIELD_COLS) & set(extract_result_type(True, False).names)
 
 
-def test_pipeline_with_lob_false_prunes_kernel_output(spark):
-    """with_extraction's default with_lob=False drops lob/lobs from the
-    kernel's return type (no field of the Python node is named lob) and
-    from the output; extract_pipeline classifies and keeps them last."""
+def test_pipeline_with_fields_false_prunes_kernel_output(spark):
+    """with_extraction's default with_fields=False drops the fields and
+    lob/lobs from the kernel's return type (no field of the Python node is
+    named lob) and from the output; extract_pipeline parses them in the
+    kernel and keeps lob/lobs last."""
     import re
 
     from pdf_extraction_ai_agent_spark.operators.extract import with_extraction
@@ -74,11 +78,12 @@ def test_pipeline_with_lob_false_prunes_kernel_output(spark):
         return d._jdf.queryExecution().executedPlan().toString()
 
     out = with_extraction(df)
-    assert "lob" not in out.columns and "lobs" not in out.columns
+    assert not set(_FIELD_COLS) & set(out.columns)
     assert not re.search(r"\blobs?\b", plan(out))
     assert len(out.collect()) == 30
     full = extract_pipeline(df)
     assert full.columns[-2:] == ["lob", "lobs"]
     # the kernel's struct carries them: its fields are read off the UDF
     assert re.search(r"\.lob AS lob#", plan(full))
+    assert re.search(r"\.claim_number AS claim_number#", plan(full))
     assert {r["lob"] for r in full.collect()} == {"AUTO"}
