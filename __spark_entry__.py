@@ -5,9 +5,10 @@
   (salted repartition → vectorized extract UDF → stable ordering → field
   parse → LOB classify).
 - ``queries()`` / ``oracle_sql()``: one entry per implemented operator from
-  SURVEY.md §2, with DuckDB oracle SQL (see
-  ``pdf_extraction_ai_agent_spark/entry_queries.py``; the PDF roundtrip
-  queries are the rows of ``entry_roundtrips.ROUNDTRIPS``).
+  SURVEY.md §2, with its DuckDB oracle SQL under the same name. Both read
+  the one table ``pdf_extraction_ai_agent_spark/entry_registry.py::QUERIES``
+  (a (builder, oracle) row per query; the PDF roundtrip rows come from
+  ``entry_roundtrips.ROUNDTRIPS``), imported on the first call only.
 - ``pinned_queries()``: the roundtrip queries' data-pinned A/B arms.
 """
 
@@ -101,44 +102,17 @@ def _rotate(names: list[str]) -> list[str]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from pdf_extraction_ai_agent_spark.entry_queries import CORE_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext import EXT_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext2 import EXT2_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext3 import EXT3_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext4 import EXT4_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext5 import EXT5_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext6 import EXT6_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext7 import EXT7_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext9 import EXT9_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext10 import EXT10_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_queries_ext11 import EXT11_QUERIES
-    from pdf_extraction_ai_agent_spark.entry_roundtrips import roundtrip_queries
+    from pdf_extraction_ai_agent_spark.entry_registry import QUERIES
 
-    merged = {**CORE_QUERIES, **EXT_QUERIES, **EXT2_QUERIES, **EXT3_QUERIES,
-              **EXT4_QUERIES, **EXT5_QUERIES, **EXT6_QUERIES, **EXT7_QUERIES,
-              **EXT9_QUERIES, **EXT10_QUERIES, **EXT11_QUERIES, **roundtrip_queries()}
-    return {name: _release_then(merged[name]) for name in _rotate(sorted(merged))}
+    return {name: _release_then(QUERIES[name].build) for name in _rotate(sorted(QUERIES))}
 
 
 def oracle_sql() -> dict[str, str]:
-    from pdf_extraction_ai_agent_spark.entry_queries import core_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext import ext_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext2 import ext2_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext3 import ext3_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext4 import ext4_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext5 import ext5_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext6 import ext6_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext7 import ext7_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext9 import ext9_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext10 import ext10_oracles
-    from pdf_extraction_ai_agent_spark.entry_queries_ext11 import ext11_oracles
-    from pdf_extraction_ai_agent_spark.entry_roundtrips import roundtrip_oracles
+    from pdf_extraction_ai_agent_spark.entry_registry import QUERIES
 
-    merged = {**core_oracles(), **ext_oracles(), **ext2_oracles(), **ext3_oracles(),
-              **ext4_oracles(), **ext5_oracles(), **ext6_oracles(), **ext7_oracles(),
-              **ext9_oracles(), **ext10_oracles(), **ext11_oracles(), **roundtrip_oracles()}
-    # mirror queries()'s rotation so side-by-side iteration pairs up
-    return {name: merged[name] for name in _rotate(sorted(merged))}
+    # queries()'s order, so side-by-side iteration pairs up
+    return {name: QUERIES[name].oracle for name in _rotate(sorted(QUERIES))}
+
 
 def pinned_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """name -> (spark, pinned_parquet_path) -> DataFrame: every PDF roundtrip

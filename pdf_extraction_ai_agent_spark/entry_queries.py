@@ -557,36 +557,3 @@ FROM t
 WHERE (eff_date BETWEEN TIMESTAMP '1994-01-01' AND TIMESTAMP '1996-12-31')
    OR eff_date IS NULL
 """
-
-
-# ---------------------------------------------------------------------------
-# registry of pack 1 (core reference operators)
-# ---------------------------------------------------------------------------
-
-CORE_QUERIES = {
-    "q01_parse_fields": q01_parse_fields,
-    "q02_record_split": q02_record_split,
-    "q03_classify_lob": q03_classify_lob,
-    "q04_money_coerce": q04_money_coerce,
-    "q05_date_normalize": q05_date_normalize,
-    "q06_lob_summary": q06_lob_summary,
-    "q07_top_claims": q07_top_claims,
-    "q08_claim_frequency": q08_claim_frequency,
-    "q09_registry_search": q09_registry_search,
-    "q10_date_range_filter": q10_date_range_filter,
-}
-
-
-def core_oracles() -> dict[str, str]:
-    return {
-        "q01_parse_fields": _q01_sql(),
-        "q02_record_split": _q02_sql(),
-        "q03_classify_lob": _q03_sql(),
-        "q04_money_coerce": _Q04_SQL,
-        "q05_date_normalize": _Q05_SQL,
-        "q06_lob_summary": _q06_sql(),
-        "q07_top_claims": _q07_sql(),
-        "q08_claim_frequency": _Q08_SQL,
-        "q09_registry_search": _Q09_SQL,
-        "q10_date_range_filter": _Q10_SQL,
-    }

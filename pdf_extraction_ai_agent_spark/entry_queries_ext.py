@@ -479,38 +479,3 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
 FROM events
 GROUP BY 1, 2
 """
-
-
-EXT_QUERIES = {
-    "q11_dedup_exact": q11_dedup_exact,
-    "q12_jaccard_pairs": q12_jaccard_pairs,
-    "q13_minhash_signatures": q13_minhash_signatures,
-    "q14_minhash_lsh_pairs": q14_minhash_lsh_pairs,
-    "q15_simhash": q15_simhash,
-    "q16_ann_cosine_topk": q16_ann_cosine_topk,
-    "q17_ann_cosine_lsh": q17_ann_cosine_lsh,
-    "q18_lang_id": q18_lang_id,
-    "q19_quality_scores": q19_quality_scores,
-    "q20_token_counts": q20_token_counts,
-    "q21_fingerprints": q21_fingerprints,
-    "q22_multimodal_meta": q22_multimodal_meta,
-    "q23_event_windows": q23_event_windows,
-}
-
-
-def ext_oracles() -> dict[str, str]:
-    return {
-        "q11_dedup_exact": _Q11_SQL,
-        "q12_jaccard_pairs": _q12_sql(),
-        "q13_minhash_signatures": _q13_sql(),
-        "q14_minhash_lsh_pairs": _q14_sql(),
-        "q15_simhash": _q15_sql(),
-        "q16_ann_cosine_topk": _Q16_SQL,
-        "q17_ann_cosine_lsh": _q17_sql(),
-        "q18_lang_id": _q18_sql(),
-        "q19_quality_scores": _q19_sql(),
-        "q20_token_counts": _Q20_SQL,
-        "q21_fingerprints": _q21_sql(),
-        "q22_multimodal_meta": _Q22_SQL,
-        "q23_event_windows": _Q23_SQL,
-    }

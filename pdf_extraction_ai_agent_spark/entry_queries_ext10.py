@@ -28,13 +28,6 @@ from .entry_queries_ext import _COS_SQL, _NORM_SQL, _WORDS_SQL, _docs, _md5l
 from .entry_queries_ext4 import ivf_fit_ctes
 from .operators import curation, dedup, similarity, textstats, weburls
 
-EXT10_QUERIES: dict = {}
-_EXT10_ORACLES: dict = {}
-
-
-def ext10_oracles() -> dict[str, str]:
-    return dict(_EXT10_ORACLES)
-
 
 # ---------------------------------------------------------------------------
 # q85 — fixed-window exact-substring dedup (corpus-wide)
@@ -86,9 +79,6 @@ SELECT t.doc_id,
        CAST(t.n_chunks - coalesce(k.n_kept, 0) AS BIGINT) AS n_dropped
 FROM totals t LEFT JOIN kept_agg k USING (doc_id)
 """
-
-EXT10_QUERIES["q85_window_dedup"] = q85_window_dedup
-_EXT10_ORACLES["q85_window_dedup"] = _Q85_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -167,10 +157,6 @@ FROM canon
 """
 
 
-EXT10_QUERIES["q86_url_canonicalize"] = q86_url_canonicalize
-_EXT10_ORACLES["q86_url_canonicalize"] = _q86_sql()
-
-
 # ---------------------------------------------------------------------------
 # q87 — temperature-flattened stratified sampling (α = 1/2)
 # ---------------------------------------------------------------------------
@@ -209,9 +195,6 @@ SELECT d.doc_id, d.lang, CAST(r.n_stratum AS BIGINT) AS n_stratum, r.rate_ppm
 FROM documents d JOIN rates r USING (lang)
 WHERE {_md5l("'tsamp:' || CAST(d.doc_id AS VARCHAR)")} % 1000000 < r.rate_ppm
 """
-
-EXT10_QUERIES["q87_temperature_sample"] = q87_temperature_sample
-_EXT10_ORACLES["q87_temperature_sample"] = _Q87_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -255,9 +238,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
-EXT10_QUERIES["q88_trigram_lm_scores"] = q88_trigram_lm_scores
-_EXT10_ORACLES["q88_trigram_lm_scores"] = _Q88_SQL
-
 
 # ---------------------------------------------------------------------------
 # q89 — corpus vocabulary report (top-50 words)
@@ -291,9 +271,6 @@ SELECT CAST(rank AS INT) AS rank, word,
 FROM ranked WHERE rank <= 50
 """
 
-EXT10_QUERIES["q89_vocab_report"] = q89_vocab_report
-_EXT10_ORACLES["q89_vocab_report"] = _Q89_SQL
-
 
 # ---------------------------------------------------------------------------
 # q90 — SemDeDup: IVF-cluster-local semantic dedup
@@ -325,7 +302,3 @@ SELECT s.vid AS vec_id, s.centroid_id,
        d.dup_of IS NULL AS is_kept, CAST(d.dup_of AS BIGINT) AS dup_of
 FROM {assigned} s LEFT JOIN dropped d ON s.vid = d.vid
 """
-
-
-EXT10_QUERIES["q90_semantic_dedup"] = q90_semantic_dedup
-_EXT10_ORACLES["q90_semantic_dedup"] = _q90_sql()

@@ -36,13 +36,6 @@ from .entry_queries import _t
 from .entry_queries_ext import _docs
 from .operators import weburls
 
-EXT11_QUERIES: dict = {}
-_EXT11_ORACLES: dict = {}
-
-
-def ext11_oracles() -> dict[str, str]:
-    return dict(_EXT11_ORACLES)
-
 
 def _norm30(col):
     return F.trim(F.regexp_replace(F.substring(col, 1, 30), r"\s+", " "))
@@ -118,9 +111,6 @@ SELECT doc_id,
 FROM documents
 """
 
-EXT11_QUERIES["q91_html_skip_tags"] = q91_html_skip_tags
-_EXT11_ORACLES["q91_html_skip_tags"] = _Q91_SQL
-
 
 # ---------------------------------------------------------------------------
 # q92 — HTML table → pipe-text linearization
@@ -190,9 +180,6 @@ SELECT doc_id,
 FROM parts
 """
 
-EXT11_QUERIES["q92_html_table_pipe"] = q92_html_table_pipe
-_EXT11_ORACLES["q92_html_table_pipe"] = _Q92_SQL
-
 
 # ---------------------------------------------------------------------------
 # q93 — href inventory from HTML payloads → canonical URL + host
@@ -253,10 +240,6 @@ FROM canon
 """
 
 
-EXT11_QUERIES["q93_html_link_hosts"] = q93_html_link_hosts
-_EXT11_ORACLES["q93_html_link_hosts"] = _q93_sql()
-
-
 # ---------------------------------------------------------------------------
 # q94 — per-host URL fetch budget (per-group top-k, WindowGroupLimit)
 # ---------------------------------------------------------------------------
@@ -297,10 +280,6 @@ FROM ranked WHERE rk <= {_Q94_K}
 """
 
 
-EXT11_QUERIES["q94_host_budget"] = q94_host_budget
-_EXT11_ORACLES["q94_host_budget"] = _q94_sql()
-
-
 # ---------------------------------------------------------------------------
 # q95 — deterministic global corpus shuffle (two-phase scalable rank)
 # ---------------------------------------------------------------------------
@@ -325,10 +304,6 @@ SELECT doc_id, {key} AS shuffle_key,
          AS shuffle_pos
 FROM documents
 """
-
-
-EXT11_QUERIES["q95_corpus_shuffle"] = q95_corpus_shuffle
-_EXT11_ORACLES["q95_corpus_shuffle"] = _q95_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -400,10 +375,6 @@ SELECT doc_id, cluster_id, CAST(n_chars AS BIGINT) AS n_chars,
                           ORDER BY n_chars DESC, doc_id ASC) = 1 AS is_rep
 FROM labeled
 """
-
-
-EXT11_QUERIES["q96_cluster_representatives"] = q96_cluster_representatives
-_EXT11_ORACLES["q96_cluster_representatives"] = _q96_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -489,10 +460,6 @@ FROM v{n_merges}
 """
 
 
-EXT11_QUERIES["q98_bpe_merges"] = q98_bpe_merges
-_EXT11_ORACLES["q98_bpe_merges"] = _q98_sql()
-
-
 # ---------------------------------------------------------------------------
 # q99 — tokenizer application: per-document BPE fertility
 # ---------------------------------------------------------------------------
@@ -556,10 +523,6 @@ SELECT d.doc_id,
          AS fertility_ppm
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
-
-
-EXT11_QUERIES["q99_bpe_fertility"] = q99_bpe_fertility
-_EXT11_ORACLES["q99_bpe_fertility"] = _q99_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -644,10 +607,6 @@ JOIN sizes sa ON doc_a = sa.doc_id
 JOIN sizes sb ON doc_b = sb.doc_id
 WHERE CAST(n_common AS DOUBLE) / (sa.n_words + sb.n_words - n_common) >= 0.8
 """
-
-
-EXT11_QUERIES["q100_fuzzy_decontamination"] = q100_fuzzy_decontamination
-_EXT11_ORACLES["q100_fuzzy_decontamination"] = _q100_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -753,10 +712,6 @@ FROM base, vocab, dups, lang
 """
 
 
-EXT11_QUERIES["q101_corpus_snapshot"] = q101_corpus_snapshot
-_EXT11_ORACLES["q101_corpus_snapshot"] = _q101_sql()
-
-
 # ---------------------------------------------------------------------------
 # q102 — language-ID confusion matrix (operator accuracy rollup)
 # ---------------------------------------------------------------------------
@@ -787,10 +742,6 @@ SELECT d.lang, g.lang_guess, COUNT(*) AS n_docs
 FROM documents d JOIN guesses g USING (doc_id)
 GROUP BY d.lang, g.lang_guess
 """
-
-
-EXT11_QUERIES["q102_langid_confusion"] = q102_langid_confusion
-_EXT11_ORACLES["q102_langid_confusion"] = _q102_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -828,6 +779,3 @@ FROM documents
 WHERE len(text) > 0
 GROUP BY 1
 """
-
-EXT11_QUERIES["q103_length_histogram"] = q103_length_histogram
-_EXT11_ORACLES["q103_length_histogram"] = _Q103_SQL

@@ -450,26 +450,3 @@ SELECT account, reg.lob, policy_number,
        emails.email
 FROM reg LEFT JOIN emails ON upper(reg.lob) = upper(emails.lob)
 """
-
-
-EXT2_QUERIES = {
-    "q24_carrier_from_text": q24_carrier_from_text,
-    "q25_split_pages": q25_split_pages,
-    "q26_merge_chunks": q26_merge_chunks,
-    "q27_normalize_tables": q27_normalize_tables,
-    "q28_wc_tabular": q28_wc_tabular,
-    "q29_field_accuracy": q29_field_accuracy,
-    "q30_recipients": q30_recipients,
-}
-
-
-def ext2_oracles() -> dict[str, str]:
-    return {
-        "q24_carrier_from_text": _Q24_SQL,
-        "q25_split_pages": _Q25_SQL,
-        "q26_merge_chunks": _Q26_SQL,
-        "q27_normalize_tables": _Q27_SQL,
-        "q28_wc_tabular": _q28_sql(),
-        "q29_field_accuracy": _Q29_SQL,
-        "q30_recipients": _Q30_SQL,
-    }

@@ -242,22 +242,3 @@ hits AS (
 SELECT doc_key, CASE WHEN joined = '' THEN 'AUTO' ELSE joined END AS lobs
 FROM hits
 """
-
-
-EXT3_QUERIES = {
-    "q31_grid_pipe_text": q31_grid_pipe_text,
-    "q32_chunk_text": q32_chunk_text,
-    "q33_page_analysis": q33_page_analysis,
-    "q34_strategy_counters": q34_strategy_counters,
-    "q35_classify_lobs_multi": q35_classify_lobs_multi,
-}
-
-
-def ext3_oracles() -> dict[str, str]:
-    return {
-        "q31_grid_pipe_text": _Q31_SQL,
-        "q32_chunk_text": _Q32_SQL,
-        "q33_page_analysis": _Q33_SQL,
-        "q34_strategy_counters": _Q34_SQL,
-        "q35_classify_lobs_multi": _q35_sql(),
-    }

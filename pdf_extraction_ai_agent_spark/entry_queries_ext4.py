@@ -219,20 +219,3 @@ SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
 FROM numbered
 GROUP BY user_id, session_seq
 """
-
-
-EXT4_QUERIES = {
-    "q36_embedding_near_dups": q36_embedding_near_dups,
-    "q37_ivf_assignments": q37_ivf_assignments,
-    "q38_sessionize": q38_sessionize,
-    "q84_ivf_probe_topk": q84_ivf_probe_topk,
-}
-
-
-def ext4_oracles() -> dict[str, str]:
-    return {
-        "q36_embedding_near_dups": _q36_sql(),
-        "q37_ivf_assignments": _q37_sql(),
-        "q38_sessionize": _Q38_SQL,
-        "q84_ivf_probe_topk": _q84_sql(),
-    }

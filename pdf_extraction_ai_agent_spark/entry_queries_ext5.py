@@ -83,16 +83,3 @@ SELECT d.doc_id, d.lang, d.n_chars
 FROM documents d LEFT JOIN losers USING (doc_id)
 WHERE losers.doc_id IS NULL
 """
-
-
-EXT5_QUERIES = {
-    "q39_flagship_extract": q39_flagship_extract,
-    "q40_dedup_keep_list": q40_dedup_keep_list,
-}
-
-
-def ext5_oracles() -> dict[str, str]:
-    return {
-        "q39_flagship_extract": _Q39_SQL,
-        "q40_dedup_keep_list": _q40_sql(),
-    }

@@ -210,24 +210,6 @@ GROUP BY 1, 2
 """
 
 
-EXT6_QUERIES = {
-    "q41_excel_sheets": q41_excel_sheets,
-    "q42_detect_text_tables": q42_detect_text_tables,
-    "q43_region_rollup": q43_region_rollup,
-}
-
-
-def ext6_oracles() -> dict[str, str]:
-    return {
-        "q41_excel_sheets": _Q41_SQL,
-        "q42_detect_text_tables": _q42_sql(),
-        "q43_region_rollup": _Q43_SQL,
-        "q44_layout_tables": _q44_sql(),
-        "q45_lattice_tables": _q45_sql(),
-        "q46_lattice_normalize": _q46_sql(),
-    }
-
-
 # ---------------------------------------------------------------------------
 # q44 — layout-space (lattice-style) table detection: pseudo-PDF docs with
 # prose + an x-aligned table; detection = column x-alignment across
@@ -377,9 +359,6 @@ SELECT doc_id,
        row_text
 FROM sized WHERE blk_rows >= 3
 """
-
-
-EXT6_QUERIES["q44_layout_tables"] = q44_layout_tables
 
 
 # ---------------------------------------------------------------------------
@@ -571,9 +550,6 @@ GROUP BY 1, 2, 3, 4
 """
 
 
-EXT6_QUERIES["q45_lattice_tables"] = q45_lattice_tables
-
-
 # ---------------------------------------------------------------------------
 # q46 — lattice cells → typed claim rows (the X5/F12 composition the lattice
 # grid feeds): header row resolved by the F12 candidate-alignment operator
@@ -704,6 +680,3 @@ SELECT doc_id, row_idx,
        CAST((SELECT {money} FROM (SELECT {c_paid} AS c)) AS DOUBLE) AS paid
 FROM joined
 """
-
-
-EXT6_QUERIES["q46_lattice_normalize"] = q46_lattice_normalize

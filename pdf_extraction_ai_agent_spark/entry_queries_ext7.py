@@ -77,23 +77,6 @@ FROM sizes s JOIN hits h USING (doc_id)
 """
 
 
-EXT7_QUERIES = {
-    "q47_deterministic_split": q47_deterministic_split,
-    "q48_contamination": q48_contamination,
-}
-
-
-def ext7_oracles() -> dict[str, str]:
-    return {
-        "q47_deterministic_split": _q47_sql(),
-        "q48_contamination": _q48_sql(),
-        **_EXT7_ORACLES_EXTRA,
-    }
-
-
-_EXT7_ORACLES_EXTRA: dict = {}
-
-
 # ---------------------------------------------------------------------------
 # q49 — real-PDF round trip under the ORACLE GATE: per document, build a
 # genuine PDF (fixtures/minipdf.py — page tree, xref, FlateDecode on odd
@@ -167,10 +150,6 @@ GROUP BY lang
 """
 
 
-EXT7_QUERIES["q50_stratified_sample"] = q50_stratified_sample
-_EXT7_ORACLES_EXTRA["q50_stratified_sample"] = _q50_sql()
-
-
 # ---------------------------------------------------------------------------
 # q51 — MODERN-PDF (object-stream) round trip under the ORACLE GATE: same
 # contract as q49, but the per-document PDF is written in the PDF 1.5 shape
@@ -233,10 +212,6 @@ FROM bands l JOIN bands r
   ON l.band_idx = r.band_idx AND l.band_key = r.band_key AND l.doc_id < r.doc_id
 WHERE (l.doc_id % 2 = 1) OR (r.doc_id % 2 = 1)
 """
-
-
-EXT7_QUERIES["q52_incremental_dedup"] = q52_incremental_dedup
-_EXT7_ORACLES_EXTRA["q52_incremental_dedup"] = _q52_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -305,10 +280,6 @@ SELECT doc_id, COUNT(*) AS n_spans,
          AS span_frac
 FROM spans GROUP BY doc_id
 """
-
-
-EXT7_QUERIES["q53_contaminated_spans"] = q53_contaminated_spans
-_EXT7_ORACLES_EXTRA["q53_contaminated_spans"] = _q53_sql()
 
 
 # ---------------------------------------------------------------------------

@@ -472,5 +472,3 @@ def _payload_q68(doc_id: int, text: str) -> bytes:
             [_positioned_items(doc_id, text)], compress=bool(doc_id % 2)
         )
     )
-
-

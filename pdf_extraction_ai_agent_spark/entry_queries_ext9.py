@@ -37,13 +37,6 @@ from pyspark.sql import functions as F
 
 from .entry_queries_ext import _docs
 
-EXT9_QUERIES: dict = {}
-_EXT9_ORACLES: dict = {}
-
-
-def ext9_oracles() -> dict[str, str]:
-    return dict(_EXT9_ORACLES)
-
 
 def _payload_q69(doc_id: int, text: str) -> bytes:
     from .fixtures.scanned import scannable_text, write_scanned_pdf
@@ -115,12 +108,13 @@ FROM parts
 # q71 — EXECUTED page render under the ORACLE GATE (S7 closure, reference
 # claude_pdf_image_extractor.py:62-74). Per document a PDF is built — even
 # doc_ids a text-layer minipdf, odd doc_ids an image-only scanned PDF
-# carrying the SAME three lines — and the REAL Spark render operator
-# (operators/multimodal.py::with_rendered_pages, impl='fixture') produces
-# one PNG per page: text pages rasterized with the spec font, scanned
-# pages as image passthrough. The verification half decodes the PNG with
-# the STRICT spec reader (operators/raster.py::decode_png_gray — full
-# filter set + chunk CRCs) and template-matches the raster back to text;
+# carrying the SAME three lines — and the REAL render operator
+# (operators/multimodal.py::render_pdf_pages, impl='fixture', inside the
+# roundtrip kernel) produces one PNG per page: text pages rasterized with
+# the spec font, scanned pages as image passthrough. The same kernel then
+# decodes the PNG with the STRICT spec reader (operators/raster.py::
+# decode_png_gray — full filter set + chunk CRCs) and template-matches the
+# raster back to text;
 # the DuckDB twin predicts text AND pixel geometry (width/height follow
 # from line lengths and the spec grid) straight from the table, so the
 # gate proves write→render→encode→decode→match is the identity on both
@@ -597,10 +591,6 @@ LEFT JOIN bstats b USING (doc_id)
 """
 
 
-EXT9_QUERIES["q79_repetition_scores"] = q79_repetition_scores
-_EXT9_ORACLES["q79_repetition_scores"] = _Q79_SQL
-
-
 # ---------------------------------------------------------------------------
 # q80 — deterministic PII scrubbing under the ORACLE GATE: the
 # training-data privacy pass (mask SSN/email/phone, count each class).
@@ -667,10 +657,6 @@ SELECT doc_id,
        CAST(n_phones AS BIGINT) AS n_phones
 FROM s3
 """
-
-
-EXT9_QUERIES["q80_pii_scrub"] = q80_pii_scrub
-_EXT9_ORACLES["q80_pii_scrub"] = _Q80_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -759,10 +745,6 @@ FROM filt
 """
 
 
-EXT9_QUERIES["q81_boilerplate_filter"] = q81_boilerplate_filter
-_EXT9_ORACLES["q81_boilerplate_filter"] = _Q81_SQL
-
-
 # ---------------------------------------------------------------------------
 # q82 — sequence packing under the ORACLE GATE: concat-and-chunk global
 # token offsets (the GPT-style training prep step). The DuckDB twin is
@@ -799,10 +781,6 @@ SELECT doc_id, n_tokens, start_offset,
          AS last_seq
 FROM s
 """
-
-
-EXT9_QUERIES["q82_pack_sequences"] = q82_pack_sequences
-_EXT9_ORACLES["q82_pack_sequences"] = _Q82_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -894,7 +872,3 @@ SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_ratio,
         AND n_req_stop >= {ts.GOPHER_MIN_REQ_STOPWORDS}) AS gopher_pass
 FROM stats
 """
-
-
-EXT9_QUERIES["q83_gopher_flags"] = q83_gopher_flags
-_EXT9_ORACLES["q83_gopher_flags"] = _q83_sql()

@@ -105,8 +105,8 @@ class Roundtrip(NamedTuple):
     build: Callable[[int, str], bytes]
     oracle: str
     # "geometric" extract_real_pdf_text, "tagged" extract_tagged_pdf_text,
-    # "ocr" the extract kernel with the fixture OCR step, "render"
-    # with_rendered_pages → PNG decode → template match
+    # "ocr" the extract kernel with the fixture OCR step, "render" the
+    # fixture page render → PNG decode → template match, one row per page
     rung: str = "geometric"
     # (owner, user) passwords of the corpus's V5/R6 encrypt dict, whose
     # Algorithm 2.B hashes are derived once on the driver (_r6_kdf_seeds)
@@ -172,6 +172,8 @@ _SCHEMAS = {
     "geometric": _TEXT_SCHEMA,
     "tagged": _TEXT_SCHEMA,
     "ocr": _TEXT_SCHEMA + ", ocr_error string",
+    "render": "doc_id long, page_no int, width int, height int, "
+              "recovered_text string, render_error string",
 }
 
 
@@ -223,6 +225,28 @@ def _kernel(rung: str, seeds: tuple[dict, dict] | None,
                     "needs_ocr": res["needs_ocr"],
                     "ocr_error": res["error"],
                 })
+            elif rung == "render":
+                # fixture render → strict PNG decode → template match, one
+                # row per page; a render failure is one render_error row
+                # for its document
+                from .operators.multimodal import render_pdf_pages
+                from .operators.ocr import ocr_bitmap
+                from .operators.raster import decode_png_gray
+
+                rows = []
+                for d, p in zip(ids, pdfs):
+                    try:
+                        pages = render_pdf_pages(p, impl="fixture")
+                    except Exception as e:
+                        rows.append((d, None, None, None, None,
+                                     f"{type(e).__name__}: {e}"[:500]))
+                        continue
+                    for page_no, png in pages:
+                        w, h, raw = decode_png_gray(png)
+                        rows.append((d, page_no, w, h, ocr_bitmap(w, h, raw), None))
+                yield pd.DataFrame(rows, columns=[
+                    "doc_id", "page_no", "width", "height", "recovered_text",
+                    "render_error"])
             else:
                 yield pd.DataFrame(
                     [(d, *fn(p)) for d, p in zip(ids, pdfs)],
@@ -294,62 +318,13 @@ def _r6_kdf_seeds(spark: SparkSession, owner_pwd: bytes, user_pwd: bytes,
     return writer_seed, engine_seed
 
 
-def _render_verify(pdfs: DataFrame) -> DataFrame:
-    """(doc_id, pdf) → the Spark render operator (impl='fixture', one PNG
-    per page) → strict PNG decode + template match, one row per page; a
-    render failure is one render_error row per document."""
-    import pandas as pd
-
-    from .operators.multimodal import with_rendered_pages
-    from .operators.ocr import ocr_bitmap
-    from .operators.raster import decode_png_gray
-
-    rendered = with_rendered_pages(
-        pdfs, payload_col="pdf", id_col="doc_id", impl="fixture"
-    )
-
-    def verify(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, page_no, png, err in zip(
-                pdf["doc_id"], pdf["page_no"], pdf["png"], pdf["error"]
-            ):
-                if err is not None and not (
-                    isinstance(err, float) and pd.isna(err)
-                ):
-                    rows.append(
-                        (int(doc_id), None, None, None, None, str(err))
-                    )
-                    continue
-                w, h, raw = decode_png_gray(bytes(png))
-                rows.append(
-                    (int(doc_id), int(page_no), w, h, ocr_bitmap(w, h, raw),
-                     None)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "page_no", "width", "height",
-                         "recovered_text", "render_error"],
-            )
-
-    return rendered.mapInPandas(
-        verify,
-        schema="doc_id long, page_no int, width int, height int, "
-               "recovered_text string, render_error string",
-    )
-
-
 def _roundtrip(spark: SparkSession, name: str, src: DataFrame, live: bool) -> DataFrame:
     """Run row ``name`` over ``src``: (doc_id, text) when live, (doc_id,
     pdf) when pinned."""
     row = ROUNDTRIPS[name]
-    build = row.build if live else None
-    if row.rung == "render":
-        if live:
-            src = src.mapInPandas(_kernel("pdf", None, build), schema=_SCHEMAS["pdf"])
-        return _render_verify(src)
     seeds = _r6_kdf_seeds(spark, *row.seed, live) if row.seed else None
-    return src.mapInPandas(_kernel(row.rung, seeds, build), schema=_SCHEMAS[row.rung])
+    kernel = _kernel(row.rung, seeds, row.build if live else None)
+    return src.mapInPandas(kernel, schema=_SCHEMAS[row.rung])
 
 
 def pinned_corpus(docs: DataFrame, name: str) -> DataFrame:
@@ -360,20 +335,13 @@ def pinned_corpus(docs: DataFrame, name: str) -> DataFrame:
     )
 
 
-def roundtrip_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """name → (spark, sf_dir) → DataFrame: the live queries."""
+def live_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """(spark, sf_dir) → DataFrame: row ``name``'s live query."""
 
-    def live(name: str):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return _roundtrip(spark, name, _docs(spark, sf_dir).select("doc_id", "text"), True)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _roundtrip(spark, name, _docs(spark, sf_dir).select("doc_id", "text"), True)
 
-        return run
-
-    return {name: live(name) for name in ROUNDTRIPS}
-
-
-def roundtrip_oracles() -> dict[str, str]:
-    return {name: row.oracle for name, row in ROUNDTRIPS.items()}
+    return run
 
 
 def pinned_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

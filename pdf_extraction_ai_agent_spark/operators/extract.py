@@ -196,8 +196,11 @@ _BR = re.compile(r"(?i)<br\s*/?\s*>")
 # spec.HTML_SKIP_TAGS subtree removal (Readability rule): whole well-formed
 # spans, dotall so multi-line <style>/<script> bodies vanish BEFORE the
 # line split (their removal leaves blank lines → zero-length → dropped).
+# The tag names fold ASCII case only, as the oracle's HTMLParser does
+# (str.lower() keeps 'scrİpt' and 'ſcript' apart from 'script'); \s stays
+# Unicode, as in HTMLParser's own tag regexes.
 _SKIP_SPAN = re.compile(
-    r"(?is)<(" + "|".join(spec.HTML_SKIP_TAGS) + r")\b[^>]*>.*?</\1\s*>"
+    r"(?is)<((?a:" + "|".join(spec.HTML_SKIP_TAGS) + r"))\b[^>]*>.*?</(?a:\1)\s*>"
 )
 _SKIP_OPENERS = tuple("<" + t for t in spec.HTML_SKIP_TAGS)
 # Table linearization (spec.HTML_CELL_SEP): td/th and tr boundaries become

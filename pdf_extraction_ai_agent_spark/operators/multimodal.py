@@ -152,27 +152,3 @@ def render_pdf_pages(payload, dpi: int = 200, impl: str = "auto") -> list[tuple[
         except ImportError:
             return render_pdf_pages_fixture(payload)
     raise ValueError(f"unknown render impl {impl!r}")
-
-
-def with_rendered_pages(df: DataFrame, payload_col: str = "payload",
-                        id_col: str = "media_id", dpi: int = 200,
-                        impl: str = "auto") -> DataFrame:
-    """(media_id, page_no, png: binary, error) — one row per rendered page;
-    render failures (incl. missing fitz on impl='real') land in the error
-    channel, one row per failed document, never a job abort."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    for page_no, png in render_pdf_pages(p, dpi=dpi, impl=impl):
-                        rows.append((int(mid), page_no, png, None))
-                except Exception as e:
-                    rows.append((int(mid), None, None, f"{type(e).__name__}: {e}"[:500]))
-            yield pd.DataFrame(rows, columns=[id_col, "page_no", "png", "error"])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, schema=f"{id_col} long, page_no int, png binary, error string"
-    )

@@ -602,19 +602,20 @@ def test_sheet_name_sanitize_and_elapsed_format():
     assert format_elapsed(3725.0) == "1 hours 2 minutes 5.0 seconds"
 
 
-def test_pdf_page_render_dispatch(monkeypatch, spark):
-    """S7 render: absent fitz → error channel row per doc; with a fake fitz
-    the per-page PNG rows come back through the Spark source."""
+def test_pdf_page_render_dispatch(monkeypatch):
+    """S7 render: absent fitz, 'real' raises naming PyMuPDF and 'auto'
+    falls back to the fixture rung, whose refusal names it too; with a
+    fake fitz the per-page PNGs come from PyMuPDF's pixmaps."""
     import sys
     import types
 
-    from pdf_extraction_ai_agent_spark.operators.multimodal import with_rendered_pages
+    import pytest
 
-    df = spark.createDataFrame(
-        [(1, bytearray(b"%PDF-1.4 payload"))], "media_id long, payload binary"
-    )
-    rows = with_rendered_pages(df).collect()
-    assert len(rows) == 1 and "PyMuPDF" in rows[0].error and rows[0].png is None
+    from pdf_extraction_ai_agent_spark.operators.multimodal import render_pdf_pages
+
+    for impl in ("real", "auto"):
+        with pytest.raises(RuntimeError, match="PyMuPDF"):
+            render_pdf_pages(b"%PDF-1.4 payload", impl=impl)
 
     class _Pix:
         def __init__(self, i):
@@ -639,8 +640,6 @@ def test_pdf_page_render_dispatch(monkeypatch, spark):
     fake = types.ModuleType("fitz")
     fake.open = lambda stream=None, filetype=None: _Doc()
     monkeypatch.setitem(sys.modules, "fitz", fake)
-    from pdf_extraction_ai_agent_spark.operators.multimodal import render_pdf_pages
-
     pages = render_pdf_pages(b"%PDF-1.4 x")
     assert pages == [(1, b"PNG\x00"), (2, b"PNG\x01")]
 

@@ -44,6 +44,13 @@ SKIP_CASES = [
     "<html>\n<body>\n<template>junk <script>var x;</script> more junk that "
     "is long enough</template>\n<p>Only this paragraph is real page "
     "content to keep.</p>\n</body>\n</html>",
+    # a tag name that folds onto 'script' only under Unicode case folding
+    # is not a script element (HTMLParser lowers with str.lower()): its text
+    # stays content, while the real <script> beside it is dropped
+    "<html>\n<body>\n<script>var y = 2;</script>\n<div><scr\u0130pt>var x = "
+    "1; hidden text that stays content</scr\u0130pt> after it</div>\n</body>\n</html>",
+    "<html>\n<body>\n<script>var y = 2;</script>\n<div><SCR\u0130PT>var x = "
+    "1; hidden text that stays content</SCR\u0130PT> after it</div>\n</body>\n</html>",
 ]
 
 

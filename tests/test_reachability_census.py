@@ -14,10 +14,12 @@ deliberate exceptions, each with its reason: an oracle twin, a reference
 that tests compare against, or the sole port of a reference capability
 that COVERAGE.md names.
 
-The flag census does the same for on/off parameters, which the name-based
-census cannot see behind: every parameter defaulting to True, False or None
-must get at least two values from runner files and package code (tests do
-not count). Call sites are matched by name (a bare name, an attribute, or
+The flag census does the same for options, which the name-based census
+cannot see behind: every parameter defaulting to True, False or None, and
+every string-default parameter that its def's body compares (``==``,
+``!=``, ``in``) against a literal, must get at least two values from runner
+files and package code (tests do not count). A string default the body
+never compares, such as a column name, is not an option. Call sites are matched by name (a bare name, an attribute, or
 the class name for ``__init__``); a site gives the constant it passes, the
 default when it omits the argument, and any value for a non-constant
 argument, ``*args`` or ``**kwargs``. An argument forwarding a parameter of
@@ -150,9 +152,10 @@ def census(root: Path = ROOT, runners=RUNNERS, tests=TESTS, allowlist=ALLOWLIST)
     return unreached, stale
 
 
-# Flag census: every package parameter whose default is True, False or None
-# needs runners that give it at least two values; an option with one value in
-# use is a constant. Test-data writers and the reference twin are out of scope.
+# Flag census: every package option (a parameter whose default is True, False
+# or None, or a string default the body compares against a literal) needs
+# runners that give it at least two values; an option with one value in use
+# is a constant. Test-data writers and the reference twin are out of scope.
 FLAG_SCOPE_EXCLUDED = ("fixtures/", "oracle/")
 
 # "<module path under the package>::<qualified def name>(<param>)" -> why
@@ -171,6 +174,12 @@ FLAG_ALLOWLIST = {
                          "the DuckDB SQL over its own table"
         for k in ("entry_queries_ext2.py::_q28_sql", "entry_queries_ext6.py::_q42_sql")
     },
+    "operators/dedup.py::jaccard_pairs(unit)":
+        "the quadratic 'word' form is the verification baseline tests compare "
+        "the shingle candidate form against",
+    "operators/multimodal.py::render_pdf_pages(impl)":
+        "sole port of the reference renderer (PyMuPDF); runners here can run "
+        "only the 'fixture' rung",
 }
 
 ANY = "<any>"  # a non-constant argument, *args or **kwargs
@@ -178,6 +187,23 @@ ANY = "<any>"  # a non-constant argument, *args or **kwargs
 
 def _literal(node) -> str:
     return repr(node.value) if isinstance(node, ast.Constant) else ANY
+
+
+def _is_literal(node) -> bool:
+    """A constant, or a tuple, list or set of constants."""
+    if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+        return all(isinstance(e, ast.Constant) for e in node.elts)
+    return isinstance(node, ast.Constant)
+
+
+def _is_option(d: "_Def", p: str, default) -> bool:
+    """An on/off flag (default True, False or None), or a string option:
+    a string default that the def's own body compares against a literal."""
+    if not isinstance(default, ast.Constant):
+        return False
+    if any(default.value is v for v in (True, False, None)):
+        return True
+    return isinstance(default.value, str) and p in d.compared
 
 
 class _Def:
@@ -199,6 +225,15 @@ class _Def:
         # a parameter assigned in the body no longer forwards what callers passed
         self.rebound = {n.id for n in ast.walk(node)
                         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+        # parameters the body compares (==, !=, in, not in) against a literal
+        self.compared = {
+            side.id
+            for n in ast.walk(node) if isinstance(n, ast.Compare)
+            for left, op, right in zip([n.left] + n.comparators, n.ops, n.comparators)
+            if isinstance(op, (ast.Eq, ast.NotEq, ast.In, ast.NotIn))
+            for side, other in ((left, right), (right, left))
+            if isinstance(side, ast.Name) and _is_literal(other)
+        }
 
 
 def _scan(tree: ast.AST, rel: str | None, defs: list, calls: list) -> None:
@@ -299,8 +334,7 @@ def flag_census(root: Path = ROOT, runners=RUNNERS, tests=TESTS,
         if d.rel is not None and not d.rel.startswith(FLAG_SCOPE_EXCLUDED)
         and f"{d.rel}::{d.qualname.split('.')[0]}" not in exempt
         for p, default in d.params.items()
-        if isinstance(default, ast.Constant)
-        and any(default.value is v for v in (True, False, None))
+        if _is_option(d, p, default)
     }
     while True:  # to a fixpoint: forwarding cycles see the previous round
         memo = {}
@@ -369,7 +403,10 @@ def test_flag_census_flags_a_flag_only_a_test_switches(tmp_path):
     """The flag census itself: on a toy tree, a flag only a test switches
     is flagged, one a runner switches through a forwarding wrapper is not
     (while a forwarded flag no runner switches still is), and an allowlist
-    entry for a flag runners switch is reported stale."""
+    entry for a flag runners switch is reported stale. A string default the
+    body compares against a literal is an option too (``render``'s branch
+    only a test takes is flagged, ``mode``'s two runner values are not),
+    and one it never compares, a column name, is out of scope."""
     pkg = tmp_path / PACKAGE / "ops"
     pkg.mkdir(parents=True)
     (tmp_path / PACKAGE / "__init__.py").write_text("")
@@ -378,20 +415,26 @@ def test_flag_census_flags_a_flag_only_a_test_switches(tmp_path):
         "def kernel(x, fast=False, tidy=True):\n    return x\n"
         "def wrapper(x, fast=False, tidy=True):\n    return kernel(x, fast=fast, tidy=tidy)\n"
         "def only_tested(x, strict=False):\n    return x\n"
+        "def render(x, impl='fast'):\n    return x + 1 if impl == 'slow' else x\n"
+        "def mode(x, how='a'):\n    return x if how in ('a', 'b') else None\n"
+        "def label(x, col='name'):\n    return (x, col)\n"
     )
     (tmp_path / "jobs").mkdir()
     (tmp_path / "jobs" / "job.py").write_text(
-        f"from {PACKAGE}.ops.core import only_tested, wrapper\n"
+        f"from {PACKAGE}.ops.core import label, mode, only_tested, render, wrapper\n"
         "wrapper(1)\nwrapper(2, fast=True)\nonly_tested(3)\n"
+        "render(4)\nmode(5)\nmode(6, how='b')\nlabel(7)\n"
     )
     (tmp_path / "tests").mkdir()
     (tmp_path / "tests" / "test_x.py").write_text(
-        f"from {PACKAGE}.ops.core import only_tested\nonly_tested(3, strict=True)\n"
+        f"from {PACKAGE}.ops.core import only_tested, render\n"
+        "only_tested(3, strict=True)\nrender(4, impl='slow')\n"
     )
     kw = dict(runners=("jobs",), tests=("tests",), exempt={})
     flagged = {
         "ops/core.py::kernel(tidy)": ["True"],
         "ops/core.py::only_tested(strict)": ["False"],
+        "ops/core.py::render(impl)": ["'fast'"],
         "ops/core.py::wrapper(tidy)": ["True"],
     }
     assert flag_census(tmp_path, allowlist={}, **kw) == (flagged, [])

@@ -1,6 +1,6 @@
 """Executed page-render slice (S7 closure, round 7): the stdlib PNG
 codec, the fixture render rung (text rasterize + scanned passthrough),
-and the with_rendered_pages Spark operator.
+and q71's render kernel (render → decode → template match per document).
 
 Reference behavior: claude_pdf_image_extractor.py:62-74 rasterizes each
 PDF page to PNG with pdf2image/fitz; the fixture rung reproduces that
@@ -21,7 +21,6 @@ from pdf_extraction_ai_agent_spark.fixtures.scanned import (
 from pdf_extraction_ai_agent_spark.operators.multimodal import (
     render_pdf_pages,
     render_pdf_pages_fixture,
-    with_rendered_pages,
 )
 from pdf_extraction_ai_agent_spark.operators.ocr import ocr_bitmap
 from pdf_extraction_ai_agent_spark.operators.raster import (
@@ -170,28 +169,28 @@ def test_render_fixture_rejects_unparseable():
         render_pdf_pages_fixture(b"%PDF-1.4 garbage with no structure")
 
 
-def test_with_rendered_pages_fixture_impl(spark):
+def test_render_kernel_pages_and_error_rows():
+    """q71's render rung, the kernel both its arms run: one row per page
+    with the template-matched text, and a render failure is one
+    render_error row for its document, never a task abort."""
     import pandas as pd
 
-    rows = [
-        (1, write_minimal_pdf(["DOC ONE"])),
-        (2, write_scanned_pdf([["DOC TWO"]])),
-        (3, b"%PDF-1.4 broken"),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["media_id", "payload"]),
-        schema="media_id long, payload binary",
-    )
-    out = {
-        r["media_id"]: r
-        for r in with_rendered_pages(df, impl="fixture").collect()
-    }
-    for mid, want in ((1, "DOC ONE"), (2, "DOC TWO")):
-        assert out[mid]["error"] is None
-        w, h, raw = decode_png_gray(bytes(out[mid]["png"]))
-        assert ocr_bitmap(w, h, raw) == want
-    assert out[3]["png"] is None
-    assert "RuntimeError" in out[3]["error"]
+    from pdf_extraction_ai_agent_spark.entry_roundtrips import _kernel
+
+    batch = pd.DataFrame({
+        "doc_id": [1, 2, 3],
+        "pdf": [write_minimal_pdf(["DOC ONE"]), write_scanned_pdf([["DOC TWO"]]),
+                b"%PDF-1.4 broken"],
+    })
+    (out,) = _kernel("render", None, None)(iter([batch]))
+    rows = {r.doc_id: r for r in out.itertuples()}
+    assert len(out) == 3
+    for doc_id, want in ((1, "DOC ONE"), (2, "DOC TWO")):
+        assert rows[doc_id].page_no == 1
+        assert rows[doc_id].recovered_text == want
+        assert rows[doc_id].render_error is None
+    assert rows[3].recovered_text is None
+    assert rows[3].render_error.startswith("RuntimeError: ")
 
 
 def test_geometry_formula_matches_oracle_twin():
